@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): runs every registered query against
   * SPARK_GRAFT_SF_DIR, forcing FULL materialization through a noop write
   * (a bare count() would let Catalyst prune every computed column and
@@ -13,18 +11,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse(
-      "SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.defaultCores
+    val spark = GraftSession.local(cpus)
 
     // Warm the JVM/codegen/parquet-footer paths so the alphabetically-first
     // query does not absorb several seconds of one-time startup cost.
@@ -240,7 +228,7 @@ object Bench {
     val calibDiskEnd = calibrateDisk()
     val heapMb = Runtime.getRuntime.maxMemory() / (1024 * 1024)
     val config =
-      s"""{"runs":$runs,"cpus":${jstr(cpus)},"heap_mb":$heapMb,"statistic":"min","spread_stat":"runnerup_minus_min","adaptive_extra_max":2,"calib_start_s":${"%.3f".format(calibStart)},"calib_end_s":${"%.3f".format(calibEnd)},"calib_mem_start_s":${"%.3f".format(calibMemStart)},"calib_mem_end_s":${"%.3f".format(calibMemEnd)},"calib_disk_start_s":${"%.3f".format(calibDiskStart)},"calib_disk_end_s":${"%.3f".format(calibDiskEnd)}}"""
+      s"""{"runs":$runs,"cpus":${jstr(cpus.toString)},"heap_mb":$heapMb,"statistic":"min","spread_stat":"runnerup_minus_min","adaptive_extra_max":2,"calib_start_s":${"%.3f".format(calibStart)},"calib_end_s":${"%.3f".format(calibEnd)},"calib_mem_start_s":${"%.3f".format(calibMemStart)},"calib_mem_end_s":${"%.3f".format(calibMemEnd)},"calib_disk_start_s":${"%.3f".format(calibDiskStart)},"calib_disk_end_s":${"%.3f".format(calibDiskEnd)}}"""
     // FULL record: everything, including the per-query spread, the
     // resample lists and the streaming-gate metrics blocks.
     val line =

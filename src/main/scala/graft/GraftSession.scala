@@ -8,9 +8,17 @@ import org.apache.spark.sql.SparkSession
   * per-job: shuffle parallelism sized to cores (not the 200 default), AQE on
   * (runtime re-plan, skew-join splitting, shuffle coalescing), UTC session
   * time zone for oracle parity.
+  *
+  * The one place a SparkSession is built: every main and the test suite
+  * call `local`, so the engine runs under one conf set everywhere.
   */
 object GraftSession {
-  def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
+  /** `SPARK_GRAFT_CPUS` when set, else every core of the host. */
+  def defaultCores: Int =
+    sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors())
+
+  def local(cores: Int = defaultCores): SparkSession = {
     val spark = SparkSession
       .builder()
       .master(s"local[$cores]")

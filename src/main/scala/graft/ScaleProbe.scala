@@ -29,8 +29,7 @@ import org.apache.spark.sql.graft.CheckpointStats
 object ScaleProbe extends RegistryBase {
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse(
-      "SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)
+    val spark = GraftSession.local()
     // SPARK_GRAFT_SHUFFLE_PARTS > cpus shrinks PER-TASK state: a
     // shuffle-regime bag sort's transient disk is (concurrent tasks ×
     // per-task spill), and per-task spill scales with rows/partition —
@@ -38,22 +37,11 @@ object ScaleProbe extends RegistryBase {
     // each local sort (≈ 2.7 GB spill/task × 28 concurrent > the box's
     // disk) where 256 partitions keep each sort near-memory-resident.
     // On a real cluster this is just "don't undersize
-    // spark.sql.shuffle.partitions for the biggest stage".
-    val shufParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufParts)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // multi-round shuffle-regime builds leave each round's shuffle
-      // files on disk until the ContextCleaner GCs their references —
-      // the default 30 min periodic GC lets a 7-round build stack every
-      // round's spill on one box. At cluster scale the same knob exists
-      // per-executor; locally a 1-min sweep keeps peak disk ≈ one round.
-      .config("spark.cleaner.periodicGC.interval", "60s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // spark.sql.shuffle.partitions for the biggest stage". (The 60 s
+    // ContextCleaner sweep these builds also need is a SparkContext
+    // conf, so tools/run_scale_probe.sh passes it as a -D flag.)
+    sys.env.get("SPARK_GRAFT_SHUFFLE_PARTS")
+      .foreach(spark.conf.set("spark.sql.shuffle.partitions", _))
     args(0) match {
       case "nnd-ab"         => nndAb(spark, args(1))
       case "nnd-rounds"     => nndRounds(spark, args(1),
@@ -220,20 +208,12 @@ object ScaleProbe extends RegistryBase {
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       if (exact.isEmpty) 1.0 else (got & exact).size.toDouble / exact.size
     }
-    val bcastVecs = n <= NnDescent.BroadcastMaxVecRows
-    val bcastGraph = k.toLong * n <= NnDescent.BroadcastMaxGraphRows
-    // same slice policy as the composed builders (knnGraph/upsertGraph):
-    // explicit override if set, else derive from (N, cap, dim, budget) —
+    // the composed builders' own derivation (guards and slice count):
     // the probe must exercise the plan the engine ships, and the shipped
-    // default is now the sliced plan that survives, not the unsliced one
+    // default is the sliced plan that survives, not the unsliced one
     // that died at 600k
-    val slices =
-      if (bcastVecs) 1
-      else NnDescent.ExpansionSlicesOverride.getOrElse {
-        val dim = vecs.select(size(col("dv"))).limit(1).collect()
-          .headOption.map(_.getInt(0)).getOrElse(0)
-        NnDescent.autoSlices(n, cap, dim)
-      }
+    val NnDescent.BuildParams(_, _, bcastVecs, bcastGraph, slices) =
+      NnDescent.buildParams(vecs, n, k, cap)
     System.err.println(s"[nnd-rounds] n=$n k=$k cap=$cap slices=$slices " +
       s"(override=${NnDescent.ExpansionSlicesOverride}, budget=${NnDescent.DiskBudgetBytes / (1L << 30)}GB)")
     val metrics = new org.apache.spark.sql.graft.TaskMetricsAgg(s.sparkContext)

@@ -234,38 +234,6 @@ object Dedup {
         ).as(Seq("band", "key")): _*
     )
 
-  /** Incremental near-dup filter: an INCOMING batch screened against an
-    * EXISTING corpus (the production shape of web-crawl dedup — each new
-    * crawl snapshot is deduplicated against everything already kept, not
-    * against itself). Returns one row per incoming doc:
-    * (id, n_dups = count of corpus docs with Jaccard >= threshold among
-    * LSH candidates, kept = 1 if n_dups = 0 else 0).
-    *
-    * Scale shape: both sides reduce to (id, hs, sig) signature rows; the
-    * candidate stage is an equi-join on (band, key) between the incoming
-    * bands and the corpus bands — the incoming side is a new batch (small
-    * relative to the corpus), so the shuffle is dominated by the corpus
-    * band table, which at 100 TB would be a PERSISTED signature table
-    * maintained across snapshots rather than recomputed (the operator
-    * takes DataFrames, so callers feed the stored table directly; this
-    * convenience overload derives it from raw text). Verify runs inline
-    * on the join output, so only (in_id, corp_id) survivor pairs shuffle
-    * into the per-doc count. No self-join, no cross join.
-    */
-  def incrementalNearDupFilter(
-      incoming: DataFrame,
-      corpus: DataFrame,
-      idCol: String,
-      textCol: String,
-      shingleN: Int = 4,
-      numHashes: Int = 8,
-      rowsPerBand: Int = 4,
-      threshold: Double = 0.4
-  ): DataFrame =
-    incrementalNearDupFilterOnBands(incoming,
-      signatureBands(corpus, idCol, textCol, shingleN, numHashes, rowsPerBand),
-      idCol, textCol, shingleN, numHashes, rowsPerBand, threshold)
-
   /** The (id, hs, band, key) LSH band table of a document frame — the
     * PERSISTABLE signature-index shape. At 100 TB this table is written
     * ONCE per ingest, bucketed by the (band, key) join key, and every
@@ -284,12 +252,25 @@ object Dedup {
     bandExplode(hashedSignatures(docs, idCol, textCol, shingleN, numHashes),
       idCol, numHashes / rowsPerBand, rowsPerBand)
 
-  /** As `incrementalNearDupFilter`, but the corpus side is a pre-built
-    * band table in `signatureBands` shape — the persisted-signature-table
-    * entry point: feed it `spark.table("sig_table")` where the table was
-    * written bucketed by (band, key) and the candidate equi-join runs with
-    * no exchange on the (huge) corpus side; only the incoming batch's
-    * bands shuffle into the bucket layout.
+  /** Incremental near-dup filter: an INCOMING batch screened against an
+    * EXISTING corpus (the production shape of web-crawl dedup — each new
+    * crawl snapshot is deduplicated against everything already kept, not
+    * against itself). Returns one row per incoming doc:
+    * (id, n_dups = count of corpus docs with Jaccard >= threshold among
+    * LSH candidates, kept = 1 if n_dups = 0 else 0).
+    *
+    * Build once, probe many: the corpus side is a pre-built band table
+    * in `signatureBands` shape (build it with `signatureBands(corpus)`).
+    * The candidate stage is an equi-join on (band, key) between the
+    * incoming bands and the corpus bands — the incoming side is a new
+    * batch (small relative to the corpus), so the shuffle is dominated by
+    * the corpus band table. At 100 TB that table is PERSISTED across
+    * snapshots: feed it `spark.table("sig_table")` where the table was
+    * written bucketed by (band, key), and the candidate equi-join runs
+    * with no exchange on the (huge) corpus side; only the incoming
+    * batch's bands shuffle into the bucket layout. Verify runs inline on
+    * the join output, so only (in_id, corp_id) survivor pairs shuffle
+    * into the per-doc count. No self-join, no cross join.
     */
   def incrementalNearDupFilterOnBands(
       incoming: DataFrame,
@@ -847,38 +828,6 @@ object Dedup {
           nullif(coalesce(col("n_candidates"), lit(0L)), lit(0L))).as("precision"))
   }
 
-  /** Incremental CONTAINMENT screen — the ingest-time question
-    * containmentPairs answers in batch: is this NEW document an excerpt
-    * / partial copy of something already in the corpus (>= t of its
-    * shingles inside one existing doc)? Returns every incoming id with
-    * its container count; kept = no container. The containment twin of
-    * incrementalHammingScreen / incrementalNearDupFilter, and the shape
-    * decontamination-on-arrival runs: corpus-side self-pairs are NEVER
-    * generated (the quadratic bulk of a batch containmentPairs run).
-    *
-    * Same one-sided prefix filter: only the incoming doc's rare-first
-    * prefix joins, against the corpus's FULL posting list. Both sides
-    * order by (corpus df, h) — a total order shared by construction;
-    * incoming-only shingles take df 0 (rarest, so they front-load the
-    * prefix — exactly right: a shingle absent from the corpus can only
-    * appear in prefixes, never postings, and prunes for free). Docs with
-    * no shingles (shorter than the shingle width) have no containment
-    * evidence and are kept. At 100 TB the corpus posting list is the
-    * persisted term index; incoming shuffles into it, the corpus never
-    * moves.
-    */
-  def incrementalContainmentScreen(
-      incoming: DataFrame,
-      corpus: DataFrame,
-      idCol: String,
-      textCol: String,
-      shingleN: Int,
-      threshold: Double
-  ): DataFrame =
-    incrementalContainmentScreenOnIndex(incoming,
-      containmentScreenIndex(corpus, idCol, textCol, shingleN),
-      idCol, textCol, shingleN, threshold)
-
   /** The three corpus-side frames every incremental-containment probe
     * needs: the hashed corpus (id, hs, nsh) for verification, the
     * shingle dictionary (h, df) for the rare-first order, and the
@@ -945,10 +894,30 @@ object Dedup {
     ContainmentScreenIndex(hc, freq, fullB)
   }
 
-  /** As `incrementalContainmentScreen`, but the corpus side is a
-    * pre-built `containmentScreenIndex` — the per-micro-batch serving
-    * entry point (and the persisted-index shape at scale). Same probe,
-    * same verification, same answers.
+  /** Incremental CONTAINMENT screen — the ingest-time question
+    * containmentPairs answers in batch: is this NEW document an excerpt
+    * / partial copy of something already in the corpus (>= t of its
+    * shingles inside one existing doc)? Returns every incoming id with
+    * its container count; kept = no container. The containment twin of
+    * incrementalHammingScreen / incrementalNearDupFilterOnBands, and the
+    * shape decontamination-on-arrival runs: corpus-side self-pairs are
+    * NEVER generated (the quadratic bulk of a batch containmentPairs
+    * run).
+    *
+    * Same one-sided prefix filter: only the incoming doc's rare-first
+    * prefix joins, against the corpus's FULL posting list. Both sides
+    * order by (corpus df, h) — a total order shared by construction;
+    * incoming-only shingles take df 0 (rarest, so they front-load the
+    * prefix — exactly right: a shingle absent from the corpus can only
+    * appear in prefixes, never postings, and prunes for free). Docs with
+    * no shingles (shorter than the shingle width) have no containment
+    * evidence and are kept.
+    *
+    * Build once, probe many: the corpus side is a pre-built
+    * `containmentScreenIndex` — the per-micro-batch serving entry point
+    * and a batch query's inline build alike. At 100 TB the corpus
+    * posting list is the persisted term index; incoming shuffles into
+    * it, the corpus never moves.
     */
   def incrementalContainmentScreenOnIndex(
       incoming: DataFrame,
@@ -990,49 +959,6 @@ object Dedup {
       .withColumn("kept", col("n_containers") === 0)
   }
 
-  /** Bottom-k containment SCREEN with a document-frequency stop cut —
-    * the constant-cost-per-doc SERVING form of the sketch q183 audits
-    * (Broder's bottom-k containment estimate, SEQUENCES'97 / the Mash
-    * screen), plus the q159 df trick applied to shingles.
-    *
-    * incrementalContainmentScreen's exact prefix filter still probes
-    * (1-t)·|A|+1 shingles per doc, and each probe costs that shingle's
-    * corpus df — on a saturated shingle space (every shingle a head
-    * shingle, the flat-vocab testdata) that is df ∝ N per probe, a
-    * quadratic total (measured: exponent 1.38 flat / 0.78 Zipf at 10×).
-    * Here each incoming doc probes only its k SMALLEST md5 shingle
-    * hashes — a uniform random k-subset of A under a uniform hash, so
-    * the fraction found in B estimates |A∩B|/|A| — and probes skip
-    * shingles whose corpus df exceeds `dfCap`: a shingle in hundreds of
-    * docs certifies nothing about copying (it co-occurs with everything),
-    * yet carries the entire join blowup. Capped sampled hashes still
-    * COUNT toward a candidate's evidence m (df > cap means the container
-    * almost surely has them) but can never CREATE a candidate — exactly
-    * q159's stop-term semantics. Join cost per incoming doc is <= k·dfCap
-    * rows BY CONSTRUCTION, independent of corpus size.
-    *
-    * Screening (not verification): a pair passes at
-    * m >= ceil(screenFrac·ka); recall is traded explicitly by
-    * screenFrac < threshold (the q183 audit measures exactly this
-    * trade). Docs with no shingles have no evidence and are kept.
-    * Output: (id, n_containers, kept) — q175's shape.
-    */
-  def bottomKContainmentScreen(
-      incoming: DataFrame,
-      corpus: DataFrame,
-      idCol: String,
-      textCol: String,
-      shingleN: Int,
-      k: Int,
-      screenFrac: Double,
-      dfCap: Long
-  ): DataFrame = {
-    val post = containmentPostings(corpus, idCol, textCol, shingleN)
-      .localCheckpoint(false) // feeds the df table AND the probe join
-    bottomKContainmentScreenOnPostings(incoming, post, postingDf(post),
-      idCol, textCol, shingleN, k, screenFrac, dfCap)
-  }
-
   /** The corpus-side POSTING LIST of the containment screens — one
     * (c_id, h) row per distinct md5 shingle hash per corpus doc. This is
     * the persistable half of a term index: at 100 TB ingest writes it
@@ -1058,23 +984,18 @@ object Dedup {
     // 7.2 s vs 1.3 s on the sf0.1 corpus side)
     .select(col("c_id"), explode(col("hs")).as("h"))
 
-  /** The DICTIONARY half of the term index: per shingle hash, its corpus
-    * document frequency — the df stop-cut table of the bottom-k screen.
-    */
-  def postingDf(postings: DataFrame): DataFrame =
-    postings.groupBy("h").agg(count(lit(1)).as("df"))
-
   /** The GROUPED term index of the bottom-k screen: one row per distinct
-    * shingle hash carrying its document frequency AND its posting list —
-    * `postingDf` and `containmentPostings` folded into one structure
-    * (df = size of the list by construction). Built ONCE from the
+    * shingle hash carrying its document frequency AND its posting list
+    * (df = size of the list by construction) — the df dictionary and the
+    * posting list folded into one structure. Built ONCE from the
     * postings (one groupBy), it lets a per-micro-batch probe touch the
-    * corpus side in a SINGLE pass: the old (post, freq) pair cost every
-    * batch one full scan of EACH corpus-sized frame (the df lookup
-    * scanned the dictionary, the rare probe scanned the postings), and
-    * on a 4-batch stream that was 8 corpus-sized scans per gate run
-    * (guide §2.4 — remove passes outright; measured: the two scans were
-    * the two heaviest stages of every q191 micro-batch). At 100 TB this
+    * corpus side in a SINGLE pass: a separate (postings, dictionary)
+    * pair cost every batch one full scan of EACH corpus-sized frame (the
+    * df lookup scanned the dictionary, the rare probe scanned the
+    * postings), and on a 4-batch stream that was 8 corpus-sized scans
+    * per gate run (guide §2.4 — remove passes outright; measured: the
+    * two scans were the two heaviest stages of every q191 micro-batch).
+    * At 100 TB this
     * IS the classic postings-list layout: written bucketed by `h`, the
     * probe join prunes to matching buckets.
     */
@@ -1082,15 +1003,43 @@ object Dedup {
     postings.groupBy("h")
       .agg(count(lit(1)).as("df"), collect_list(col("c_id")).as("cs"))
 
-  /** As `bottomKContainmentScreenOnPostings`, but the corpus side is the
-    * GROUPED `containmentIndex` frame — the per-micro-batch serving
-    * entry point. Per batch the corpus side is touched exactly once: the
-    * probe's <= k·|batch| distinct hashes semi-filter the index, df
+  /** Bottom-k containment SCREEN with a document-frequency stop cut —
+    * the constant-cost-per-doc SERVING form of the sketch q183 audits
+    * (Broder's bottom-k containment estimate, SEQUENCES'97 / the Mash
+    * screen), plus the q159 df trick applied to shingles.
+    *
+    * incrementalContainmentScreenOnIndex's exact prefix filter still
+    * probes (1-t)·|A|+1 shingles per doc, and each probe costs that
+    * shingle's
+    * corpus df — on a saturated shingle space (every shingle a head
+    * shingle, the flat-vocab testdata) that is df ∝ N per probe, a
+    * quadratic total (measured: exponent 1.38 flat / 0.78 Zipf at 10×).
+    * Here each incoming doc probes only its k SMALLEST md5 shingle
+    * hashes — a uniform random k-subset of A under a uniform hash, so
+    * the fraction found in B estimates |A∩B|/|A| — and probes skip
+    * shingles whose corpus df exceeds `dfCap`: a shingle in hundreds of
+    * docs certifies nothing about copying (it co-occurs with everything),
+    * yet carries the entire join blowup. Capped sampled hashes still
+    * COUNT toward a candidate's evidence m (df > cap means the container
+    * almost surely has them) but can never CREATE a candidate — exactly
+    * q159's stop-term semantics. Join cost per incoming doc is <= k·dfCap
+    * rows BY CONSTRUCTION, independent of corpus size.
+    *
+    * Screening (not verification): a pair passes at
+    * m >= ceil(screenFrac·ka); recall is traded explicitly by
+    * screenFrac < threshold (the q183 audit measures exactly this
+    * trade). Docs with no shingles have no evidence and are kept.
+    * Output: (id, n_containers, kept) — q175's shape.
+    *
+    * Build once, probe many: the corpus side is the GROUPED
+    * `containmentIndex` frame (build it with
+    * `containmentIndex(containmentPostings(corpus, ...))`), so the
+    * streaming gate builds it ONCE and every micro-batch pays only its
+    * own probes. Per probe the corpus side is touched exactly once: the
+    * probe's <= k·|incoming| distinct hashes semi-filter the index, df
     * lookups read the surviving rows, and the rare-probe posting rows
     * are exploded from those same rows (<= k·dfCap per doc, the stop-cut
-    * bound). Answers are identical to the (post, freq) form: df is the
-    * posting-row count per hash, and exploding the filtered lists yields
-    * exactly the posting rows the old semi-join kept.
+    * bound).
     */
   def bottomKContainmentScreenOnIndex(
       incoming: DataFrame,
@@ -1119,7 +1068,13 @@ object Dedup {
         explode(slice(col("hs"), lit(1), least(lit(k), col("nsh")))).as("h"))
     // the ONE corpus-side pass of this screen: probe hashes semi-filter
     // the grouped index; everything downstream reads this bounded frame
-    // (<= k·|incoming| rows, each carrying one posting list)
+    // (<= k·|incoming| rows, each carrying one posting list). The
+    // broadcast decision is AQE's, NOT a hint: the probe set grows
+    // linearly with the incoming side, so a broadcast() right for a
+    // micro-batch would pin a multi-GB build when a bulk slice (q190's
+    // shape at full scale) probes the same index — the runtime picks
+    // broadcast under the threshold and a shuffle join above it, with
+    // identical answers
     val idxHit = index
       .join(sampledRaw.select("h").distinct(), Seq("h"), "left_semi")
       .localCheckpoint(false) // feeds the df lookup AND the rare explode
@@ -1129,86 +1084,11 @@ object Dedup {
       .localCheckpoint(false) // feeds the stop count AND the rare probe
     val nCap = sampled.groupBy(col(idCol), col("ka"))
       .agg(sum(when(col("df") > dfCap, 1L).otherwise(0L)).as("n_cap"))
-    // rare posting rows — exactly the rows the (post, freq) form's
-    // post-side semi-join kept, exploded from the already-probed index
+    // rare posting rows, exploded from the already-probed index: df is a
+    // GLOBAL property of a hash, so a hit on a rare (df <= dfCap) hash
+    // already satisfies the corpus-side df cut
     val rareHit = idxHit.filter(col("df") <= dfCap)
       .select(col("h"), explode(col("cs")).as("c_id"))
-    val mRare = rareHit
-      .join(sampled.filter(col("df") <= dfCap).select(col(idCol), col("h")),
-        Seq("h"))
-      .filter(col(idCol) =!= col("c_id"))
-      .groupBy(col(idCol), col("c_id")).agg(count(lit(1)).as("m_rare"))
-    val hits = mRare.join(nCap, Seq(idCol))
-      .filter(col("m_rare") + col("n_cap") >= ceil(lit(screenFrac) * col("ka")))
-      .groupBy(idCol).agg(count(lit(1)).as("n_containers"))
-    hi.select(col(idCol))
-      .join(hits, Seq(idCol), "left")
-      .select(col(idCol), coalesce(col("n_containers"), lit(0L)).as("n_containers"))
-      .withColumn("kept", col("n_containers") === 0)
-  }
-
-  /** As `bottomKContainmentScreen`, but the corpus side arrives as a
-    * pre-built term index — `post` in `containmentPostings` shape and
-    * `freq` in `postingDf` shape. The streaming entry point: a
-    * foreachBatch gate builds (or reads) the index ONCE and every
-    * micro-batch pays only its own bottom-k probes (<= k·dfCap posting
-    * rows per doc), never a corpus-side rebuild — without this split the
-    * per-batch screen re-shingled the whole static corpus, the dominant
-    * cost at any scale. Callers should materialize both frames
-    * (localCheckpoint locally; a bucketed table in production).
-    */
-  def bottomKContainmentScreenOnPostings(
-      incoming: DataFrame,
-      post: DataFrame,
-      freq: DataFrame,
-      idCol: String,
-      textCol: String,
-      shingleN: Int,
-      k: Int,
-      screenFrac: Double,
-      dfCap: Long
-  ): DataFrame = {
-    require(k >= 1 && dfCap >= 1 && screenFrac > 0 && screenFrac <= 1,
-      "bottom-k screen needs k >= 1, dfCap >= 1, screenFrac in (0, 1]")
-    val hi = incoming
-      .select(
-        col(idCol),
-        hashedShingles(col(textCol), shingleN).as("hs"))
-      .withColumn("nsh", size(col("hs")))
-      .localCheckpoint(false) // sample side + output spine, shared by q190-sized slices
-    // the probe's hash set is <= k rows per incoming doc — SEMI-FILTER
-    // the corpus-side index with it instead of joining into it: when
-    // the probe side is broadcastable the dictionary and posting frames
-    // are only ever scanned map-side (a cached scan locally, a
-    // bucketed-table scan in production) and the screen — in particular
-    // a per-micro-batch streaming one — never pays a corpus-sized
-    // exchange. The broadcast decision is AQE's, NOT a hint: the probe
-    // set grows linearly with the incoming batch (k·|incoming| rows), so
-    // a hardwired broadcast() that is right for a micro-batch would pin
-    // a multi-GB build on every executor when a BULK slice (q190's
-    // shape at full scale) probes the same index — the runtime picks
-    // broadcast under the threshold and a plain shuffle join above it,
-    // and answers are identical either way
-    val sampledRaw = hi.filter(col("nsh") > 0)
-      .select(col(idCol), least(lit(k), col("nsh")).as("ka"),
-        explode(slice(col("hs"), lit(1), least(lit(k), col("nsh")))).as("h"))
-    val dictHit = freq
-      .join(sampledRaw.select("h").distinct(), Seq("h"), "left_semi")
-    val sampled = sampledRaw
-      .join(dictHit, Seq("h"), "left")
-      .withColumn("df", coalesce(col("df"), lit(0L)))
-      .localCheckpoint(false) // feeds the stop count AND the rare probe
-    // per-doc count of capped sampled hashes: evidence every join-made
-    // candidate container gets for free (df > cap ⇒ it has them)
-    val nCap = sampled.groupBy(col(idCol), col("ka"))
-      .agg(sum(when(col("df") > dfCap, 1L).otherwise(0L)).as("n_cap"))
-    // df is a GLOBAL property of a hash, so a semi hit on the sample's
-    // rare (df <= dfCap) hashes already satisfies the corpus-side df cut
-    // — no posting-to-dictionary join at all; per-doc probe volume stays
-    // <= k*dfCap rows by construction
-    val rareHit = post
-      .join(sampled.filter(col("df") <= dfCap).select("h").distinct(),
-        Seq("h"), "left_semi")
     val mRare = rareHit
       .join(sampled.filter(col("df") <= dfCap).select(col(idCol), col("h")),
         Seq("h"))
@@ -1345,13 +1225,11 @@ object Dedup {
     // restrictions + columnar build cost: q52 5.3-5.4 s) and raw plan
     // chaining (the 3 in-plan references per round triple planning
     // work per level: q52 4.9-5.1 s).
-    val batchCap = sys.env.get("GRAFT_CC_BATCH").map(_.toInt).filter(_ >= 1)
-      .getOrElse(4)
+    val batchCap = 4
     var changed = 1L
     var iter = 0
     var batchNo = 0
     while (changed > 0 && iter < maxIter) {
-      val trr0 = System.nanoTime()
       val k = math.min(math.min(1 << batchNo, batchCap), maxIter - iter)
       batchNo += 1
       var cur = labels
@@ -1367,12 +1245,7 @@ object Dedup {
       // materializing action, so each batch pays ONE driver-side action.
       val next = org.apache.spark.sql.graft.CheckpointStats.freshCheckpoint(
         last, eager = false)
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(f"[resolveGroups] rounds $iter..${iter + k - 1} plan ${(System.nanoTime() - trr0) / 1e6}%.0f ms")
-      val tr0 = System.nanoTime()
       changed = next.filter(col("keep_id") =!= col("old_keep")).count()
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(f"[resolveGroups] rounds $iter..${iter + k - 1} changed=$changed countMs=${(System.nanoTime() - tr0) / 1e6}%.0f")
       labels = next.select("id", "keep_id")
       iter += k
     }

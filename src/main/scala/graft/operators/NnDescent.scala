@@ -578,14 +578,8 @@ object NnDescent {
     // the derived width may exceed the base graph's build width by a
     // little near an autoK breakpoint, which is safe: old lists simply
     // hold <= base-k edges until new candidates fill the wider cut.
-    // When k derives, ANY cap <= 0 derives too (round-15 advice): the
-    // legacy cap = -1 default must not silently pair a derived width
-    // with the uncapped-2k legacy sample no oracle models.
-    val kUse = if (k >= 1) k else autoK(nAll)
-    val capUse = if (cap > 0) cap else if (cap == 0 || k < 1) autoCap(kUse) else cap
-    val bcastVecs = nAll <= BroadcastMaxVecRows
-    val bcastGraph = kUse.toLong * nAll <= BroadcastMaxGraphRows
-    val slicesUse = deriveSlices(vecs, nAll, capUse, bcastVecs)
+    val BuildParams(kUse, capUse, bcastVecs, bcastGraph, slicesUse) =
+      buildParams(vecs, nAll, k, cap)
     // the merged count is already materialized (nAll — vecFrame is a
     // pure projection, row-for-row with `vectors`): ride it as a literal
     // instead of re-aggregating the corpus for a 1-row broadcast
@@ -709,17 +703,8 @@ object NnDescent {
     // HashedRelations that must not pile on top of the vector broadcasts.
     val nVecs = vecs.count()
     val nIters = if (iters >= 1) iters else autoIters(nVecs)
-    // k == 0 derives the working width from N; cap == 0 derives the
-    // ρ-cap from that width (the shipped registry mode). cap < 0 keeps
-    // the legacy "2k uncapped-in-expectation" default ONLY for
-    // direct/spec callers with an explicit k — when k derives, any
-    // cap <= 0 derives too (round-15 advice: the asymmetric sentinel
-    // could silently build a derived-width/ρ=1 config no oracle models).
-    val kUse = if (k >= 1) k else autoK(nVecs)
-    val capUse = if (cap > 0) cap else if (cap == 0 || k < 1) autoCap(kUse) else cap
-    val bcastVecs = nVecs <= BroadcastMaxVecRows
-    val bcastGraph = kUse.toLong * nVecs <= BroadcastMaxGraphRows
-    val slicesUse = deriveSlices(vecs, nVecs, capUse, bcastVecs)
+    val BuildParams(kUse, capUse, bcastVecs, bcastGraph, slicesUse) =
+      buildParams(vecs, nVecs, k, cap)
     val g0 = CheckpointStats.freshCheckpoint(initGraph(vectors, idCol, kUse))
     var g = CheckpointStats.freshCheckpoint(
       markNew(iterate(g0, vecs, kUse, capUse, bcastVecs, slices = slicesUse)._2,
@@ -736,6 +721,31 @@ object NnDescent {
       iter += 1
     }
     g.select("src", "dst", "cos_sim", "rank")
+  }
+
+  /** The per-build knobs of the composed builders (knnGraph,
+    * upsertGraph), all derived from the materialized corpus count `n`.
+    */
+  private[graft] final case class BuildParams(
+      k: Int, cap: Int, bcastVecs: Boolean, bcastGraph: Boolean, slices: Int)
+
+  /** k == 0 derives the working width from N; cap == 0 derives the
+    * ρ-cap from that width (the shipped registry mode). cap < 0 keeps
+    * the legacy "2k uncapped-in-expectation" default ONLY for
+    * direct/spec callers with an explicit k — when k derives, any
+    * cap <= 0 derives too (round-15 advice: the asymmetric sentinel
+    * could silently build a derived-width/ρ=1 config no oracle models).
+    * The two broadcast guards are decided from the same count: vector
+    * payloads against BroadcastMaxVecRows, the k·N narrow graph rows
+    * against their own BroadcastMaxGraphRows.
+    */
+  private[graft] def buildParams(vecs: DataFrame, n: Long, k: Int,
+      cap: Int): BuildParams = {
+    val kUse = if (k >= 1) k else autoK(n)
+    val capUse = if (cap > 0) cap else if (cap == 0 || k < 1) autoCap(kUse) else cap
+    val bcastVecs = n <= BroadcastMaxVecRows
+    BuildParams(kUse, capUse, bcastVecs, kUse.toLong * n <= BroadcastMaxGraphRows,
+      deriveSlices(vecs, n, capUse, bcastVecs))
   }
 
   /** Slice count for the composed builders: the explicit override if

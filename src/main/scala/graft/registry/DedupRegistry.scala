@@ -307,8 +307,9 @@ trait DedupRegistry extends RegistryBase {
       val docs = spread(s, rd(s, dir, "documents"))
       val incoming = docs.filter(col("doc_id") % IncrementalMod === IncrementalMod - 1)
       val corpus = docs.filter(col("doc_id") % IncrementalMod =!= IncrementalMod - 1)
-      Dedup.incrementalContainmentScreen(incoming, corpus, "doc_id", "text",
-          shingleN = 6, threshold = 0.7)
+      Dedup.incrementalContainmentScreenOnIndex(incoming,
+          Dedup.containmentScreenIndex(corpus, "doc_id", "text", shingleN = 6),
+          "doc_id", "text", shingleN = 6, threshold = 0.7)
         .orderBy("doc_id")
     }),
 
@@ -322,14 +323,15 @@ trait DedupRegistry extends RegistryBase {
     // that drives q175's exact prefix superlinear on a flat vocabulary
     // (the q159 df trick applied to shingles).
     "q190_containment_screen_bottomk" -> ((s, dir) => {
-      // spread() barriers internally, so the postings checkpoint below
-      // already sits over a cached scan, not an exchange
+      // the same grouped index q191's streaming gate probes, built inline
       val docs = spread(s, rd(s, dir, "documents"))
       val incoming = docs.filter(col("doc_id") % IncrementalMod === IncrementalMod - 1)
       val corpus = docs.filter(col("doc_id") % IncrementalMod =!= IncrementalMod - 1)
-      Dedup.bottomKContainmentScreen(incoming, corpus, "doc_id", "text",
-          shingleN = 6, k = ContainScreenK, screenFrac = ContainScreenFrac,
-          dfCap = ContainDfCap)
+      Dedup.bottomKContainmentScreenOnIndex(incoming,
+          Dedup.containmentIndex(
+            Dedup.containmentPostings(corpus, "doc_id", "text", shingleN = 6)),
+          "doc_id", "text", shingleN = 6, k = ContainScreenK,
+          screenFrac = ContainScreenFrac, dfCap = ContainDfCap)
         .orderBy("doc_id")
     }),
 
@@ -343,8 +345,11 @@ trait DedupRegistry extends RegistryBase {
       val docs = spread(s, rd(s, dir, "documents"))
       val incoming = docs.filter(col("doc_id") % IncrementalMod === IncrementalMod - 1)
       val corpus = docs.filter(col("doc_id") % IncrementalMod =!= IncrementalMod - 1)
-      Dedup.incrementalNearDupFilter(incoming, corpus, "doc_id", "text",
-          shingleN = 4, numHashes = 8, rowsPerBand = 4, threshold = 0.4)
+      Dedup.incrementalNearDupFilterOnBands(incoming,
+          Dedup.signatureBands(corpus, "doc_id", "text",
+            shingleN = 4, numHashes = 8, rowsPerBand = 4),
+          "doc_id", "text", shingleN = 4, numHashes = 8, rowsPerBand = 4,
+          threshold = 0.4)
         .orderBy("doc_id")
     }),
 

@@ -271,10 +271,11 @@ trait StreamingRegistry extends RegistryBase {
     // pillar dedup + streaming: incremental dedup ON ARRIVAL — the q118
     // operator driven from the foreachBatch bridge: the incoming batch
     // arrives as a file stream, each micro-batch runs
-    // incrementalNearDupFilter against the static (persisted) corpus and
-    // appends its verdicts. THE production ingest-dedup shape: batch
-    // operators reused verbatim on streams, corpus state external to the
-    // stream (same oracle as q118 — the bridge must not change answers).
+    // incrementalNearDupFilterOnBands against the static (persisted)
+    // corpus and appends its verdicts. THE production ingest-dedup
+    // shape: batch operators reused verbatim on streams, corpus state
+    // external to the stream (same oracle as q118 — the bridge must not
+    // change answers).
     "q121_stream_incremental_dedup" -> ((s, dir) => {
       val stage = Staging.dir("q121-")
       try {
@@ -303,8 +304,8 @@ trait StreamingRegistry extends RegistryBase {
         // force-disabled), which is exactly the per-batch corpus scan the
         // r17 verdict's item 3 flags. At 100 TB this table is the
         // persisted signature index ingest maintains; batches join into
-        // it, the corpus never re-hashes. incrementalNearDupFilter IS
-        // OnBands(signatureBands(corpus)) by definition, so answers are
+        // it, the corpus never re-hashes. q118 probes the same
+        // signatureBands(corpus) table built inline, so answers are
         // unchanged (same oracle as q118).
         val corpBands = Dedup.signatureBands(corpus, "doc_id", "text",
             shingleN = 4, numHashes = 8, rowsPerBand = 4)

@@ -17,6 +17,10 @@ class DedupSpec extends SparkSpec {
     (4L, "xy") // shorter than the shingle width
   ).toDF("doc_id", "text")
 
+  /** The bottom-k screen's grouped corpus index (3-char shingles). */
+  private def bottomKIndex(corpus: org.apache.spark.sql.DataFrame) =
+    Dedup.containmentIndex(Dedup.containmentPostings(corpus, "doc_id", "text", shingleN = 3))
+
   test("exactGroups: identical texts share a hash group; keep-one is min id") {
     val g = Dedup.exactGroups(docs, "doc_id", "text").collect()
     val dup = g.find(_.getLong(1) == 2).get
@@ -60,8 +64,10 @@ class DedupSpec extends SparkSpec {
   test("incrementalNearDupFilter: dup counts match the symmetric join restricted to cross-side pairs") {
     val incoming = docs.filter(col("doc_id").isin(1L, 2L, 4L))
     val corpus = docs.filter(col("doc_id").isin(0L, 3L))
-    val inc = Dedup.incrementalNearDupFilter(incoming, corpus, "doc_id", "text",
-      shingleN = 4, numHashes = 8, rowsPerBand = 4, threshold = 0.4)
+    val inc = Dedup.incrementalNearDupFilterOnBands(incoming,
+        Dedup.signatureBands(corpus, "doc_id", "text",
+          shingleN = 4, numHashes = 8, rowsPerBand = 4),
+        "doc_id", "text", shingleN = 4, numHashes = 8, rowsPerBand = 4, threshold = 0.4)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toList.sortBy(_._1)
     // every incoming doc reports exactly once, including the too-short one
     assert(inc.map(_._1) == List(1L, 2L, 4L))
@@ -269,7 +275,10 @@ class DedupSpec extends SparkSpec {
       (100L, c0.split(" ").slice(2, 6).mkString(" ")),
       (101L, "votre nouveau document sans aucun recouvrement"),
       (102L, "ab")).toDF("doc_id", "text")
-    val fast = Dedup.incrementalContainmentScreen(incoming, corpus, "doc_id", "text", 3, 0.6)
+    // the batch (q175) shape: lazy index built inline, probed once
+    val fast = Dedup.incrementalContainmentScreenOnIndex(incoming,
+        Dedup.containmentScreenIndex(corpus, "doc_id", "text", 3),
+        "doc_id", "text", 3, 0.6)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
     val shI = incoming.select(col("doc_id"), Dedup.shingleSet(col("text"), 3).as("sh"))
     val shC = corpus.select(col("doc_id").as("c_id"), Dedup.shingleSet(col("text"), 3).as("c_sh"))
@@ -289,7 +298,7 @@ class DedupSpec extends SparkSpec {
     // the shingle-less doc is kept, not dropped from the output spine
     assert(fast.exists(p => p._1 == 102L && p._2 == 0L && p._3))
     // the pre-built EAGER index path (the q176 streaming-gate shape since
-    // round 18) must give bit-identical answers to the inline screen
+    // round 18) must give bit-identical answers to the lazy one
     val viaIndex = Dedup.incrementalContainmentScreenOnIndex(incoming,
         Dedup.containmentScreenIndex(corpus, "doc_id", "text", 3, eager = true),
         "doc_id", "text", 3, 0.6)
@@ -311,8 +320,8 @@ class DedupSpec extends SparkSpec {
     // k >= every |A| and dfCap >= corpus size → the sample IS the full
     // set and nothing is capped: the screen must equal brute-force
     // "exact containment >= screenFrac"
-    val fast = Dedup.bottomKContainmentScreen(incoming, corpus, "doc_id", "text",
-        shingleN = 3, k = 1000, screenFrac = 0.6, dfCap = 100000L)
+    val fast = Dedup.bottomKContainmentScreenOnIndex(incoming, bottomKIndex(corpus),
+        "doc_id", "text", shingleN = 3, k = 1000, screenFrac = 0.6, dfCap = 100000L)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
     val sh = (t: org.apache.spark.sql.Column) =>
       array_distinct(graft.operators.Dedup.shingleSet(t, 3))
@@ -342,51 +351,84 @@ class DedupSpec extends SparkSpec {
     val corpus = (0 until 20).map(i => (i.toLong, s"$boiler unique${i}a unique${i}b"))
       .toDF("doc_id", "text")
     val incoming = Seq((100L, boiler)).toDF("doc_id", "text")
-    val out = Dedup.bottomKContainmentScreen(incoming, corpus, "doc_id", "text",
-        shingleN = 3, k = 32, screenFrac = 0.5, dfCap = 10L)
+    val index = bottomKIndex(corpus)
+    val out = Dedup.bottomKContainmentScreenOnIndex(incoming, index,
+        "doc_id", "text", shingleN = 3, k = 32, screenFrac = 0.5, dfCap = 10L)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
     assert(out.toSeq == Seq((100L, 0L, true)),
       s"boilerplate-only doc must be kept: ${out.toSeq}")
     // sanity: with the cap lifted the same doc IS screened out (every
     // corpus doc contains it) — the cap is what made the difference
-    val uncapped = Dedup.bottomKContainmentScreen(incoming, corpus, "doc_id", "text",
-        shingleN = 3, k = 32, screenFrac = 0.5, dfCap = 100000L)
+    val uncapped = Dedup.bottomKContainmentScreenOnIndex(incoming, index,
+        "doc_id", "text", shingleN = 3, k = 32, screenFrac = 0.5, dfCap = 100000L)
       .collect().map(r => (r.getLong(0), r.getBoolean(2)))
     assert(uncapped.toSeq == Seq((100L, false)))
   }
 
-  test("bottomKContainmentScreenOnPostings: pre-built term index == text path") {
+  test("bottomKContainmentScreenOnIndex: grouped index == driver-side bottom-k reference") {
     import spark.implicits._
     val words = Vector("alpha", "beta", "gamma", "delta", "epsilon", "zeta", "eta", "theta")
-    val corpus = (0 until 25).map { i =>
-      (i.toLong, (0 until 8).map(j => words((i * 5 + j * 3) % words.length)).mkString(" "))
-    }.toDF("doc_id", "text")
-    val incoming = Seq(
-      (100L, (0 until 8).map(j => words((j * 3) % words.length)).mkString(" ")
-        .split(" ").slice(2, 6).mkString(" ")),
-      (101L, "votre nouveau document sans aucun recouvrement"),
-      (102L, "ab")).toDF("doc_id", "text")
-    // the streaming shape: index built once, screened against — answers
-    // must be identical to the single-call text path at every config
-    for ((k, cap) <- Seq((8, 5L), (1000, 100000L))) {
-      val post = Dedup.containmentPostings(corpus, "doc_id", "text", shingleN = 3)
-        .localCheckpoint(false)
-      val onIdx = Dedup.bottomKContainmentScreenOnPostings(incoming, post,
-          Dedup.postingDf(post), "doc_id", "text", shingleN = 3,
-          k = k, screenFrac = 0.6, dfCap = cap)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
-      val direct = Dedup.bottomKContainmentScreen(incoming, corpus, "doc_id", "text",
-          shingleN = 3, k = k, screenFrac = 0.6, dfCap = cap)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
-      assert(onIdx == direct, s"k=$k dfCap=$cap")
-      // the GROUPED one-pass index (round 18, the q191 per-batch shape):
-      // same answers as the (post, freq) pair at every config
-      val grouped = Dedup.bottomKContainmentScreenOnIndex(incoming,
-          Dedup.containmentIndex(post), "doc_id", "text", shingleN = 3,
-          k = k, screenFrac = 0.6, dfCap = cap)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
-      assert(grouped == direct, s"grouped index k=$k dfCap=$cap")
+    // every corpus doc is a rotation of one word cycle (whose shingles
+    // all sit in >20 docs, above the small cap) plus two tokens
+    // shared by a handful of docs, so document frequencies straddle
+    // dfCap = 5 and the sample mixes rare and capped hashes
+    val corpusWords = (0 until 25).map { i =>
+      (0 until 8).map(j => words((i * 5 + j * 3) % words.length)) ++
+        Seq(s"tok${i % 7}q", s"tok${i % 11}z")
     }
+    val corpus = corpusWords.zipWithIndex
+      .map { case (ws, i) => (i.toLong, ws.mkString(" ")) }.toDF("doc_id", "text")
+    // an excerpt, a fresh doc, a shingle-less doc, and 30 partial copies
+    // (a slice of a corpus doc's words plus fresh words, every other one
+    // shuffled) whose containment spreads across the screenFrac boundary
+    val rnd = new scala.util.Random(7)
+    val partial = (0 until 30).map { i =>
+      val from = rnd.nextInt(6)
+      val fresh = (0 until rnd.nextInt(4)).map(n => s"fresh${i}w$n")
+      val ws = corpusWords(i % 25).slice(from, from + 2 + rnd.nextInt(6)) ++ fresh
+      (110L + i, (if (i % 2 == 0) ws else rnd.shuffle(ws)).mkString(" "))
+    }
+    // doc 103's "ok3" shingle sits exactly at df = dfCap (docs 3, 10,
+    // 14, 17, 24): it must count as rare evidence
+    val incoming = (Seq(
+      (100L, corpusWords(0).slice(2, 6).mkString(" ")),
+      (101L, "votre nouveau document sans aucun recouvrement"),
+      (102L, "ab"),
+      (103L, "tok3q tok3z")) ++ partial).toDF("doc_id", "text")
+    def hashed(df: org.apache.spark.sql.DataFrame): Map[Long, Seq[Long]] =
+      df.select(col("doc_id"), Dedup.hashedShingles(col("text"), 3))
+        .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+    val inH = hashed(incoming)
+    val corpH = hashed(corpus).map { case (c, hs) => c -> hs.toSet }
+    val docFreq = corpH.values.toSeq.flatten.groupBy(identity)
+      .map { case (h, v) => h -> v.size.toLong }
+    // the screen's definition, evaluated on the driver: sample the k
+    // smallest hashes; a corpus doc c != id is a container when it holds
+    // at least one sampled rare (df <= dfCap) hash and its rare hits plus
+    // the sample's capped hashes reach ceil(screenFrac * ka)
+    def reference(k: Int, dfCap: Long, screenFrac: Double): Set[(Long, Long, Boolean)] =
+      inH.map { case (id, hs) =>
+        val sample = hs.take(math.min(k, hs.size))
+        val (rare, capped) = sample.partition(h => docFreq.getOrElse(h, 0L) <= dfCap)
+        val need = math.ceil(screenFrac * sample.size)
+        val n = corpH.count { case (c, chs) =>
+          val mRare = rare.count(chs.contains)
+          c != id && mRare >= 1 && mRare + capped.size >= need
+        }.toLong
+        (id, n, n == 0)
+      }.toSet
+    val index = bottomKIndex(corpus)
+    for ((k, cap) <- Seq((8, 5L), (1000, 100000L))) {
+      val got = Dedup.bottomKContainmentScreenOnIndex(incoming, index,
+          "doc_id", "text", shingleN = 3, k = k, screenFrac = 0.6, dfCap = cap)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
+      val want = reference(k, cap, 0.6)
+      assert(want.map(_._1) == Set(100L, 101L, 102L, 103L) ++ partial.map(_._1))
+      assert(got == want, s"k=$k dfCap=$cap")
+    }
+    // the uncapped config finds the excerpt's containers, so the
+    // comparison above is not vacuous
+    assert(reference(1000, 100000L, 0.6).exists(p => p._1 == 100L && p._2 >= 1L))
   }
 
   test("simhashCandidates: banded result == brute-force hamming filter; no crossJoin in plan") {

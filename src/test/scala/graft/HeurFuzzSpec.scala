@@ -10,8 +10,12 @@ import graft.sources.Readers
   */
 class HeurFuzzSpec extends SparkSpec {
 
-  private val exQ = "/root/reference/example/test_query.txt"
-  private val exR = "/root/reference/example/test_refs.txt"
+  // the reference's worked example (FIXTURES.md §1.1-1.2), vendored
+  // byte-exact as test resources
+  private def resource(name: String): String =
+    new java.io.File(getClass.getResource(s"/$name").toURI).getPath
+  private val exQ = resource("test_query.txt")
+  private val exR = resource("test_refs.txt")
   private val goldenRows = Seq(
     ("test", "test2"),
     ("a yellow banana from the store", "yellow banana"),

@@ -11,15 +11,9 @@ object SparkTestSession {
   val testDataDir = "/root/testdata/sf0.001"
 
   lazy val spark: SparkSession = {
-    val s = SparkSession
-      .builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .withExtensions(new org.apache.spark.sql.graft.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // pinned at 4 cores, not the host's, so the suite plans the same
+    // partition counts on every host
+    val s = GraftSession.local(4)
     // prime the corpus-scaled oracle unrolls ONCE for the whole test JVM
     // (round-15 advice: priming inside one suite made every other suite's
     // SparkEntry.oracleSql access depend on test ordering). Fail FAST
