@@ -15,11 +15,23 @@ import org.apache.spark.sql.graft.CheckpointStats
   *   nnd-ab <table-dir>       knnGraph build, broadcast regime vs the
   *                            forced-shuffle regime (guard override = 0),
   *                            interleaved B S B S in one pinned-heap JVM
+  *   nnd-rounds <table-dir> [rounds=8] [k=NndK] [cap=NndCap]
+  *                            one NN-Descent build at (k, cap) with
+  *                            recall@3 vs sampled exact truth, wall time,
+  *                            spill and shuffle write after EVERY round
+  *                            (the autoIters calibration curve)
   *   ivf-quality <table-dir>  recall@3/MRR of the q179 filtered-ANN
   *                            consumer per label-frequency band against
   *                            exact same-label truth, the q180 vector
   *                            leg's recall@10, and q180's fused ranking
   *                            vs a fusion with an EXACT vector leg
+  *   ivf-sweep <table-dir>    recall@3 (unfiltered and label-filtered)
+  *                            and wall per explicit probe depth around
+  *                            the √N-IVF serving path's auto nprobe
+  *   upsert-quality <table-dir>
+  *                            recall of the q203 upserted graph vs the
+  *                            full rebuild and vs sampled exact truth,
+  *                            both wall times, and a 2-4 round sweep
   *
   * Prints one JSON line per subcommand (the Bench convention). Extends
   * RegistryBase so the probes run the SAME constants and helpers the
@@ -183,7 +195,8 @@ object ScaleProbe extends RegistryBase {
     * incremental NN-Descent build at the shipped (k, cap), with
     * recall@KnnGraphK against SAMPLED EXACT truth (1-in-50 queries,
     * full-corpus scan each) measured after EVERY round — rounds 1..max
-    * from a single pass, because round r's graph IS round r-1's plus one
+    * from a single NnDescent.descend walk (its per-round observer
+    * reports), because round r's graph IS round r-1's plus one
     * iterateInc. The registry's derived round count is set from this
     * curve, not from the q196 audit (which certifies the recurrence on a
     * size-capped sample and is blind to round-count underscaling by
@@ -208,36 +221,32 @@ object ScaleProbe extends RegistryBase {
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       if (exact.isEmpty) 1.0 else (got & exact).size.toDouble / exact.size
     }
-    // the composed builders' own derivation (guards and slice count):
-    // the probe must exercise the plan the engine ships, and the shipped
-    // default is the sliced plan that survives, not the unsliced one
-    // that died at 600k
-    val NnDescent.BuildParams(_, _, bcastVecs, bcastGraph, slices) =
-      NnDescent.buildParams(vecs, n, k, cap)
-    System.err.println(s"[nnd-rounds] n=$n k=$k cap=$cap slices=$slices " +
+    // the composed builders' own derivation (guards and slice count) and
+    // their own round driver: the probe must exercise the plan the
+    // engine ships, and the shipped default is the sliced plan that
+    // survives, not the unsliced one that died at 600k
+    val p = NnDescent.buildParams(vecs, n, k, cap)
+    System.err.println(s"[nnd-rounds] n=$n k=${p.k} cap=${p.cap} slices=${p.slices} " +
       s"(override=${NnDescent.ExpansionSlicesOverride}, budget=${NnDescent.DiskBudgetBytes / (1L << 30)}GB)")
     val metrics = new org.apache.spark.sql.graft.TaskMetricsAgg(s.sparkContext)
-    val g0 = CheckpointStats.freshCheckpoint(NnDescent.initGraph(e, "vec_id", k))
-    var g: DataFrame = null
-    val rows = (1 to maxRounds).map { r =>
-      metrics.snapshotAndReset()
-      val t0 = System.nanoTime()
-      g = CheckpointStats.freshCheckpoint(
-        if (r == 1)
-          NnDescent.markNew(
-            NnDescent.iterate(g0, vecs, k, cap, bcastVecs, round = 0,
-              slices = slices)._2,
-            g0, broadcastG0 = bcastGraph)
-        else NnDescent.iterateInc(g, vecs, k, cap, bcastVecs, bcastGraph,
-          round = r - 1, slices = slices)._2)
+    val g0 = CheckpointStats.freshCheckpoint(NnDescent.initGraph(e, "vec_id", p.k))
+    // eager rounds: each round's wall time is its own checkpoint job
+    val rows = scala.collection.mutable.ArrayBuffer.empty[String]
+    metrics.snapshotAndReset()
+    var t0 = System.nanoTime()
+    NnDescent.descend(g0, vecs, p, 0 until maxRounds, eager = true, observe = { (t, _, g) =>
       val w = (System.nanoTime() - t0) / 1e9
       val (spill, shuf) = metrics.snapshotAndReset()
       val rec = recall(g)
-      System.err.println(f"[nnd-rounds] k=$k cap=$cap round $r recall3=$rec%.4f " +
+      val r = t + 1
+      System.err.println(f"[nnd-rounds] k=${p.k} cap=${p.cap} round $r recall3=$rec%.4f " +
         f"wall=$w%.1fs spill=${spill / (1L << 20)}MB shufwrite=${shuf / (1L << 20)}MB")
-      f"""{"round":$r,"recall3":$rec%.4f,"wall_s":$w%.1f,"spill_mb":${spill / (1L << 20)},"shufwrite_mb":${shuf / (1L << 20)},"auto_pick":${NnDescent.autoIters(n) == r}}"""
-    }.mkString(",")
-    println(s"""{"probe":"nnd_rounds","n_vecs":$n,"k":$k,"cap":$cap,"slices":$slices,"bcast_vecs":$bcastVecs,"bcast_graph":$bcastGraph,"rounds":[$rows]}""")
+      rows += f"""{"round":$r,"recall3":$rec%.4f,"wall_s":$w%.1f,"spill_mb":${spill / (1L << 20)},"shufwrite_mb":${shuf / (1L << 20)},"auto_pick":${NnDescent.autoIters(n) == r}}"""
+      // the recall pass is not the next round's cost
+      metrics.snapshotAndReset()
+      t0 = System.nanoTime()
+    })
+    println(s"""{"probe":"nnd_rounds","n_vecs":$n,"k":${p.k},"cap":${p.cap},"slices":${p.slices},"bcast_vecs":${p.bcastVecs},"bcast_graph":${p.bcastGraph},"rounds":[${rows.mkString(",")}]}""")
   }
 
   /** Quality record for the IVF consumers (round-13 verdict item 1):

@@ -38,10 +38,12 @@ import org.apache.spark.sql.graft.{CheckpointStats, Md5Long60}
   * vector-width factor (round 16: the previously disk-fatal 50k·cap 56
   * A/B completes at 15.6 GB, and a 600k·cap 70 build completes
   * end-to-end). Peak disk is further boundable by pivot-slice
-  * execution (ExpansionSlices). Each round is cut from lineage with
-  * freshCheckpoint (stats-reset localCheckpoint — see CheckpointStats)
-  * exactly like the q52 pointer-jumping loop; on a cluster this would
-  * be a reliable-storage checkpoint.
+  * execution (autoSlices). Every caller of the recurrence — knnGraph,
+  * upsertGraph, the q196 audit and ScaleProbe's nnd-rounds curve —
+  * walks it through ONE round driver (descend), which cuts each round
+  * from lineage with freshCheckpoint (stats-reset localCheckpoint — see
+  * CheckpointStats) exactly like the q52 pointer-jumping loop; on a
+  * cluster this would be a reliable-storage checkpoint.
   *
   * Determinism: the init graph is k deterministic md5-arithmetic draws
   * per node (the q195/q161 content-stable trick — reproducible by a
@@ -68,16 +70,23 @@ object NnDescent {
   def initGraph(vectors: DataFrame, idCol: String, k: Int): DataFrame = {
     require(k >= 1, "init graph needs k >= 1")
     val nRow = vectors.agg(count(lit(1)).as("n"))
-    vectors.select(col(idCol).cast("long").as("src"))
-      .crossJoin(broadcast(nRow))
-      .select(col("src"), col("n"), explode(sequence(lit(1L), lit(k.toLong))).as("i"))
+    drawEdges(vectors.select(col(idCol).cast("long").as("src")).crossJoin(broadcast(nRow)),
+      k, "nnd0", col("n"), lit(1L))
+  }
+
+  /** The md5 edge draw behind every start graph: k draws per `src`,
+    * dst = pmod(md5_60(salt_src_i), n) · step — the oracles' ag0 CTE
+    * bit-for-bit. initGraph: "nnd0", step 1; upsert seeds: "nndu" over
+    * the merged count; q196: "nnd0" over its 1-in-m sample grid, step m.
+    */
+  private[graft] def drawEdges(ids: DataFrame, k: Int, salt: String, n: Column,
+      step: Column): DataFrame =
+    ids.withColumn("i", explode(sequence(lit(1L), lit(k.toLong))))
       .withColumn("dst", pmod(
-        Md5Long60.column(concat_ws("_", lit("nnd0"), col("src"), col("i"))),
-        col("n")))
+        Md5Long60.column(concat_ws("_", lit(salt), col("src"), col("i"))), n) * step)
       .filter(col("dst") =!= col("src"))
       .select("src", "dst")
       .distinct()
-  }
 
   /** Rows above which the scoring rounds stop broadcasting the vector
     * table and fall back to shuffle joins. 500k rows of 64-dim doubles
@@ -122,19 +131,14 @@ object NnDescent {
     * knnGraph/upsertGraph — round 16 proved slicing is load-bearing for
     * any big shuffle-regime build (the unsliced 600k pass needed ~95 GB
     * of disk and died; S = 3 completed at 44 GB peak), so the engine
-    * must not default to the plan that dies. The env/prop here is now
-    * an explicit OVERRIDE for A/Bs and probes; unset means "derive".
+    * must not default to the plan that dies. The env/prop here is an
+    * explicit OVERRIDE for A/Bs and probes, read only by deriveSlices;
+    * unset means "derive".
     */
   def ExpansionSlicesOverride: Option[Int] =
     sys.props.get("graft.nnd.expansionSlices")
       .orElse(sys.env.get("SPARK_GRAFT_NND_SLICES"))
       .map(_.toInt)
-
-  /** Legacy accessor: override or single-pass. Direct iterate/iterateInc
-    * callers that pass no slice count land here; the composed builders
-    * derive instead (see ExpansionSlicesOverride's scaladoc).
-    */
-  def ExpansionSlices: Int = ExpansionSlicesOverride.getOrElse(1)
 
   /** Local-disk budget one shuffle-regime expansion pass may occupy,
     * in bytes. Override via graft.nnd.diskBudgetBytes /
@@ -285,7 +289,7 @@ object NnDescent {
     // slices > 1 restricts the expansion to the pivots with
     // pivot % slices == slice (the pivot is a.dst == b.src); ids are
     // dense 0..N-1 so pmod is a balanced, zero-cost split. See
-    // ExpansionSlices for why and for the exactness argument.
+    // ExpansionSlicesOverride for why and for the exactness argument.
     val undA = if (slices <= 1) und
       else und.filter(pmod(col("dst"), lit(slices.toLong)) === slice)
     val undB = if (slices <= 1) und
@@ -307,9 +311,9 @@ object NnDescent {
     * `vecs` is vecFrame's (vec_id, dv, nrm). Returns (candidates,
     * ranked): the round's distinct scored candidate set — the
     * undirected graph's two-hop pairs plus the current edges — and its
-    * per-src top-k cut (src, dst, cos_sim, rank). Exposed separately so
-    * the q196 audit can report per-round candidate volume and recall
-    * without re-deriving the recurrence.
+    * per-src top-k cut (src, dst, cos_sim, rank). descend runs it as
+    * round 0 and hands the candidates to its observer, which is how the
+    * q196 audit reports per-round candidate volume and recall.
     *
     * `broadcastVecs` selects the scoring shape: true → the narrow bag +
     * two map-side broadcast vector joins (nothing wide anywhere); false
@@ -320,14 +324,12 @@ object NnDescent {
     * (the sample-bounded q196 audit). Scores are bit-identical across
     * the shapes (same bag multiset, same cos expression).
     *
-    * `slices >= 1` pins the shuffle-regime slice count (the composed
-    * builders pass autoSlices' derivation); `slices <= 0` keeps the
-    * legacy behavior — the ExpansionSlices env/prop, default single
-    * pass — for direct spec/probe callers.
+    * `slices` is the shuffle-regime slice count (descend passes
+    * BuildParams.slices, i.e. deriveSlices' pick); 1 is a single pass.
     */
   def iterate(g: DataFrame, vecs: DataFrame, k: Int, cap: Int = -1,
       broadcastVecs: Boolean = false, round: Int = 0,
-      slices: Int = 0): (DataFrame, DataFrame) = {
+      slices: Int = 1): (DataFrame, DataFrame) = {
     // Undirected adjacency CAPPED per node (default 2k): out-degree is
     // <= k by construction, but REVERSE degree is unbounded — on
     // clustered data a hub vector can sit in millions of top-k lists,
@@ -379,26 +381,22 @@ object NnDescent {
     // no N·cap²-row frame ever carries a vector payload, plus a flat
     // pass over the k·N current edges. Same bag multiset, same cos
     // expression ⟹ bit-identical scores in both shapes.
-    val slicesEff =
-      if (broadcastVecs) 1
-      else if (slices >= 1) slices
-      else math.max(1, ExpansionSlices)
     val scoredBag =
       if (broadcastVecs) scoreFlat(candBag, vecs, bcastVecs = true)
-      else if (slicesEff == 1)
+      else if (slices <= 1)
         scoreTwoHopLocal(und, vecs)
           .union(scoreFlat(g.select(col("src"), col("dst")), vecs, bcastVecs = false))
       else {
-        // bounded-peak-disk execution (see ExpansionSlices): each slice
-        // expands its pivots, scores, cuts to per-src top-k, and
+        // bounded-peak-disk execution (see ExpansionSlicesOverride): each
+        // slice expands its pivots, scores, cuts to per-src top-k, and
         // CHECKPOINTS the narrow cut so its shuffle files free before
         // the next slice; the union re-ranks below — exact.
-        (0 until slicesEff).map { sl =>
+        (0 until slices).map { sl =>
           CheckpointStats.freshCheckpoint(topKCut(
-            scoreTwoHopLocal(und, vecs, slice = sl, slices = slicesEff)
+            scoreTwoHopLocal(und, vecs, slice = sl, slices = slices)
               .union(scoreFlat(
                 g.select(col("src"), col("dst"))
-                  .filter(pmod(col("dst"), lit(slicesEff.toLong)) === sl),
+                  .filter(pmod(col("dst"), lit(slices.toLong)) === sl),
                 vecs, bcastVecs = false)), k)
             .select("src", "dst", "cos_sim"))
         }.reduce(_.unionByName(_))
@@ -450,7 +448,7 @@ object NnDescent {
     */
   def iterateInc(g: DataFrame, vecs: DataFrame, k: Int, cap: Int = -1,
       broadcastVecs: Boolean = false, broadcastGraph: Boolean = false,
-      round: Int = 0, slices: Int = 0): (DataFrame, DataFrame) = {
+      round: Int = 0, slices: Int = 1): (DataFrame, DataFrame) = {
     val capN = if (cap > 0) cap else 2 * k
     // undirected capped adjacency as in `iterate` (the same round-salted
     // md5-rank sample — see iterate's scaladoc: a fresh draw per round is
@@ -492,26 +490,22 @@ object NnDescent {
     // and the expensive frame never carries a vector payload. Scoring a
     // pair the anti-join then drops costs only its in-join projection;
     // nothing wide hits a shuffle either way.
-    val slicesEff =
-      if (broadcastVecs) 1
-      else if (slices >= 1) slices
-      else math.max(1, ExpansionSlices)
     val scored =
       if (broadcastVecs) scoreFlat(newCandBag, vecs, bcastVecs = true)
-      else if (slicesEff == 1)
+      else if (slices <= 1)
         scoreTwoHopLocal(und.select("src", "dst", "is_new"), vecs,
           extraCond = col("a.is_new") || col("b.is_new"))
           .join(gPairs, Seq("src", "dst"), "left_anti")
       else
-        // bounded-peak-disk slices (see ExpansionSlices / iterate); the
-        // per-slice cut is a superset of each pair's final rank
+        // bounded-peak-disk slices (see ExpansionSlicesOverride / iterate);
+        // the per-slice cut is a superset of each pair's final rank
         // eligibility, and the anti-join applies per slice so the union
         // stays (src, dst)-collision-free against g
-        (0 until slicesEff).map { sl =>
+        (0 until slices).map { sl =>
           CheckpointStats.freshCheckpoint(topKCut(
             scoreTwoHopLocal(und.select("src", "dst", "is_new"), vecs,
               extraCond = col("a.is_new") || col("b.is_new"),
-              slice = sl, slices = slicesEff)
+              slice = sl, slices = slices)
               .join(gPairs, Seq("src", "dst"), "left_anti"), k)
             .select("src", "dst", "cos_sim"))
         }.reduce(_.unionByName(_))
@@ -578,47 +572,55 @@ object NnDescent {
     // the derived width may exceed the base graph's build width by a
     // little near an autoK breakpoint, which is safe: old lists simply
     // hold <= base-k edges until new candidates fill the wider cut.
-    val BuildParams(kUse, capUse, bcastVecs, bcastGraph, slicesUse) =
-      buildParams(vecs, nAll, k, cap)
+    val params = buildParams(vecs, nAll, k, cap)
     // the merged count is already materialized (nAll — vecFrame is a
     // pure projection, row-for-row with `vectors`): ride it as a literal
     // instead of re-aggregating the corpus for a 1-row broadcast
-    val seeds = newVectors.select(col(idCol).cast("long").as("src"))
-      .select(col("src"), lit(nAll).as("n"), explode(sequence(lit(1L), lit(kUse.toLong))).as("i"))
-      .withColumn("dst", pmod(
-        Md5Long60.column(concat_ws("_", lit("nndu"), col("src"), col("i"))),
-        col("n")))
-      .filter(col("dst") =!= col("src"))
-      .select("src", "dst")
-      .distinct()
+    val seeds = drawEdges(newVectors.select(col(idCol).cast("long").as("src")),
+      params.k, "nndu", lit(nAll), lit(1L))
     // flat-scored: batch·k rows — linear in the batch, so one wide sorted
     // shuffle in the shuffle regime is fine (see scoreFlat's scaladoc)
-    val seedScored = scoreFlat(seeds, vecs, bcastVecs)
+    val seedScored = scoreFlat(seeds, vecs, params.bcastVecs)
     // merged working graph: base edges ride with their stored scores and
     // is_new = false (their build-time flags are stale by definition);
     // seeds are the new legs. Src sets are disjoint, so the union is
     // (src, dst)-collision-free — the invariant iterateInc's dense_rank
     // dedup relies on.
-    var g = CheckpointStats.freshCheckpoint(
+    val g = CheckpointStats.freshCheckpoint(
       baseGraph.select("src", "dst", "cos_sim").withColumn("is_new", lit(false))
         .unionByName(seedScored.withColumn("is_new", lit(true))))
-    var r = 0
-    while (r < nRounds) {
-      // round salt r + 1: the oracle's upsert unroll indexes upg rounds
-      // from t = 1 (t = 0 is the base build's iterate round)
-      // LAZY checkpoints (round 18): the rounds are strictly sequential
-      // — round r+1's stage materialization is the action that computes
-      // round r's deferred result stage, and the checkpoint RDD's block
-      // locks make the round's four in-plan self-references compute it
-      // once — so the per-round eager job was pure fixed cost (one
-      // driver action per round saved; same stages, same bytes)
-      g = CheckpointStats.freshCheckpoint(
-        iterateInc(g, vecs, kUse, capUse, bcastVecs, bcastGraph,
-          round = r + 1, slices = slicesUse)._2, eager = false)
-      r += 1
-    }
-    g.select("src", "dst", "cos_sim", "rank")
+    // rounds from t = 1: the oracle's upsert unroll indexes upg rounds
+    // from t = 1 (t = 0 is the base build's iterate round)
+    descend(g, vecs, params, 1 to nRounds).select("src", "dst", "cos_sim", "rank")
   }
+
+  /** The ONE NN-Descent round driver, returning the last round's ranked
+    * graph. Round t = 0 runs iterate + markNew over `start` as the init
+    * graph; t >= 1 runs iterateInc salted with t (the oracles' unroll
+    * index). `observe(t, candidates, graph)` sees each round's scored
+    * candidates and its checkpointed cut (the q196 audit's rows).
+    *
+    * Round 0 checkpoints eagerly, later rounds LAZILY unless `eager`
+    * (round 18): round t+1's stage materialization is the action that
+    * computes round t, and the checkpoint's block locks make the round's
+    * four in-plan self-references compute it once, so a per-round eager
+    * job is pure fixed cost. q196 (broadcast futures race a lazy cut)
+    * and ScaleProbe (per-round timing) pass eager = true.
+    */
+  private[graft] def descend(start: DataFrame, vecs: DataFrame, p: BuildParams,
+      rounds: Range, eager: Boolean = false,
+      observe: (Int, DataFrame, DataFrame) => Unit = (_, _, _) => ()): DataFrame =
+    rounds.foldLeft(start) { (g, t) =>
+      val (cand, ranked) =
+        if (t == 0) {
+          val (c, r) = iterate(g, vecs, p.k, p.cap, p.bcastVecs, slices = p.slices)
+          (c, markNew(r, g, broadcastG0 = p.bcastGraph))
+        } else iterateInc(g, vecs, p.k, p.cap, p.bcastVecs, p.bcastGraph,
+          round = t, slices = p.slices)
+      val next = CheckpointStats.freshCheckpoint(ranked, eager = eager || t == 0)
+      observe(t, cand, next)
+      next
+    }
 
   private def log2Ceil(n: Long): Int =
     64 - java.lang.Long.numberOfLeadingZeros(math.max(1L, n) - 1)
@@ -703,28 +705,15 @@ object NnDescent {
     // HashedRelations that must not pile on top of the vector broadcasts.
     val nVecs = vecs.count()
     val nIters = if (iters >= 1) iters else autoIters(nVecs)
-    val BuildParams(kUse, capUse, bcastVecs, bcastGraph, slicesUse) =
-      buildParams(vecs, nVecs, k, cap)
-    val g0 = CheckpointStats.freshCheckpoint(initGraph(vectors, idCol, kUse))
-    var g = CheckpointStats.freshCheckpoint(
-      markNew(iterate(g0, vecs, kUse, capUse, bcastVecs, slices = slicesUse)._2,
-        g0, broadcastG0 = bcastGraph))
-    var iter = 1
-    while (iter < nIters) {
-      // round salt = the oracle's unroll index t (iterate above is t = 0)
-      // LAZY checkpoints — see upsertGraph's loop: the rounds are
-      // strictly sequential, so the next round's stage materialization
-      // is the action; the per-round eager job was pure fixed cost
-      g = CheckpointStats.freshCheckpoint(
-        iterateInc(g, vecs, kUse, capUse, bcastVecs, bcastGraph,
-          round = iter, slices = slicesUse)._2, eager = false)
-      iter += 1
-    }
-    g.select("src", "dst", "cos_sim", "rank")
+    val params = buildParams(vecs, nVecs, k, cap)
+    val g0 = CheckpointStats.freshCheckpoint(initGraph(vectors, idCol, params.k))
+    descend(g0, vecs, params, 0 until nIters).select("src", "dst", "cos_sim", "rank")
   }
 
-  /** The per-build knobs of the composed builders (knnGraph,
-    * upsertGraph), all derived from the materialized corpus count `n`.
+  /** The per-build knobs of a descend walk: derived from the
+    * materialized corpus count `n` by buildParams for the composed
+    * builders (knnGraph, upsertGraph); fixed by construction for the
+    * sample-bounded q196 audit.
     */
   private[graft] final case class BuildParams(
       k: Int, cap: Int, bcastVecs: Boolean, bcastGraph: Boolean, slices: Int)

@@ -622,43 +622,25 @@ trait AnnRegistry extends RegistryBase {
           Window.partitionBy("config", "src").orderBy(cos.desc, col("dst").asc)))
         .filter(col("rank") <= KnnGraphK)
         .select("config", "src", "dst")
-      // NN-Descent rounds on the SAME sample: init draws land on the
-      // sampled id grid (vec_id = idx * m — dense multiples by
-      // construction of the spread), so m = 1 reproduces the shipped
-      // build's init exactly
-      // rounds checkpoint EAGERLY: each round's frame feeds the next
-      // round AND the folded volume/hit unions AND their broadcast
-      // futures — lazy checkpoints let concurrent broadcast threads
-      // race past the cache and recompute the whole chain (see `e`)
-      var g = org.apache.spark.sql.graft.CheckpointStats.freshCheckpoint(
-        e.crossJoin(broadcast(nRow))
-          .select(col("vec_id").as("src"), col("n_nodes"), col("mm"),
-            explode(sequence(lit(1L), lit(NndK.toLong))).as("i"))
-          .withColumn("dst",
-            pmod(org.apache.spark.sql.graft.Md5Long60.column(
-              concat_ws("_", lit("nnd0"), col("src"), col("i"))), col("n_nodes")) * col("mm"))
-          .filter(col("dst") =!= col("src"))
-          .select("src", "dst").distinct())
-      // same round shape as the shipped knnGraph: full local join on
-      // round 1 (every init edge is new), incremental new-leg rounds
-      // after — so n_cand reports exactly what each shipped round pays
-      val nndParts = (1 to NndIters).map { t =>
-        val (candT, rankedT) =
-          if (t == 1) {
-            // broadcastVecs by construction: the audit sample is
-            // target-bounded (~1000 rows), never corpus-sized
-            val (c, r) = NnDescent.iterate(g, vecs, NndK, cap = NndCap,
-              broadcastVecs = true, round = 0)
-            (c, NnDescent.markNew(r, g, broadcastG0 = true))
-          } else NnDescent.iterateInc(g, vecs, NndK, cap = NndCap,
-            broadcastVecs = true, broadcastGraph = true, round = t - 1)
-        g = org.apache.spark.sql.graft.CheckpointStats.freshCheckpoint(rankedT)
-        (t, candT, g)
-      }
-      val volRows = nndParts.map { case (t, candT, _) =>
+      // NN-Descent rounds on the SAME sample through the shipped round
+      // driver (NnDescent.descend, as knnGraph runs it), so n_cand
+      // reports exactly what each shipped round pays. Init draws land on
+      // the sampled id grid (vec_id = idx * m), so m = 1 reproduces the
+      // shipped build's init exactly. Both broadcasts by construction
+      // (the sample is ~1000 rows); rounds checkpoint EAGERLY because each
+      // round's frame feeds the folded unions' broadcast futures, which
+      // race a lazy checkpoint and recompute the whole chain (see `e`)
+      val g0 = org.apache.spark.sql.graft.CheckpointStats.freshCheckpoint(
+        NnDescent.drawEdges(e.select(col("vec_id").as("src")).crossJoin(broadcast(nRow)),
+          NndK, "nnd0", col("n_nodes"), col("mm")))
+      val nndRounds = scala.collection.mutable.ArrayBuffer.empty[(Int, DataFrame, DataFrame)]
+      NnDescent.descend(g0, vecs, NnDescent.BuildParams(NndK, NndCap, true, true, 1),
+        0 until NndIters, eager = true,
+        observe = (t, candT, gT) => nndRounds += ((t + 1, candT, gT)))
+      val volRows = nndRounds.map { case (t, candT, _) =>
           candT.select(lit(s"nnd_iter_$t").as("config"))
         }.foldLeft(cand.select("config"))(_ union _)
-      val topRows = nndParts.map { case (t, _, gT) =>
+      val topRows = nndRounds.map { case (t, _, gT) =>
           gT.filter(col("rank") <= KnnGraphK)
             .select(lit(s"nnd_iter_$t").as("config"), col("src"), col("dst"))
         }.foldLeft(srpTopRows)(_ union _)

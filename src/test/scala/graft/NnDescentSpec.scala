@@ -316,6 +316,60 @@ class NnDescentSpec extends SparkSpec {
     assert(NnDescent.ExpansionSlicesOverride === None)
   }
 
+  test("descend: the q196 audit's eager walk is the shipped knnGraph, round by round") {
+    // The audit calls the builder's own round driver with its fixed
+    // params and eager checkpoints; knnGraph walks the same driver with
+    // lazy ones. On this 40-node fixture knnGraph derives exactly the
+    // audit's literal params (both broadcasts, one slice), so every
+    // round the observer sees must equal a knnGraph build stopped there.
+    import org.apache.spark.sql.graft.CheckpointStats
+    def edges(df: org.apache.spark.sql.DataFrame) =
+      df.select("src", "dst", "cos_sim", "rank")
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSet
+    def built(iters: Int) = edges(
+      NnDescent.knnGraph(clusteredVecs, "vec_id", "embedding", k = 4, iters = iters, cap = 5))
+    val vecs = CheckpointStats.freshCheckpoint(
+      NnDescent.vecFrame(clusteredVecs, "vec_id", "embedding"))
+    val g0 = CheckpointStats.freshCheckpoint(NnDescent.initGraph(clusteredVecs, "vec_id", 4))
+    val seen = scala.collection.mutable.ArrayBuffer.empty[(Int, Set[(Long, Long, Double, Long)])]
+    val last = NnDescent.descend(g0, vecs, NnDescent.BuildParams(4, 5, true, true, 1),
+      0 until 3, eager = true, observe = (t, cand, g) => {
+        assert(cand.count() > 0, s"round $t scored no candidates")
+        seen += (t -> edges(g))
+      })
+    assert(seen.map(_._1) == Seq(0, 1, 2), "observer must fire once per round, in order")
+    seen.foreach { case (t, g) =>
+      assert(g == built(t + 1), s"round $t of the audit walk != knnGraph(iters = ${t + 1})")
+    }
+    assert(edges(last) == built(3), "final audit graph != knnGraph(iters = 3)")
+  }
+
+  test("drawEdges: grid-step draw stays on the sampled ids; step 1 is initGraph's draw") {
+    // q196 draws its init graph over a 1-in-m sample whose ids are
+    // {0, m, ..., (n-1)·m}: dst = pmod(md5, n)·m must land on that grid.
+    // The reference is the oracles' ag0 formula in Spark builtins
+    // (conv of the first 15 md5 hex chars), independent of Md5Long60.
+    import spark.implicits._
+    val k = 5
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.select("src", "dst").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    def reference(ids: Seq[Long], n: Long, m: Long) = pairs(ids.toDF("src")
+      .selectExpr("src", s"explode(sequence(1L, ${k}L)) AS i")
+      .selectExpr("src", "pmod(CAST(conv(substr(md5(concat_ws('_', 'nnd0', src, i)), 1, 15), " +
+        s"16, 10) AS BIGINT), ${n}L) * $m AS dst")
+      .filter("dst <> src"))
+    val (n, m) = (20L, 3L)
+    val grid = (0L until n).map(_ * m)
+    val drawn = pairs(NnDescent.drawEdges(grid.toDF("src"), k, "nnd0", lit(n), lit(m)))
+    assert(drawn.nonEmpty)
+    assert(drawn.forall { case (_, d) => grid.contains(d) }, "dst off the sampled grid")
+    assert(drawn.forall { case (s, d) => s != d }, "self-loop drawn")
+    drawn.groupBy(_._1).foreach { case (s, es) => assert(es.size <= k, s"node $s") }
+    assert(drawn == reference(grid, n, m), "grid draw != the oracle's ag0 formula")
+    assert(pairs(NnDescent.initGraph(clusteredVecs, "vec_id", k)) ==
+      reference(0L until 40L, 40L, 1L), "step-1 draw changed initGraph's edge set")
+  }
+
   test("knnGraph: ranks are 1..k contiguous per node, k respected") {
     val g = NnDescent.knnGraph(clusteredVecs, "vec_id", "embedding", k = 4, iters = 2)
       .collect()
