@@ -253,7 +253,7 @@ object ScaleProbe extends RegistryBase {
     * q179's bucket key is (centroid_id, label), so rare labels inside
     * probed buckets can under-return harder than the unfiltered q131
     * sweep shows — this measures it per label-frequency band. q180's
-    * vector leg is the cent8 ivfTopKQ at nprobe = 2; its at-scale effect
+    * vector leg is the cent8 ivfTopKOnIndex at nprobe = 2; its at-scale effect
     * on the FUSED ranking is what matters, so the probe swaps in an
     * exact vector leg and diffs the fusion.
     */
@@ -322,7 +322,8 @@ object ScaleProbe extends RegistryBase {
       val (tr, init) = trainSample8(s, e)
       Similarity.trainCentroids(tr, "vec_id", "embedding", init, KmeansIters)
     }
-    val ivfVec = Similarity.ivfTopKQ(queries180, spread(s, e), cents,
+    val ivfVec = Similarity.ivfTopKOnIndex(queries180,
+        Similarity.ivfIndex(spread(s, e), cents, "vec_id", "embedding"), cents,
         "vec_id", "embedding", k = 10, nprobe = 2)
       .select(col("q_id"), col("r_id").as("doc_id"), col("rank").as("rk_v"))
     val exactSets = exactVec.collect().map(r => (r.getLong(0), r.getLong(1)))
@@ -374,7 +375,7 @@ object ScaleProbe extends RegistryBase {
     * at ~0.37–0.53 at h10, and the keep-IVF decision had no numeric bar
     * under it. This sweeps EXPLICIT probe depths around the shipped
     * auto rule (nprobe = ceil(sqrt(k_centroids))) on the exact serving
-    * path (ivfTopKQServeStoredAuto over the persisted self-contained
+    * path (ivfTopKOnIndex over the persisted self-contained
     * index), measuring recall@3 vs exact truth for the unfiltered
     * q43 shape AND the label-filtered q179 shape, plus per-depth wall —
     * the depth/recall/cost curve the serving bar is written against.
@@ -413,10 +414,10 @@ object ScaleProbe extends RegistryBase {
       .filter(d => d >= 1 && d <= kc).distinct.sorted
     val rows = depths.map { np =>
       val t0 = System.nanoTime()
-      val got = pairs(Similarity.ivfTopKQServeStoredAuto(
+      val got = pairs(Similarity.ivfTopKOnIndex(
         queries, index, cents, "vec_id", "embedding", k = 3, nprobe = np))
       val w = (System.nanoTime() - t0) / 1e9
-      val gotF = pairs(Similarity.ivfTopKQServeStoredAuto(
+      val gotF = pairs(Similarity.ivfTopKOnIndex(
         queries, index, cents, "vec_id", "embedding", k = 3,
         labelCol = Some("label"), nprobe = np))
       val rec = recall(got, exact)

@@ -36,6 +36,14 @@ object SparkEntry extends MatchRegistry with RelationalRegistry with DedupRegist
       streamingQueries ++
       multimodalQueries
 
+  /** How many corpus artifacts this JVM has staged so far: entries of the
+    * trained-artifact registry (centroids, codebooks, IVF and kNN-graph
+    * indexes) plus catalog tables and views (bucketed layouts, persisted
+    * signature tables). A query run that grows it paid a one-time build.
+    */
+  def stagedArtifacts(s: SparkSession): Int =
+    modelPaths.size + s.catalog.listTables().collect().length
+
   def oracleSql: Map[String, String] =
     matchOracle ++
       relationalOracle ++

@@ -9,13 +9,23 @@ import org.apache.spark.sql.functions._
   * text pipeline (SURVEY §0): cheap bucket/quantized prune -> exact cosine
   * on survivors.
   *
+  * Each index family trains, builds once and probes many times:
+  *   - IVF: trainCentroids -> ivfIndex (build; assignToCentroids is its
+  *     bucket assignment) -> ivfTopKOnIndex (probe);
+  *   - PQ: trainPqCodebooks -> pqEncode / pqAdcTopK;
+  *   - IVF-PQ: trainCentroids + trainResidualCodebooks -> ivfPqAdcTopK.
+  * Centroid tables and codebooks are always the quantized (integer) form
+  * the trainers emit; a table of raw seed rows is the trainer run with
+  * iters = 0, which returns the quantized seeds unchanged.
+  *
   * Scale design (100 TB):
   *   - brute-force top-k broadcasts the (small) query set and streams the
   *     corpus — one shuffle for the per-query top-k window, carrying only
   *     (q_id, r_id, score).
-  *   - the IVF path assigns every vector to a centroid bucket (narrow map),
-  *     then searches only the probed buckets — an equi-join on bucket id,
-  *     never an all-pairs product.
+  *   - the IVF build assigns every vector to a centroid bucket (narrow
+  *     map) and stores it inside that bucket's list; a query batch then
+  *     searches only the probed buckets — an equi-join on bucket id,
+  *     never an all-pairs product, and no corpus-side join per batch.
   *   - quantized (integer) scoring is used where a DuckDB oracle must
   *     reproduce results exactly; float kernels sum strictly
   *     left-to-right so results are deterministic under retries/AQE.
@@ -83,92 +93,65 @@ object Similarity {
       .select("q_id", "r_id", "cos_sim", "rank")
   }
 
-  /** Scalar-quantized embedding: floor(x * scale) per component, as longs.
+  /** Scalar-quantized embedding: floor(x * 1000) per component, as longs.
     * Integer arithmetic makes downstream scores exactly reproducible by
     * any engine (the oracle), and is the standard memory/bandwidth
-    * reduction for the first ANN pass.
+    * reduction for the first ANN pass. Every centroid table and codebook
+    * in this object lives at this one scale.
     */
-  def quantize(v: Column, scale: Int = 1000): Column =
-    transform(v, x => floor(x.cast("double") * scale).cast("long"))
+  def quantize(v: Column): Column =
+    transform(v, x => floor(x.cast("double") * 1000).cast("long"))
 
   /** Integer dot product of two quantized vectors (exact; codegen'd). */
   def dotQ(a: Column, b: Column): Column =
     org.apache.spark.sql.graft.ArrayDot.longDot(a, b)
 
-  /** IVF-style coarse assignment: top-`nprobe` centroids by quantized dot
-    * product (ties -> lowest centroid id). `centroids` is small and
-    * broadcast. Returns (id, centroid_id, score) with `nprobe` rows per id.
-    * At scale this bucket id becomes the partition/join key for probing.
+  /** Every (vector, centroid) pair scored by quantized dot product and
+    * ranked per vector, best first (ties -> lowest centroid id):
+    * (id, qv, centroid_id, cv, score, rank). `qcentroids` is small and
+    * broadcast.
     */
-  def centroidRanks(
-      vectors: DataFrame,
-      centroids: DataFrame,
-      idCol: String,
-      vecCol: String,
-      nprobe: Int,
-      scale: Int = 1000
-  ): DataFrame = centroidRanksQ(
-    vectors,
-    centroids.select(col(idCol).as("centroid_id"), quantize(col(vecCol), scale).as("cv")),
-    idCol, vecCol, nprobe, scale)
-
-  /** centroidRanks against ALREADY-QUANTIZED centroids (centroid_id,
-    * cv: array<long>) — the form trainCentroids produces. Trained
-    * centroids are integer means, so re-quantizing a float view would
-    * lose exactness; this entry point skips that round-trip.
-    */
-  def centroidRanksQ(
+  private def rankByDot(
       vectors: DataFrame,
       qcentroids: DataFrame,
       idCol: String,
-      vecCol: String,
-      nprobe: Int,
-      scale: Int = 1000
+      vecCol: String
   ): DataFrame = {
-    val v = vectors.select(col(idCol).as("id"), quantize(col(vecCol), scale).as("qv"))
-    val scored = v
-      .crossJoin(broadcast(qcentroids.select(col("centroid_id"), col("cv"))))
-      .withColumn("score", dotQ(col("qv"), col("cv")))
+    val v = vectors.select(col(idCol).as("id"), quantize(col(vecCol)).as("qv"))
     val w = Window.partitionBy("id").orderBy(col("score").desc, col("centroid_id").asc)
-    scored
+    v.crossJoin(broadcast(qcentroids.select(col("centroid_id"), col("cv"))))
+      .withColumn("score", dotQ(col("qv"), col("cv")))
       .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= nprobe)
-      .select("id", "centroid_id", "score")
   }
 
-  /** Single-bucket assignment (nprobe = 1). */
+  /** IVF-style coarse assignment: each vector's nearest centroid by
+    * quantized dot product (ties -> lowest centroid id). Returns
+    * (id, centroid_id, score), one row per id. At scale this bucket id
+    * becomes the partition/join key for probing (see ivfIndex).
+    *
+    * `qcentroids` is (centroid_id, cv: array<long>) at the quantize()
+    * scale — what trainCentroids produces. Trained centroids are integer
+    * means, so they are never re-quantized from a float view; a table of
+    * raw seed rows is trainCentroids(..., iters = 0).
+    */
   def assignToCentroids(
-      vectors: DataFrame,
-      centroids: DataFrame,
-      idCol: String,
-      vecCol: String,
-      scale: Int = 1000
-  ): DataFrame = centroidRanks(vectors, centroids, idCol, vecCol, nprobe = 1, scale)
-
-  /** Single-bucket assignment against trained (quantized) centroids. */
-  def assignToCentroidsQ(
       vectors: DataFrame,
       qcentroids: DataFrame,
       idCol: String,
-      vecCol: String,
-      scale: Int = 1000
-  ): DataFrame = centroidRanksQ(vectors, qcentroids, idCol, vecCol, nprobe = 1, scale)
+      vecCol: String
+  ): DataFrame =
+    rankByDot(vectors, qcentroids, idCol, vecCol)
+      .filter(col("rank") <= 1)
+      .select("id", "centroid_id", "score")
 
-  /** Per-subspace slices of a quantized vector: m rows (sub_id, slice) per
-    * input row. Slice width derives from the vector's own length so the
-    * same helper serves any dimensionality.
+  /** Per-subspace slices of a quantized vector: m rows (idOut, sub_id, sv)
+    * per input row. Slice width derives from the vector's own length so
+    * the same helper serves any dimensionality.
     */
   private def subVectors(
-      df: DataFrame, idCol: String, vecCol: String, m: Int, scale: Int,
-      idOut: String): DataFrame =
-    df.select(col(idCol).as(idOut), quantize(col(vecCol), scale).as("__qv"))
-      .withColumn("__d", size(col("__qv")) / m)
-      .select(
-        col(idOut),
-        explode(sequence(lit(0), lit(m - 1))).as("sub_id"),
-        col("__qv"), col("__d"))
-      .withColumn("sv", slice(col("__qv"), col("sub_id") * col("__d") + 1, col("__d")))
-      .select(col(idOut), col("sub_id").cast("long").as("sub_id"), col("sv"))
+      df: DataFrame, idCol: String, vecCol: String, m: Int, idOut: String): DataFrame =
+    slicesQ(df.select(col(idCol).as(idOut), quantize(col(vecCol)).as("__qv")),
+      Seq(idOut), "__qv", m)
 
   /** Per-subspace slices of an ALREADY-QUANTIZED long-array column,
     * keeping `keep` passthrough columns: m rows (keep..., sub_id, sv)
@@ -261,18 +244,18 @@ object Similarity {
     * id set whose vectors become iteration-0 centroids, keeping their
     * ids as centroid ids), run `iters` Lloyd steps. Returns
     * (centroid_id, cv) at the quantize() scale — feed to
-    * assignToCentroidsQ / centroidRanksQ.
+    * assignToCentroids / ivfIndex / ivfTopKOnIndex. With iters = 0 the
+    * result is the quantized seed rows themselves.
     */
   def trainCentroids(
       vectors: DataFrame,
       idCol: String,
       vecCol: String,
       initIds: DataFrame,
-      iters: Int,
-      scale: Int = 1000
+      iters: Int
   ): DataFrame = {
     val v = vectors.select(lit(0L).as("grp"), col(idCol).as("id"),
-      quantize(col(vecCol), scale).as("qv"))
+      quantize(col(vecCol)).as("qv"))
     val init = v.join(initIds.select(col(idCol).as("id")).distinct(), Seq("id"))
       .select(col("grp"), col("id").as("centroid_id"), col("qv").as("cv"))
     lloydIterate(v, init, iters).select("centroid_id", "cv")
@@ -280,9 +263,10 @@ object Similarity {
 
   /** Per-subspace PQ codebook training: one independent k-means per
     * subspace (grp = sub_id), seeded from `initIds`' slices. Returns
-    * (sub_id, code, cv) — feed to pqEncodeQ / pqAdcTopKQ. This is the
+    * (sub_id, code, cv) — feed to pqEncode / pqAdcTopK. This is the
     * training half of Jégou et al.'s PQ (the codebook is per-subspace
-    * k-means, not a row sample).
+    * k-means, not a row sample). With iters = 0 the codebook is the
+    * seed rows' quantized slices, each keeping its row id as its code.
     */
   def trainPqCodebooks(
       vectors: DataFrame,
@@ -290,10 +274,9 @@ object Similarity {
       vecCol: String,
       m: Int,
       initIds: DataFrame,
-      iters: Int,
-      scale: Int = 1000
+      iters: Int
   ): DataFrame = {
-    val v = subVectors(vectors, idCol, vecCol, m, scale, "id")
+    val v = subVectors(vectors, idCol, vecCol, m, "id")
       .select(col("sub_id").as("grp"), col("id"), col("sv").as("qv"))
     val init = v.join(initIds.select(col(idCol).as("id")).distinct(), Seq("id"))
       .select(col("grp"), col("id").as("centroid_id"), col("qv").as("cv"))
@@ -306,8 +289,10 @@ object Similarity {
     * each subvector maps to the id of its nearest per-subspace codeword
     * (integer squared-L2 on quantized components — exact, so the DuckDB
     * oracle reproduces codes bit-for-bit; ties break on ascending
-    * codeword id via the struct min). Returns (id, sub_id, code, dist_q):
-    * m small codes replace the full float vector.
+    * codeword id via the struct min). `codebook` is (sub_id, code,
+    * cv: array<long>), the form trainPqCodebooks produces. Returns
+    * (id, sub_id, code, dist_q): m small codes replace the full float
+    * vector.
     *
     * Scale shape: the codebook is tiny and broadcast; encode is a narrow
     * per-row map plus a per-(id, sub_id) argmin folded into ONE partial
@@ -320,27 +305,10 @@ object Similarity {
       codebook: DataFrame,
       idCol: String,
       vecCol: String,
-      m: Int,
-      scale: Int = 1000
-  ): DataFrame = pqEncodeQ(
-    vectors,
-    subVectors(codebook, idCol, vecCol, m, scale, "code")
-      .select(col("sub_id"), col("code"), col("sv").as("cv")),
-    idCol, vecCol, m, scale)
-
-  /** pqEncode against an ALREADY-TRAINED codebook (sub_id, code,
-    * cv: array<long>) — the form trainPqCodebooks produces.
-    */
-  def pqEncodeQ(
-      vectors: DataFrame,
-      codebookQ: DataFrame,
-      idCol: String,
-      vecCol: String,
-      m: Int,
-      scale: Int = 1000
+      m: Int
   ): DataFrame = {
-    val v = subVectors(vectors, idCol, vecCol, m, scale, "id")
-    val c = codebookQ.select(col("sub_id"), col("code"), col("cv"))
+    val v = subVectors(vectors, idCol, vecCol, m, "id")
+    val c = codebook.select(col("sub_id"), col("code"), col("cv"))
     v.join(broadcast(c), Seq("sub_id"))
       .withColumn("dist_q", sqDistQ(col("sv"), col("cv")))
       .groupBy("id", "sub_id")
@@ -353,10 +321,11 @@ object Similarity {
   /** Asymmetric-distance (ADC) top-k over PQ codes: the query stays
     * full-precision; each corpus vector's distance is approximated by the
     * sum over subspaces of the (query subvector -> assigned codeword)
-    * distance, read from a per-query lookup table. Exact integer
-    * arithmetic end-to-end, so the approximation itself is
-    * oracle-reproducible. Returns (q_id, r_id, adc_dist, rank), rank by
-    * ascending distance, ties on ascending r_id.
+    * distance, read from a per-query lookup table. `codebook` is
+    * (sub_id, code, cv) as for pqEncode. Exact integer arithmetic
+    * end-to-end, so the approximation itself is oracle-reproducible.
+    * Returns (q_id, r_id, adc_dist, rank), rank by ascending distance,
+    * ties on ascending r_id.
     *
     * Scale shape: the LUT is |queries|·m·k rows — tiny, broadcast. The
     * corpus side touches only the CODES table (never the raw vectors):
@@ -371,29 +340,12 @@ object Similarity {
       idCol: String,
       vecCol: String,
       m: Int,
-      k: Int,
-      scale: Int = 1000
-  ): DataFrame = pqAdcTopKQ(
-    queries, corpus,
-    subVectors(codebook, idCol, vecCol, m, scale, "code")
-      .select(col("sub_id"), col("code"), col("sv").as("cv")),
-    idCol, vecCol, m, k, scale)
-
-  /** pqAdcTopK against an already-trained codebook (sub_id, code, cv). */
-  def pqAdcTopKQ(
-      queries: DataFrame,
-      corpus: DataFrame,
-      codebookQ: DataFrame,
-      idCol: String,
-      vecCol: String,
-      m: Int,
-      k: Int,
-      scale: Int = 1000
+      k: Int
   ): DataFrame = {
-    val codes = pqEncodeQ(corpus, codebookQ, idCol, vecCol, m, scale)
+    val codes = pqEncode(corpus, codebook, idCol, vecCol, m)
       .select(col("id").as("r_id"), col("sub_id"), col("code"))
-    val qs = subVectors(queries, idCol, vecCol, m, scale, "q_id")
-    val cs = codebookQ.select(col("sub_id"), col("code"), col("cv"))
+    val qs = subVectors(queries, idCol, vecCol, m, "q_id")
+    val cs = codebook.select(col("sub_id"), col("code"), col("cv"))
     val lut = qs.join(cs, Seq("sub_id"))
       .select(col("q_id"), col("sub_id"), col("code"), sqDistQ(col("sv"), col("cv")).as("dq"))
     val w = Window.partitionBy("q_id").orderBy(col("adc_dist").asc, col("r_id").asc)
@@ -406,146 +358,69 @@ object Similarity {
       .select("q_id", "r_id", "adc_dist", "rank")
   }
 
-  /** IVF probe-and-refine ANN search: corpus vectors live in their nearest
-    * centroid's bucket; each query probes its `nprobe` nearest buckets and
-    * refines with EXACT cosine over only those buckets' members.
-    * Approximate by construction (recall < 1 when a true neighbor lives in
-    * an unprobed bucket) but fully deterministic: the coarse phase is
-    * integer math, refine tie-breaks on ref id. Returns
-    * (q_id, r_id, cos_sim, rank).
+  /** The IVF index BUILD: every corpus vector assigned to its nearest
+    * centroid (assignToCentroids), with the vector itself stored INSIDE
+    * its inverted list — (r_id, centroid_id, [lbl,] dv double[], nrm),
+    * the way a real IVF store lays data out. `labelCol` = Some(name)
+    * carries that column as `lbl` for label-filtered probes. Built once
+    * (O(N·k) assignment — the standard IVF build cost) and probed by any
+    * number of query batches through ivfTopKOnIndex; at scale the table
+    * is persisted partitioned by centroid_id so a probe reads just its
+    * partitions.
+    */
+  def ivfIndex(
+      corpus: DataFrame,
+      qcentroids: DataFrame,
+      idCol: String,
+      vecCol: String,
+      labelCol: Option[String] = None
+  ): DataFrame = {
+    val vecs = corpus.select((col(idCol).as("r_id") +: labelCol.map(col(_).as("lbl")).toSeq)
+      :+ asDouble(col(vecCol)).as("dv"): _*)
+    assignToCentroids(corpus, qcentroids, idCol, vecCol)
+      .select(col("id").as("r_id"), col("centroid_id"))
+      .join(vecs, Seq("r_id"))
+      .withColumn("nrm", l2Norm(col("dv")))
+  }
+
+  /** IVF probe-and-refine ANN search over an ivfIndex: each query probes
+    * its `nprobe` nearest buckets (quantized dot, ties -> lowest centroid
+    * id) and refines with EXACT cosine over only those buckets' members,
+    * self excluded. Approximate by construction (recall < 1 when a true
+    * neighbor lives in an unprobed bucket) but fully deterministic: the
+    * coarse phase is integer math, refine tie-breaks on ref id. Returns
+    * (q_id, r_id, cos_sim, rank). `qcentroids` must be the table the
+    * index was built with.
     *
-    * Scale shape: bucket membership is an equi-join key — the corpus
-    * shuffles ONCE by bucket; per-query work is bounded by probed-bucket
-    * sizes, never the whole corpus.
-    */
-  def ivfTopK(
-      queries: DataFrame,
-      corpus: DataFrame,
-      centroids: DataFrame,
-      idCol: String,
-      vecCol: String,
-      k: Int,
-      nprobe: Int,
-      scale: Int = 1000
-  ): DataFrame = ivfTopKQ(
-    queries, corpus,
-    centroids.select(col(idCol).as("centroid_id"), quantize(col(vecCol), scale).as("cv")),
-    idCol, vecCol, k, nprobe, scale)
-
-  /** ivfTopK against trained (quantized) centroids (centroid_id, cv). */
-  def ivfTopKQ(
-      queries: DataFrame,
-      corpus: DataFrame,
-      qcentroids: DataFrame,
-      idCol: String,
-      vecCol: String,
-      k: Int,
-      nprobe: Int,
-      scale: Int = 1000
-  ): DataFrame = ivfTopKQServe(
-    queries, corpus,
-    assignToCentroidsQ(corpus, qcentroids, idCol, vecCol, scale)
-      .select(col("id").as("r_id"), col("centroid_id")),
-    qcentroids, idCol, vecCol, k, nprobe, scale)
-
-  /** ivfTopKQ against a PREBUILT bucket index (r_id, centroid_id) — the
-    * serving decomposition: the corpus-side IVF assignment is built once
-    * (persisted/checkpointed by the caller) and each query batch pays
-    * only its own probe + refine, bounded by probed-bucket sizes. This is
-    * what the streaming q194 gate runs per micro-batch; ivfTopKQ is the
-    * build-and-query composition of it.
-    */
-  def ivfTopKQServe(
-      queries: DataFrame,
-      corpus: DataFrame,
-      buckets: DataFrame,
-      qcentroids: DataFrame,
-      idCol: String,
-      vecCol: String,
-      k: Int,
-      nprobe: Int,
-      scale: Int = 1000
-  ): DataFrame = {
-    val probes = centroidRanksQ(queries, qcentroids, idCol, vecCol, nprobe, scale)
-      .select(col("id").as("q_id"), col("centroid_id"))
-    serveRefine(queries, corpus, probes, buckets, idCol, vecCol, k)
-  }
-
-  /** The shared probe-bucket-join + exact-cosine refine + per-query
-    * top-k tail of every IVF serving variant. `probes` is (q_id,
-    * centroid_id); `buckets` is the (r_id, centroid_id) index.
-    */
-  private def serveRefine(
-      queries: DataFrame,
-      corpus: DataFrame,
-      probes: DataFrame,
-      buckets: DataFrame,
-      idCol: String,
-      vecCol: String,
-      k: Int
-  ): DataFrame = {
-    val q = queries.select(col(idCol).as("q_id"), asDouble(col(vecCol)).as("q_vec"))
-      .withColumn("q_nrm", l2Norm(col("q_vec")))
-    val c = corpus.select(col(idCol).as("r_id"), asDouble(col(vecCol)).as("r_vec"))
-      .withColumn("r_nrm", l2Norm(col("r_vec")))
-    val cands = probes
-      .join(buckets, Seq("centroid_id"))
-      .where(col("q_id") =!= col("r_id"))
-      .select("q_id", "r_id")
-    val w = Window.partitionBy("q_id").orderBy(col("cos_sim").desc, col("r_id").asc)
-    cands
-      .join(broadcast(q), Seq("q_id"))
-      .join(c, Seq("r_id"))
-      .withColumn("cos_sim", dot(col("q_vec"), col("r_vec")) / (col("q_nrm") * col("r_nrm")))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("q_id", "r_id", "cos_sim", "rank")
-  }
-
-  /** ivfTopKQServe with the probe depth derived FROM the quantizer:
-    * nprobe = ceil(sqrt(k_centroids)), arriving as a broadcast 1-row
-    * aggregate of the centroid table — no driver action, no constant to
-    * retune per corpus. With the √N-centroid quantizer this keeps the
-    * probed fraction √k/k = k^(-1/2) (the FAISS nprobe~√k sizing rule):
-    * per-query refine cost is nprobe·(N/k) = N^(3/4) — sublinear —
-    * while at oracle scales the probed fraction stays close to the old
-    * fixed (k=8, nprobe=2) quarter-of-corpus so measured recall holds
-    * (q131 is the monitor). On near-uniform vectors recall at a
-    * shrinking probed fraction decays with N — inherent to one-shot
-    * bucketed ANN (see NnDescent's scaladoc for the measured wall);
-    * real clustered embeddings are the favourable case.
-    */
-  def ivfTopKQServeAuto(
-      queries: DataFrame,
-      corpus: DataFrame,
-      buckets: DataFrame,
-      qcentroids: DataFrame,
-      idCol: String,
-      vecCol: String,
-      k: Int,
-      scale: Int = 1000
-  ): DataFrame =
-    serveRefine(queries, corpus,
-      autoProbes(queries, qcentroids, idCol, vecCol, scale),
-      buckets, idCol, vecCol, k)
-
-  /** ivfTopKQServeAuto against a SELF-CONTAINED index — (r_id,
-    * centroid_id, dv double[], nrm[, lbl]) — i.e. the vectors live
-    * INSIDE the inverted lists, the way a real IVF store lays them out.
-    * No corpus-side join at query time: a probe touches only its
-    * buckets' rows, so at scale (index partitioned by centroid_id)
-    * each micro-batch reads just the probed partitions instead of
-    * shuffling the corpus per batch. `labelCol` = Some(name) keys the
+    * The vectors live inside the index, so a probe joins no corpus frame:
+    * per-query work is bounded by probed-bucket sizes, never the corpus.
+    *
+    * `nprobe` = 0 (the default, every serving query) derives the depth
+    * FROM the quantizer: nprobe = ceil(sqrt(k_centroids)), arriving as a
+    * broadcast 1-row aggregate of the centroid table — no driver action,
+    * no constant to retune per corpus. With the √N-centroid quantizer
+    * this keeps the probed fraction √k/k = k^(-1/2) (the FAISS nprobe~√k
+    * sizing rule): per-query refine cost is nprobe·(N/k) = N^(3/4) —
+    * sublinear — while at oracle scales the probed fraction stays close
+    * to a quarter of the corpus so measured recall holds (q131 is the
+    * monitor). On near-uniform vectors recall at a shrinking probed
+    * fraction decays with N — inherent to one-shot bucketed ANN (see
+    * NnDescent's scaladoc for the measured wall); real clustered
+    * embeddings are the favourable case. nprobe > 0 pins an explicit
+    * depth (q180's vector leg; ScaleProbe ivf-sweep's depth→recall
+    * curve).
+    *
+    * `labelCol` = Some(name) (the index built with a label) keys the
     * bucket join on (centroid_id, label) — FILTERED ANN over the same
     * index. The filter is part of the BUCKET KEY, not a post-filter on
-    * the top-k: post-filtering an unfiltered top-k returns < k (or
-    * zero) results whenever the label is rare in the probed buckets,
-    * while the composite key partitions each inverted list by label so
-    * candidates are right by construction — at 100 TB the difference
-    * between k·nprobe useful candidates and a recall cliff on
-    * selective predicates.
+    * the top-k: post-filtering an unfiltered top-k returns < k (or zero)
+    * results whenever the label is rare in the probed buckets, while the
+    * composite key partitions each inverted list by label so candidates
+    * are right by construction — at 100 TB the difference between
+    * k·nprobe useful candidates and a recall cliff on selective
+    * predicates.
     */
-  def ivfTopKQServeStoredAuto(
+  def ivfTopKOnIndex(
       queries: DataFrame,
       index: DataFrame,
       qcentroids: DataFrame,
@@ -553,15 +428,10 @@ object Similarity {
       vecCol: String,
       k: Int,
       labelCol: Option[String] = None,
-      scale: Int = 1000,
       nprobe: Int = 0
   ): DataFrame = {
-    // nprobe = 0 (every registry call site) keeps the shipped auto rule
-    // ceil(sqrt(k_centroids)); > 0 pins an explicit depth — the
-    // ScaleProbe ivf-sweep's knob for the depth→recall curve that
-    // justifies (or indicts) the auto rule.
-    val baseProbes = autoProbes(queries, qcentroids, idCol, vecCol, scale, nprobe)
-    val (probes, joinKeys) = labelCol match {
+    val baseProbes = probes(queries, qcentroids, idCol, vecCol, nprobe)
+    val (probed, joinKeys) = labelCol match {
       case Some(lc) => (
         baseProbes
           .join(queries.select(col(idCol).as("q_id"), col(lc).as("lbl")), Seq("q_id"))
@@ -581,7 +451,7 @@ object Similarity {
     // measured a net LOSS at this scale (listing + per-batch pruning
     // subquery > bytes saved); it becomes the right knob only when an
     // inverted list outgrows what a full scan can stream.
-    broadcast(probes)
+    broadcast(probed)
       .join(index, joinKeys)
       .where(col("q_id") =!= col("r_id"))
       .join(broadcast(q), Seq("q_id"))
@@ -591,26 +461,21 @@ object Similarity {
       .select("q_id", "r_id", "cos_sim", "rank")
   }
 
-  /** Probe set under the auto rule: each query's top ceil(sqrt(k))
-    * centroids, the probe depth arriving as a broadcast 1-row aggregate
-    * of the centroid table — no driver action, no per-corpus constant.
+  /** Probe set (q_id, centroid_id): each query's top-`nprobe` centroids,
+    * the depth arriving as a broadcast 1-row aggregate of the centroid
+    * table — ceil(sqrt(k)) when `nprobe` = 0.
     */
-  private def autoProbes(
+  private def probes(
       queries: DataFrame,
       qcentroids: DataFrame,
       idCol: String,
       vecCol: String,
-      scale: Int,
-      nprobe: Int = 0
+      nprobe: Int
   ): DataFrame = {
     val npRow =
       if (nprobe > 0) qcentroids.agg(lit(nprobe.toLong).as("np"))
       else qcentroids.agg(ceil(sqrt(count(lit(1)))).cast("long").as("np"))
-    val v = queries.select(col(idCol).as("id"), quantize(col(vecCol), scale).as("qv"))
-    val wp = Window.partitionBy("id").orderBy(col("score").desc, col("centroid_id").asc)
-    v.crossJoin(broadcast(qcentroids.select(col("centroid_id"), col("cv"))))
-      .withColumn("score", dotQ(col("qv"), col("cv")))
-      .withColumn("rank", row_number().over(wp))
+    rankByDot(queries, qcentroids, idCol, vecCol)
       .crossJoin(broadcast(npRow))
       .filter(col("rank") <= col("np"))
       .select(col("id").as("q_id"), col("centroid_id"))
@@ -622,15 +487,14 @@ object Similarity {
     * (id, centroid_id, d) with `nprobe` rows per id, ties -> lowest
     * centroid_id.
     */
-  def centroidRanksL2Q(
+  private def centroidRanksL2(
       vectors: DataFrame,
       qcentroids: DataFrame,
       idCol: String,
       vecCol: String,
-      nprobe: Int,
-      scale: Int = 1000
+      nprobe: Int
   ): DataFrame = {
-    val v = vectors.select(col(idCol).as("id"), quantize(col(vecCol), scale).as("qv"))
+    val v = vectors.select(col(idCol).as("id"), quantize(col(vecCol)).as("qv"))
     val scored = v
       .crossJoin(broadcast(qcentroids.select(col("centroid_id"), col("cv"))))
       .withColumn("d", sqDistQ(col("qv"), col("cv")))
@@ -641,16 +505,65 @@ object Similarity {
       .select("id", "centroid_id", "d")
   }
 
+  /** Residuals qv - cv of every vector from each of its `nprobe` nearest
+    * (L2) coarse cells: (idOut, centroid_id, rv), integer subtraction —
+    * exact. `cents` is (centroid_id, cv).
+    */
+  private def residuals(
+      vectors: DataFrame,
+      cents: DataFrame,
+      idCol: String,
+      vecCol: String,
+      nprobe: Int,
+      idOut: String
+  ): DataFrame =
+    centroidRanksL2(vectors, cents, idCol, vecCol, nprobe)
+      .join(broadcast(cents), Seq("centroid_id"))
+      .join(vectors.select(col(idCol).as("id"), quantize(col(vecCol)).as("qv")), Seq("id"))
+      .select(col("id").as(idOut), col("centroid_id"),
+        zip_with(col("qv"), col("cv"), (x, c) => x - c).as("rv"))
+
+  /** The TRAIN half of ivfPqAdcTopK, split out so a model registry can
+    * persist the artifact: residuals of `trainVecs` from their L2-assigned
+    * coarse cell, then one independent k-means per subspace over those
+    * residuals, seeded from `codebookInitIds`' residual slices. Returns
+    * (sub_id, code, cbv) — ivfPqAdcTopK's `codebook`. Residuals are
+    * per-row against the broadcast centroid set, so training on a sample
+    * frame yields bit-identical codebooks to training on the sample
+    * within the full corpus.
+    */
+  def trainResidualCodebooks(
+      trainVecs: DataFrame,
+      qcentroids: DataFrame,
+      codebookInitIds: DataFrame,
+      idCol: String,
+      vecCol: String,
+      m: Int,
+      iters: Int
+  ): DataFrame = {
+    val cents = qcentroids.select(col("centroid_id"), col("cv"))
+    val rs = slicesQ(residuals(trainVecs, cents, idCol, vecCol, 1, "id"),
+        Seq("id", "centroid_id"), "rv", m)
+      .localCheckpoint(false) // feeds the seed join AND the iterate input
+    lloydIterate(
+      rs.select(col("sub_id").as("grp"), col("id"), col("sv").as("qv")),
+      rs.join(codebookInitIds.select(col(idCol).as("id")).distinct(), Seq("id"))
+        .select(col("sub_id").as("grp"), col("id").as("centroid_id"), col("sv").as("cv")),
+      iters)
+      .select(col("grp").as("sub_id"), col("centroid_id").as("code"), col("cv").as("cbv"))
+  }
+
   /** Full IVF-PQ with RESIDUAL coding (Jégou et al. TPAMI'11, the shape
     * FAISS ships as IndexIVFPQ): corpus vectors L2-assign to a trained
-    * coarse centroid; the per-subspace codebooks are trained ON THE
-    * RESIDUALS qv - cv (integer subtraction — exact), which is what
-    * makes PQ distances sharp (residuals are small and centered, raw
-    * vectors are not); a query probes its `nprobe` nearest coarse cells
-    * and scores each member from a per-(query, probed-cell) LUT over the
-    * query's OWN residual in that cell. Everything is integer/floor
-    * arithmetic, so the full train->encode->search pipeline is
-    * oracle-reproducible bit-for-bit.
+    * coarse centroid and are encoded as the residual qv - cv (integer
+    * subtraction — exact) against `codebook`, the per-subspace codebooks
+    * trainResidualCodebooks fits ON THE RESIDUALS, which is what makes PQ
+    * distances sharp (residuals are small and centered, raw vectors are
+    * not); a query probes its `nprobe` nearest coarse cells and scores
+    * each member from a per-(query, probed-cell) LUT over the query's
+    * OWN residual in that cell. Everything is integer/floor arithmetic,
+    * so the full train->encode->search pipeline is oracle-reproducible
+    * bit-for-bit.
     *
     * Returns (q_id, r_id, adc_dist, rank), rank ascending by approximate
     * distance, ties -> ascending r_id.
@@ -662,97 +575,31 @@ object Similarity {
     * (centroid_id, sub_id, code) — bucket membership rides the coarse
     * id in the join key, so only probed cells' members are scored.
     */
-  /** The TRAIN half of ivfPqAdcTopK, split out so a model registry can
-    * persist the artifact: residuals of `trainVecs` from their L2-assigned
-    * coarse cell, then one independent k-means per subspace over those
-    * residuals. Returns (sub_id, code, cbv) — feed back through
-    * ivfPqAdcTopK's `codebook` parameter. Residuals are per-row against
-    * the broadcast centroid set, so training on a sample frame yields
-    * bit-identical codebooks to training on the sample within the full
-    * corpus.
-    */
-  def trainResidualCodebooks(
-      trainVecs: DataFrame,
-      qcentroids: DataFrame,
-      codebookInitIds: DataFrame,
-      idCol: String,
-      vecCol: String,
-      m: Int,
-      iters: Int,
-      scale: Int = 1000
-  ): DataFrame = {
-    val cents = qcentroids.select(col("centroid_id"), col("cv"))
-    val res = centroidRanksL2Q(trainVecs, cents, idCol, vecCol, nprobe = 1, scale)
-      .join(broadcast(cents), Seq("centroid_id"))
-      .join(trainVecs.select(col(idCol).as("id"), quantize(col(vecCol), scale).as("qv")), Seq("id"))
-      .select(col("id"), col("centroid_id"),
-        zip_with(col("qv"), col("cv"), (x, c) => x - c).as("rv"))
-    val rs = slicesQ(res, Seq("id", "centroid_id"), "rv", m)
-      .localCheckpoint(false) // feeds the seed join AND the iterate input
-    lloydIterate(
-      rs.select(col("sub_id").as("grp"), col("id"), col("sv").as("qv")),
-      rs.join(codebookInitIds.select(col(idCol).as("id")).distinct(), Seq("id"))
-        .select(col("sub_id").as("grp"), col("id").as("centroid_id"), col("sv").as("cv")),
-      iters)
-      .select(col("grp").as("sub_id"), col("centroid_id").as("code"), col("cv").as("cbv"))
-  }
-
   def ivfPqAdcTopK(
       queries: DataFrame,
       corpus: DataFrame,
       qcentroids: DataFrame,
-      codebookInitIds: DataFrame,
+      codebook: DataFrame,
       idCol: String,
       vecCol: String,
       m: Int,
       k: Int,
-      nprobe: Int,
-      iters: Int,
-      scale: Int = 1000,
-      codebookTrainIds: Option[DataFrame] = None,
-      codebook: Option[DataFrame] = None
+      nprobe: Int
   ): DataFrame = {
     val cents = qcentroids.select(col("centroid_id"), col("cv"))
-    // corpus residuals from the L2-assigned cell; with inline codebook
-    // training the frame feeds BOTH training and encoding, so it gets a
-    // materialization barrier — with a registry-supplied codebook it is
-    // consumed once and stays lazy
-    val res0 = centroidRanksL2Q(corpus, cents, idCol, vecCol, nprobe = 1, scale)
-      .join(broadcast(cents), Seq("centroid_id"))
-      .join(corpus.select(col(idCol).as("id"), quantize(col(vecCol), scale).as("qv")), Seq("id"))
-      .select(col("id"), col("centroid_id"),
-        zip_with(col("qv"), col("cv"), (x, c) => x - c).as("rv"))
-    val res = if (codebook.isEmpty) res0.localCheckpoint(false) else res0
-    val rs = slicesQ(res, Seq("id", "centroid_id"), "rv", m)
-    // per-subspace codebooks: a pre-trained registry artifact when given,
-    // else trained inline on the residuals — of the bounded training
-    // sample when one is given (the assignment/encode below always
-    // covers the full corpus)
-    val cb = codebook.map(_.select(col("sub_id"), col("code"), col("cbv"))).getOrElse {
-      val trainRs = codebookTrainIds
-        .map(ids => rs.join(ids.select(col(idCol).as("id")).distinct(), Seq("id")))
-        .getOrElse(rs)
-      lloydIterate(
-        trainRs.select(col("sub_id").as("grp"), col("id"), col("sv").as("qv")),
-        trainRs.join(codebookInitIds.select(col(idCol).as("id")).distinct(), Seq("id"))
-          .select(col("sub_id").as("grp"), col("id").as("centroid_id"), col("sv").as("cv")),
-        iters)
-        .select(col("grp").as("sub_id"), col("centroid_id").as("code"), col("cv").as("cbv"))
-    }
+    val cb = codebook.select(col("sub_id"), col("code"), col("cbv"))
     // encode: nearest residual codeword per (vector, subspace)
-    val codes = rs.join(broadcast(cb), Seq("sub_id"))
+    val codes = slicesQ(residuals(corpus, cents, idCol, vecCol, 1, "id"),
+        Seq("id", "centroid_id"), "rv", m)
+      .join(broadcast(cb), Seq("sub_id"))
       .withColumn("dq", sqDistQ(col("sv"), col("cbv")))
       .groupBy("id", "centroid_id", "sub_id")
       .agg(min(struct(col("dq"), col("code"))).as("best"))
       .select(col("id").as("r_id"), col("centroid_id"), col("sub_id"),
         col("best.code").as("code"))
     // query-side: residual per PROBED cell -> LUT against the codebooks
-    val probes = centroidRanksL2Q(queries, cents, idCol, vecCol, nprobe, scale)
-      .join(broadcast(cents), Seq("centroid_id"))
-      .join(queries.select(col(idCol).as("id"), quantize(col(vecCol), scale).as("qv")), Seq("id"))
-      .select(col("id").as("q_id"), col("centroid_id"),
-        zip_with(col("qv"), col("cv"), (x, c) => x - c).as("rv"))
-    val lut = slicesQ(probes, Seq("q_id", "centroid_id"), "rv", m)
+    val lut = slicesQ(residuals(queries, cents, idCol, vecCol, nprobe, "q_id"),
+        Seq("q_id", "centroid_id"), "rv", m)
       .join(cb, Seq("sub_id"))
       .select(col("q_id"), col("centroid_id"), col("sub_id"), col("code"),
         sqDistQ(col("sv"), col("cbv")).as("dq"))

@@ -237,7 +237,7 @@ trait AnnRegistry extends RegistryBase {
         val (tr35, init35) = trainSample8(s, e)
         Similarity.trainCentroids(tr35, "vec_id", "embedding", init35, KmeansIters)
       }
-      Similarity.assignToCentroidsQ(spread(s, e), cents, "vec_id", "embedding")
+      Similarity.assignToCentroids(spread(s, e), cents, "vec_id", "embedding")
         .orderBy("id")
     }),
 
@@ -250,7 +250,7 @@ trait AnnRegistry extends RegistryBase {
     // probed volume was N/4. q131 is the recall monitor.
     "q43_embed_ivf_topk" -> ((s, dir) => {
       val e = rd(s, dir, "embeddings")
-      Similarity.ivfTopKQServeStoredAuto(
+      Similarity.ivfTopKOnIndex(
           e.filter(col("vec_id") < 10), ivfSqrtIndex(s, dir),
           sqrtCentroids(s, dir), "vec_id", "embedding", k = 3)
         .orderBy("q_id", "rank")
@@ -263,7 +263,7 @@ trait AnnRegistry extends RegistryBase {
     // probed buckets). Same trained coarse quantizer as q43.
     "q179_ivf_filtered_topk" -> ((s, dir) => {
       val e = rd(s, dir, "embeddings")
-      Similarity.ivfTopKQServeStoredAuto(
+      Similarity.ivfTopKOnIndex(
           e.filter(col("vec_id") < 10), ivfSqrtIndex(s, dir),
           sqrtCentroids(s, dir), "vec_id", "embedding", k = 3,
           labelCol = Some("label"))
@@ -277,7 +277,12 @@ trait AnnRegistry extends RegistryBase {
     // once. Long-form (centroid, dim) output keeps the compare scalar.
     "q60_embed_centroid_update" -> ((s, dir) => {
       val e = rd(s, dir, "embeddings")
-      val assign = Similarity.assignToCentroids(e, e.filter(col("vec_id") < 8), "vec_id", "embedding")
+      // the 8 seed rows as the centroid table: what trainCentroids
+      // returns at iters = 0, without the trainer's seed join (measured
+      // +0.1-0.25 s on this 0.5 s query)
+      val seeds = e.filter(col("vec_id") < 8)
+        .select(col("vec_id").as("centroid_id"), Similarity.quantize(col("embedding")).as("cv"))
+      val assign = Similarity.assignToCentroids(e, seeds, "vec_id", "embedding")
         .select(col("id").as("vec_id"), col("centroid_id"))
       val q = e
         .select(col("vec_id"), posexplode(Similarity.asDouble(col("embedding"))).as(Seq("dim", "x")))
@@ -388,7 +393,7 @@ trait AnnRegistry extends RegistryBase {
         Similarity.trainPqCodebooks(tr109, "vec_id", "embedding", m = 8,
           init109, KmeansIters)
       }
-      Similarity.pqEncodeQ(spread(s, e), cb, "vec_id", "embedding", m = 8)
+      Similarity.pqEncode(spread(s, e), cb, "vec_id", "embedding", m = 8)
         .withColumnRenamed("id", "vec_id")
         .orderBy("vec_id", "sub_id")
     }),
@@ -404,7 +409,7 @@ trait AnnRegistry extends RegistryBase {
         Similarity.trainPqCodebooks(tr110, "vec_id", "embedding", m = 8,
           init110, KmeansIters)
       }
-      Similarity.pqAdcTopKQ(
+      Similarity.pqAdcTopK(
         e.filter(col("vec_id") < 3), spread(s, e), cb,
         "vec_id", "embedding", m = 8, k = 10)
         .orderBy("q_id", "rank")
@@ -726,7 +731,7 @@ trait AnnRegistry extends RegistryBase {
     "q131_ann_quality_report" -> ((s, dir) => {
       val e = rd(s, dir, "embeddings")
       val queries = e.filter(col("vec_id") < 10)
-      val approx = Similarity.ivfTopKQServeStoredAuto(queries,
+      val approx = Similarity.ivfTopKOnIndex(queries,
           ivfSqrtIndex(s, dir), sqrtCentroids(s, dir),
           "vec_id", "embedding", k = 3)
         .select("q_id", "r_id", "rank")
@@ -762,7 +767,7 @@ trait AnnRegistry extends RegistryBase {
     "q205_ann_serving_route" -> ((s, dir) => {
       val e = rd(s, dir, "embeddings")
       val queries = e.filter(col("vec_id") < 10)
-      val approx = Similarity.ivfTopKQServeStoredAuto(queries,
+      val approx = Similarity.ivfTopKOnIndex(queries,
           ivfSqrtIndex(s, dir), sqrtCentroids(s, dir),
           "vec_id", "embedding", k = 3)
         .select("q_id", "r_id").withColumn("hit", lit(1))
@@ -842,10 +847,8 @@ trait AnnRegistry extends RegistryBase {
           "vec_id", "embedding", m = 8, iters = KmeansIters)
       }
       Similarity.ivfPqAdcTopK(
-          e.filter(col("vec_id") < 3), spread(s, e), cents,
-          init124,
-          "vec_id", "embedding", m = 8, k = 10, nprobe = 2, iters = KmeansIters,
-          codebook = Some(cb))
+          e.filter(col("vec_id") < 3), spread(s, e), cents, cb,
+          "vec_id", "embedding", m = 8, k = 10, nprobe = 2)
         .orderBy("q_id", "rank")
     }),
 

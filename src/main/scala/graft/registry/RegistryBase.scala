@@ -243,14 +243,6 @@ trait RegistryBase {
     }
   }
 
-  /** Corpus-scaled embedding clustering shared by q46/q117/q122: the
-    * assignment frame (vec_id, centroid_id, dv, nrm) — lazily
-    * checkpointed, since it feeds both pair sides plus the flag/group
-    * joins, and the quantized assignment argmax must not re-run per
-    * reference — and the within-cluster cosine pairs at >= SemDedupTau.
-    * k = ceil(sqrt(N)) keeps within-bucket pair work O(N^1.5); N arrives
-    * as a broadcast 1-row aggregate (no driver action).
-    */
   /** Deterministic bounded training sample for every FIXED-k (k = 8)
     * trained-quantizer surface (q35/q43/q109/q110/q123/q124): 1-in-m
     * rows with m = max(1, N div 320) — ~40 training points per
@@ -300,15 +292,13 @@ trait RegistryBase {
     }
   }
 
-  /** The persisted SELF-CONTAINED IVF index over sqrtCentroids —
-    * (r_id, centroid_id, lbl, dv, nrm) for every corpus vector: the
-    * vectors (and the filterable label) live INSIDE the inverted
-    * lists, the way a real IVF store lays data out, so query-time
-    * probing touches only the probed buckets' rows — no corpus-side
-    * join per query/batch. Built once (O(N·√N) assignment — the
-    * standard IVF build cost), persisted like the q126/q132 signature
-    * table; at 100 TB this table is partitioned by centroid_id and a
-    * probe reads just its partitions. q43/q131/q179/q194 share it.
+  /** The persisted IVF index over sqrtCentroids — Similarity.ivfIndex
+    * with the label stored for filtered probes: (r_id, centroid_id, lbl,
+    * dv, nrm) for every corpus vector. Built once per corpus, persisted
+    * like the q126/q132 signature table, and probed through
+    * ivfTopKOnIndex with no corpus-side join per query/batch; at 100 TB
+    * this table is partitioned by centroid_id and a probe reads just its
+    * partitions. q43/q131/q179/q194/q205 share it.
     */
   protected def ivfSqrtIndex(s: SparkSession, dir: String): DataFrame = {
     // hoisted OUTSIDE the train thunk: trainedArtifact's mapping function
@@ -316,23 +306,24 @@ trait RegistryBase {
     val cents = sqrtCentroids(s, dir)
     trainedArtifact(s, dir, "ivfSqrtIndex",
         layout = _.repartition(col("centroid_id"))) {
-      val e = spread(s, rd(s, dir, "embeddings"))
-      Similarity.assignToCentroidsQ(e, cents, "vec_id", "embedding")
-        .select(col("id").as("r_id"), col("centroid_id"))
-        .join(e.select(col("vec_id").as("r_id"), col("label").as("lbl"),
-          Similarity.asDouble(col("embedding")).as("dv")), Seq("r_id"))
-        .withColumn("nrm", Similarity.l2Norm(col("dv")))
+      Similarity.ivfIndex(spread(s, rd(s, dir, "embeddings")), cents,
+        "vec_id", "embedding", labelCol = Some("label"))
     }
   }
 
+  /** Corpus-scaled embedding clustering shared by q46/q117/q122: the
+    * unlabelled ivfIndex over sqrtCentroids as the assignment frame
+    * (vec_id, centroid_id, dv, nrm) — lazily checkpointed, since it
+    * feeds both pair sides plus the flag/group joins, and the quantized
+    * assignment argmax must not re-run per reference — and the
+    * within-cluster cosine pairs (id_a < id_b) at >= SemDedupTau.
+    * k = ceil(sqrt(N)) keeps within-bucket pair work O(N^1.5).
+    */
   protected def embClusterPairs(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val e = rd(s, dir, "embeddings")
-    val cents = sqrtCentroids(s, dir)
-    val buckets = Similarity.assignToCentroidsQ(spread(s, e), cents, "vec_id", "embedding")
-      .select(col("id").as("vec_id"), col("centroid_id"))
-    val v = spread(s, e).select(col("vec_id"), Similarity.asDouble(col("embedding")).as("dv"))
-      .withColumn("nrm", Similarity.l2Norm(col("dv")))
-    val withB = buckets.join(v, Seq("vec_id")).localCheckpoint(false)
+    val withB = Similarity.ivfIndex(spread(s, rd(s, dir, "embeddings")),
+        sqrtCentroids(s, dir), "vec_id", "embedding")
+      .withColumnRenamed("r_id", "vec_id")
+      .localCheckpoint(false)
     val pairs = withB
       .select(col("centroid_id"), col("vec_id").as("id_a"), col("dv").as("dv_a"), col("nrm").as("nrm_a"))
       .join(withB.select(col("centroid_id"), col("vec_id").as("id_b"), col("dv").as("dv_b"), col("nrm").as("nrm_b")),
@@ -1313,7 +1304,7 @@ trait RegistryBase {
   /** Shared oracle for the sqrt-N IVF probe-and-refine top-k (q43 batch,
     * q194 streaming gate), parameterized by the query-set predicate over
     * vec_id (as `id`). Probe depth = ceil(sqrt(k_centroids)) — the
-    * ivfTopKQServeAuto rule — computed from the same kp CTE.
+    * ivfTopKOnIndex auto rule — computed from the same kp CTE.
     */
   protected def ivfSqrtTopkOracle(queryPred: String): String =
     s"""WITH $embAssignCtes,

@@ -692,13 +692,14 @@ trait StreamingRegistry extends RegistryBase {
 
     // pillar similarity + streaming (21st gate): IVF ANN SERVING — the
     // online-retrieval shape every production vector store runs: the IVF
-    // index (corpus bucket assignment) is built ONCE and checkpointed;
-    // query vectors arrive in micro-batches and each batch pays only its
-    // own probe + refine, bounded by probed-bucket sizes — never a
-    // corpus-side rebuild. Per-query answers depend only on the query
-    // vector and the static corpus + trained centroids, so the bridge
-    // provably cannot change them; oracle is q43's chain with the
-    // arrival subset as the query predicate.
+    // index (Similarity.ivfIndex, via ivfSqrtIndex) is built ONCE and
+    // checkpointed; query vectors arrive in micro-batches and each batch
+    // pays only its own ivfTopKOnIndex probe + refine, bounded by
+    // probed-bucket sizes — never a corpus-side rebuild. Per-query
+    // answers depend only on the query vector and the static corpus +
+    // trained centroids, so the bridge provably cannot change them;
+    // oracle is q43's chain with the arrival subset as the query
+    // predicate.
     "q194_stream_ann_topk" -> ((s, dir) => {
       val stage = Staging.dir("q194-")
       try {
@@ -725,7 +726,7 @@ trait StreamingRegistry extends RegistryBase {
           .option("maxFilesPerTrigger", 1).parquet(inDir)
         val q = graft.streaming.EventStream.foreachBatchSink(stream, identity) {
           (batch, batchId) =>
-            Similarity.ivfTopKQServeStoredAuto(spreadBatch(s, batch), index,
+            Similarity.ivfTopKOnIndex(spreadBatch(s, batch), index,
                 cents, "vec_id", "embedding", k = 3)
               .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
         }.start()

@@ -947,8 +947,9 @@ trait TextRegistry extends RegistryBase {
         val (tr, init) = trainSample8(s, e)
         Similarity.trainCentroids(tr, "vec_id", "embedding", init, KmeansIters)
       }
-      val vec = Similarity.ivfTopKQ(
-          e.filter(col("vec_id") % Bm25QueryMod === 0), spread(s, e), cents,
+      val vec = Similarity.ivfTopKOnIndex(
+          e.filter(col("vec_id") % Bm25QueryMod === 0),
+          Similarity.ivfIndex(spread(s, e), cents, "vec_id", "embedding"), cents,
           "vec_id", "embedding", k = 10, nprobe = 2)
         .select(col("q_id"), col("r_id").as("doc_id"), col("rank").as("rk_v"))
       text.join(vec, Seq("q_id", "doc_id"), "full_outer")

@@ -128,14 +128,13 @@ class MarkovContrastiveSpec extends SparkSpec {
     // the batch twin, trained identically to the registry's centSqrt
     // artifact (sf0.001 has 500 vectors -> k = ceil(sqrt(500)) = 23,
     // sample stride m = 1, seeds = vec_id < 23, 3 Lloyd steps; probe
-    // depth = ceil(sqrt(23)) = 5 via the ServeAuto rule)
+    // depth = ceil(sqrt(23)) = 5 via the auto rule)
     val e = spark.read.parquet(s"$dir/embeddings.parquet")
     val cents = Similarity.trainCentroids(e, "vec_id", "embedding",
       e.filter(col("vec_id") < 23).select("vec_id"), iters = 3)
-    val buckets = Similarity.assignToCentroidsQ(e, cents, "vec_id", "embedding")
-      .select(col("id").as("r_id"), col("centroid_id"))
-    val batch = Similarity.ivfTopKQServeAuto(
-        e.filter(col("vec_id") % 25 === 5), e, buckets, cents,
+    val batch = Similarity.ivfTopKOnIndex(
+        e.filter(col("vec_id") % 25 === 5),
+        Similarity.ivfIndex(e, cents, "vec_id", "embedding"), cents,
         "vec_id", "embedding", k = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSet
     assert(served == batch,

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.Similarity
 
@@ -16,6 +17,22 @@ class SimilaritySpec extends SparkSpec {
     (3L, Array(-1.0f, 0.0f, 0.0f)),
     (4L, Array(0.6f, 0.8f, 0.0f))
   ).toDF("vec_id", "embedding")
+
+  /** The quantized seed rows vec_id < n as a centroid table: the
+    * trainer with zero Lloyd steps returns its seeds unchanged.
+    */
+  private def seedCentroids(df: DataFrame, n: Int): DataFrame = {
+    val seeds = df.filter(col("vec_id") < n)
+    Similarity.trainCentroids(seeds, "vec_id", "embedding", seeds.select("vec_id"), iters = 0)
+  }
+
+  /** The seed rows vec_id < n as a per-subspace PQ codebook (zero Lloyd
+    * steps): each row's m quantized slices, coded by the row's id.
+    */
+  private def seedCodebook(df: DataFrame, n: Int, m: Int): DataFrame = {
+    val seeds = df.filter(col("vec_id") < n)
+    Similarity.trainPqCodebooks(seeds, "vec_id", "embedding", m, seeds.select("vec_id"), iters = 0)
+  }
 
   test("cosine: exact values on known vectors") {
     val df = Seq((Array(1.0f, 0.0f), Array(1.0f, 0.0f)),
@@ -50,15 +67,16 @@ class SimilaritySpec extends SparkSpec {
 
   test("quantize: floor semantics, exact longs") {
     val q = Seq(Array(0.0015f, -0.0015f)).toDF("v")
-      .select(Similarity.quantize(col("v"), 1000).as("q"))
+      .select(Similarity.quantize(col("v")).as("q"))
       .head().getSeq[Long](0)
     assert(q == Seq(1L, -2L)) // floor(1.5)=1, floor(-1.5)=-2
   }
 
   test("ivfTopK: probed buckets bound the candidate set; refine is exact cosine") {
-    val cents = vecs.filter(col("vec_id") < 2)
-    val res = Similarity.ivfTopK(
-        vecs.filter(col("vec_id") === 4), vecs, cents, "vec_id", "embedding", k = 3, nprobe = 1)
+    val cents = seedCentroids(vecs, 2)
+    val index = Similarity.ivfIndex(vecs, cents, "vec_id", "embedding")
+    val res = Similarity.ivfTopKOnIndex(
+        vecs.filter(col("vec_id") === 4), index, cents, "vec_id", "embedding", k = 3, nprobe = 1)
       .orderBy("rank").collect()
     // (0.6,0.8,0): nearest centroid is 1=(0,1,0); probing ONLY that bucket
     // restricts candidates to bucket-1 members {1, 3, 4}\{4} = {1, 3}
@@ -67,8 +85,8 @@ class SimilaritySpec extends SparkSpec {
     // float32 literals are not exact in double: compare loosely
     assert(math.abs(res.head.getDouble(2) - 0.8) < 1e-6)
     // nprobe=2 widens to both buckets -> full neighbor set reachable
-    val res2 = Similarity.ivfTopK(
-        vecs.filter(col("vec_id") === 4), vecs, cents, "vec_id", "embedding", k = 3, nprobe = 2)
+    val res2 = Similarity.ivfTopKOnIndex(
+        vecs.filter(col("vec_id") === 4), index, cents, "vec_id", "embedding", k = 3, nprobe = 2)
       .orderBy("rank").collect()
     assert(res2.length == 3)
     assert(res2.head.getLong(1) == 2L) // (1,1,0) is the true nearest
@@ -90,9 +108,11 @@ class SimilaritySpec extends SparkSpec {
     val exact = Similarity.cosineTopK(queries, e, "vec_id", "embedding", k)
       .select("q_id", "r_id").collect()
       .groupBy(_.getLong(0)).map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
+    val seeds = seedCentroids(e, 23)
+    val seedIndex = Similarity.ivfIndex(e, seeds, "vec_id", "embedding")
     def recallAt(nprobe: Int): Double = {
-      val approx = Similarity.ivfTopK(
-          queries, e, e.filter(col("vec_id") < 23), "vec_id", "embedding",
+      val approx = Similarity.ivfTopKOnIndex(
+          queries, seedIndex, seeds, "vec_id", "embedding",
           k = k, nprobe = nprobe)
         .select("q_id", "r_id").collect()
         .groupBy(_.getLong(0)).map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
@@ -116,8 +136,9 @@ class SimilaritySpec extends SparkSpec {
     def recallTrainedAt(nprobe: Int): Double = {
       val cents = Similarity.trainCentroids(e, "vec_id", "embedding",
         e.filter(col("vec_id") < 23).select("vec_id"), iters = 3)
-      val approx = Similarity.ivfTopKQ(
-          queries, e, cents, "vec_id", "embedding", k = k, nprobe = nprobe)
+      val approx = Similarity.ivfTopKOnIndex(
+          queries, Similarity.ivfIndex(e, cents, "vec_id", "embedding"), cents,
+          "vec_id", "embedding", k = k, nprobe = nprobe)
         .select("q_id", "r_id").collect()
         .groupBy(_.getLong(0)).map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
       val recalls = exact.map { case (q, truth) =>
@@ -133,19 +154,69 @@ class SimilaritySpec extends SparkSpec {
     assert(t10 > t4, f"probing more buckets must not lose recall: $t10%.3f <= $t4%.3f")
   }
 
-  test("ivfTopKQServe: prebuilt-index serving equals build-and-query ivfTopK") {
-    val cents = vecs.filter(col("vec_id") < 2)
-    val qcents = cents.select(col("vec_id").as("centroid_id"),
-      Similarity.quantize(col("embedding"), 1000).as("cv"))
-    val queries = vecs.filter(col("vec_id") >= 3)
-    val built = Similarity.ivfTopK(queries, vecs, cents, "vec_id", "embedding", k = 2, nprobe = 1)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSet
-    val buckets = Similarity.assignToCentroidsQ(vecs, qcents, "vec_id", "embedding")
-      .select(col("id").as("r_id"), col("centroid_id"))
-    val served = Similarity.ivfTopKQServe(queries, vecs, buckets, qcents,
-        "vec_id", "embedding", k = 2, nprobe = 1)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSet
-    assert(built.nonEmpty && served == built)
+  test("ivfTopKOnIndex: equals a driver-side probe-and-refine reference") {
+    // The probe's definition evaluated in plain Scala: each query's top
+    // `np` centroids by quantized dot (lowest id on ties), candidates =
+    // members of those buckets (same label when filtered) except the
+    // query itself, exact cosine dot/(|q||r|), rank by (cos desc, r_id
+    // asc). Compared row for row, doubles included.
+    def quant(v: Seq[Float]): Seq[Long] = v.map(x => math.floor(x.toDouble * 1000).toLong)
+    def dotL(a: Seq[Long], b: Seq[Long]): Long = a.zip(b).map { case (x, y) => x * y }.sum
+    def dotD(a: Seq[Double], b: Seq[Double]): Double = {
+      var acc = 0.0
+      a.indices.foreach(i => acc += a(i) * b(i))
+      acc
+    }
+    def ranked(v: Seq[Float], cents: Seq[(Long, Seq[Long])]): Seq[Long] =
+      cents.map { case (c, cv) => (c, dotL(quant(v), cv)) }
+        .sortBy { case (c, sc) => (-sc, c) }.map(_._1)
+    def reference(corpus: DataFrame, queryIds: Set[Long], cents: DataFrame, k: Int,
+        nprobe: Int, labelled: Boolean): Set[(Long, Long, Double, Long)] = {
+      val cs = cents.collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toSeq
+      val rows = corpus.collect().map { r =>
+        (r.getAs[Long]("vec_id"), r.getSeq[Float](r.fieldIndex("embedding")),
+          if (labelled) r.getAs[String]("label") else "")
+      }.toSeq
+      val bucket = rows.map { case (id, v, _) => id -> ranked(v, cs).head }.toMap
+      val np = if (nprobe > 0) nprobe else math.ceil(math.sqrt(cs.length.toDouble)).toInt
+      rows.filter(r => queryIds(r._1)).flatMap { case (qid, qv, ql) =>
+        val probed = ranked(qv, cs).take(np).toSet
+        val qd = qv.map(_.toDouble)
+        rows.filter { case (rid, _, rl) => rid != qid && probed(bucket(rid)) && rl == ql }
+          .map { case (rid, rv, _) =>
+            val rd = rv.map(_.toDouble)
+            rid -> dotD(qd, rd) / (math.sqrt(dotD(qd, qd)) * math.sqrt(dotD(rd, rd)))
+          }
+          .sortBy { case (rid, c) => (-c, rid) }.take(k).zipWithIndex
+          .map { case ((rid, c), i) => (qid, rid, c, i + 1L) }
+      }.toSet
+    }
+    def check(name: String, corpus: DataFrame, queryIds: Set[Long], cents: DataFrame,
+        k: Int): Unit = {
+      val queries = corpus.filter(col("vec_id").isin(queryIds.toSeq: _*))
+      for (labelled <- Seq(false, true); nprobe <- Seq(1, 2, 0)) {
+        val lc = if (labelled) Some("label") else None
+        val index = Similarity.ivfIndex(corpus, cents, "vec_id", "embedding", labelCol = lc)
+        val got = Similarity.ivfTopKOnIndex(queries, index, cents, "vec_id", "embedding", k,
+            labelCol = lc, nprobe = nprobe)
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSet
+        val want = reference(corpus, queryIds, cents, k, nprobe, labelled)
+        val cfg = s"$name nprobe=$nprobe labelled=$labelled"
+        assert(want.nonEmpty, s"$cfg: empty reference")
+        assert(got == want, s"$cfg: only-probe=${got.diff(want).take(3)} " +
+          s"only-reference=${want.diff(got).take(3)}")
+        info(s"$cfg: ${got.size} rows")
+      }
+    }
+    // 5-vector fixture: seed centroids 0 and 1, labels by id parity
+    val small = vecs.withColumn("label", (col("vec_id") % 2).cast("string"))
+    check("fixture", small, Set(0L, 2L, 3L, 4L), seedCentroids(vecs, 2), k = 2)
+    // sf0.001 embeddings: 23 trained centroids (3 Lloyd steps)
+    val e = spark.read.parquet(s"$testDataDir/embeddings.parquet")
+      .select(col("vec_id"), col("embedding"), col("label").cast("string").as("label"))
+    val cents = Similarity.trainCentroids(e, "vec_id", "embedding",
+      e.filter(col("vec_id") < 23).select("vec_id"), iters = 3)
+    check("sf0.001", e, (0L until 500L by 25L).toSet, cents, k = 3)
   }
 
   test("trainCentroids: one Lloyd step moves centroids to the floor(mean) of their members") {
@@ -183,10 +254,10 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("pqEncode: nearest per-subspace codeword, lowest-id tie-break, m rows per vector") {
-    val book = Seq(
+    val book = seedCodebook(Seq(
       (0L, Array(0.0f, 0.0f, 0.0f, 0.0f)),
       (1L, Array(1.0f, 1.0f, 1.0f, 1.0f))
-    ).toDF("vec_id", "embedding")
+    ).toDF("vec_id", "embedding"), 2, m = 2)
     val vs = Seq(
       (10L, Array(0.9f, 0.9f, 0.1f, 0.1f)), // sub0 -> code 1, sub1 -> code 0
       (11L, Array(0.5f, 0.5f, 0.5f, 0.5f))  // equidistant everywhere -> code 0 (tie)
@@ -201,10 +272,10 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("pqAdcTopK: distance is the sum of per-subspace LUT entries; rank ascends") {
-    val book = Seq(
+    val book = seedCodebook(Seq(
       (0L, Array(0.0f, 0.0f, 0.0f, 0.0f)),
       (1L, Array(1.0f, 1.0f, 1.0f, 1.0f))
-    ).toDF("vec_id", "embedding")
+    ).toDF("vec_id", "embedding"), 2, m = 2)
     val corpus = Seq(
       (20L, Array(0.0f, 0.0f, 0.0f, 0.0f)), // codes (0,0)
       (21L, Array(1.0f, 1.0f, 1.0f, 1.0f)), // codes (1,1)
@@ -229,7 +300,6 @@ class SimilaritySpec extends SparkSpec {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val queries = e.filter(col("vec_id") < 50)
-    val book = e.filter(col("vec_id") < 8)
     val k = 5
     val q = queries.select(col("vec_id").as("q_id"), Similarity.quantize(col("embedding")).as("qv"))
     val c = e.select(col("vec_id").as("r_id"), Similarity.quantize(col("embedding")).as("rv"))
@@ -244,7 +314,8 @@ class SimilaritySpec extends SparkSpec {
       .select("q_id", "r_id").collect()
       .groupBy(_.getLong(0)).map { case (qq, rs) => qq -> rs.map(_.getLong(1)).toSet }
     def recallAt(m: Int): Double = {
-      val approx = Similarity.pqAdcTopK(queries, e, book, "vec_id", "embedding", m = m, k = k)
+      val approx = Similarity.pqAdcTopK(queries, e, seedCodebook(e, 8, m), "vec_id", "embedding",
+          m = m, k = k)
         .select("q_id", "r_id").collect()
         .groupBy(_.getLong(0)).map { case (qq, rs) => qq -> rs.map(_.getLong(1)).toSet }
       val recalls = exact.map { case (qq, truth) =>
@@ -268,7 +339,7 @@ class SimilaritySpec extends SparkSpec {
     def recallTrainedAt(m: Int): Double = {
       val cb = Similarity.trainPqCodebooks(e, "vec_id", "embedding", m = m,
         e.filter(col("vec_id") < 8).select("vec_id"), iters = 3)
-      val approx = Similarity.pqAdcTopKQ(queries, e, cb, "vec_id", "embedding", m = m, k = k)
+      val approx = Similarity.pqAdcTopK(queries, e, cb, "vec_id", "embedding", m = m, k = k)
         .select("q_id", "r_id").collect()
         .groupBy(_.getLong(0)).map { case (qq, rs) => qq -> rs.map(_.getLong(1)).toSet }
       val recalls = exact.map { case (qq, truth) =>
@@ -291,9 +362,10 @@ class SimilaritySpec extends SparkSpec {
     def recallResidualAt(m: Int): Double = {
       val cents = Similarity.trainCentroids(e, "vec_id", "embedding",
         e.filter(col("vec_id") < 8).select("vec_id"), iters = 3)
-      val approx = Similarity.ivfPqAdcTopK(queries, e, cents,
-          e.filter(col("vec_id") < 8).select("vec_id"),
-          "vec_id", "embedding", m = m, k = k, nprobe = 8, iters = 3)
+      val cb = Similarity.trainResidualCodebooks(e, cents,
+        e.filter(col("vec_id") < 8).select("vec_id"), "vec_id", "embedding", m = m, iters = 3)
+      val approx = Similarity.ivfPqAdcTopK(queries, e, cents, cb,
+          "vec_id", "embedding", m = m, k = k, nprobe = 8)
         .select("q_id", "r_id").collect()
         .groupBy(_.getLong(0)).map { case (qq, rs) => qq -> rs.map(_.getLong(1)).toSet }
       val recalls = exact.map { case (qq, truth) =>
@@ -346,7 +418,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("assignToCentroids: picks argmax dot with lowest-id tie-break") {
-    val cents = vecs.filter(col("vec_id") < 2) // (1,0,0) and (0,1,0)
+    val cents = seedCentroids(vecs, 2) // (1,0,0) and (0,1,0)
     val assign = Similarity.assignToCentroids(vecs, cents, "vec_id", "embedding")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(assign(0L) == 0L)
