@@ -44,7 +44,7 @@ object Main {
         case f @ ("-o" | "--OutputFile")  => out = Some(value(f)); i += 2
         case f @ ("-n" | "--topN")        => params = params.copy(topK = intValue(f)); i += 2
         case f @ ("-s" | "--scoreCutOff") => params = params.copy(scoreCutoff = intValue(f)); i += 2
-        case f @ ("-b" | "--bufferSize")  => params = params.copy(bufferSize = intValue(f)); i += 2
+        case f @ ("-b" | "--bufferSize")  => intValue(f); i += 2
         case "--inverted-index"           => params = params.copy(useInvertedIndex = true); i += 1
         case "-h" | "--help"              => println(usage); return
         case other =>

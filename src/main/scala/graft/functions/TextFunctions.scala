@@ -3,9 +3,15 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Column-level text primitives for the engine, built from Catalyst
-  * higher-order functions so everything stays inside whole-stage codegen
-  * (no UDFs in the hot path).
+/** Column-level text primitives for the engine: Catalyst built-ins and
+  * higher-order functions, no UDFs. A higher-order function's lambda runs
+  * interpreted (`CodegenFallback`) inside the surrounding generated code,
+  * so a per-pair hot loop gets a codegen'd kernel from
+  * `org.apache.spark.sql.graft` instead: the HeurFuzz pair stage scores
+  * `byteBigramCodes` with `sortedCoverage` (pairsCross) or equi-joins the
+  * same int codes (pairsInverted). The `byteBigrams`/`bigramCoverage` HOF
+  * pair stays for small pair sets over char shingles (the registry's
+  * `partPairs`, ~6k pairs) and for the byte-bigram statistics of q03.
   *
   * Semantics mirror the reference kernels:
   *   - byte bigrams with multiplicity (/root/reference/src/heurFuzz.py:23-32)
@@ -39,6 +45,20 @@ object TextFunctions {
       transform(sequence(lit(1), octet_length(b) - 1), i => substring(b, i, lit(2)))
     ).otherwise(array().cast("array<binary>"))
   }
+
+  /** The byte bigrams of `byteBigrams` as a SORTED array<int> of codes
+    * `(b0 & 0xff) << 8 | (b1 & 0xff)`, multiplicity preserved; computed
+    * once per term by a codegen'd expression (ByteBigramCodes).
+    */
+  def byteBigramCodes(c: Column): Column =
+    org.apache.spark.sql.graft.ByteBigramCodes.column(c)
+
+  /** `bigramCoverage` over two `byteBigramCodes` arrays, bit for bit: one
+    * codegen'd merge scan per pair (SortedCoverage) instead of an
+    * interpreted `filter`/`array_contains` lambda.
+    */
+  def sortedCoverage(queryCodes: Column, refCodes: Column): Column =
+    org.apache.spark.sql.graft.SortedCoverage.column(queryCodes, refCodes)
 
   /** Character n-gram shingles (multiplicity preserved). */
   def charShingles(c: Column, n: Int): Column =

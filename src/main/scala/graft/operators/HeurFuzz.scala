@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.{Fuzz, TextFunctions}
+import graft.functions.TextFunctions
 import graft.sources.Readers
 
 /** The reference's entire query, re-expressed as one lazy Spark DAG
@@ -39,53 +39,47 @@ import graft.sources.Readers
 object HeurFuzz {
 
   /** CLI defaults per the reference (/root/reference/src/heurFuzz.py:177-179).
-    * bufferSize is accepted and ignored: Spark strings are not fixed-width
-    * (documented divergence).
+    * The reference's bufferSize has no field: Spark strings are not
+    * fixed-width, so graft.Main validates `-b` and ignores it (documented
+    * divergence).
     */
   case class Params(
       topK: Int = 10,
       scoreCutoff: Int = 90,
-      bufferSize: Int = 500,
       useInvertedIndex: Boolean = false
   )
 
-  /** partial_ratio with cutoff as a Spark UDF — kept as the simple
-    * comparison surface; the pipeline uses the codegen'd Catalyst
-    * expression (graft.expressions.PartialRatioCutoff), which calls the
-    * same audited scorer without the ScalaUDF wrapper.
-    */
-  def partialRatioCutoffUdf(cutoff: Int) =
-    udf((a: String, b: String) => Fuzz.partialRatioCutoff(a, b, cutoff))
-
   /** Add byte length + byte bigrams to a (id, term) frame, prefixing
-    * column names (q_/r_).
+    * column names (q_/r_). The bigrams are sorted int codes
+    * (TextFunctions.byteBigramCodes), computed once per term so the pair
+    * stage pays one merge scan per pair.
     */
   def prepare(df: DataFrame, p: String): DataFrame =
     df.select(
       col("id").as(s"${p}id"),
       col("term").as(s"${p}term"),
       TextFunctions.byteLength(col("term")).as(s"${p}len"),
-      TextFunctions.byteBigrams(col("term")).as(s"${p}bigrams")
+      TextFunctions.byteBigramCodes(col("term")).as(s"${p}bigrams")
     )
 
   /** Brute-force pair stage (bit-faithful to the reference's dense loops,
     * /root/reference/src/heurFuzz.py:47-70): every (ref, query) pair via
-    * BroadcastNestedLoopJoin with the small query side broadcast.
+    * BroadcastNestedLoopJoin with the small query side broadcast, scored by
+    * the codegen'd sorted-code coverage kernel (TextFunctions.sortedCoverage).
     */
   def pairsCross(queries: DataFrame, refs: DataFrame): DataFrame =
     refs
       .crossJoin(broadcast(queries))
-      .withColumn(
-        "coverage",
-        TextFunctions.bigramCoverage(col("q_bigrams"), col("r_bigrams"))
-      )
+      .withColumn("coverage", TextFunctions.sortedCoverage(col("q_bigrams"), col("r_bigrams")))
       .withColumn("len_diff", abs(col("q_len") - col("r_len")).cast("double"))
 
   /** Scale-path pair stage (SURVEY §4.3): posexplode query bigrams
     * (multiplicity preserved — the reference counts each query bigram
     * occurrence separately, heurFuzz.py:37-43), array_distinct ref bigrams
     * (membership-without-consumption — the `break` at heurFuzz.py:43), then
-    * an equi-join on the bigram value and a count per (q_id, r_id).
+    * an equi-join on the bigram code and a count per (q_id, r_id) — codes
+    * are a bijection of byte pairs, so keys and counts are those of the
+    * byte bigrams.
     * Pairs sharing zero bigrams drop out of the join, so a fallback cross
     * join over only the under-filled queries restores exact top-K parity.
     */

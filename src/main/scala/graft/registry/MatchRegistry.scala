@@ -48,20 +48,22 @@ trait MatchRegistry extends RegistryBase {
         .orderBy("q_id", "rank")
     }),
 
-    // §2 op 9: partial_ratio verify scorer (UDF — no SQL oracle, rows-only)
+    // §2 op 9: partial_ratio verify scorer (codegen'd expression — no SQL
+    // oracle, rows-only)
     "q09_fuzzy_score" -> ((s, dir) => {
       val w = Window.partitionBy("q_id")
         .orderBy(col("coverage").desc, col("len_diff").desc, col("r_id").desc)
       partPairs(s, dir)
         .withColumn("rank", row_number().over(w))
         .filter(col("rank") <= 5)
-        .withColumn("score", HeurFuzz.partialRatioCutoffUdf(60)(col("r_name"), col("q_name")))
+        .withColumn("score",
+          org.apache.spark.sql.graft.GraftFunctions.partialRatioCutoff(col("r_name"), col("q_name"), 60))
         .select(col("q_id"), col("r_id"), col("score").cast("long").as("score"))
         .orderBy("q_id", "r_id")
     }),
 
     // §2 op 10: argmax + tie-break reduce — the full match pipeline
-    // (depends on the UDF scorer — rows-only check)
+    // (depends on the scorer — rows-only check)
     "q10_fuzzy_match" -> ((s, dir) => {
       val parts = rd(s, dir, "part")
       val queries = parts.select(col("p_partkey").as("id"), lower(col("p_name")).as("term"))

@@ -920,7 +920,8 @@ trait TextRegistry extends RegistryBase {
         .join(broadcast(needles), Seq("q_id"))
         .join(docs.select(col("doc_id"), col("text")), Seq("doc_id"))
         .withColumn("pr",
-          HeurFuzz.partialRatioCutoffUdf(50)(col("text"), col("needle")).cast("long"))
+          org.apache.spark.sql.graft.GraftFunctions.partialRatioCutoff(col("text"), col("needle"), 50)
+            .cast("long"))
         .withColumn("rrank", row_number().over(
           Window.partitionBy("q_id")
             .orderBy(col("pr").desc, col("bm25").desc, col("doc_id")))

@@ -144,6 +144,30 @@ class HeurFuzzSpec extends SparkSpec {
     }
   }
 
+  test("inverted index: the int-code join agrees with the cross path pair for pair") {
+    import spark.implicits._
+    // multibyte tokens and repeated bigrams ("aa", "éé"), so both the
+    // codes of high bytes and the query-side multiplicity are exercised
+    val tokens = Seq("aa", "ab", "é", "éé", "中", "😀", "ba", "b")
+    val rng = new scala.util.Random(23)
+    def terms(n: Int) =
+      Seq.tabulate(n)(i => (i.toLong, Seq.fill(1 + rng.nextInt(6))(tokens(rng.nextInt(tokens.length))).mkString))
+    val q = HeurFuzz.prepare(terms(40).toDF("id", "term"), "q_")
+    val r = HeurFuzz.prepare(terms(60).toDF("id", "term"), "r_")
+    def scored(df: org.apache.spark.sql.DataFrame) =
+      df.select("q_id", "r_id", "coverage").collect()
+        .map(x => (x.getLong(0), x.getLong(1)) -> x.getDouble(2)).toSeq
+    val cross = scored(HeurFuzz.pairsCross(q, r)).toMap
+    // topK = 1: every query with an indexed candidate takes the join path
+    val inverted = scored(HeurFuzz.pairsInverted(q, r, 1))
+    assert(inverted.map(_._1).distinct.size == inverted.size, "duplicate (q_id, r_id)")
+    inverted.foreach { case (k, cov) => assert(cross.get(k).contains(cov), s"pair $k") }
+    val invKeys = inverted.map(_._1).toSet
+    val hits = cross.filter(_._2 > 0)
+    hits.keys.foreach(k => assert(invKeys.contains(k), s"cross pair $k missing"))
+    assert(hits.values.exists(c => c > 0 && c < 1))
+  }
+
   test("cutoff gate: peanutbutter maps once the cutoff is dropped") {
     val rows = matchRows(HeurFuzz.Params(topK = 5, scoreCutoff = 0))
     assert(rows(3)._2 != "NA")

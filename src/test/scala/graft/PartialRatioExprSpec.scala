@@ -3,13 +3,18 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.GraftFunctions
 import graft.functions.Fuzz
-import graft.operators.HeurFuzz
 
 /** The codegen'd Catalyst scorer expression must agree with the plain
   * Scala scorer and the UDF on every surface (Column, SQL).
   */
 class PartialRatioExprSpec extends SparkSpec {
   import spark.implicits._
+
+  /** partial_ratio with cutoff as a plain Spark UDF: the comparison
+    * surface, the same scorer behind the ScalaUDF wrapper.
+    */
+  private def partialRatioCutoffUdf(cutoff: Int) =
+    udf((a: String, b: String) => Fuzz.partialRatioCutoff(a, b, cutoff))
 
   private val pairs = Seq(
     ("test", "testing"), ("abcd", "abced"), ("ab", "ba"),
@@ -21,7 +26,7 @@ class PartialRatioExprSpec extends SparkSpec {
     val out = df.select(
       col("a"), col("b"),
       GraftFunctions.partialRatioCutoff(col("a"), col("b"), 60).as("expr_score"),
-      HeurFuzz.partialRatioCutoffUdf(60)(col("a"), col("b")).as("udf_score")
+      partialRatioCutoffUdf(60)(col("a"), col("b")).as("udf_score")
     ).collect()
     out.foreach { r =>
       val expected = Fuzz.partialRatioCutoff(r.getString(0), r.getString(1), 60)
