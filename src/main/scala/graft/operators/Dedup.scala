@@ -1149,16 +1149,13 @@ object Dedup {
     // checkpointed frames against each other every round, and Spark's
     // checkpoint INHERITS the child plan's size estimate — the estimate
     // would be squared per round until Catalyst's stats visitor overflows
-    // BigInteger during planning (see CheckpointStats' scaladoc)
-    // hash-partitioned by src BEFORE the checkpoint: freshCheckpoint now
-    // preserves output partitioning (round 17), so every round's edge-
-    // propagation join reads the edge list pre-clustered on its join key
-    // instead of re-exchanging it each round
+    // BigInteger during planning (see CheckpointStats' scaladoc). No
+    // repartition by src first: under AQE the checkpoint does not record
+    // it, so it would cost one exchange and save none (same scaladoc).
     val edges = org.apache.spark.sql.graft.CheckpointStats.freshCheckpoint(
       pairs
         .select(col("id_a").as("src"), col("id_b").as("dst"))
-        .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
-        .repartition(col("src")))
+        .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst"))))
     // iterate ONLY over edge-touched vertices: at realistic near-dup
     // density (~0.02% of pairs at j>=0.8 on this corpus) the propagation
     // frames are orders of magnitude smaller than the corpus; every

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.{CheckpointStats, Md5Long60}
+import org.apache.spark.sql.graft.{CheckpointStats, Md5Long60, NarrowRounds}
 
 /** kNN-graph construction by NN-Descent (Dong, Moses & Li, "Efficient
   * k-nearest neighbor graph construction for generic similarity
@@ -25,20 +25,28 @@ import org.apache.spark.sql.graft.{CheckpointStats, Md5Long60}
   * 0.047 for the SRP generator it replaces — the q196 audit certifies
   * both).
   *
-  * 100 TB shape: every step is an equi-join or a bounded window —
-  * never a cross join, never a driver loop over data. The per-round
-  * candidate set is <= N * cap^2 rows BY CONSTRUCTION (each node
-  * contributes its <= cap undirected neighbors' <= cap neighbor
-  * lists), so total work is LINEAR in N per round at fixed k; rounds
-  * needed grow ~log N. Vector payloads never ride a cap²-sized frame:
-  * in the broadcast regime candidates stay narrow through map-side
-  * vector joins, and in the shuffle regime scoring happens INSIDE the
-  * pivot self-join (scoreTwoHopLocal) so only narrow
-  * (src, dst, cos_sim) triples flow above it — spill drops by the
-  * vector-width factor (round 16: the previously disk-fatal 50k·cap 56
-  * A/B completes at 15.6 GB, and a 600k·cap 70 build completes
-  * end-to-end). Peak disk is further boundable by pivot-slice
-  * execution (autoSlices). Every caller of the recurrence — knnGraph,
+  * Two regimes, one recurrence. The per-round candidate set is
+  * <= N * cap^2 rows BY CONSTRUCTION (each node contributes its <= cap
+  * undirected neighbors' <= cap neighbor lists), so total work is
+  * LINEAR in N per round at fixed k; rounds needed grow ~log N.
+  *   - NARROW regime, iff the vector table and the graph are both under
+  *     their broadcast bounds (BroadcastMaxVecRows, BroadcastMaxGraphRows
+  *     — every registered corpus qualifies): the vectors are broadcast
+  *     once per build, the graph and its ρ-capped adjacency once per
+  *     round, and each round is ONE narrow pass over the src ids that
+  *     expands, scores and keeps the top k per src (NarrowRounds) — no
+  *     shuffle, window or sort ever touches the cap² bag.
+  *   - SHUFFLE regime (the 100 TB shape; either bound exceeded): every
+  *     step is an equi-join or a bounded window — never a cross join,
+  *     never a driver loop over data. Vector payloads never ride a
+  *     cap²-sized frame: scoring happens INSIDE the pivot self-join
+  *     (scoreTwoHopLocal) so only narrow (src, dst, cos_sim) triples flow
+  *     above it — spill drops by the vector-width factor (round 16: the
+  *     previously disk-fatal 50k·cap 56 A/B completes at 15.6 GB, and a
+  *     600k·cap 70 build completes end-to-end). Peak disk is further
+  *     boundable by pivot-slice execution (autoSlices).
+  * Both regimes give bit-identical graphs (NnDescentSpec compares them
+  * round by round). Every caller of the recurrence — knnGraph,
   * upsertGraph, the q196 audit and ScaleProbe's nnd-rounds curve —
   * walks it through ONE round driver (descend), which cuts each round
   * from lineage with freshCheckpoint (stats-reset localCheckpoint — see
@@ -88,21 +96,22 @@ object NnDescent {
       .select("src", "dst")
       .distinct()
 
-  /** Rows above which the scoring rounds stop broadcasting the vector
-    * table and fall back to shuffle joins. 500k rows of 64-dim doubles
-    * is ~260 MB in-plan (~3x that as a HashedRelation) — comfortable on
-    * the 128 GiB-executor target, far under it on a real cluster's
-    * 8-32 GiB executors only if dims stay modest; beyond the cap the
-    * rounds shuffle, which is the honest 100 TB regime (at billions of
-    * vectors the real co-location lever is partitioning the graph so
-    * neighborhoods and their vectors land together — out of scope for
-    * this builder, documented here so nobody mistakes the broadcast for
-    * the scale path).
+  /** Vector rows above which a build leaves the narrow regime (see the
+    * header: narrow iff this AND BroadcastMaxGraphRows hold) for the
+    * shuffle regime. The narrow regime collects and broadcasts the whole
+    * vector table once per build: 500k rows of 64-dim doubles is
+    * ~260 MB — comfortable on the 128 GiB-executor target, far under it
+    * on a real cluster's 8-32 GiB executors only if dims stay modest;
+    * beyond the bound the rounds shuffle, which is the honest 100 TB
+    * regime (at billions of vectors the real co-location lever is
+    * partitioning the graph so neighborhoods and their vectors land
+    * together — out of scope for this builder, documented here so nobody
+    * mistakes the broadcast for the scale path). Override with the
+    * graft.nnd.broadcastMaxVecRows system property (0 forces the shuffle
+    * regime — NnDescentSpec and ScaleProbe nnd-ab use it).
     */
   def BroadcastMaxVecRows: Long =
-    sys.props.get("graft.nnd.broadcastMaxVecRows")
-      .orElse(sys.env.get("SPARK_GRAFT_NND_BCAST_MAX"))
-      .map(_.toLong).getOrElse(500000L)
+    sys.props.get("graft.nnd.broadcastMaxVecRows").map(_.toLong).getOrElse(500000L)
 
   /** Number of pivot slices the SHUFFLE-regime expansion executes in
     * (default 1 = single pass). Slicing bounds PEAK DISK, which round
@@ -206,18 +215,19 @@ object NnDescent {
     math.max(1, math.ceil(
       2.0 * roundFootprintBytes(n, cap, dim) / math.max(1L, budget)).toInt)
 
-  /** Separate row bound for the GRAPH-side broadcasts (iterateInc's
-    * anti-join pair set, markNew's init-graph marks): those frames are
-    * k·N narrow (two longs) rows — up to 10M at NndK = 20 under the
-    * 500k-vector guard — and a HashedRelation's per-row overhead, not
-    * the 16-byte payload, dominates their footprint. Guarding them on
-    * the VECTOR row count alone (round-13 advice) let several
-    * hundred-MB-class graph relations pile on top of the two vector
-    * broadcasts near the guard boundary. 8x the vector bound ≈ equal
-    * bytes: a vector row is ~520 B of payload vs ~65 B/row for a
-    * hashed narrow pair. Scales with any override of the vector bound
-    * so a forced-shuffle A/B (bound = 0) forces BOTH sides off
-    * broadcast.
+  /** Graph-row bound of the narrow regime: each narrow round collects
+    * the current graph (k·N narrow rows — up to 10M at NndK = 20 under
+    * the 500k-vector bound) and broadcasts it with its capped adjacency,
+    * and per-row overhead, not the 16-byte payload, dominates those
+    * arrays. Guarding them on the VECTOR row count alone (round-13
+    * advice) would let a graph several times the vector table's bytes
+    * ride the same broadcast near the boundary. 8x the vector bound ≈
+    * equal bytes: a vector row is ~520 B of payload vs ~65 B/row for a
+    * narrow pair. Scales with any override of the vector bound, so a
+    * forced-shuffle A/B (bound = 0) leaves the narrow regime. With the
+    * derived width autoK(N) the graph bound binds first: builds in the
+    * band (4M / autoK(N), 500k] vectors (about 93k to 500k) run the
+    * shuffle regime (SCALE.md).
     */
   def BroadcastMaxGraphRows: Long = 8L * BroadcastMaxVecRows
 
@@ -228,9 +238,10 @@ object NnDescent {
   }
 
   /** Score a FLAT (src, dst) pair set: attach both endpoint vectors and
-    * emit (src, dst, cos_sim). In the broadcast regime both joins are
-    * map-side; in the shuffle regime the pair rows carry ONE vector
-    * payload through one sorted shuffle — acceptable ONLY for pair sets
+    * emit (src, dst, cos_sim). With `bcastVecs` (upsert seeds in the
+    * narrow regime) both joins are map-side; in the shuffle regime the
+    * pair rows carry ONE vector payload through one sorted shuffle —
+    * acceptable ONLY for pair sets
     * linear in N (current edges, upsert seeds: k·N rows), never for the
     * N·cap² two-hop expansion (which scores at the pivot — see
     * scoreTwoHopLocal).
@@ -261,10 +272,9 @@ object NnDescent {
   /** Score the two-hop expansion of a capped undirected adjacency WITHOUT
     * ever materializing an N·cap²-row frame that carries a vector
     * payload — the shuffle-regime scale fix (round 16; the r15 verdict's
-    * #1 item). The broadcast-regime plan keeps candidates narrow for
-    * free (both vector joins are map-side), but past the broadcast
-    * boundary the old shape (expand pairs, then join vectors per
-    * endpoint) sorted N·cap² rows WITH a 64-double payload riding along:
+    * #1 item). Past the broadcast boundary the old shape (expand pairs,
+    * then join vectors per endpoint) sorted N·cap² rows WITH a 64-double
+    * payload riding along:
     * measured spill >60 GB at 50k·cap 56 and an 80 GB-disk death at
     * 600k·cap 28 (SCALE.md round-15 waves 6 & 8) — ~N·cap²·vecWidth
     * bytes of disk, which no cluster absorbs at 1B nodes.
@@ -307,28 +317,23 @@ object NnDescent {
           .as("cos_sim"))
   }
 
-  /** One NN-Descent round. `g` is the current edge set (src, dst, ...);
-    * `vecs` is vecFrame's (vec_id, dv, nrm). Returns (candidates,
-    * ranked): the round's distinct scored candidate set — the
-    * undirected graph's two-hop pairs plus the current edges — and its
-    * per-src top-k cut (src, dst, cos_sim, rank). descend runs it as
+  /** One shuffle-regime NN-Descent round. `g` is the current edge set
+    * (src, dst, ...); `vecs` is vecFrame's (vec_id, dv, nrm). Returns
+    * (candidates, ranked): the round's distinct scored candidate set —
+    * the undirected graph's two-hop pairs plus the current edges — and
+    * its per-src top-k cut (src, dst, cos_sim, rank). descend runs it as
     * round 0 and hands the candidates to its observer, which is how the
     * q196 audit reports per-round candidate volume and recall.
     *
-    * `broadcastVecs` selects the scoring shape: true → the narrow bag +
-    * two map-side broadcast vector joins (nothing wide anywhere); false
-    * (the 100 TB regime) → the pivot-local join (scoreTwoHopLocal), so
-    * the sorted shuffles carry vectors only on N·cap-row frames and the
-    * N·cap² expansion flows as narrow (src, dst, cos_sim) triples.
-    * Callers set it from a size guard (knnGraph) or by construction
-    * (the sample-bounded q196 audit). Scores are bit-identical across
-    * the shapes (same bag multiset, same cos expression).
+    * Scoring is the pivot-local join (scoreTwoHopLocal), so the sorted
+    * shuffles carry vectors only on N·cap-row frames and the N·cap²
+    * expansion flows as narrow (src, dst, cos_sim) triples, plus a flat
+    * pass over the k·N current edges.
     *
     * `slices` is the shuffle-regime slice count (descend passes
     * BuildParams.slices, i.e. deriveSlices' pick); 1 is a single pass.
     */
-  def iterate(g: DataFrame, vecs: DataFrame, k: Int, cap: Int = -1,
-      broadcastVecs: Boolean = false, round: Int = 0,
+  def iterate(g: DataFrame, vecs: DataFrame, k: Int, cap: Int = -1, round: Int = 0,
       slices: Int = 1): (DataFrame, DataFrame) = {
     // Undirected adjacency CAPPED per node (default 2k): out-degree is
     // <= k by construction, but REVERSE degree is unbounded — on
@@ -362,28 +367,23 @@ object NnDescent {
         col("dst").asc)))
       .filter(col("rk") <= capN)
       .select("src", "dst")
-    // the candidate BAG (duplicates allowed: one pair per generating
-    // pivot) — the broadcast-regime scoring path works on this, never on
-    // the deduped set
-    val candBag = und.alias("a")
+    // the candidate SET: two-hop pairs plus the current edges —
+    // returned for the audit's volume count (the oracle's c$t is
+    // DISTINCT); the build itself never materializes it: deduping the
+    // N·cap² bag was measured at 57 s of a 85 s round at the 25x corpus
+    // while scoring the ~5% duplicate surplus costs ~1 s
+    val cand = und.alias("a")
       .join(und.alias("b"),
         col("a.dst") === col("b.src") && col("b.dst") =!= col("a.src"))
       .select(col("a.src").as("src"), col("b.dst").as("dst"))
       .union(g.select(col("src"), col("dst")))
-    // the candidate SET — returned for the audit's volume count (the
-    // oracle's c$t is DISTINCT); the build itself never materializes it:
-    // deduping the N·cap² bag was measured at 57 s of a 85 s round at
-    // the 25x corpus while scoring the ~5% duplicate surplus costs ~1 s
-    val cand = candBag.distinct()
-    // Scoring: broadcast regime keeps the narrow bag + two map-side
-    // vector joins (no shuffle touches the bag at all); shuffle regime
-    // scores the two-hop expansion AT THE PIVOT (scoreTwoHopLocal) so
+      .distinct()
+    // Scoring: the two-hop expansion AT THE PIVOT (scoreTwoHopLocal) so
     // no N·cap²-row frame ever carries a vector payload, plus a flat
-    // pass over the k·N current edges. Same bag multiset, same cos
-    // expression ⟹ bit-identical scores in both shapes.
+    // pass over the k·N current edges — the candidate bag (one pair per
+    // generating pivot), scored with one cos expression.
     val scoredBag =
-      if (broadcastVecs) scoreFlat(candBag, vecs, bcastVecs = true)
-      else if (slices <= 1)
+      if (slices <= 1)
         scoreTwoHopLocal(und, vecs)
           .union(scoreFlat(g.select(col("src"), col("dst")), vecs, bcastVecs = false))
       else {
@@ -410,20 +410,17 @@ object NnDescent {
 
   /** Flag round 0's survivors: an edge of the first ranked cut is NEW
     * unless it was already present in the init graph `g0`. Incremental
-    * rounds (iterateInc) key off this flag. `broadcastG0` follows the
-    * callers' GRAPH-side row bound (BroadcastMaxGraphRows) — the init
-    * graph is k·N narrow rows, and broadcasting it keeps the flag join
-    * off a sorted shuffle of the ranked cut.
+    * rounds (iterateInc) key off this flag.
     */
-  def markNew(ranked: DataFrame, g0: DataFrame, broadcastG0: Boolean = false): DataFrame = {
+  def markNew(ranked: DataFrame, g0: DataFrame): DataFrame = {
     val marks = g0.select(col("src"), col("dst")).withColumn("w0", lit(true))
     ranked
-      .join(if (broadcastG0) broadcast(marks) else marks, Seq("src", "dst"), "left")
+      .join(marks, Seq("src", "dst"), "left")
       .withColumn("is_new", col("w0").isNull)
       .drop("w0")
   }
 
-  /** One INCREMENTAL NN-Descent round (Dong et al. §2.2's "local join on
+  /** One INCREMENTAL shuffle-regime NN-Descent round (Dong et al. §2.2's "local join on
     * new items"): a two-hop pair needs scoring only if at least ONE of
     * its two legs entered the graph in the previous round. Rationale: an
     * old-old pair whose legs ALSO survived the previous round's cap was
@@ -447,7 +444,6 @@ object NnDescent {
     * column measures exactly what this round paid for.
     */
   def iterateInc(g: DataFrame, vecs: DataFrame, k: Int, cap: Int = -1,
-      broadcastVecs: Boolean = false, broadcastGraph: Boolean = false,
       round: Int = 0, slices: Int = 1): (DataFrame, DataFrame) = {
     val capN = if (cap > 0) cap else 2 * k
     // undirected capped adjacency as in `iterate` (the same round-salted
@@ -463,36 +459,27 @@ object NnDescent {
         col("dst").asc)))
       .filter(col("rk") <= capN)
       .select("src", "dst", "is_new")
-    // new-leg candidate BAG (duplicates allowed — see iterate); pairs
-    // already in the graph carry their score in `g` and are never
-    // rescored (the anti-join also keeps the next union free of
-    // (src,dst) collisions, which the dense_rank dedup relies on). The
-    // graph side is k·N narrow rows; it rides its OWN row bound
-    // (BroadcastMaxGraphRows via the caller's broadcastGraph), not the
-    // vector guard — see the bound's scaladoc.
-    val gPairs = {
-      val p = g.select("src", "dst")
-      if (broadcastGraph) broadcast(p) else p
-    }
-    val newCandBag = und.alias("a")
+    // new-leg candidates; pairs already in the graph carry their score
+    // in `g` and are never rescored (the anti-join also keeps the next
+    // union free of (src,dst) collisions, which the dense_rank dedup
+    // relies on). The SET is for the audit's volume count only (oracle
+    // c$t is DISTINCT).
+    val gPairs = g.select("src", "dst")
+    val newCand = und.alias("a")
       .join(und.alias("b"),
         col("a.dst") === col("b.src") && col("b.dst") =!= col("a.src") &&
           (col("a.is_new") || col("b.is_new")))
       .select(col("a.src").as("src"), col("b.dst").as("dst"))
       .join(gPairs, Seq("src", "dst"), "left_anti")
-    // the SET, for the audit's volume count only (oracle c$t is DISTINCT)
-    val newCand = newCandBag.distinct()
-    // Scoring, regime-split exactly as in `iterate`: broadcast keeps the
-    // narrow anti-joined bag + map-side vector joins; shuffle scores the
-    // new-leg two-hop expansion at the pivot (the new-leg predicate rides
-    // INTO the pivot join) and anti-joins the already-narrow scored
-    // triples against gPairs AFTER — same pairs survive, same cos values,
-    // and the expensive frame never carries a vector payload. Scoring a
-    // pair the anti-join then drops costs only its in-join projection;
-    // nothing wide hits a shuffle either way.
+      .distinct()
+    // Scoring as in `iterate`: the new-leg two-hop expansion scores at
+    // the pivot (the new-leg predicate rides INTO the pivot join) and the
+    // already-narrow scored triples anti-join against gPairs AFTER — the
+    // same pairs as newCand's bag, and the expensive frame never carries
+    // a vector payload. Scoring a pair the anti-join then drops costs
+    // only its in-join projection.
     val scored =
-      if (broadcastVecs) scoreFlat(newCandBag, vecs, bcastVecs = true)
-      else if (slices <= 1)
+      if (slices <= 1)
         scoreTwoHopLocal(und.select("src", "dst", "is_new"), vecs,
           extraCond = col("a.is_new") || col("b.is_new"))
           .join(gPairs, Seq("src", "dst"), "left_anti")
@@ -573,32 +560,41 @@ object NnDescent {
     // little near an autoK breakpoint, which is safe: old lists simply
     // hold <= base-k edges until new candidates fill the wider cut.
     val params = buildParams(vecs, nAll, k, cap)
-    // the merged count is already materialized (nAll — vecFrame is a
-    // pure projection, row-for-row with `vectors`): ride it as a literal
-    // instead of re-aggregating the corpus for a 1-row broadcast
-    val seeds = drawEdges(newVectors.select(col(idCol).cast("long").as("src")),
-      params.k, "nndu", lit(nAll), lit(1L))
-    // flat-scored: batch·k rows — linear in the batch, so one wide sorted
-    // shuffle in the shuffle regime is fine (see scoreFlat's scaladoc)
-    val seedScored = scoreFlat(seeds, vecs, params.bcastVecs)
-    // merged working graph: base edges ride with their stored scores and
-    // is_new = false (their build-time flags are stale by definition);
-    // seeds are the new legs. Src sets are disjoint, so the union is
-    // (src, dst)-collision-free — the invariant iterateInc's dense_rank
-    // dedup relies on.
-    val g = CheckpointStats.freshCheckpoint(
-      baseGraph.select("src", "dst", "cos_sim").withColumn("is_new", lit(false))
-        .unionByName(seedScored.withColumn("is_new", lit(true))))
     // rounds from t = 1: the oracle's upsert unroll indexes upg rounds
     // from t = 1 (t = 0 is the base build's iterate round)
-    descend(g, vecs, params, 1 to nRounds).select("src", "dst", "cos_sim", "rank")
+    descend(upsertStart(baseGraph, vecs, newVectors.select(col(idCol).cast("long").as("src")),
+        nAll, params), vecs, params, 1 to nRounds)
+      .select("src", "dst", "cos_sim", "rank")
+  }
+
+  /** upsertGraph's start graph: base edges with their stored scores and
+    * is_new = false (their build-time flags are stale by definition),
+    * plus k md5 seed edges per new id (`newIds`: src) over the merged
+    * count `n`, scored and flagged new. Src sets are disjoint, so the
+    * union is (src, dst)-collision-free — the invariant iterateInc's
+    * dense_rank dedup relies on.
+    */
+  private[graft] def upsertStart(baseGraph: DataFrame, vecs: DataFrame, newIds: DataFrame,
+      n: Long, p: BuildParams): DataFrame = {
+    // the merged count is already materialized (vecFrame is a pure
+    // projection, row-for-row with the corpus): ride it as a literal
+    // instead of re-aggregating the corpus for a 1-row broadcast
+    val seeds = drawEdges(newIds, p.k, "nndu", lit(n), lit(1L))
+    // flat-scored: batch·k rows — linear in the batch, so one wide sorted
+    // shuffle in the shuffle regime is fine (see scoreFlat's scaladoc)
+    val seedScored = scoreFlat(seeds, vecs, bcastVecs = p.narrow)
+    CheckpointStats.freshCheckpoint(
+      baseGraph.select("src", "dst", "cos_sim").withColumn("is_new", lit(false))
+        .unionByName(seedScored.withColumn("is_new", lit(true))))
   }
 
   /** The ONE NN-Descent round driver, returning the last round's ranked
-    * graph. Round t = 0 runs iterate + markNew over `start` as the init
-    * graph; t >= 1 runs iterateInc salted with t (the oracles' unroll
-    * index). `observe(t, candidates, graph)` sees each round's scored
-    * candidates and its checkpointed cut (the q196 audit's rows).
+    * graph. In the narrow regime (`p.narrow`) every round is one
+    * NarrowRounds pass; in the shuffle regime round t = 0 runs iterate +
+    * markNew over `start` as the init graph and t >= 1 runs iterateInc
+    * salted with t (the oracles' unroll index). `observe(t, candidates,
+    * graph)` sees each round's scored candidates (lazy; only the q196
+    * audit counts them) and its checkpointed cut (the audit's rows).
     *
     * Round 0 checkpoints eagerly, later rounds LAZILY unless `eager`
     * (round 18): round t+1's stage materialization is the action that
@@ -609,18 +605,21 @@ object NnDescent {
     */
   private[graft] def descend(start: DataFrame, vecs: DataFrame, p: BuildParams,
       rounds: Range, eager: Boolean = false,
-      observe: (Int, DataFrame, DataFrame) => Unit = (_, _, _) => ()): DataFrame =
-    rounds.foldLeft(start) { (g, t) =>
-      val (cand, ranked) =
+      observe: (Int, DataFrame, DataFrame) => Unit = (_, _, _) => ()): DataFrame = {
+    val round: (DataFrame, Int) => (DataFrame, DataFrame) =
+      if (p.narrow) new NarrowRounds(vecs, p.k, p.cap).apply
+      else (g, t) =>
         if (t == 0) {
-          val (c, r) = iterate(g, vecs, p.k, p.cap, p.bcastVecs, slices = p.slices)
-          (c, markNew(r, g, broadcastG0 = p.bcastGraph))
-        } else iterateInc(g, vecs, p.k, p.cap, p.bcastVecs, p.bcastGraph,
-          round = t, slices = p.slices)
+          val (c, r) = iterate(g, vecs, p.k, p.cap, slices = p.slices)
+          (c, markNew(r, g))
+        } else iterateInc(g, vecs, p.k, p.cap, round = t, slices = p.slices)
+    rounds.foldLeft(start) { (g, t) =>
+      val (cand, ranked) = round(g, t)
       val next = CheckpointStats.freshCheckpoint(ranked, eager = eager || t == 0)
       observe(t, cand, next)
       next
     }
+  }
 
   private def log2Ceil(n: Long): Int =
     64 - java.lang.Long.numberOfLeadingZeros(math.max(1L, n) - 1)
@@ -695,14 +694,9 @@ object NnDescent {
       cap: Int = -1
   ): DataFrame = {
     val vecs = CheckpointStats.freshCheckpoint(vecFrame(vectors, idCol, vecCol))
-    // size guards for the per-round scoring joins: the checkpoint above
-    // resets stats (correct for the graph frames, whose self-joins must
-    // never broadcast), so Catalyst cannot see that the vector table is
-    // tiny next to the N·cap² candidate pairs — decide here from the
-    // materialized count (the frame is already checkpointed; the count
-    // reads cached blocks). The graph-side frames (k·N narrow rows) get
-    // their OWN bound: near the vector-guard boundary they are 10M-row
-    // HashedRelations that must not pile on top of the vector broadcasts.
+    // the regime is decided here from the materialized count (the frame
+    // is already checkpointed; the count reads cached blocks): the
+    // checkpoint resets stats, so Catalyst alone cannot size anything
     val nVecs = vecs.count()
     val nIters = if (iters >= 1) iters else autoIters(nVecs)
     val params = buildParams(vecs, nVecs, k, cap)
@@ -715,8 +709,7 @@ object NnDescent {
     * builders (knnGraph, upsertGraph); fixed by construction for the
     * sample-bounded q196 audit.
     */
-  private[graft] final case class BuildParams(
-      k: Int, cap: Int, bcastVecs: Boolean, bcastGraph: Boolean, slices: Int)
+  private[graft] final case class BuildParams(k: Int, cap: Int, narrow: Boolean, slices: Int)
 
   /** k == 0 derives the working width from N; cap == 0 derives the
     * ρ-cap from that width (the shipped registry mode). cap < 0 keeps
@@ -724,22 +717,21 @@ object NnDescent {
     * direct/spec callers with an explicit k — when k derives, any
     * cap <= 0 derives too (round-15 advice: the asymmetric sentinel
     * could silently build a derived-width/ρ=1 config no oracle models).
-    * The two broadcast guards are decided from the same count: vector
-    * payloads against BroadcastMaxVecRows, the k·N narrow graph rows
-    * against their own BroadcastMaxGraphRows.
+    * The regime is decided from the same count: narrow iff the vectors
+    * fit BroadcastMaxVecRows AND the k·N graph rows fit
+    * BroadcastMaxGraphRows.
     */
   private[graft] def buildParams(vecs: DataFrame, n: Long, k: Int,
       cap: Int): BuildParams = {
     val kUse = if (k >= 1) k else autoK(n)
     val capUse = if (cap > 0) cap else if (cap == 0 || k < 1) autoCap(kUse) else cap
-    val bcastVecs = n <= BroadcastMaxVecRows
-    BuildParams(kUse, capUse, bcastVecs, kUse.toLong * n <= BroadcastMaxGraphRows,
-      deriveSlices(vecs, n, capUse, bcastVecs))
+    val narrow = n <= BroadcastMaxVecRows && kUse.toLong * n <= BroadcastMaxGraphRows
+    BuildParams(kUse, capUse, narrow, deriveSlices(vecs, n, capUse, narrow))
   }
 
   /** Slice count for the composed builders: the explicit override if
     * set (A/Bs, probes), else autoSlices from (N, cap, measured vector
-    * width, disk budget). Broadcast-regime builds never slice — the
+    * width, disk budget). Narrow-regime builds never slice — the
     * expansion is never materialized to disk there — so the dimension
     * lookup (one row off the already-checkpointed vecs frame) is paid
     * only past the broadcast boundary, where a build costs minutes and
@@ -748,8 +740,8 @@ object NnDescent {
     * while the S the formula picks (3) completed at 44 GB peak.
     */
   private def deriveSlices(vecs: DataFrame, n: Long, cap: Int,
-      bcastVecs: Boolean): Int =
-    if (bcastVecs) 1
+      narrow: Boolean): Int =
+    if (narrow) 1
     else ExpansionSlicesOverride.getOrElse {
       val dim = vecs.select(size(col("dv")))
         .limit(1).collect().headOption.map(_.getInt(0)).getOrElse(0)

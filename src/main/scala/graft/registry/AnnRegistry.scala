@@ -631,7 +631,7 @@ trait AnnRegistry extends RegistryBase {
       // driver (NnDescent.descend, as knnGraph runs it), so n_cand
       // reports exactly what each shipped round pays. Init draws land on
       // the sampled id grid (vec_id = idx * m), so m = 1 reproduces the
-      // shipped build's init exactly. Both broadcasts by construction
+      // shipped build's init exactly. Narrow regime by construction
       // (the sample is ~1000 rows); rounds checkpoint EAGERLY because each
       // round's frame feeds the folded unions' broadcast futures, which
       // race a lazy checkpoint and recompute the whole chain (see `e`)
@@ -639,7 +639,7 @@ trait AnnRegistry extends RegistryBase {
         NnDescent.drawEdges(e.select(col("vec_id").as("src")).crossJoin(broadcast(nRow)),
           NndK, "nnd0", col("n_nodes"), col("mm")))
       val nndRounds = scala.collection.mutable.ArrayBuffer.empty[(Int, DataFrame, DataFrame)]
-      NnDescent.descend(g0, vecs, NnDescent.BuildParams(NndK, NndCap, true, true, 1),
+      NnDescent.descend(g0, vecs, NnDescent.BuildParams(NndK, NndCap, narrow = true, slices = 1),
         0 until NndIters, eager = true,
         observe = (t, candT, gT) => nndRounds += ((t + 1, candT, gT)))
       val volRows = nndRounds.map { case (t, candT, _) =>

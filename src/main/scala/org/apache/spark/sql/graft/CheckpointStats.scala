@@ -30,18 +30,22 @@ import org.apache.spark.sql.classic.{Dataset, SparkSession}
   * corpus-proportional, never safely broadcastable at scale.
   */
 object CheckpointStats {
-  /** localCheckpoint + stats reset. Since round 17 the checkpoint's
-    * OUTPUT PARTITIONING (and ordering) survive the re-wrap: the
-    * checkpoint Dataset's own plan is a LogicalRDD that carries them,
-    * and copying it with originStats = None strips exactly the squared
-    * size estimate — so an iterative loop whose rounds join the
-    * checkpointed frame on its own grouping key no longer re-exchanges
-    * a frame that is already hash-partitioned by that key (measured on
-    * the q52 resolveGroups loop: the per-round label-side exchanges
-    * vanish from the plan). `eager = false` defers materialization to
-    * the caller's next action — an iterative loop whose round ends in a
-    * convergence count can fold checkpoint materialization into that
-    * count instead of paying a separate job.
+  /** localCheckpoint + stats reset. The re-wrap copies the checkpoint's
+    * LogicalRDD with originStats = None, which strips exactly the
+    * squared size estimate; its recorded output partitioning and
+    * ordering are copied as they are. Under AQE (the engine's default)
+    * the checkpointed plan is adaptive and the LogicalRDD records
+    * UnknownPartitioning(0), so a frame repartitioned by a key before
+    * this checkpoint is NOT known to be partitioned by it: a later
+    * groupBy or join on that key still plans its Exchange (checked:
+    * df.repartition(col("src")).localCheckpoint().groupBy("src") plans
+    * one Exchange with AQE on and none with it off; the re-wrap copies
+    * that LogicalRDD's partitioning). Pre-partitioning before a
+    * checkpoint therefore buys nothing here and costs a shuffle.
+    * `eager = false` defers materialization to the caller's next action
+    * — an iterative loop whose round ends in a convergence count can
+    * fold checkpoint materialization into that count instead of paying
+    * a separate job.
     */
   def freshCheckpoint(df: DataFrame, eager: Boolean = true): DataFrame = {
     val ds = df.asInstanceOf[Dataset[Row]]

@@ -137,22 +137,34 @@ class NnDescentSpec extends SparkSpec {
       "incremental new-leg rounds diverged from the full recurrence at an unbinding cap")
   }
 
-  test("scoring round plan: broadcast vector joins + rank-limit pushdown") {
-    // The two plan properties the round-13 rework bought, pinned so a
-    // refactor can't silently lose them: (1) with broadcastVecs the two
-    // vector-side joins are BroadcastHashJoins — the N·cap² candidate
-    // pairs stay narrow and the 64-double arrays never ride a sorted
-    // shuffle; (2) the dense_rank top-k cut gets WindowGroupLimit
-    // pushdown (partial per-partition limiting before the exchange), so
-    // the window never buffers the full candidate bag.
-    val vecs = NnDescent.vecFrame(clusteredVecs, "vec_id", "embedding")
-    val g0 = NnDescent.initGraph(clusteredVecs, "vec_id", 3)
-    val (_, ranked) = NnDescent.iterate(g0, vecs, 3, cap = 100, broadcastVecs = true)
-    val plan = ranked.queryExecution.executedPlan.toString
-    assert("BroadcastHashJoin".r.findAllIn(plan).size >= 2,
-      s"scoring joins are not broadcast:\n${plan.take(2000)}")
-    assert(plan.contains("WindowGroupLimit") && plan.contains("dense_rank"),
-      s"dense_rank top-k lost WindowGroupLimit pushdown:\n${plan.take(2000)}")
+  test("narrow round: one narrow pass per round, no ShuffleDependency") {
+    // The narrow regime's contract: each round is ONE narrow pass over
+    // the src ids — the cap² bag is expanded, scored and cut inside the
+    // tasks, so no shuffle, window or sort ever sees it. An RDD lineage
+    // without a ShuffleDependency is one stage per job. The walker is
+    // checked against the shuffle regime's round, which must shuffle.
+    import org.apache.spark.ShuffleDependency
+    import org.apache.spark.rdd.RDD
+    import org.apache.spark.sql.graft.{CheckpointStats, NarrowRounds}
+    def shuffles(r: RDD[_]): Int = r.dependencies.map {
+      case d: ShuffleDependency[_, _, _] => 1 + shuffles(d.rdd)
+      case d => shuffles(d.rdd)
+    }.sum
+    val vecs = CheckpointStats.freshCheckpoint(
+      NnDescent.vecFrame(clusteredVecs, "vec_id", "embedding"))
+    val g0 = CheckpointStats.freshCheckpoint(NnDescent.initGraph(clusteredVecs, "vec_id", 4))
+    assert(shuffles(NnDescent.iterate(g0, vecs, 4, cap = 5)._2.queryExecution.toRdd) > 0,
+      "the lineage walker found no shuffle in a shuffle-regime round")
+    val rounds = new NarrowRounds(vecs, 4, 5)
+    var g = g0
+    for (t <- 0 until 3) {
+      val (cand, ranked) = rounds(g, t)
+      for ((name, df) <- Seq("ranked" -> ranked, "candidates" -> cand))
+        assert(shuffles(df.queryExecution.toRdd) == 0,
+          s"round $t's $name pass has a ShuffleDependency:\n${df.queryExecution.toRdd.toDebugString}")
+      assert(cand.count() > 0 && ranked.count() > 0, s"round $t is empty")
+      g = CheckpointStats.freshCheckpoint(ranked)
+    }
   }
 
   test("forced shuffle regime (BroadcastMaxVecRows = 0): same graph, sort-merge plan") {
@@ -185,7 +197,7 @@ class NnDescentSpec extends SparkSpec {
     // every per-round frame rides a freshCheckpoint)
     val g0 = org.apache.spark.sql.graft.CheckpointStats.freshCheckpoint(
       NnDescent.initGraph(clusteredVecs, "vec_id", 4))
-    val (_, ranked) = NnDescent.iterate(g0, vecs, 4, cap = 8, broadcastVecs = false)
+    val (_, ranked) = NnDescent.iterate(g0, vecs, 4, cap = 8)
     val plan = ranked.queryExecution.executedPlan.toString
     assert(plan.contains("SortMergeJoin"),
       s"shuffle regime lost its sort-merge joins:\n${plan.take(2000)}")
@@ -231,15 +243,14 @@ class NnDescentSpec extends SparkSpec {
         p.children.foreach(c => check(c, wa))
     }
     // iterate (round 0): one expansion join
-    val (_, r0) = NnDescent.iterate(g0, vecs, 4, cap = 8, broadcastVecs = false)
+    val (_, r0) = NnDescent.iterate(g0, vecs, 4, cap = 8)
     check(r0.queryExecution.sparkPlan, Seq.empty)
     assert(found == 1, s"expected exactly 1 expansion join in iterate, found $found")
     // iterateInc: the new-leg predicate rides into the same pivot join
     found = 0
     val g1 = org.apache.spark.sql.graft.CheckpointStats.freshCheckpoint(
       NnDescent.markNew(r0, g0))
-    val (_, r1) = NnDescent.iterateInc(g1, vecs, 4, cap = 8,
-      broadcastVecs = false, broadcastGraph = false, round = 1)
+    val (_, r1) = NnDescent.iterateInc(g1, vecs, 4, cap = 8, round = 1)
     check(r1.queryExecution.sparkPlan, Seq.empty)
     assert(found == 1, s"expected exactly 1 expansion join in iterateInc, found $found")
   }
@@ -320,7 +331,7 @@ class NnDescentSpec extends SparkSpec {
     // The audit calls the builder's own round driver with its fixed
     // params and eager checkpoints; knnGraph walks the same driver with
     // lazy ones. On this 40-node fixture knnGraph derives exactly the
-    // audit's literal params (both broadcasts, one slice), so every
+    // audit's literal params (narrow regime, one slice), so every
     // round the observer sees must equal a knnGraph build stopped there.
     import org.apache.spark.sql.graft.CheckpointStats
     def edges(df: org.apache.spark.sql.DataFrame) =
@@ -332,7 +343,7 @@ class NnDescentSpec extends SparkSpec {
       NnDescent.vecFrame(clusteredVecs, "vec_id", "embedding"))
     val g0 = CheckpointStats.freshCheckpoint(NnDescent.initGraph(clusteredVecs, "vec_id", 4))
     val seen = scala.collection.mutable.ArrayBuffer.empty[(Int, Set[(Long, Long, Double, Long)])]
-    val last = NnDescent.descend(g0, vecs, NnDescent.BuildParams(4, 5, true, true, 1),
+    val last = NnDescent.descend(g0, vecs, NnDescent.BuildParams(4, 5, narrow = true, slices = 1),
       0 until 3, eager = true, observe = (t, cand, g) => {
         assert(cand.count() > 0, s"round $t scored no candidates")
         seen += (t -> edges(g))
@@ -378,5 +389,127 @@ class NnDescentSpec extends SparkSpec {
       assert(ranks.sameElements(1L to ranks.length), s"node $srcId ranks: ${ranks.toSeq}")
       assert(ranks.length <= 4)
     }
+  }
+
+  /** Vectors for the regime differential tests, as double arrays: small
+    * integer components (exact duplicates, so tied cos), the axis
+    * (1, 0, 0, 0) (0.0 against orthogonal vectors), (-1e-300, 0, 0, 1e150)
+    * (its cos with the axis underflows to -0.0, and with vectors whose
+    * last component is 0 to ±0.0), and one NaN component (NaN cos, which
+    * Spark's double ordering ranks first). `zero` adds a zero vector.
+    */
+  private def regimeVecs(seed: Long, n: Int, zero: Boolean = false) = {
+    import spark.implicits._
+    val rnd = new scala.util.Random(seed)
+    def ints(): Seq[Double] = {
+      val v = Seq.fill(4)((rnd.nextInt(5) - 2).toDouble)
+      if (v.forall(_ == 0.0)) ints() else v
+    }
+    (0 until n).map { i =>
+      val v = i % 9 match {
+        case 0 => Seq(1.0, 0.0, 0.0, 0.0)
+        case 1 => Seq(-1e-300, 0.0, 0.0, 1e150)
+        case _ if i == 5 => Seq(Double.NaN, 1.0, 0.0, 0.0)
+        case _ if zero && i == 7 => Seq(0.0, 0.0, 0.0, 0.0)
+        case _ => ints()
+      }
+      (i.toLong, v)
+    }.toDF("vec_id", "embedding")
+  }
+
+  /** (round, candidate pairs, ranked rows with cos_sim as raw bits) for
+    * every round of one descend walk.
+    */
+  private type Walk = Seq[(Int, Set[(Long, Long)], Set[(Long, Long, Option[Long], Long, Boolean)])]
+
+  private def walk(start: org.apache.spark.sql.DataFrame, vecs: org.apache.spark.sql.DataFrame,
+      p: NnDescent.BuildParams, rounds: Range): Walk = {
+    val seen = scala.collection.mutable.ArrayBuffer.empty[
+      (Int, Set[(Long, Long)], Set[(Long, Long, Option[Long], Long, Boolean)])]
+    NnDescent.descend(start, vecs, p, rounds, observe = (t, cand, g) =>
+      seen += ((t,
+        cand.select("src", "dst").collect().map(r => (r.getLong(0), r.getLong(1))).toSet,
+        g.select("src", "dst", "cos_sim", "rank", "is_new").collect().map(r =>
+          (r.getLong(0), r.getLong(1),
+            if (r.isNullAt(2)) None else Some(java.lang.Double.doubleToRawLongBits(r.getDouble(2))),
+            r.getLong(3), r.getBoolean(4))).toSet)))
+    seen.toSeq
+  }
+
+  private def assertSameWalks(what: String, narrow: Walk, shuffle: Walk): Unit = {
+    assert(narrow.map(_._1) == shuffle.map(_._1), s"$what: rounds differ")
+    narrow.zip(shuffle).foreach { case ((t, nc, ng), (_, sc, sg)) =>
+      assert(nc == sc, s"$what round $t candidates: narrow-only ${(nc -- sc).take(5)}, " +
+        s"shuffle-only ${(sc -- nc).take(5)}")
+      assert(ng == sg, s"$what round $t graph: narrow-only ${(ng -- sg).toSeq.sorted.take(5)}, " +
+        s"shuffle-only ${(sg -- ng).toSeq.sorted.take(5)}")
+    }
+  }
+
+  /** knnGraph's walk (init draw + rounds from t = 0) in one regime. */
+  private def knnWalk(vectors: org.apache.spark.sql.DataFrame, k: Int, cap: Int, rounds: Int,
+      narrow: Boolean) = {
+    import org.apache.spark.sql.graft.CheckpointStats
+    val vecs = CheckpointStats.freshCheckpoint(NnDescent.vecFrame(vectors, "vec_id", "embedding"))
+    val g0 = CheckpointStats.freshCheckpoint(NnDescent.initGraph(vectors, "vec_id", k))
+    walk(g0, vecs, NnDescent.BuildParams(k, cap, narrow, slices = 1), 0 until rounds)
+  }
+
+  test("differential: narrow rounds == shuffle-regime rounds, round by round (knnGraph)") {
+    // Every round's candidate set and (src, dst, cos_sim bits, rank,
+    // is_new) must agree between the two regimes, on ties, ±0.0 and NaN
+    // scores, with caps that bind (3, 5) and caps that do not (1000,
+    // 2k), and with k at or above the number of neighbours (40 > n).
+    val vectors = regimeVecs(11L, 30)
+    for ((k, cap, rounds) <- Seq((4, 3, 4), (4, 1000, 3), (40, 5, 3), (40, -1, 2))) {
+      val Seq(narrow, shuffle) = Seq(true, false).map(knnWalk(vectors, k, cap, rounds, _))
+      assertSameWalks(s"knnGraph(k = $k, cap = $cap)", narrow, shuffle)
+      if (k == 4 && cap == 3) {
+        val all = narrow.flatMap(_._3)
+        assert(all.exists(_._3.exists(b => java.lang.Double.isNaN(java.lang.Double.longBitsToDouble(b)))),
+          "fixture produced no NaN score")
+        assert(all.exists(_._3.contains(0L)), "fixture produced no 0.0 score")
+        assert(all.exists(_._5) && all.exists(!_._5), "is_new never varied")
+      }
+    }
+  }
+
+  test("differential: narrow rounds == shuffle-regime rounds, round by round (upsertGraph)") {
+    // The q203 shape: a base graph over ids 0..nb-1, then upsert rounds
+    // from t = 1 over the merged corpus, seeds drawn for ids nb..n-1.
+    import org.apache.spark.sql.graft.CheckpointStats
+    val all = regimeVecs(23L, 36)
+    val base = all.filter(col("vec_id") < 24)
+    val vecs = CheckpointStats.freshCheckpoint(NnDescent.vecFrame(all, "vec_id", "embedding"))
+    val newIds = all.filter(col("vec_id") >= 24).select(col("vec_id").as("src"))
+    for ((k, cap, rounds) <- Seq((4, 3, 3), (40, 1000, 2))) {
+      val baseGraph = NnDescent.knnGraph(base, "vec_id", "embedding", k, iters = 2, cap = cap)
+      val Seq(narrow, shuffle) = Seq(true, false).map { narrow =>
+        val p = NnDescent.BuildParams(k, cap, narrow, slices = 1)
+        walk(NnDescent.upsertStart(baseGraph, vecs, newIds, 36L, p), vecs, p, 1 to rounds)
+      }
+      assertSameWalks(s"upsertGraph(k = $k, cap = $cap)", narrow, shuffle)
+    }
+  }
+
+  test("differential: a zero vector fails both regimes under ANSI and scores null in both without") {
+    // cos_sim divides by nrm_a · nrm_b: a zero divisor is DIVIDE_BY_ZERO
+    // under ANSI (the session default) and NULL without it, which the
+    // top-k order puts last (DESC NULLS LAST).
+    val vectors = regimeVecs(5L, 27, zero = true)
+    def rootMessages(e: Throwable): String =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(String.valueOf(_)).mkString(" | ")
+    for (narrow <- Seq(true, false)) {
+      val e = intercept[Exception](knnWalk(vectors, 4, 3, 1, narrow))
+      assert(rootMessages(e).contains("DIVIDE_BY_ZERO"), s"narrow = $narrow: ${rootMessages(e)}")
+    }
+    val key = "spark.sql.ansi.enabled"
+    val old = spark.conf.get(key)
+    try {
+      spark.conf.set(key, "false")
+      val Seq(narrow, shuffle) = Seq(true, false).map(knnWalk(vectors, 4, 3, 3, _))
+      assertSameWalks("zero vector without ANSI", narrow, shuffle)
+      assert(narrow.flatMap(_._3).exists(_._3.isEmpty), "no null score ranked")
+    } finally spark.conf.set(key, old)
   }
 }
