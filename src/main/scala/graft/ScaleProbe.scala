@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.operators.{NnDescent, Similarity}
+import graft.operators.{Dedup, NnDescent, Similarity}
 import org.apache.spark.sql.graft.CheckpointStats
 
 /** Builder-local measurement harness behind SCALE.md's at-scale rows —
@@ -33,6 +33,12 @@ import org.apache.spark.sql.graft.CheckpointStats
   *                            recall of the q203 upserted graph vs the
   *                            full rebuild and vs sampled exact truth,
   *                            both wall times, and a 2-4 round sweep
+  *   groups-ab [pairs...]     resolveGroups on synthetic long chains at
+  *                            each pair count (default ~1/4 of
+  *                            Dedup.NarrowMaxPairRows and just under
+  *                            it): the shipped entry point (narrow
+  *                            regime) vs the forced shuffle loop,
+  *                            interleaved N S N S in one JVM
   *
   * Prints one JSON line per subcommand (the Bench convention). Extends
   * RegistryBase so the probes run the SAME constants and helpers the
@@ -64,6 +70,9 @@ object ScaleProbe extends RegistryBase {
       case "ivf-quality"    => ivfQuality(spark, args(1))
       case "ivf-sweep"      => ivfSweep(spark, args(1))
       case "upsert-quality" => upsertQuality(spark, args(1))
+      case "groups-ab"      => groupsAb(spark,
+        if (args.length > 1) args.drop(1).map(_.toLong).toSeq
+        else Seq(Dedup.NarrowMaxPairRows / 4, Dedup.NarrowMaxPairRows - 10000))
       case other            => sys.error(s"unknown subcommand: $other")
     }
     spark.stop()
@@ -186,6 +195,43 @@ object ScaleProbe extends RegistryBase {
       s""""broadcast_s":${arr("broadcast")},"shuffle_s":${arr("shuffle")},""" +
       s""""broadcast_spill_mb":${mb("broadcast", _._3)},"shuffle_spill_mb":${mb("shuffle", _._3)},""" +
       s""""broadcast_shufwrite_mb":${mb("broadcast", _._4)},"shuffle_shufwrite_mb":${mb("shuffle", _._4)}}""")
+  }
+
+  /** Same-JVM interleaved A/B of resolveGroups' two regimes (SCALE.md,
+    * group resolution). The pairs are chains of ChainIds consecutive ids,
+    * so the shuffle loop pays its full pointer-jumping round count. Each
+    * arm reads the same cached pair frame and counts the distinct
+    * keep_ids of its output, which must be one per chain.
+    */
+  private def groupsAb(s: SparkSession, sizes: Seq[Long]): Unit = {
+    val ChainIds = 10000L
+    for (m <- sizes) {
+      val perChain = ChainIds - 1
+      val pairs = s.range(m)
+        .select((col("id") + col("id").divide(perChain).cast("long")).as("id_a"))
+        .withColumn("id_b", col("id_a") + 1).cache()
+      val chains = (m + perChain - 1) / perChain
+      val nIds = m + chains
+      val docs = s.range(nIds).select(col("id").as("doc_id")).cache()
+      pairs.count(); docs.count()
+      var rows = Vector.empty[(String, Double)]
+      for (regime <- Seq("narrow", "shuffle", "narrow", "shuffle")) {
+        System.gc()
+        var groups = 0L
+        val w = timed {
+          val out = if (regime == "narrow") Dedup.resolveGroups(docs, "doc_id", pairs)
+            else Dedup.resolveGroupsIn(docs, "doc_id", pairs, narrow = false, maxIter = 64)
+          groups = out.select("keep_id").distinct().count()
+        }
+        require(groups == chains, s"$regime: $groups groups for $chains chains")
+        rows :+= ((regime, w))
+      }
+      def arr(r: String) =
+        rows.filter(_._1 == r).map(v => "%.1f".format(v._2)).mkString("[", ",", "]")
+      println(s"""{"probe":"groups_ab","pairs":$m,"ids":$nIds,"chains":$chains,""" +
+        s""""narrow_s":${arr("narrow")},"shuffle_s":${arr("shuffle")}}""")
+      reset(s)
+    }
   }
 
   /** Calibration curve behind autoIters (round-14 verdict item 1): ONE

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
-import org.apache.spark.sql.graft.Md5Long60
+import org.apache.spark.sql.graft.{CheckpointStats, DupComponents, Md5Long60}
 
 /** Deduplication operators for large-scale text corpora (builder-brief
   * pillar; the reference's only dedup is the set()-based ETL helper,
@@ -1103,45 +1103,107 @@ object Dedup {
       .withColumn("kept", col("n_containers") === 0)
   }
 
+  /** Pair rows up to which resolveGroups and keepBest resolve groups on
+    * the driver (the narrow regime). 4M pairs collect as 64 MB of longs,
+    * the row bound of NnDescent.BroadcastMaxGraphRows; ScaleProbe
+    * groups-ab times both regimes just under it (SCALE.md).
+    */
+  val NarrowMaxPairRows: Long = 4000000L
+
+  private val DefaultMaxIter = 64
+
   /** Collapse near-dup PAIRS into duplicate groups: every doc gets
     * `keep_id` = the minimum doc id in its connected component of the
     * pair graph (keep-one dedup — the actual "dedup" a training-data
     * pipeline needs; an edge list alone drops nothing. The reference's
     * helper dedups with a set(),
     * /root/reference/src/example_helpers/parse_inputs.py:27-35).
+    * Ids that only the pairs name still link their component, so a
+    * keep_id need not be a doc; a pair with a null id links nothing.
     *
-    * Iterative min-label propagation WITH pointer jumping: each round
-    * every vertex takes the min over (its label, neighbors' labels, its
-    * label's label). The shortcut through the label table compresses
-    * label chains, so rounds scale with the log of component diameter
-    * rather than the diameter itself — but the constant is NOT the
-    * ideal halving (propagation and jumping interleave through one min,
-    * and a fresh frontier's labels arrive unjumped), so give the loop
-    * comfortable headroom: maxIter 64 (q192's 50k-node mutual-kNN graph
-    * empirically needs more than 25 where the 500-node gate converged
-    * well inside it; rounds are cheap and the loop exits on
-    * convergence).
+    * The pair list is checkpointed once and counted (the count is the
+    * job that materializes it, so the regime check costs no job of its
+    * own). The count picks one of two regimes:
+    *   - narrow, at most NarrowMaxPairRows pairs: the list is collected
+    *     in one job, a min-root union-find labels it on the driver
+    *     (DupComponents), and the labels of the edge-touched ids join
+    *     back to `docs` as a driver-built broadcast frame. `maxIter`
+    *     does not apply.
+    *   - shuffle, past the bound: the distributed loop below, where no
+    *     vertex data reaches the driver.
+    *
+    * The shuffle regime is iterative min-label propagation WITH pointer
+    * jumping: each round every vertex takes the min over (its label,
+    * neighbors' labels, its label's label). The shortcut through the
+    * label table compresses label chains, so rounds scale with the log
+    * of component diameter rather than the diameter itself — but the
+    * constant is NOT the ideal halving (propagation and jumping
+    * interleave through one min, and a fresh frontier's labels arrive
+    * unjumped), so give the loop comfortable headroom: maxIter 64
+    * (q192's 50k-node mutual-kNN graph empirically needs more than 25
+    * where the 500-node gate converged well inside it; rounds are cheap
+    * and the loop exits on convergence).
     * Each round is one edge join + one label self-join + one min
     * aggregation, all distributed (the driver loop only counts changed
-    * labels; no vertex data ever reaches the driver). localCheckpoint
-    * truncates the growing lineage per round. Throws if maxIter rounds
-    * were insufficient rather than returning silently-wrong labels.
+    * labels). localCheckpoint truncates the growing lineage per round.
+    * Throws if maxIter rounds were insufficient rather than returning
+    * silently-wrong labels.
     */
   def resolveGroups(
       docs: DataFrame,
       idCol: String,
       pairs: DataFrame,
-      maxIter: Int = 64
+      maxIter: Int = DefaultMaxIter
   ): DataFrame = {
-    // a non-integral id would silently cast to null below and propagate
-    // garbage keep_ids — reject it up front (fail-loudly contract)
-    val idType = docs.schema(idCol).dataType
-    require(
-      Seq(org.apache.spark.sql.types.ByteType,
-          org.apache.spark.sql.types.ShortType,
-          org.apache.spark.sql.types.IntegerType,
-          org.apache.spark.sql.types.LongType).contains(idType),
-      s"resolveGroups requires an integral id column; '$idCol' is $idType")
+    requireIntegralIds(docs, idCol, pairs)
+    val (list, narrow) = pairList(pairs)
+    resolveGroupsIn(docs, idCol, list, narrow, maxIter)
+  }
+
+  /** The (id_a, id_b) pair list, checkpointed lazily and materialized by
+    * its count, and whether that count fits the narrow regime.
+    */
+  private def pairList(pairs: DataFrame): (DataFrame, Boolean) = {
+    val list = CheckpointStats.freshCheckpoint(pairs.select("id_a", "id_b"), eager = false)
+    (list, CheckpointStats.rowCount(list) <= NarrowMaxPairRows)
+  }
+
+  /** A non-integral id would silently cast to null and propagate garbage
+    * keep_ids — reject it up front (fail-loudly contract).
+    */
+  private def requireIntegralIds(docs: DataFrame, idCol: String, pairs: DataFrame): Unit =
+    Seq(docs -> idCol, pairs -> "id_a", pairs -> "id_b").foreach { case (df, c) =>
+      val t = df.schema(c).dataType
+      require(
+        Seq(org.apache.spark.sql.types.ByteType,
+            org.apache.spark.sql.types.ShortType,
+            org.apache.spark.sql.types.IntegerType,
+            org.apache.spark.sql.types.LongType).contains(t),
+        s"resolveGroups requires integral ids; '$c' is $t")
+    }
+
+  /** resolveGroups in the regime the caller names: `narrow` collects the
+    * pairs whatever their number, so only a caller that bounds them (or
+    * a test comparing the regimes) may pass true.
+    */
+  private[graft] def resolveGroupsIn(
+      docs: DataFrame,
+      idCol: String,
+      pairs: DataFrame,
+      narrow: Boolean,
+      maxIter: Int
+  ): DataFrame = {
+    val labels =
+      if (narrow) broadcast(DupComponents.collect(pairs).labels(docs.sparkSession))
+      else shuffleLabels(pairs, maxIter)
+    docs
+      .select(col(idCol).cast("long").as("id"))
+      .join(labels, Seq("id"), "left")
+      .select(col("id").as(idCol), coalesce(col("keep_id"), col("id")).as("keep_id"))
+  }
+
+  /** The shuffle regime's labels: (id, keep_id) for every edge-touched id. */
+  private def shuffleLabels(pairs: DataFrame, maxIter: Int): DataFrame = {
     // materialize the edge list ONCE: `pairs` is usually an expensive
     // pipeline (LSH near-dup detection), and every propagation round plus
     // every convergence check would otherwise re-run it from scratch
@@ -1249,21 +1311,23 @@ object Dedup {
     if (changed > 0)
       throw new IllegalStateException(
         s"resolveGroups did not converge in $maxIter rounds ($changed labels still changing)")
-    docs
-      .select(col(idCol).cast("long").as("id"))
-      .join(labels, Seq("id"), "left")
-      .select(col("id").as(idCol), coalesce(col("keep_id"), col("id")).as("keep_id"))
+    labels
   }
 
   /** Quality-aware dedup resolution: collapse near-dup pairs into groups
     * (resolveGroups) and keep the BEST document of each group by
-    * `qualityCol` (ties -> smallest id) instead of the arbitrary min-id
-    * survivor — what a training-data pipeline actually wants ("of these
-    * near-identical pages, keep the longest/highest-quality one").
+    * `qualityCol` (quality DESC NULLS LAST under Catalyst's ordering for
+    * the column's type, ties -> smallest id) instead of the arbitrary
+    * min-id survivor — what a training-data pipeline actually wants ("of
+    * these near-identical pages, keep the longest/highest-quality one").
     *
-    * Output: one row per doc — (id, group_id, best_id, kept). The argmax
-    * is a per-group WindowGroupLimit (rank-1 rows truncate inside each
-    * partition); both joins are keyed by doc/group id. No global state.
+    * Output: one row per doc with a non-null id — (id, group_id,
+    * best_id, kept); an untouched doc is (id, id, id, true). The regime
+    * is resolveGroups': narrow takes the argmax over the touched docs
+    * only (a per-component candidate per task, merged on the driver) and
+    * attaches it with one broadcast left join over `docs`; shuffle takes
+    * it with a per-group WindowGroupLimit (rank-1 rows truncate inside
+    * each partition) over the labeled docs, joined back by group id.
     */
   def keepBest(
       docs: DataFrame,
@@ -1271,17 +1335,42 @@ object Dedup {
       pairs: DataFrame,
       qualityCol: String
   ): DataFrame = {
-    val groups = resolveGroups(docs, idCol, pairs)
-      .select(col(idCol), col("keep_id").as("group_id"))
-    val j = groups.join(docs.select(col(idCol), col(qualityCol)), Seq(idCol))
-    val w = Window.partitionBy("group_id").orderBy(col(qualityCol).desc, col(idCol).asc)
-    val best = j
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") === 1)
-      .select(col("group_id"), col(idCol).as("best_id"))
-    j.join(best, Seq("group_id"))
-      .select(col(idCol), col("group_id"), col("best_id"),
-        (col(idCol) === col("best_id")).as("kept"))
+    requireIntegralIds(docs, idCol, pairs)
+    val (list, narrow) = pairList(pairs)
+    keepBestIn(docs, idCol, list, qualityCol, narrow)
+  }
+
+  /** keepBest in the regime the caller names (see resolveGroupsIn). */
+  private[graft] def keepBestIn(
+      docs: DataFrame,
+      idCol: String,
+      pairs: DataFrame,
+      qualityCol: String,
+      narrow: Boolean
+  ): DataFrame = {
+    val keyed = docs.select(col(idCol).cast("long").as(idCol), col(qualityCol))
+      .filter(col(idCol).isNotNull)
+    val groups =
+      if (narrow) {
+        val best = DupComponents.collect(pairs).best(docs, idCol, qualityCol)
+          .withColumnRenamed("id", idCol)
+        keyed.join(broadcast(best), Seq(idCol), "left")
+          .select(col(idCol), coalesce(col("group_id"), col(idCol)).as("group_id"),
+            coalesce(col("best_id"), col(idCol)).as("best_id"))
+      } else {
+        val labels = shuffleLabels(pairs, DefaultMaxIter).withColumnRenamed("id", idCol)
+        val labeled = keyed.join(labels, Seq(idCol), "left")
+          .select(col(idCol), coalesce(col("keep_id"), col(idCol)).as("group_id"),
+            col(qualityCol))
+        val w = Window.partitionBy("group_id").orderBy(col(qualityCol).desc, col(idCol).asc)
+        val best = labeled
+          .withColumn("rk", row_number().over(w))
+          .filter(col("rk") === 1)
+          .select(col("group_id"), col(idCol).as("best_id"))
+        labeled.join(best, Seq("group_id")).select(idCol, "group_id", "best_id")
+      }
+    groups.select(col(idCol), col("group_id"), col("best_id"),
+      (col(idCol) === col("best_id")).as("kept"))
   }
 
   /** SimHash near-dup candidate pairs via multi-index hamming banding:

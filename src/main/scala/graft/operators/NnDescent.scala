@@ -50,7 +50,7 @@ import org.apache.spark.sql.graft.{CheckpointStats, Md5Long60, NarrowRounds}
   * upsertGraph, the q196 audit and ScaleProbe's nnd-rounds curve —
   * walks it through ONE round driver (descend), which cuts each round
   * from lineage with freshCheckpoint (stats-reset localCheckpoint — see
-  * CheckpointStats) exactly like the q52 pointer-jumping loop; on a
+  * CheckpointStats) exactly like resolveGroups' shuffle loop; on a
   * cluster this would be a reliable-storage checkpoint.
   *
   * Determinism: the init graph is k deterministic md5-arithmetic draws
@@ -700,7 +700,11 @@ object NnDescent {
     val nVecs = vecs.count()
     val nIters = if (iters >= 1) iters else autoIters(nVecs)
     val params = buildParams(vecs, nVecs, k, cap)
-    val g0 = CheckpointStats.freshCheckpoint(initGraph(vectors, idCol, params.k))
+    // initGraph's draw over the checkpointed ids, with the count held as
+    // a literal: vecFrame is a pure projection, so nVecs is count(vectors)
+    // row for row (null and duplicate ids included)
+    val g0 = CheckpointStats.freshCheckpoint(drawEdges(vecs.select(col("vec_id").as("src")),
+      params.k, "nnd0", lit(nVecs), lit(1L)))
     descend(g0, vecs, params, 0 until nIters).select("src", "dst", "cos_sim", "rank")
   }
 

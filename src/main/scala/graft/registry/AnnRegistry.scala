@@ -487,8 +487,8 @@ trait AnnRegistry extends RegistryBase {
     // pillar similarity: MUTUAL-kNN CLUSTERS — graph clustering over
     // q186's graph: connected components of the MUTUAL edge subset (the
     // high-precision backbone — a one-directional edge only says "b is
-    // among a's closest", a mutual edge says they agree), resolved by the
-    // q52 min-label propagation with pointer jumping. The scalable
+    // among a's closest", a mutual edge says they agree), resolved by
+    // q52's resolveGroups. The scalable
     // SemDeDup alternative: no trained centroids, cluster structure
     // emerges from band-bounded local neighborhoods.
     "q192_mutual_knn_groups" -> ((s, dir) => {

@@ -197,8 +197,8 @@ trait DedupRegistry extends RegistryBase {
     // over the q116 winnowing pair graph (the MOSS cluster step: pairs
     // only say A~B; triage wants "these five documents all share the
     // same passage"). Composes the two proven operators verbatim: the
-    // df-capped fingerprint equi-join builds the edges, resolveGroups'
-    // edge-restricted pointer-jumping resolves them (q52's bounds).
+    // df-capped fingerprint equi-join builds the edges, resolveGroups
+    // resolves them (q52's regimes and bounds).
     "q146_winnowing_groups" -> ((s, dir) => {
       val docs = spread(s, rd(s, dir, "documents"))
       val fps = docs.select(col("doc_id"),

@@ -84,7 +84,7 @@ trait MultimodalRegistry extends RegistryBase {
 
     // pillar multimodal x dedup: IMAGE NEAR-DUP GROUPS — q164's pair set
     // collapsed to connected components (min-id per component via
-    // Dedup.resolveGroups pointer-jumping, the q52/q122 machinery):
+    // Dedup.resolveGroups, the q52/q122 machinery):
     // transitive chains a~b~c where only adjacent pairs clear the
     // hamming threshold land in ONE keep-group, the form a dedup sweep
     // actually consumes.

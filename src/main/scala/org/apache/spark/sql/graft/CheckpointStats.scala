@@ -60,4 +60,12 @@ object CheckpointStats {
         sp.internalCreateDataFrame(cp.queryExecution.toRdd, cp.schema)
     }
   }
+
+  /** Row count as one job over the frame's internal rows. Dataset.count
+    * aggregates, which under AQE is a map-stage job plus a result job;
+    * on a lazy freshCheckpoint this single job is also the one that
+    * materializes it.
+    */
+  def rowCount(df: DataFrame): Long =
+    df.asInstanceOf[Dataset[Row]].queryExecution.toRdd.count()
 }

@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import graft.operators.Dedup
 
 /** Dedup operator semantics: exact groups, LSH candidate generation
@@ -448,14 +450,23 @@ class DedupSpec extends SparkSpec {
       s"banded plan must not contain a cross join:\n$plan")
   }
 
+  /** Both regimes of resolveGroups/keepBest: narrow (driver union-find)
+    * and shuffle (the pointer-jumping loop the public entry points take
+    * past Dedup.NarrowMaxPairRows).
+    */
+  private val regimes = Seq("narrow" -> true, "shuffle" -> false)
+
   test("resolveGroups: chains collapse to min id, singletons keep themselves") {
     import spark.implicits._
     val verts = (0L to 6L).map(i => Tuple1(i)).toDF("doc_id")
     // two components: {0,1,2,3} via a chain (0-1, 1-2, 2-3), {5,6}; 4 isolated
     val pairs = Seq((0L, 1L), (1L, 2L), (2L, 3L), (5L, 6L)).toDF("id_a", "id_b")
-    val groups = Dedup.resolveGroups(verts, "doc_id", pairs)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(groups == Map(0L -> 0L, 1L -> 0L, 2L -> 0L, 3L -> 0L, 4L -> 4L, 5L -> 5L, 6L -> 5L))
+    for ((regime, narrow) <- regimes) {
+      val groups = Dedup.resolveGroupsIn(verts, "doc_id", pairs, narrow, maxIter = 64)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(groups == Map(0L -> 0L, 1L -> 0L, 2L -> 0L, 3L -> 0L, 4L -> 4L, 5L -> 5L, 6L -> 5L),
+        regime)
+    }
   }
 
   test("resolveGroups: label flows against edge direction too (cycle + reversed edge)") {
@@ -463,21 +474,26 @@ class DedupSpec extends SparkSpec {
     val verts = (0L to 3L).map(i => Tuple1(i)).toDF("doc_id")
     // edges given with the LARGER id first; component {0,1,2,3} as a cycle
     val pairs = Seq((3L, 2L), (2L, 1L), (1L, 0L), (0L, 3L)).toDF("id_a", "id_b")
-    val groups = Dedup.resolveGroups(verts, "doc_id", pairs)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(groups.values.toSet == Set(0L))
+    for ((regime, narrow) <- regimes) {
+      val groups = Dedup.resolveGroupsIn(verts, "doc_id", pairs, narrow, maxIter = 64)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(groups.values.toSet == Set(0L), regime)
+    }
   }
 
   test("resolveGroups: pointer jumping converges a 60-vertex chain within the round budget") {
     import spark.implicits._
     // a pure chain 0-1-2-...-59 has diameter 59 — plain propagation needs
-    // ~59 rounds; pointer jumping must finish well inside maxIter=10
+    // ~59 rounds; pointer jumping must finish well inside maxIter=10 (the
+    // narrow regime's union-find has no round budget)
     val n = 60
     val verts = (0L until n).map(Tuple1(_)).toDF("doc_id")
     val pairs = (0L until n - 1).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val groups = Dedup.resolveGroups(verts, "doc_id", pairs, maxIter = 10)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(groups.size == n.toInt && groups.values.forall(_ == 0L))
+    for ((regime, narrow) <- regimes) {
+      val groups = Dedup.resolveGroupsIn(verts, "doc_id", pairs, narrow, maxIter = 10)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(groups.size == n.toInt && groups.values.forall(_ == 0L), regime)
+    }
   }
 
   test("keepBest: highest-quality group member survives, ties break to smallest id") {
@@ -486,14 +502,124 @@ class DedupSpec extends SparkSpec {
     // 1 and 3 tie below — group/best assignment must be deterministic
     val docs = Seq((1L, 10L), (2L, 50L), (3L, 10L), (4L, 7L)).toDF("doc_id", "quality")
     val pairs = Seq((1L, 2L), (2L, 3L)).toDF("id_a", "id_b")
-    val out = Dedup.keepBest(docs, "doc_id", pairs, "quality")
-      .orderBy("doc_id")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3)))
-    assert(out.toSeq == Seq(
-      (1L, 1L, 2L, false),
-      (2L, 1L, 2L, true),
-      (3L, 1L, 2L, false),
-      (4L, 4L, 4L, true)))
+    for ((regime, narrow) <- regimes) {
+      val out = Dedup.keepBestIn(docs, "doc_id", pairs, "quality", narrow)
+        .orderBy("doc_id")
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3)))
+      assert(out.toSeq == Seq(
+        (1L, 1L, 2L, false),
+        (2L, 1L, 2L, true),
+        (3L, 1L, 2L, false),
+        (4L, 4L, 4L, true)), regime)
+    }
+  }
+
+  /** A generated dedup case for the regime differential tests: docs
+    * (doc_id, quality) and pairs (id_a, id_b), ids of `idType`.
+    *
+    * The pair graph over ids 0..59 has random chains and cycles with
+    * randomly oriented edges, self-loops, duplicated and reversed pairs,
+    * and pairs with a null end. Ids 50..59 and a few holes below 50 are
+    * not docs, so they link components without being output; docs also
+    * carry a duplicated id and a null id. Planted components fix the
+    * argmax's edge cases: a quality tie ({100, 101, 102}, one null), NaN
+    * over a number ({110, 111}), 0.0 against -0.0 ({120, 121}; equal
+    * under Catalyst's ordering) and all-null quality ({130, 131}).
+    * `quality(rnd, slot)` draws a random quality, or the planted slot's
+    * value: 0 tie, 1 null, 2 largest, 3 smaller, 4 zero, 5 negative zero.
+    */
+  private def dupCase(seed: Int, idType: DataType, qType: DataType,
+      quality: (scala.util.Random, Int) => Any): (DataFrame, DataFrame) = {
+    val rnd = new scala.util.Random(seed)
+    def id(v: Long): Any = if (idType == IntegerType) v.toInt else v
+    val edges = scala.collection.mutable.ArrayBuffer.empty[(Any, Any)]
+    def link(a: Long, b: Long): Unit =
+      edges += (if (rnd.nextBoolean()) (id(a), id(b)) else (id(b), id(a)))
+    var rest = rnd.shuffle((0L until 60L).toList)
+    while (rest.nonEmpty) {
+      val (comp, tail) = rest.splitAt(1 + rnd.nextInt(9))
+      rest = tail
+      comp.zip(comp.drop(1)).foreach { case (a, b) => link(a, b) }
+      if (comp.size > 2 && rnd.nextBoolean()) link(comp.last, comp.head)
+    }
+    Seq.fill(4)(rnd.nextInt(60).toLong).foreach(x => edges += ((id(x), id(x))))
+    Seq.fill(6)(edges(rnd.nextInt(edges.size))).foreach { case (a, b) =>
+      edges += (if (rnd.nextBoolean()) (a, b) else (b, a))
+    }
+    edges ++= Seq((null, id(3L)), (id(4L), null), (null, null))
+    Seq((100L, 101L), (101L, 102L), (110L, 111L), (120L, 121L), (130L, 131L))
+      .foreach { case (a, b) => link(a, b) }
+    val holes = Set.fill(3)(rnd.nextInt(50).toLong)
+    val planted = Seq(100L -> 0, 101L -> 0, 102L -> 1, 110L -> 2, 111L -> 3,
+      120L -> 5, 121L -> 4, 130L -> 1, 131L -> 1)
+    val docRows = (0L until 50L).filterNot(holes).map(i => Row(id(i), quality(rnd, -1))) ++
+      planted.map { case (i, slot) => Row(id(i), quality(rnd, slot)) } ++
+      Seq(Row(id(7L), quality(rnd, -1)), Row(null, quality(rnd, -1)))
+    val docs = spark.createDataFrame(
+      java.util.Arrays.asList(rnd.shuffle(docRows): _*),
+      StructType(Seq(StructField("doc_id", idType), StructField("quality", qType))))
+    val pairs = spark.createDataFrame(
+      java.util.Arrays.asList(rnd.shuffle(edges.toSeq).map { case (a, b) => Row(a, b) }: _*),
+      StructType(Seq(StructField("id_a", idType), StructField("id_b", idType))))
+    (docs, pairs)
+  }
+
+  /** Double quality: ties, nulls and NaNs among random draws. */
+  private def doubleQuality(rnd: scala.util.Random, slot: Int): Any = slot match {
+    case -1 => Seq[Any](1.0, 2.0, 2.0, null, Double.NaN, 0.0, -0.0)(rnd.nextInt(7))
+    case 0 => 5.0
+    case 1 => null
+    case 2 => Double.NaN
+    case 3 => 7.0
+    case 4 => 0.0
+    case 5 => -0.0
+  }
+
+  /** Int quality: ties and nulls among random draws. */
+  private def intQuality(rnd: scala.util.Random, slot: Int): Any = slot match {
+    case -1 => Seq[Any](1, 2, 2, null, 3)(rnd.nextInt(5))
+    case 0 => 5
+    case 1 => null
+    case 2 => 9
+    case 3 => 7
+    case _ => 0
+  }
+
+  private def sortedRows(df: DataFrame): Seq[String] =
+    df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
+
+  test("differential: resolveGroups narrow == shuffle regime on generated pair graphs") {
+    for ((seed, idType) <- Seq(1 -> LongType, 2 -> IntegerType, 3 -> LongType)) {
+      val (docs, pairs) = dupCase(seed, idType, DoubleType, doubleQuality)
+      val shuffle = Dedup.resolveGroupsIn(docs, "doc_id", pairs, narrow = false, maxIter = 64)
+      val expected = sortedRows(shuffle)
+      // the planted chain 100-101-102 resolves to 100; ids 50..59 are no docs
+      assert(expected.contains("102|100") && !expected.exists(_.startsWith("55|")))
+      for (narrow <- Seq(Dedup.resolveGroupsIn(docs, "doc_id", pairs, narrow = true, 64),
+          Dedup.resolveGroups(docs, "doc_id", pairs))) {
+        assert(narrow.schema == shuffle.schema, s"seed $seed")
+        assert(sortedRows(narrow) == expected, s"seed $seed")
+      }
+    }
+  }
+
+  test("differential: keepBest narrow == shuffle regime on generated pair graphs and qualities") {
+    for ((seed, idType, qType, quality) <- Seq(
+        (1, LongType, DoubleType, doubleQuality _),
+        (2, IntegerType, DoubleType, doubleQuality _),
+        (3, LongType, IntegerType, intQuality _))) {
+      val (docs, pairs) = dupCase(seed, idType, qType, quality)
+      val shuffle = Dedup.keepBestIn(docs, "doc_id", pairs, "quality", narrow = false)
+      val expected = sortedRows(shuffle)
+      // planted argmax edge cases: tie -> 100, null last, all-null -> 130
+      assert(Seq("100|100|100|true", "102|100|100|false", "131|130|130|false")
+        .forall(expected.contains), s"seed $seed")
+      for (narrow <- Seq(Dedup.keepBestIn(docs, "doc_id", pairs, "quality", narrow = true),
+          Dedup.keepBest(docs, "doc_id", pairs, "quality"))) {
+        assert(narrow.schema == shuffle.schema, s"seed $seed")
+        assert(sortedRows(narrow) == expected, s"seed $seed")
+      }
+    }
   }
 
   test("simhashCandidates: pigeonhole holds across the full hamming<=2 ball (property)") {
