@@ -169,13 +169,17 @@ class PlanAuditSpec extends SparkSpec {
     assert(p.contains("WindowGroupLimit"), p)
   }
 
-  test("q91 keep-best: narrow argmax is one broadcast join; the shuffle regime's uses WindowGroupLimit pushdown") {
+  test("q91 keep-best: narrow argmax is one broadcast join (no window)") {
     // q91's pair list is under Dedup.NarrowMaxPairRows: the argmax ran on
     // the driver and reaches the plan as one broadcast local relation
     val p = plan("q91_dedup_keep_best")
     assert(p.contains("BroadcastHashJoin") && p.contains("LocalTableScan"), p)
     assert(!p.contains("Window"), s"narrow keep-best planned a window:\n$p")
-    // past the bound, the same inputs take the per-group WindowGroupLimit
+  }
+
+  test("q91 keep-best: per-group argmax uses WindowGroupLimit pushdown") {
+    // past Dedup.NarrowMaxPairRows the argmax is per group on the
+    // executors; pinned on q91's inputs with the shuffle regime forced
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     val pairs = graft.operators.Dedup.nearDuplicates(docs, "doc_id", "text",
       shingleN = 4, numHashes = 8, rowsPerBand = 4, threshold = 0.4)
