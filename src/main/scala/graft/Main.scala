@@ -9,13 +9,12 @@ import graft.operators.HeurFuzz
   *
   * `-b/--bufferSize` is accepted and ignored: the reference needs it for its
   * fixed-width uint8 string matrix; Spark strings are variable-width
-  * (documented divergence, SURVEY §2 op 1). `--inverted-index` (extension)
-  * switches the pair stage to the scale-path equi-join (SURVEY §4.3).
+  * (documented divergence, SURVEY §2 op 1).
   */
 object Main {
 
   private val usage =
-    "usage: graft.Main -q QUERY -r REFERENCE -o OUTPUTFILE [-n TOPN] [-s SCORECUTOFF] [-b BUFFERSIZE] [--inverted-index]"
+    "usage: graft.Main -q QUERY -r REFERENCE -o OUTPUTFILE [-n TOPN] [-s SCORECUTOFF] [-b BUFFERSIZE]"
 
   def main(args: Array[String]): Unit = {
     var query: Option[String] = None
@@ -45,7 +44,6 @@ object Main {
         case f @ ("-n" | "--topN")        => params = params.copy(topK = intValue(f)); i += 2
         case f @ ("-s" | "--scoreCutOff") => params = params.copy(scoreCutoff = intValue(f)); i += 2
         case f @ ("-b" | "--bufferSize")  => intValue(f); i += 2
-        case "--inverted-index"           => params = params.copy(useInvertedIndex = true); i += 1
         case "-h" | "--help"              => println(usage); return
         case other =>
           System.err.println(s"unknown argument: $other\n$usage"); sys.exit(2)

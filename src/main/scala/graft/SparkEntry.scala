@@ -12,7 +12,7 @@ import graft.operators.{Dedup, HeurFuzz, Multimodal, Quota, Similarity, Sketches
   * pillar (dedup / similarity / text analysis / multimodal / events)
   * expressed over the driver's parquet testdata; `oracleSql` holds the
   * DuckDB-equivalent SQL for every query — including the partial_ratio
-  * scorer pipeline (q09/q10/q11/q50/q51), whose oracle re-derives the
+  * scorer pipeline (q09/q10/q11/q50), whose oracle re-derives the
   * bit-parallel LCS scorer in SQL lambdas (see scorerCtes).
   *
   * Oracle-parity conventions used throughout:

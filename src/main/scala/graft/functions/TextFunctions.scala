@@ -8,10 +8,10 @@ import org.apache.spark.sql.functions._
   * interpreted (`CodegenFallback`) inside the surrounding generated code,
   * so a per-pair hot loop gets a codegen'd kernel from
   * `org.apache.spark.sql.graft` instead: the HeurFuzz pair stage scores
-  * `byteBigramCodes` with `sortedCoverage` (pairsCross) or equi-joins the
-  * same int codes (pairsInverted). The `byteBigrams`/`bigramCoverage` HOF
-  * pair stays for small pair sets over char shingles (the registry's
-  * `partPairs`, ~6k pairs) and for the byte-bigram statistics of q03.
+  * `byteBigramCodes` with `sortedCoverage`. The `byteBigrams` /
+  * `bigramCoverage` HOF pair stays for small pair sets over char shingles
+  * (the registry's `partPairs`, ~6k pairs) and for the byte-bigram
+  * statistics of q03.
   *
   * Semantics mirror the reference kernels:
   *   - byte bigrams with multiplicity (/root/reference/src/heurFuzz.py:23-32)
@@ -124,14 +124,6 @@ object TextFunctions {
     val (a, b) = MinhashParams(seed)
     minhash(shingles, a, b)
   }
-
-  /** Full MinHash signature as array<long> of length `numHashes`
-    * (<= MinhashParams.length). Base hashes are materialized once per
-    * shingle and reused by every permutation — numHashes adds only cheap
-    * integer ops, not md5 calls.
-    */
-  def minhashSignature(shingles: Column, numHashes: Int): Column =
-    minhashSignatureFromBases(transform(array_distinct(shingles), g => shingleBaseHash(g)), numHashes)
 
   /** Signature from pre-computed base hashes (array<long>, already mod p) —
     * lets callers hash each shingle exactly once and reuse the longs for

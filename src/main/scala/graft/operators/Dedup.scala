@@ -86,56 +86,6 @@ object Dedup {
           .otherwise(col("n_dup").cast("double") / col("n_shingles")))
   }
 
-  /** MinHash-LSH candidate pairs: signature of `numHashes` md5 minhashes,
-    * banded `rowsPerBand` hashes per band; pairs sharing any band bucket.
-    * Returns distinct (id_a, id_b) with id_a < id_b.
-    *
-    * The band join shuffles on the band key only — at 100 TB this is the
-    * standard signature-join plan (no cross join anywhere).
-    */
-  def lshCandidates(
-      docs: DataFrame,
-      idCol: String,
-      shCol: String,
-      numHashes: Int,
-      rowsPerBand: Int
-  ): DataFrame =
-    lshCandidatesFromSig(docs, idCol, TextFunctions.minhashSignature(col(shCol), numHashes),
-      numHashes, rowsPerBand)
-
-  /** As `lshCandidates` but with a caller-supplied signature expression
-    * (e.g. built from pre-hashed shingles via minhashSignatureFromBases).
-    */
-  def lshCandidatesFromSig(
-      docs: DataFrame,
-      idCol: String,
-      sig: org.apache.spark.sql.Column,
-      numHashes: Int,
-      rowsPerBand: Int
-  ): DataFrame = {
-    val numBands = numHashes / rowsPerBand
-    // band key = concat of the band's hashes; null signature (empty shingle
-    // set) rows drop out — they cannot be near-dups of anything.
-    val banded = docs
-      .select(col(idCol), sig.as("sig"))
-      .filter(col("sig").isNotNull)
-      .select(
-        col(idCol),
-        posexplode(
-          array((0 until numBands).map(b =>
-            concat_ws("|", (0 until rowsPerBand).map(r =>
-              col("sig")(b * rowsPerBand + r).cast("string")): _*)
-          ): _*)
-        ).as(Seq("band", "key"))
-      )
-    banded
-      .as("a")
-      .join(banded.as("b"), Seq("band", "key"))
-      .where(col(s"a.$idCol") < col(s"b.$idCol"))
-      .select(col(s"a.$idCol").as("id_a"), col(s"b.$idCol").as("id_b"))
-      .distinct()
-  }
-
   /** Near-duplicate pairs: LSH candidates verified with exact Jaccard over
     * the hashed shingle sets, kept at >= `threshold`.
     *
@@ -155,28 +105,9 @@ object Dedup {
       numHashes: Int = 8,
       rowsPerBand: Int = 4,
       threshold: Double = 0.4
-  ): DataFrame = {
-    val numBands = numHashes / rowsPerBand
-    val hashedSig = hashedSignatures(docs, idCol, textCol, shingleN, numHashes)
-    val banded = bandExplode(hashedSig, idCol, numBands, rowsPerBand)
-    // true self-join with the rename AFTER the join: both sides canonicalize
-    // to the identical plan, so ReuseExchange materializes the banded
-    // shuffle ONCE instead of recomputing shingles+hashes per side
-    val inter = org.apache.spark.sql.graft.LongArrayIntersectSize
-      .column(col("hs_a"), col("hs_b")).cast("double")
-    banded.alias("a")
-      .join(
-        banded.alias("b"),
-        col(s"a.band") === col(s"b.band") && col(s"a.key") === col(s"b.key") &&
-          col(s"a.$idCol") < col(s"b.$idCol"))
-      .select(
-        col(s"a.$idCol").as("id_a"), col("a.hs").as("hs_a"),
-        col(s"b.$idCol").as("id_b"), col("b.hs").as("hs_b"))
-      .withColumn("jacc", inter / (size(col("hs_a")) + size(col("hs_b")) - inter))
-      .filter(col("jacc") >= threshold)
-      .select("id_a", "id_b", "jacc")
-      .distinct()
-  }
+  ): DataFrame =
+    nearDupPairsOnBands(
+      signatureBands(docs, idCol, textCol, shingleN, numHashes, rowsPerBand), idCol, threshold)
 
   /** Per-doc (id, sorted distinct shingle hashes, minhash signature),
     * checkpointed — the shared first stage of every MinHash operator.
@@ -316,23 +247,26 @@ object Dedup {
     * (dHash/simhash), found via the pigeonhole band equi-join
     * (maxHamming+1 contiguous bands are a lossless index for the ball,
     * so recall is exact) + exact bit_count verify — no incoming x
-    * corpus all-pairs anywhere in the plan. At 100 TB the corpus side
+    * corpus all-pairs anywhere in the plan. Output per incoming row:
+    * (idCol, n_dup, kept).
+    *
+    * Build once, probe many: `corpusBands` is
+    * `hammingBands(corpus, idCol, shCol, bits, maxHamming + 1)`, built
+    * by the caller once and probed by every incoming batch. At 100 TB it
     * is the persisted bucketed band table ingest maintains (the q132
     * layout applies verbatim: one (band, key) bucketed table, incoming
-    * shuffles into it, corpus never moves). Output per incoming row:
-    * (idCol, n_dup, kept).
+    * shuffles into it, corpus never moves).
     */
-  def incrementalHammingScreen(
+  def incrementalHammingScreenOnBands(
       incoming: DataFrame,
-      corpus: DataFrame,
+      corpusBands: DataFrame,
       idCol: String,
       shCol: String,
       bits: Int,
       maxHamming: Int
   ): DataFrame = {
-    val nb = maxHamming + 1
-    val inc = hammingBands(incoming, idCol, shCol, bits, nb)
-    val corp = hammingBands(corpus, idCol, shCol, bits, nb)
+    val inc = hammingBands(incoming, idCol, shCol, bits, maxHamming + 1)
+    val corp = corpusBands
       .withColumnRenamed(idCol, "c_id").withColumnRenamed(shCol, "c_sh")
     val hits = inc.join(corp, Seq("band", "key"))
       // a pair can collide in several bands — count each neighbor once
@@ -363,6 +297,9 @@ object Dedup {
   ): DataFrame = {
     val inter = org.apache.spark.sql.graft.LongArrayIntersectSize
       .column(col("hs_a"), col("hs_b")).cast("double")
+    // true self-join with the rename AFTER the join: both sides canonicalize
+    // to the identical plan, so ReuseExchange materializes the banded
+    // shuffle ONCE instead of recomputing shingles+hashes per side
     bands.alias("a")
       .join(
         bands.alias("b"),
@@ -899,7 +836,7 @@ object Dedup {
     * / partial copy of something already in the corpus (>= t of its
     * shingles inside one existing doc)? Returns every incoming id with
     * its container count; kept = no container. The containment twin of
-    * incrementalHammingScreen / incrementalNearDupFilterOnBands, and the
+    * incrementalHammingScreenOnBands / incrementalNearDupFilterOnBands, and the
     * shape decontamination-on-arrival runs: corpus-side self-pairs are
     * NEVER generated (the quadratic bulk of a batch containmentPairs
     * run).
@@ -1304,7 +1241,8 @@ object Dedup {
       // materializing action, so each batch pays ONE driver-side action.
       val next = org.apache.spark.sql.graft.CheckpointStats.freshCheckpoint(
         last, eager = false)
-      changed = next.filter(col("keep_id") =!= col("old_keep")).count()
+      changed = org.apache.spark.sql.graft.CheckpointStats.rowCount(
+        next.filter(col("keep_id") =!= col("old_keep")))
       labels = next.select("id", "keep_id")
       iter += k
     }

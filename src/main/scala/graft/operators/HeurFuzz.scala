@@ -11,8 +11,7 @@ import graft.sources.Readers
   *
   *   read queries + refs (strip, stable row ids)
   *     -> project byte length + byte bigrams
-  *     -> pair generation (crossJoin(broadcast(queries)) by default, or an
-  *        inverted-index equi-join on bigram for the scale path, SURVEY §4.3)
+  *     -> pair generation: crossJoin(broadcast(queries)), every pair
   *     -> per-pair coverage + abs length difference
   *     -> per-query top-K window ordered desc(coverage, len_diff, ref_id)
   *        (/root/reference/src/heurFuzz.py:81-90; lexsort-derived total
@@ -31,10 +30,13 @@ import graft.sources.Readers
   *     partitionBy(q_id) shuffle, which carries only
   *     (q_id, ref_id, ref term, coverage, len_diff) — not the raw pair
   *     matrix the reference materializes densely in RAM.
-  *   - `useInvertedIndex = true` replaces the O(|r|x|q|) nested loop with
-  *     an equi-join on bigram values: pairs sharing zero bigrams never
-  *     materialize. A per-query fallback cross join covers queries that
-  *     get fewer than K indexed candidates, so results stay identical.
+  *   - Every pair is scored, by one codegen'd merge scan. A bigram
+  *     inverted-index equi-join (SURVEY §4.3) measured 3.1-4.2x slower
+  *     than the cross join at every size tried, up to 160k refs and 2,000
+  *     queries (SCALE.md, "Match pair stage: cross join vs inverted
+  *     index"), and was removed: byte bigrams are dense in text, so the
+  *     join emits a row per shared bigram where the cross path runs one
+  *     merge scan per pair.
   */
 object HeurFuzz {
 
@@ -45,8 +47,7 @@ object HeurFuzz {
     */
   case class Params(
       topK: Int = 10,
-      scoreCutoff: Int = 90,
-      useInvertedIndex: Boolean = false
+      scoreCutoff: Int = 90
   )
 
   /** Add byte length + byte bigrams to a (id, term) frame, prefixing
@@ -72,56 +73,6 @@ object HeurFuzz {
       .crossJoin(broadcast(queries))
       .withColumn("coverage", TextFunctions.sortedCoverage(col("q_bigrams"), col("r_bigrams")))
       .withColumn("len_diff", abs(col("q_len") - col("r_len")).cast("double"))
-
-  /** Scale-path pair stage (SURVEY §4.3): posexplode query bigrams
-    * (multiplicity preserved — the reference counts each query bigram
-    * occurrence separately, heurFuzz.py:37-43), array_distinct ref bigrams
-    * (membership-without-consumption — the `break` at heurFuzz.py:43), then
-    * an equi-join on the bigram code and a count per (q_id, r_id) — codes
-    * are a bijection of byte pairs, so keys and counts are those of the
-    * byte bigrams.
-    * Pairs sharing zero bigrams drop out of the join, so a fallback cross
-    * join over only the under-filled queries restores exact top-K parity.
-    */
-  def pairsInverted(queries: DataFrame, refs: DataFrame, topK: Int): DataFrame = {
-    val qx = queries.select(
-      col("q_id"), col("q_term"), col("q_len"),
-      size(col("q_bigrams")).as("q_nbigrams"),
-      explode_outer(col("q_bigrams")).as("bigram")
-    )
-    val rx = refs.select(
-      col("r_id"), col("r_term"), col("r_len"),
-      explode(array_distinct(col("r_bigrams"))).as("bigram")
-    )
-    val joined = rx
-      .join(broadcast(qx.filter(col("bigram").isNotNull)), Seq("bigram"))
-      .groupBy("q_id", "q_term", "q_len", "q_nbigrams", "r_id", "r_term", "r_len")
-      .agg(count(lit(1)).as("hits"))
-      .withColumn("coverage", col("hits").cast("double") / col("q_nbigrams"))
-      .withColumn("len_diff", abs(col("q_len") - col("r_len")).cast("double"))
-      .drop("hits", "q_nbigrams")
-
-    // Queries with < topK indexed candidates fall back to the exact cross
-    // join so the emitted candidate set matches pairsCross bit-for-bit.
-    // Derived from the FULL query set (left join to the candidate counts),
-    // not from `joined` alone: a query with ZERO index candidates (no
-    // bigrams at all, or no bigram shared with any ref — the reference
-    // still scores those, /root/reference/src/heurFuzz.py:113-125) forms
-    // no group in `joined` and would otherwise silently return NA.
-    val counts = joined.groupBy("q_id").agg(count(lit(1)).as("n"))
-    val starved = queries
-      .select(col("q_id"))
-      .join(counts, Seq("q_id"), "left")
-      .filter(coalesce(col("n"), lit(0L)) < topK)
-      .select("q_id")
-    val starvedQueries = queries.join(broadcast(starved), Seq("q_id"))
-    val fallback = pairsCross(starvedQueries, refs)
-      .select("q_id", "q_term", "q_len", "r_id", "r_term", "r_len", "coverage", "len_diff")
-    joined
-      .join(broadcast(starved.withColumn("starved", lit(true))), Seq("q_id"), "left_anti")
-      .select("q_id", "q_term", "q_len", "r_id", "r_term", "r_len", "coverage", "len_diff")
-      .unionByName(fallback)
-  }
 
   /** Per-query top-K: the reference's lexsort+tail+reverse net order is
     * desc(coverage, len_diff, ref_id) — including the counter-intuitive
@@ -164,10 +115,7 @@ object HeurFuzz {
   def matchTable(queries: DataFrame, refs: DataFrame, params: Params): DataFrame = {
     val q = prepare(queries, "q_")
     val r = prepare(refs, "r_")
-    val pairs =
-      if (params.useInvertedIndex) pairsInverted(q, r, params.topK)
-      else pairsCross(q, r)
-    val best = bestMatches(topKCandidates(pairs, params.topK), params.scoreCutoff)
+    val best = bestMatches(topKCandidates(pairsCross(q, r), params.topK), params.scoreCutoff)
     q.select(col("q_id"), col("q_term").as("query"))
       .join(best, Seq("q_id"), "left")
       .select(col("q_id"), col("query"), coalesce(col("match"), lit("NA")).as("match"))

@@ -237,6 +237,17 @@ object NnDescent {
     if (bcast) broadcast(side) else side
   }
 
+  /** cos_sim = dot(dv_a, dv_b) / (nrm_a · nrm_b) over the columns both
+    * scoring shapes attach. A zero divisor (an all-zero vector, say an
+    * empty document's embedding) scores null, which every top-k cut ranks
+    * last (DESC NULLS LAST), under ANSI too, where a plain `/` would
+    * raise DIVIDE_BY_ZERO and fail the whole build. (`nullif` on the
+    * divisor would do the same, but it plans a common-expression Project
+    * that carries both vectors above the expansion join.)
+    */
+  private def cosSim: Column =
+    try_divide(Similarity.dot(col("dv_a"), col("dv_b")), col("nrm_a") * col("nrm_b"))
+
   /** Score a FLAT (src, dst) pair set: attach both endpoint vectors and
     * emit (src, dst, cos_sim). With `bcastVecs` (upsert seeds in the
     * narrow regime) both joins are map-side; in the shuffle regime the
@@ -250,8 +261,7 @@ object NnDescent {
     pairs
       .join(vecSide(vecs, "src", "dv_a", "nrm_a", bcastVecs), Seq("src"))
       .join(vecSide(vecs, "dst", "dv_b", "nrm_b", bcastVecs), Seq("dst"))
-      .withColumn("cos_sim",
-        Similarity.dot(col("dv_a"), col("dv_b")) / (col("nrm_a") * col("nrm_b")))
+      .withColumn("cos_sim", cosSim)
       .select("src", "dst", "cos_sim")
 
   /** Per-src top-k cut of a scored (src, dst, cos_sim) bag — the shared
@@ -313,8 +323,7 @@ object NnDescent {
     sideA.alias("a").join(sideB.alias("b"),
         col("a.dst") === col("b.src") && col("b.dst") =!= col("a.src") && extraCond)
       .select(col("a.src").as("src"), col("b.dst").as("dst"),
-        (Similarity.dot(col("dv_a"), col("dv_b")) / (col("nrm_a") * col("nrm_b")))
-          .as("cos_sim"))
+        cosSim.as("cos_sim"))
   }
 
   /** One shuffle-regime NN-Descent round. `g` is the current edge set
@@ -553,7 +562,7 @@ object NnDescent {
     // rounds <= 0 derives the count from merged N (autoIters — the h10
     // probe showed the 4-round upsert's new nodes beating the 3-round
     // rebuild's at a quarter of the wall)
-    val nAll = vecs.count()
+    val nAll = CheckpointStats.rowCount(vecs)
     val nRounds = if (rounds >= 1) rounds else autoIters(nAll)
     // k == 0 / cap == 0 derive from MERGED N (knnGraph's convention) —
     // the derived width may exceed the base graph's build width by a
@@ -697,7 +706,7 @@ object NnDescent {
     // the regime is decided here from the materialized count (the frame
     // is already checkpointed; the count reads cached blocks): the
     // checkpoint resets stats, so Catalyst alone cannot size anything
-    val nVecs = vecs.count()
+    val nVecs = CheckpointStats.rowCount(vecs)
     val nIters = if (iters >= 1) iters else autoIters(nVecs)
     val params = buildParams(vecs, nVecs, k, cap)
     // initGraph's draw over the checkpointed ids, with the count held as

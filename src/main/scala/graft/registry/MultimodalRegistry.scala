@@ -114,8 +114,9 @@ trait MultimodalRegistry extends RegistryBase {
         .localCheckpoint(false) // feeds both sides of the band join
       val incoming = hashed.filter(col("doc_id") % IncrementalMod === IncrementalMod - 1)
       val corpus = hashed.filter(col("doc_id") % IncrementalMod =!= IncrementalMod - 1)
-      Dedup.incrementalHammingScreen(incoming, corpus, "doc_id", "dhash",
-          bits = 24, maxHamming = 3)
+      Dedup.incrementalHammingScreenOnBands(incoming,
+          Dedup.hammingBands(corpus, "doc_id", "dhash", bits = 24, numBands = 4),
+          "doc_id", "dhash", bits = 24, maxHamming = 3)
         .orderBy("doc_id")
     }),
 

@@ -334,7 +334,7 @@ trait RegistryBase {
     (withB, pairs)
   }
 
-  protected def matchDocs(s: SparkSession, dir: String, inverted: Boolean): DataFrame = {
+  protected def matchDocs(s: SparkSession, dir: String): DataFrame = {
     // query ids: natural key (min partkey per distinct lowered name) — no
     // single-partition global window; see `entry`
     val queries = rd(s, dir, "part")
@@ -347,7 +347,7 @@ trait RegistryBase {
     val refs = spread(s, rd(s, dir, "documents"))
       .select(col("doc_id").as("id"), substring(col("text"), 1, 40).as("term"))
     HeurFuzz.matchTable(queries, refs,
-        HeurFuzz.Params(topK = 10, scoreCutoff = 70, useInvertedIndex = inverted))
+        HeurFuzz.Params(topK = 10, scoreCutoff = 70))
       .orderBy("q_id")
   }
 

@@ -748,7 +748,9 @@ trait StreamingRegistry extends RegistryBase {
             spread(s, rd(s, dir, "documents"))
               .filter(col("doc_id") % IncrementalMod =!= IncrementalMod - 1), "text")
           .select(col("doc_id"), Multimodal.pseudoDHash(col("content")).as("dhash"))
-          .localCheckpoint(true) // hashed once BEFORE .start(), joined by every batch
+        // hashed and banded once BEFORE .start(), probed by every batch
+        val corpusBands = Dedup.hammingBands(corpus, "doc_id", "dhash", bits = 24, numBands = 4)
+          .localCheckpoint(true)
         val schema = rd(s, dir, "documents").schema
         val incomingStream = s.readStream.schema(schema).parquet(inDir.toString)
           .filter(col("doc_id") % IncrementalMod === IncrementalMod - 1)
@@ -756,7 +758,7 @@ trait StreamingRegistry extends RegistryBase {
           (batch, batchId) =>
             val inc = Multimodal.withContent(spreadBatch(s, batch), "text")
               .select(col("doc_id"), Multimodal.pseudoDHash(col("content")).as("dhash"))
-            Dedup.incrementalHammingScreen(inc, corpus, "doc_id", "dhash",
+            Dedup.incrementalHammingScreenOnBands(inc, corpusBands, "doc_id", "dhash",
                 bits = 24, maxHamming = 3)
               .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
         }.start()

@@ -5,7 +5,6 @@ import scala.collection.mutable.ArrayBuilder
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
-import org.apache.spark.sql.errors.QueryExecutionErrors
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -19,7 +18,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * once on the driver, and broadcasts both as CSR arrays over dense
   * vector indices. A task then walks its src ids: it expands x → p → y
   * (Dong et al.'s local join), scores each distinct candidate with the
-  * DoubleArrayDot accumulation and Catalyst's Divide semantics, and keeps
+  * DoubleArrayDot accumulation and NnDescent.cosSim's null rules, and keeps
   * the k best by (cos_sim DESC NULLS LAST under Spark's double ordering,
   * dst ASC) with their `rank` and `is_new`.
   *
@@ -41,7 +40,6 @@ final class NarrowRounds(vecs: DataFrame, k: Int, cap: Int) {
   private val spark = vecs.sparkSession
   private val sc = spark.sparkContext
   private val capN = if (cap > 0) cap else 2 * k
-  private val ansi = spark.conf.get("spark.sql.ansi.enabled").toBoolean
 
   private lazy val vectors: NarrowVectors = {
     val rows = vecs.select("vec_id", "dv", "nrm").queryExecution.toRdd
@@ -152,11 +150,11 @@ final class NarrowRounds(vecs: DataFrame, k: Int, cap: Int) {
 
   private def pass(graphB: Broadcast[NarrowGraph], candidates: Boolean): DataFrame = {
     // locals only: the task closure must not capture this driver-side object
-    val (vb, kk, ansiOn) = (vectorsB, k, ansi)
+    val (vb, kk) = (vectorsB, k)
     val n = vectors.ids.length
     val rows = sc.parallelize(0 until n, math.max(1, math.min(n, sc.defaultParallelism)))
       .mapPartitions { srcs =>
-        val x = new LocalJoin(vb.value, graphB.value, kk, ansiOn)
+        val x = new LocalJoin(vb.value, graphB.value, kk)
         srcs.flatMap(s => if (candidates) x.candidateRows(s) else x.rankedRows(s))
       }
     spark.createDataFrame(rows, if (candidates) NarrowRounds.CandidateSchema
@@ -188,7 +186,7 @@ final class NarrowGraph(val t: Int, val outStart: Array[Int], val outDst: Array[
 /** One task's local join: per src, expand, score, keep the top k. Scratch
   * arrays are reused across the task's srcs; `stamp` = src + 1 marks them.
   */
-private final class LocalJoin(v: NarrowVectors, g: NarrowGraph, k: Int, ansi: Boolean) {
+private final class LocalJoin(v: NarrowVectors, g: NarrowGraph, k: Int) {
   private val n = v.ids.length
   private val seen = new Array[Int](n) // candidate already collected
   private val inG = new Array[Int](n) // dst is an out-edge of src in the current graph
@@ -241,9 +239,9 @@ private final class LocalJoin(v: NarrowVectors, g: NarrowGraph, k: Int, ansi: Bo
     }
   }
 
-  /** cos_sim = dot(dv_a, dv_b) / (nrm_a · nrm_b), as the Catalyst
-    * expression evaluates it: null for a null side, a ragged pair or
-    * (without ANSI) a zero divisor; ANSI raises DIVIDE_BY_ZERO.
+  /** cos_sim = dot(dv_a, dv_b) / (nrm_a · nrm_b), as NnDescent.cosSim
+    * evaluates it: null for a null side, a ragged pair or a zero divisor
+    * (an all-zero vector), with or without ANSI.
     */
   private def score(a: Int, b: Int): Unit = {
     val x = v.dv(a)
@@ -251,9 +249,7 @@ private final class LocalJoin(v: NarrowVectors, g: NarrowGraph, k: Int, ansi: Bo
     sNull = true
     if (x == null || y == null) return
     val d = v.nrm(a) * v.nrm(b)
-    if (d == 0.0 && !ansi) return
-    if (x.length != y.length) return
-    if (d == 0.0) throw QueryExecutionErrors.divideByZeroError(null)
+    if (d == 0.0 || x.length != y.length) return
     var acc = 0.0
     var i = 0
     while (i < x.length) { acc += x(i) * y(i); i += 1 }

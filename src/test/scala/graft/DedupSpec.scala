@@ -98,14 +98,6 @@ class DedupSpec extends SparkSpec {
     assert(est.find(t => t._1 == 0L && t._2 == 1L).get._3 == 1.0)
   }
 
-  test("lshCandidates: band collision requires identical minhash band") {
-    val withSh = docs.select(col("doc_id"), Dedup.shingleSet(col("text"), 4).as("sh"))
-    val cands = Dedup.lshCandidates(withSh, "doc_id", "sh", 8, 4)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(cands.contains((0L, 1L))) // identical docs collide in every band
-    assert(cands.forall { case (a, b) => a < b }) // canonical pair order
-  }
-
   test("simhash: identical texts get identical hashes; value fits the bit width") {
     val h = docs.select(col("doc_id"), Dedup.simhash(col("text"), 16).as("sh")).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -677,7 +669,8 @@ class DedupSpec extends SparkSpec {
     val df = rows.toDF("id", "sh")
     val incoming = df.filter(col("id") % 5 === 4)
     val corpus = df.filter(col("id") % 5 =!= 4)
-    val got = Dedup.incrementalHammingScreen(incoming, corpus, "id", "sh",
+    val got = Dedup.incrementalHammingScreenOnBands(incoming,
+        Dedup.hammingBands(corpus, "id", "sh", bits = 24, numBands = 4), "id", "sh",
         bits = 24, maxHamming = 3)
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getBoolean(2)))).toMap
     val corpusRows = rows.filter(_._1 % 5 != 4)

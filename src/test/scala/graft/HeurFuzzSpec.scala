@@ -6,7 +6,9 @@ import graft.sources.Readers
 
 /** Pipeline semantics: golden e2e (SURVEY §7.2 definition-of-done), the
   * load-bearing tie-break total orders (SURVEY §2 ops 7/10), and the
-  * inverted-index scale path's exact parity.
+  * edge queries (no shared bigram, no bigram at all, cutoff 0, none).
+  * HeurFuzzPropertySpec checks the same pipeline against a transcription
+  * of the reference on generated term sets.
   */
 class HeurFuzzSpec extends SparkSpec {
 
@@ -33,13 +35,6 @@ class HeurFuzzSpec extends SparkSpec {
 
   test("golden e2e: reproduces example/output.txt (crossJoin path)") {
     assert(matchRows(HeurFuzz.Params(topK = 5, scoreCutoff = 90)) == goldenRows)
-  }
-
-  test("golden e2e: inverted-index path is bit-identical") {
-    assert(
-      matchRows(HeurFuzz.Params(topK = 5, scoreCutoff = 90, useInvertedIndex = true))
-        == goldenRows
-    )
   }
 
   test("top-K candidate order: desc(coverage, len_diff, ref_id) — SURVEY §2.1") {
@@ -85,87 +80,40 @@ class HeurFuzzSpec extends SparkSpec {
     assert(rows(2) == ("vanilla", "vanilla"))
   }
 
-  test("inverted index: zero-overlap query hits the starved fallback and matches crossJoin") {
+  private def crossRows(queries: org.apache.spark.sql.DataFrame,
+      refs: org.apache.spark.sql.DataFrame, cutoff: Int) =
+    HeurFuzz.matchTable(queries, refs, HeurFuzz.Params(topK = 5, scoreCutoff = cutoff))
+      .orderBy("q_id").collect().map(r => (r.getString(1), r.getString(2))).toSeq
+
+  test("zero-overlap query: scored like any other, NA below the cutoff") {
     import spark.implicits._
-    // "qqqq" shares no bigram with any example ref -> it vanishes from the
-    // index join entirely and must come back through the fallback
+    // "qqqq" shares no bigram with any example ref: coverage 0 for every
+    // pair, yet it still takes K candidates into the verify
     val queries = Seq((0L, "qqqq"), (1L, "test")).toDF("id", "term")
-    val refs = Readers.lines(spark, exR)
-    def run(inv: Boolean) =
-      HeurFuzz.matchTable(queries, refs, HeurFuzz.Params(topK = 5, scoreCutoff = 90, useInvertedIndex = inv))
-        .orderBy("q_id").collect().map(r => (r.getString(1), r.getString(2))).toSeq
-    val cross = run(false)
-    val inverted = run(true)
-    assert(cross == inverted)
-    assert(cross == Seq(("qqqq", "NA"), ("test", "test2")))
+    assert(crossRows(queries, Readers.lines(spark, exR), 90) == Seq(("qqqq", "NA"), ("test", "test2")))
   }
 
-  test("inverted index: zero-bigram (1-char) query still matches (not silently NA)") {
+  test("zero-bigram (1-char) query: verified and matched, not silently NA") {
     import spark.implicits._
-    // "a" has ZERO bigrams -> invisible to the index join; but
-    // partial_ratio("a", "apple") = 100 at the default cutoff 90, so the
-    // reference (heurFuzz.py:113-125) maps it. Pre-fix the inverted path
-    // returned NA here because the query formed no group in the candidate
-    // counts and was never marked starved.
+    // "a" has ZERO bigrams, but partial_ratio("a", "apple") = 100 at the
+    // cutoff 90, so the reference (heurFuzz.py:113-125) maps it
     val queries = Seq((0L, "a"), (1L, "test")).toDF("id", "term")
     val refs = Seq((0L, "apple"), (1L, "test2")).toDF("id", "term")
-    def run(inv: Boolean) =
-      HeurFuzz.matchTable(queries, refs, HeurFuzz.Params(topK = 5, scoreCutoff = 90, useInvertedIndex = inv))
-        .orderBy("q_id").collect().map(r => (r.getString(1), r.getString(2))).toSeq
-    val cross = run(false)
-    val inverted = run(true)
-    assert(cross == inverted)
-    assert(cross == Seq(("a", "apple"), ("test", "test2")))
+    assert(crossRows(queries, refs, 90) == Seq(("a", "apple"), ("test", "test2")))
   }
 
-  test("inverted index: zero-overlap query at cutoff 0 falls back to a real match") {
+  test("zero-overlap query at cutoff 0: matched through the verify") {
     import spark.implicits._
-    // judge repro: "xy" shares no bigram with "yx", yet at cutoff 0 the
-    // cross path scores and matches it; the inverted path must agree.
+    // "xy" shares no bigram with "yx", yet at cutoff 0 it scores and maps
     val queries = Seq((0L, "xy")).toDF("id", "term")
     val refs = Seq((0L, "yx")).toDF("id", "term")
-    def run(inv: Boolean) =
-      HeurFuzz.matchTable(queries, refs, HeurFuzz.Params(topK = 5, scoreCutoff = 0, useInvertedIndex = inv))
-        .orderBy("q_id").collect().map(r => (r.getString(1), r.getString(2))).toSeq
-    val cross = run(false)
-    val inverted = run(true)
-    assert(cross == inverted)
-    assert(cross == Seq(("xy", "yx")))
+    assert(crossRows(queries, refs, 0) == Seq(("xy", "yx")))
   }
 
-  test("empty query set: both paths yield an empty result, no crash") {
+  test("empty query set: an empty result, no crash") {
     import spark.implicits._
     val queries = Seq.empty[(Long, String)].toDF("id", "term")
-    val refs = Readers.lines(spark, exR)
-    for (inv <- Seq(false, true)) {
-      val n = HeurFuzz.matchTable(queries, refs,
-        HeurFuzz.Params(topK = 5, scoreCutoff = 90, useInvertedIndex = inv)).count()
-      assert(n == 0, s"inverted=$inv")
-    }
-  }
-
-  test("inverted index: the int-code join agrees with the cross path pair for pair") {
-    import spark.implicits._
-    // multibyte tokens and repeated bigrams ("aa", "éé"), so both the
-    // codes of high bytes and the query-side multiplicity are exercised
-    val tokens = Seq("aa", "ab", "é", "éé", "中", "😀", "ba", "b")
-    val rng = new scala.util.Random(23)
-    def terms(n: Int) =
-      Seq.tabulate(n)(i => (i.toLong, Seq.fill(1 + rng.nextInt(6))(tokens(rng.nextInt(tokens.length))).mkString))
-    val q = HeurFuzz.prepare(terms(40).toDF("id", "term"), "q_")
-    val r = HeurFuzz.prepare(terms(60).toDF("id", "term"), "r_")
-    def scored(df: org.apache.spark.sql.DataFrame) =
-      df.select("q_id", "r_id", "coverage").collect()
-        .map(x => (x.getLong(0), x.getLong(1)) -> x.getDouble(2)).toSeq
-    val cross = scored(HeurFuzz.pairsCross(q, r)).toMap
-    // topK = 1: every query with an indexed candidate takes the join path
-    val inverted = scored(HeurFuzz.pairsInverted(q, r, 1))
-    assert(inverted.map(_._1).distinct.size == inverted.size, "duplicate (q_id, r_id)")
-    inverted.foreach { case (k, cov) => assert(cross.get(k).contains(cov), s"pair $k") }
-    val invKeys = inverted.map(_._1).toSet
-    val hits = cross.filter(_._2 > 0)
-    hits.keys.foreach(k => assert(invKeys.contains(k), s"cross pair $k missing"))
-    assert(hits.values.exists(c => c > 0 && c < 1))
+    assert(crossRows(queries, Readers.lines(spark, exR), 90).isEmpty)
   }
 
   test("cutoff gate: peanutbutter maps once the cutoff is dropped") {

@@ -492,24 +492,28 @@ class NnDescentSpec extends SparkSpec {
     }
   }
 
-  test("differential: a zero vector fails both regimes under ANSI and scores null in both without") {
-    // cos_sim divides by nrm_a · nrm_b: a zero divisor is DIVIDE_BY_ZERO
-    // under ANSI (the session default) and NULL without it, which the
-    // top-k order puts last (DESC NULLS LAST).
+  test("differential: a zero vector scores null and ranks last, ANSI on and off") {
+    // cos_sim divides by nrm_a · nrm_b: a zero divisor (the all-zero
+    // vector 7) scores NULL, which the top-k order puts last (DESC NULLS
+    // LAST), whether ANSI (the session default) is on or off
     val vectors = regimeVecs(5L, 27, zero = true)
-    def rootMessages(e: Throwable): String =
-      Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(String.valueOf(_)).mkString(" | ")
-    for (narrow <- Seq(true, false)) {
-      val e = intercept[Exception](knnWalk(vectors, 4, 3, 1, narrow))
-      assert(rootMessages(e).contains("DIVIDE_BY_ZERO"), s"narrow = $narrow: ${rootMessages(e)}")
-    }
     val key = "spark.sql.ansi.enabled"
     val old = spark.conf.get(key)
     try {
-      spark.conf.set(key, "false")
-      val Seq(narrow, shuffle) = Seq(true, false).map(knnWalk(vectors, 4, 3, 3, _))
-      assertSameWalks("zero vector without ANSI", narrow, shuffle)
-      assert(narrow.flatMap(_._3).exists(_._3.isEmpty), "no null score ranked")
+      for (ansi <- Seq("true", "false")) {
+        spark.conf.set(key, ansi)
+        val Seq(narrow, shuffle) = Seq(true, false).map(knnWalk(vectors, 4, 3, 3, _))
+        assertSameWalks(s"zero vector, ANSI $ansi", narrow, shuffle)
+        assert(narrow.flatMap(_._3).exists(r => r._3.isEmpty && (r._1 == 7L || r._2 == 7L)),
+          s"ANSI $ansi: no null score ranked")
+        for ((t, _, g) <- narrow; (src, rows) <- g.groupBy(_._1)) {
+          val nullRanks = rows.filter(_._3.isEmpty).map(_._4)
+          val scoredRanks = rows.filter(_._3.nonEmpty).map(_._4)
+          if (nullRanks.nonEmpty && scoredRanks.nonEmpty)
+            assert(nullRanks.min > scoredRanks.max,
+              s"ANSI $ansi round $t src $src: a null score ranked before a scored one")
+        }
+      }
     } finally spark.conf.set(key, old)
   }
 }

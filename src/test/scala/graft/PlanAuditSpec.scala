@@ -12,16 +12,11 @@ class PlanAuditSpec extends SparkSpec {
     *   - q05/q07/q09: SURVEY §2 ops 4-6 ARE pair generation (30 queries
     *     broadcast against a 200-row ref slice) — the operator under test.
     *   - q10/q11/q50: the reference-faithful brute-force match path
-    *     (pairsCross); q51 is its scale-path twin and must stay clean.
+    *     (pairsCross), the only pair stage the matcher has.
     *   - q34: the documented brute-force cosine top-k baseline the IVF
     *     path (q43) exists to beat.
     *   - q35/q43/q46: IVF coarse phase scores every vector against the
     *     (tiny, broadcast) centroid set by definition.
-    *   - q51: the MAIN path is the bigram equi-join, but the plan always
-    *     carries the exact-parity FALLBACK branch — a cross join limited
-    *     to queries with fewer than topK indexed candidates (HeurFuzz
-    *     .pairsInverted) — so a BroadcastNestedLoopJoin node is present
-    *     by design even though almost no rows flow through it.
     *   - q74: joins the token-df table against a broadcast ONE-ROW corpus
     *     total (the distributed alternative to a driver-side count) —
     *     a 1-row nested-loop broadcast, not an all-pairs plan.
@@ -94,7 +89,7 @@ class PlanAuditSpec extends SparkSpec {
     // q141/q143: q123's class — the 1-row sample-rate broadcast plus the
     // every-vector-vs-broadcast-centroid-set Lloyd/assign scoring
     "q141_doc_cluster_assign", "q143_cluster_balanced_sample",
-    "q46_dedup_embed_cosine", "q51_match_inverted_5k",
+    "q46_dedup_embed_cosine",
     "q60_embed_centroid_update", "q74_boilerplate_strip", "q97_revenue_share",
     "q58_tfidf_top_terms", "q105_scorer_long_needle",
     // q117: same corpus-scaled IVF coarse phase as q46 (every vector vs
