@@ -39,6 +39,13 @@ import org.apache.spark.sql.graft.CheckpointStats
   *                            it): the shipped entry point (narrow
   *                            regime) vs the forced shuffle loop,
   *                            interleaved N S N S in one JVM
+  *   screen-ab [docs...]      the exact containment screen on synthetic
+  *                            corpora of each doc count (default ~1/4 of
+  *                            Dedup.NarrowMaxPostingRows postings and
+  *                            just under it): build and per-batch probe
+  *                            times of the shipped entry point (narrow
+  *                            regime) vs the forced shuffle regime,
+  *                            interleaved N S N S in one JVM
   *
   * Prints one JSON line per subcommand (the Bench convention). Extends
   * RegistryBase so the probes run the SAME constants and helpers the
@@ -73,6 +80,8 @@ object ScaleProbe extends RegistryBase {
       case "groups-ab"      => groupsAb(spark,
         if (args.length > 1) args.drop(1).map(_.toLong).toSeq
         else Seq(Dedup.NarrowMaxPairRows / 4, Dedup.NarrowMaxPairRows - 10000))
+      case "screen-ab"      => screenAb(spark,
+        if (args.length > 1) args.drop(1).map(_.toLong).toSeq else Seq(1000L, 3600L))
       case other            => sys.error(s"unknown subcommand: $other")
     }
     spark.stop()
@@ -230,6 +239,62 @@ object ScaleProbe extends RegistryBase {
         rows.filter(_._1 == r).map(v => "%.1f".format(v._2)).mkString("[", ",", "]")
       println(s"""{"probe":"groups_ab","pairs":$m,"ids":$nIds,"chains":$chains,""" +
         s""""narrow_s":${arr("narrow")},"shuffle_s":${arr("shuffle")}}""")
+      reset(s)
+    }
+  }
+
+  /** Same-JVM interleaved A/B of the exact containment screen's two
+    * regimes (SCALE.md, containment screen). The corpus is `n` docs of 80
+    * words drawn with a squared-uniform skew from 20,000 seeded random
+    * lowercase words; the batch is 100 excerpts (a 150-char substring of
+    * a corpus doc) and 100 fresh docs, probed at graftbench's width 5 and
+    * t = 0.8. Each arm builds the index the way a streaming gate does
+    * (the shuffle regime eager), then probes the same cached batch three
+    * times; both arms must report the same container total, and the
+    * shipped arm must have picked the narrow regime.
+    */
+  private def screenAb(s: SparkSession, sizes: Seq[Long]): Unit = {
+    val rnd = new scala.util.Random(11)
+    val vocab = typedLit(Seq.fill(20000)(
+      Seq.fill(3 + rnd.nextInt(7))(('a' + rnd.nextInt(26)).toChar).mkString))
+    def words(n: Int, salt: String) = concat_ws(" ", transform(sequence(lit(0), lit(n - 1)), i => {
+      val u = pmod(xxhash64(lit(salt), col("id"), i), lit(1000000L)).cast("double") / 1e6
+      element_at(vocab, (u * u * 20000).cast("int") + 1)
+    }))
+    for (n <- sizes) {
+      val corpus = s.range(n).select(col("id").as("doc_id"), words(80, "c").as("text"))
+      val batch = s.range(200).select((col("id") + n).as("doc_id"),
+        when(col("id") < 100, substring(words(80, "c"), 20, 150))
+          .otherwise(words(30, "f")).as("text"))
+      def warm(): Unit = { corpus.cache().count(); batch.cache().count() }
+      warm()
+      var rows = Vector.empty[(String, Double, Seq[Double])]
+      var postings = 0L
+      var found = Set.empty[Long]
+      for (regime <- Seq("narrow", "shuffle", "narrow", "shuffle")) {
+        System.gc()
+        var index: Dedup.ContainmentScreenIndex = null
+        val build = timed {
+          index = if (regime == "narrow") Dedup.containmentScreenIndex(corpus, "doc_id", "text", 5, eager = true)
+            else Dedup.containmentScreenIndexIn(corpus, "doc_id", "text", 5, eager = true, narrow = false)
+        }
+        require((regime == "narrow") == index.narrow.isDefined, s"$regime arm built the other regime")
+        val probes = (0 until 3).map(_ => timed {
+          val total = Dedup.incrementalContainmentScreenOnIndex(batch, index, "doc_id", "text", 5, 0.8)
+            .agg(sum("n_containers")).head().getLong(0)
+          found += total
+        })
+        if (postings == 0L) postings = index.postings.count()
+        rows :+= ((regime, build, probes))
+        reset(s)
+        warm()
+      }
+      require(found.size == 1, s"the regimes disagree: container totals $found")
+      def arr(r: String, f: ((String, Double, Seq[Double])) => Seq[Double]) =
+        rows.filter(_._1 == r).flatMap(f).map("%.2f".format(_)).mkString("[", ",", "]")
+      println(s"""{"probe":"screen_ab","docs":$n,"postings":$postings,"containers":${found.head},""" +
+        s""""narrow_build_s":${arr("narrow", v => Seq(v._2))},"shuffle_build_s":${arr("shuffle", v => Seq(v._2))},""" +
+        s""""narrow_probe_s":${arr("narrow", _._3)},"shuffle_probe_s":${arr("shuffle", _._3)}}""")
       reset(s)
     }
   }

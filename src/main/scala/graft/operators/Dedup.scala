@@ -1,10 +1,11 @@
 package graft.operators
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
-import org.apache.spark.sql.graft.{CheckpointStats, DupComponents, Md5Long60}
+import org.apache.spark.sql.graft.{CheckpointStats, ContainmentCorpus, DupComponents, Md5Long60}
 
 /** Deduplication operators for large-scale text corpora (builder-brief
   * pillar; the reference's only dedup is the set()-based ETL helper,
@@ -464,6 +465,14 @@ object Dedup {
     )
   }
 
+  /** The exact prefix filters take |A| - ceil(t·|A|) + 1 shingles, a
+    * length in [1, |A|] only for t in (0, 1]; any other t is rejected
+    * here, before a job runs, rather than failing inside `slice`.
+    */
+  private def requirePrefixThreshold(threshold: Double): Unit =
+    require(threshold > 0 && threshold <= 1,
+      s"prefix filtering requires a threshold in (0, 1], got $threshold")
+
   /** N-gram Jaccard similarity pairs, EXACT (same result set as an
     * all-pairs compare for threshold > 0) but sub-quadratic: the classic
     * AllPairs prefix filter (Bayardo et al., WWW'07).
@@ -488,7 +497,7 @@ object Dedup {
       shingleN: Int,
       threshold: Double
   ): DataFrame = {
-    require(threshold > 0, "prefix filtering requires a positive threshold")
+    requirePrefixThreshold(threshold)
     // xxhash64 shingle hashes: every downstream shuffle/intersect runs
     // on longs instead of strings. Unlike the LSH path (whose CANDIDATE
     // set depends on the hash values, so the oracle must reproduce them
@@ -608,7 +617,7 @@ object Dedup {
       shingleN: Int,
       threshold: Double
   ): DataFrame = {
-    require(threshold > 0, "prefix filtering requires a positive threshold")
+    requirePrefixThreshold(threshold)
     val hashed = docs
       .select(
         col(idCol),
@@ -765,18 +774,34 @@ object Dedup {
           nullif(coalesce(col("n_candidates"), lit(0L)), lit(0L))).as("precision"))
   }
 
-  /** The three corpus-side frames every incremental-containment probe
-    * needs: the hashed corpus (id, hs, nsh) for verification, the
-    * shingle dictionary (h, df) for the rare-first order, and the
-    * rare-first posting frame (c_id, c_nsh, c_pos, h) the prefix probes
-    * join. At 100 TB these are the persisted term-index tables (the
-    * q132 persisted-signature story applied to the exact screen):
-    * ingest writes them once, every later screen — batch or
-    * per-micro-batch — reads them back instead of re-shingling the
-    * corpus.
+  /** The corpus side of the exact containment screen, in one of two
+    * regimes (see containmentScreenIndex). Both carry the three
+    * corpus-side frames of the shuffle regime's probe: the hashed corpus
+    * (id, hs, nsh, c_rk) for verification, the shingle dictionary
+    * (h, df) for the rare-first order, and the rare-first posting frame
+    * (c_rk, c_nsh, c_pos, h) the prefix probes join. `c_rk` is a per-doc
+    * key, so docs that share an id are separate containers, as in the
+    * narrow regime; a doc with a null id is never one. At 100 TB these are
+    * the persisted term-index tables (the q132 persisted-signature story
+    * applied to the exact screen): ingest writes them once, every later
+    * screen — batch or per-micro-batch — reads them back instead of
+    * re-shingling the corpus. In the narrow regime `narrow` holds the
+    * same corpus collected and broadcast as arrays, which the probe
+    * reads instead; the frames stay lazy there, derived from the hashed
+    * corpus's checkpoint, and no probe scans them.
     */
   final case class ContainmentScreenIndex(
-      hashed: DataFrame, freq: DataFrame, postings: DataFrame)
+      hashed: DataFrame, freq: DataFrame, postings: DataFrame,
+      narrow: Option[Broadcast[ContainmentCorpus]] = None)
+
+  /** Posting rows (the sum of the corpus docs' shingle counts) up to
+    * which containmentScreenIndex builds the narrow regime: 2M postings
+    * broadcast as at most 64 MB of arrays (16 bytes per posting plus 16
+    * per distinct shingle; ContainmentCorpus), the byte budget of
+    * NarrowMaxPairRows. ScaleProbe screen-ab times both regimes up to it
+    * (SCALE.md).
+    */
+  val NarrowMaxPostingRows: Long = 2000000L
 
   /** (id, sorted distinct xxhash64 shingle hashes, shingle count) of a
     * document frame — the shared hashing step of the exact screens.
@@ -803,14 +828,22 @@ object Dedup {
     .groupBy(col(idCol), col("nsh"))
     .agg(transform(sort_array(collect_list(struct(col("df"), col("h")))), x => x("h")).as("sg"))
 
-  /** Build the corpus-side screen index. `eager = false` (the batch
-    * q175 path) keeps the original in-plan shape — one lazy checkpoint
-    * on the hashed corpus, dictionary and postings derived in-plan.
-    * `eager = true` (the q176 streaming gate) materializes all three
-    * frames up front, so each micro-batch's addBatch pays only its own
-    * probe — never per-batch corpus-sized work on the streaming session
-    * (where AQE is force-disabled). Same expressions either way, so
-    * answers are bit-identical.
+  /** Build the corpus-side screen index. The hashed corpus is
+    * checkpointed and its postings counted in the one job that
+    * materializes it; the count picks the regime:
+    *   - narrow, at most NarrowMaxPostingRows postings: the hashed corpus
+    *     is collected once and broadcast as the shingle dictionary with
+    *     each shingle's df, the rare-first postings (doc, c_pos) as CSR
+    *     arrays, and each doc's c_nsh and sorted hashes
+    *     (ContainmentCorpus). Each probe then reads no corpus frame.
+    *   - shuffle, past the bound: the dictionary and postings are
+    *     derived in-plan from the checkpoint, and every probe joins
+    *     them. `eager` applies to this regime only: `eager = false` (the
+    *     batch q175 shape) leaves them lazy; `eager = true` (a streaming
+    *     gate) materializes both up front, so each micro-batch's
+    *     addBatch pays only its own probe — never per-batch corpus-sized
+    *     work on the streaming session (where AQE is force-disabled).
+    * Same filters in both regimes, so answers are identical row for row.
     */
   def containmentScreenIndex(
       corpus: DataFrame,
@@ -819,36 +852,82 @@ object Dedup {
       shingleN: Int,
       eager: Boolean = false
   ): ContainmentScreenIndex = {
-    val hc = containmentHashed(corpus, idCol, textCol, shingleN)
-      .filter(col("nsh") > 0).localCheckpoint(eager)
-    val exC = hc.select(col(idCol), col("nsh"), explode(col("hs")).as("h"))
+    val hc = hashedCorpus(corpus, idCol, textCol, shingleN)
+    screenIndexOn(hc, idCol, eager,
+      narrow = ContainmentCorpus.postingRows(hc) <= NarrowMaxPostingRows)
+  }
+
+  /** containmentScreenIndex in the regime the caller names: `narrow`
+    * collects the corpus whatever its size, so only a caller that bounds
+    * it (or a test comparing the regimes) may pass true.
+    */
+  private[graft] def containmentScreenIndexIn(
+      corpus: DataFrame,
+      idCol: String,
+      textCol: String,
+      shingleN: Int,
+      eager: Boolean,
+      narrow: Boolean
+  ): ContainmentScreenIndex =
+    screenIndexOn(hashedCorpus(corpus, idCol, textCol, shingleN), idCol, eager, narrow)
+
+  /** The corpus docs with at least one shingle and their per-doc key
+    * `c_rk` (taken before the checkpoint), checkpointed lazily.
+    */
+  private def hashedCorpus(corpus: DataFrame, idCol: String, textCol: String,
+      shingleN: Int): DataFrame =
+    containmentHashed(corpus, idCol, textCol, shingleN)
+      .filter(col("nsh") > 0)
+      .withColumn("c_rk", monotonically_increasing_id())
+      .localCheckpoint(false)
+
+  private def screenIndexOn(hc: DataFrame, idCol: String, eager: Boolean,
+      narrow: Boolean): ContainmentScreenIndex = {
+    val exC = hc.select(col("c_rk"), col("nsh"), explode(col("hs")).as("h"))
     val freq0 = exC.groupBy("h").agg(count(lit(1)).as("df"))
-    val freq = if (eager) freq0.localCheckpoint(true) else freq0
-    val fullB0 = rareFirstOrder(exC, freq, idCol, "inner")
-      .select(col(idCol).as("c_id"), col("nsh").as("c_nsh"),
+    val pinned = eager && !narrow
+    val freq = if (pinned) freq0.localCheckpoint(true) else freq0
+    val fullB0 = rareFirstOrder(exC, freq, "c_rk", "inner")
+      .select(col("c_rk"), col("nsh").as("c_nsh"),
         posexplode(col("sg")).as(Seq("c_pos", "h")))
-    val fullB = if (eager) fullB0.localCheckpoint(true) else fullB0
-    ContainmentScreenIndex(hc, freq, fullB)
+    val fullB = if (pinned) fullB0.localCheckpoint(true) else fullB0
+    val corpus =
+      if (narrow) Some(hc.sparkSession.sparkContext.broadcast(ContainmentCorpus.collect(hc, idCol)))
+      else None
+    ContainmentScreenIndex(hc, freq, fullB, corpus)
   }
 
   /** Incremental CONTAINMENT screen — the ingest-time question
     * containmentPairs answers in batch: is this NEW document an excerpt
     * / partial copy of something already in the corpus (>= t of its
-    * shingles inside one existing doc)? Returns every incoming id with
-    * its container count; kept = no container. The containment twin of
-    * incrementalHammingScreenOnBands / incrementalNearDupFilterOnBands, and the
-    * shape decontamination-on-arrival runs: corpus-side self-pairs are
-    * NEVER generated (the quadratic bulk of a batch containmentPairs
-    * run).
+    * shingles inside one existing doc)? Returns one row per incoming row
+    * with its container count; kept = no container. The containment
+    * twin of incrementalHammingScreenOnBands /
+    * incrementalNearDupFilterOnBands, and the shape
+    * decontamination-on-arrival runs: corpus-side self-pairs are NEVER
+    * generated (the quadratic bulk of a batch containmentPairs run).
     *
     * Same one-sided prefix filter: only the incoming doc's rare-first
-    * prefix joins, against the corpus's FULL posting list. Both sides
-    * order by (corpus df, h) — a total order shared by construction;
+    * prefix probes the corpus's FULL posting list. Both sides order by
+    * (corpus df, h) — a total order shared by construction;
     * incoming-only shingles take df 0 (rarest, so they front-load the
     * prefix — exactly right: a shingle absent from the corpus can only
     * appear in prefixes, never postings, and prunes for free). Docs with
-    * no shingles (shorter than the shingle width) have no containment
-    * evidence and are kept.
+    * no shingles (shorter than the shingle width) or a null id have no
+    * containment evidence and are kept.
+    *
+    * The regime is the index's:
+    *   - narrow: one narrow pass over the batch probes the broadcast
+    *     corpus (ContainmentCorpus) and verifies each candidate's exact
+    *     intersection in the task — no dictionary, posting or verify
+    *     join, no candidate aggregate and no corpus scan per batch.
+    *   - shuffle: the incoming prefix joins the dictionary and the
+    *     posting frame, candidates aggregate per (row, corpus doc), and
+    *     the exact intersection verifies against the hashed corpus.
+    * Both end in the same spine: every incoming row gets a per-row key
+    * before the batch's checkpoint, and the rows left-join their counts
+    * on that key (broadcast in the narrow regime), so rows that share an
+    * id are screened independently.
     *
     * Build once, probe many: the corpus side is a pre-built
     * `containmentScreenIndex` — the per-micro-batch serving entry point
@@ -864,36 +943,52 @@ object Dedup {
       shingleN: Int,
       threshold: Double
   ): DataFrame = {
-    require(threshold > 0, "prefix filtering requires a positive threshold")
+    requirePrefixThreshold(threshold)
+    // the key is taken before the checkpoint, so the probe and the spine
+    // read the same keys
     val hi = containmentHashed(incoming, idCol, textCol, shingleN)
-      .localCheckpoint(false) // prefix side + output spine
+      .withColumn("rk", monotonically_increasing_id())
+      .localCheckpoint(false) // probe side + output spine
+    val probe = hi.filter(col(idCol).isNotNull && col("nsh") > 0)
+      .select(col("rk"), col("hs"), col("nsh"))
+    val counts = index.narrow match {
+      case Some(corpus) => broadcast(ContainmentCorpus.containers(probe, corpus, threshold))
+      case None => shuffleContainers(probe, index, idCol, threshold)
+    }
+    hi.select(col("rk"), col(idCol))
+      .join(counts, Seq("rk"), "left")
+      .select(col(idCol), coalesce(col("n_containers"), lit(0L)).as("n_containers"))
+      .withColumn("kept", col("n_containers") === 0)
+  }
+
+  /** The shuffle regime's (rk, n_containers) for the probe rows
+    * (rk, hs, nsh) with at least one verified container.
+    */
+  private def shuffleContainers(probe: DataFrame, index: ContainmentScreenIndex,
+      idCol: String, threshold: Double): DataFrame = {
     val prefixLen = (col("nsh") - ceil(lit(threshold) * col("nsh")) + 1).cast("int")
     val prefA = rareFirstOrder(
-        hi.filter(col("nsh") > 0)
-          .select(col(idCol), col("nsh"), explode(col("hs")).as("h")),
-        index.freq, idCol, "left")
-      .select(col(idCol), col("nsh"),
+        probe.select(col("rk"), col("nsh"), explode(col("hs")).as("h")),
+        index.freq, "rk", "left")
+      .select(col("rk"), col("nsh"),
         posexplode(slice(col("sg"), lit(1), prefixLen)).as(Seq("pos", "h")))
     val needed = ceil(lit(threshold) * col("nsh"))
     val ubound = lit(1) + least(col("nsh") - col("pa") - 1, col("c_nsh") - col("pb") - 1)
     val cands = prefA
       .join(index.postings, Seq("h"))
       .filter(col("c_nsh") >= lit(threshold) * col("nsh"))
-      .groupBy(col(idCol), col("c_id"), col("nsh"), col("c_nsh"))
+      .groupBy(col("rk"), col("c_rk"), col("nsh"), col("c_nsh"))
       .agg(min(col("pos")).as("pa"), min(col("c_pos")).as("pb"))
       .filter(ubound.cast("double") + 1e-9 >= needed)
-      .select(col(idCol), col("c_id"))
+      .select(col("rk"), col("c_rk"))
     val inter = org.apache.spark.sql.graft.LongArrayIntersectSize
       .column(col("hs"), col("c_hs")).cast("double")
-    val hits = cands
-      .join(hi.select(col(idCol), col("hs"), col("nsh")), Seq(idCol))
-      .join(index.hashed.select(col(idCol).as("c_id"), col("hs").as("c_hs")), Seq("c_id"))
+    cands
+      .join(probe, Seq("rk"))
+      .join(index.hashed.filter(col(idCol).isNotNull)
+        .select(col("c_rk"), col("hs").as("c_hs")), Seq("c_rk"))
       .filter(inter / col("nsh") >= threshold)
-      .groupBy(idCol).agg(count(lit(1)).as("n_containers"))
-    hi.select(col(idCol))
-      .join(hits, Seq(idCol), "left")
-      .select(col(idCol), coalesce(col("n_containers"), lit(0L)).as("n_containers"))
-      .withColumn("kept", col("n_containers") === 0)
+      .groupBy("rk").agg(count(lit(1)).as("n_containers"))
   }
 
   /** The corpus-side POSTING LIST of the containment screens — one

@@ -263,41 +263,174 @@ class DedupSpec extends SparkSpec {
     val corpus = (0 until 25).map { i =>
       (i.toLong, (0 until 8).map(j => words((i * 5 + j * 3) % words.length)).mkString(" "))
     }.toDF("doc_id", "text")
-    // incoming: an excerpt of corpus doc 0, a fresh doc, and a too-short doc
+    // incoming: an excerpt of corpus doc 0, a fresh doc, and a too-short
+    // doc; then two rows under id 100 (an excerpt and a copy of doc 0) and
+    // two under id 103 (an excerpt and a fresh text): rows that share an
+    // id are screened independently
     val c0 = (0 until 8).map(j => words((j * 3) % words.length)).mkString(" ")
-    val incoming = Seq(
-      (100L, c0.split(" ").slice(2, 6).mkString(" ")),
+    val excerpt = c0.split(" ").slice(2, 6).mkString(" ")
+    val rows = Seq(
+      (100L, excerpt),
       (101L, "votre nouveau document sans aucun recouvrement"),
-      (102L, "ab")).toDF("doc_id", "text")
+      (102L, "ab"),
+      (100L, c0),
+      (103L, excerpt),
+      (103L, "un autre texte sans rien de commun"))
+    val incoming = rows.toDF("doc_id", "text")
+    def screen(index: Dedup.ContainmentScreenIndex): Seq[(Long, Long, Boolean)] =
+      Dedup.incrementalContainmentScreenOnIndex(incoming, index, "doc_id", "text", 3, 0.6)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSeq.sorted
     // the batch (q175) shape: lazy index built inline, probed once
-    val fast = Dedup.incrementalContainmentScreenOnIndex(incoming,
-        Dedup.containmentScreenIndex(corpus, "doc_id", "text", 3),
-        "doc_id", "text", 3, 0.6)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
-    val shI = incoming.select(col("doc_id"), Dedup.shingleSet(col("text"), 3).as("sh"))
+    val fast = screen(Dedup.containmentScreenIndex(corpus, "doc_id", "text", 3))
+    // brute force per incoming row, keyed by its position in `rows`
+    val shI = rows.zipWithIndex.map { case ((id, t), i) => (i, id, t) }
+      .toDF("row", "doc_id", "text")
+      .select(col("row"), col("doc_id"), Dedup.shingleSet(col("text"), 3).as("sh"))
     val shC = corpus.select(col("doc_id").as("c_id"), Dedup.shingleSet(col("text"), 3).as("c_sh"))
       .filter(size(col("c_sh")) > 0)
     val brute = shI.crossJoin(shC)
       .withColumn("cont",
         when(size(col("sh")) === 0, lit(0.0))
           .otherwise(size(array_intersect(col("sh"), col("c_sh"))).cast("double") / size(col("sh"))))
-      .groupBy("doc_id")
+      .groupBy("row", "doc_id")
       .agg(sum(when(col("cont") >= 0.6, 1L).otherwise(0L)).as("n_containers"))
       .select(col("doc_id"), col("n_containers"),
         (col("n_containers") === 0).as("kept"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSeq.sorted
     assert(brute.exists(p => p._1 == 100L && p._2 >= 1L), "excerpt must find a container")
     assert(brute.exists(p => p._1 == 101L && p._3), "fresh doc must be kept")
+    // each id-100 row reads what the excerpt reads alone, and the fresh
+    // row under id 103 is kept although its sibling has containers
+    val alone = brute.find(_._1 == 100L).get._2
+    assert(brute.filter(_._1 == 100L).map(_._2) == Seq(alone, alone))
+    assert(brute.filter(_._1 == 103L) == Seq((103L, 0L, true), (103L, alone, false)))
     assert(fast == brute)
     // the shingle-less doc is kept, not dropped from the output spine
-    assert(fast.exists(p => p._1 == 102L && p._2 == 0L && p._3))
+    assert(fast.contains((102L, 0L, true)))
     // the pre-built EAGER index path (the q176 streaming-gate shape since
     // round 18) must give bit-identical answers to the lazy one
-    val viaIndex = Dedup.incrementalContainmentScreenOnIndex(incoming,
-        Dedup.containmentScreenIndex(corpus, "doc_id", "text", 3, eager = true),
-        "doc_id", "text", 3, 0.6)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
+    val viaIndex = screen(Dedup.containmentScreenIndex(corpus, "doc_id", "text", 3, eager = true))
     assert(viaIndex == brute)
+  }
+
+  test("prefix filters reject a threshold outside (0, 1] before any job runs") {
+    import org.apache.spark.sql.graft.JobCount
+    val index = Dedup.containmentScreenIndex(docs, "doc_id", "text", 3)
+    for (t <- Seq(1.5, 1.0000001, 0.0, -0.1, Double.NaN)) {
+      val jobs = JobCount.during(spark.sparkContext) {
+        intercept[IllegalArgumentException](Dedup.containmentPairs(docs, "doc_id", "text", 3, t))
+        intercept[IllegalArgumentException](Dedup.ngramJaccardPairs(docs, "doc_id", "text", 3, t))
+        intercept[IllegalArgumentException](
+          Dedup.incrementalContainmentScreenOnIndex(docs, index, "doc_id", "text", 3, t))
+      }
+      assert(jobs == 0, s"t = $t started $jobs jobs")
+    }
+  }
+
+  /** Seeded (corpus, incoming) frames for the containment screen's regime
+    * comparison, ids of `idType`, shingled at width 3. Corpus: random word
+    * texts over an alphabet with 2-, 3- and 4-byte UTF-8 (é, 中, 😀), two
+    * copies of doc 3 (identical text), two docs of different lengths
+    * under id 35, an empty, a null, a too-short text and a null id.
+    * Anchor doc 40 ("abcdefghijkl", 10 shingles) has incoming rows
+    * 900..904 holding exactly 5, 6, 7, 8 and 10 of them plus fresh
+    * shingles, so containment sits exactly at t = 0.5 ... 1.0. Anchor
+    * doc 41 (57 distinct Hangul chars, 55 shingles) has row 910 holding
+    * all 55 plus 45 fresh shingles: 55/100 = 0.55 exactly, while
+    * 0.55·100 rounds up to 55.00000000000001 in doubles (ceil 56), the
+    * float edge of the prefix length. Incoming also has excerpts and
+    * copies of corpus docs, with and without fresh (corpus-absent)
+    * words, repeated ids, null ids and degenerate texts.
+    */
+  private def screenCase(seed: Int, idType: DataType): (DataFrame, DataFrame) = {
+    val rnd = new scala.util.Random(seed)
+    def hangul(from: Int, n: Int) = (from until from + n).map(i => (0xAC00 + i).toChar).mkString
+    val vocab = Vector("ab", "abc", "été", "中文字", "😀x", "xé中", "lorem", "ipsum",
+      "dolor", "sit", "amet", "q", "zz😀", "naïve")
+    def words(n: Int) = Seq.fill(n)(vocab(rnd.nextInt(vocab.length)))
+    val base = (0 until 30).map(_ => words(3 + rnd.nextInt(8)))
+    val corpusRows: Seq[(Any, String)] = base.indices.map(i => (i, base(i).mkString(" "))) ++
+      Seq(30 -> base(3).mkString(" "), 31 -> base(3).mkString(" "), 32 -> "", 33 -> null,
+        34 -> "ab", (null, base(5).mkString(" ")), 35 -> base(7).mkString(" "),
+        35 -> base(7).take(2).mkString(" "), 40 -> "abcdefghijkl", 41 -> hangul(0, 57))
+    val partial = (0 until 40).map { i =>
+      val ws = base(rnd.nextInt(base.size))
+      val from = rnd.nextInt(ws.size)
+      val fresh = Seq.fill(rnd.nextInt(3))(s"fr${rnd.nextInt(1000)}é")
+      val cut = ws.slice(from, from + 2 + rnd.nextInt(ws.size)) ++ fresh
+      // a few ids repeat; every seventh row has a null id
+      val id: Any = if (i % 7 == 6) null else 200 + rnd.nextInt(30)
+      (id, (if (rnd.nextBoolean()) cut else rnd.shuffle(cut)).mkString(" "))
+    }
+    val fixed: Seq[(Any, String)] = Seq(
+      900 -> "abcdefguvwxy", 901 -> "abcdefghrstu", 902 -> "abcdefghixyz",
+      903 -> "abcdefghijmn", 904 -> "abcdefghijkl",
+      905 -> base(3).mkString(" "), 905 -> "sans rapport 😀😀😀", 906 -> "",
+      907 -> null, 908 -> "q", (null, base(3).mkString(" ")), 909 -> "中文字 été 中文字",
+      910 -> (hangul(0, 57) + hangul(100, 45)))
+    val schema = StructType(Seq(StructField("doc_id", idType), StructField("text", StringType)))
+    def frame(rows: Seq[(Any, String)]) = spark.createDataFrame(
+      spark.sparkContext.parallelize(rows.map { case (id, t) =>
+        Row(if (id == null) null else if (idType == IntegerType) id else id.asInstanceOf[Int].toLong, t)
+      }, 3), schema)
+    (frame(corpusRows), frame(partial ++ fixed))
+  }
+
+  test("differential: containment screen narrow == shuffle regime on generated inputs") {
+    for ((seed, idType) <- Seq(1 -> LongType, 2 -> IntegerType, 3 -> LongType)) {
+      val (corpus, incoming) = screenCase(seed, idType)
+      val narrowIdx = Dedup.containmentScreenIndexIn(corpus, "doc_id", "text", 3,
+        eager = false, narrow = true)
+      val shuffleIdx = Dedup.containmentScreenIndexIn(corpus, "doc_id", "text", 3,
+        eager = true, narrow = false)
+      val shipped = Dedup.containmentScreenIndex(corpus, "doc_id", "text", 3)
+      assert(narrowIdx.narrow.isDefined && shuffleIdx.narrow.isEmpty && shipped.narrow.isDefined)
+      for (t <- Seq(0.5, 0.55, 0.6, 0.7, 0.8, 1.0)) {
+        def screen(ix: Dedup.ContainmentScreenIndex) =
+          Dedup.incrementalContainmentScreenOnIndex(incoming, ix, "doc_id", "text", 3, t)
+        val shuffle = screen(shuffleIdx)
+        val expected = sortedRows(shuffle)
+        assert(expected.size == incoming.count(), s"seed $seed t $t: one row per incoming row")
+        assert(expected.exists(r => !r.startsWith("null|") && !r.contains("|0|")),
+          s"seed $seed t $t: no incoming row found a container")
+        // a null id is never screened, whatever its text
+        assert(expected.filter(_.startsWith("null|")).forall(_ == "null|0|true"))
+        if (t == 0.5) assert(expected.contains("900|1|false"),
+          "containment exactly at t must count")
+        for (narrow <- Seq(screen(narrowIdx), screen(shipped))) {
+          assert(narrow.schema == shuffle.schema, s"seed $seed t $t")
+          assert(sortedRows(narrow) == expected, s"seed $seed t $t")
+        }
+      }
+    }
+  }
+
+  test("narrow screen: the probe is one narrow pass, no ShuffleDependency") {
+    // The narrow regime's contract: a batch reads no corpus frame; it is
+    // probed against the broadcast corpus inside the tasks of one pass,
+    // and the counts join back to the batch through a broadcast. The
+    // walker is checked against the shuffle regime's probe, which must
+    // shuffle.
+    import org.apache.spark.ShuffleDependency
+    import org.apache.spark.rdd.RDD
+    import org.apache.spark.sql.execution.LogicalRDD
+    def shuffles(r: RDD[_]): Int = r.dependencies.map {
+      case d: ShuffleDependency[_, _, _] => 1 + shuffles(d.rdd)
+      case d => shuffles(d.rdd)
+    }.sum
+    val (corpus, incoming) = screenCase(1, LongType)
+    def screen(narrow: Boolean) = Dedup.incrementalContainmentScreenOnIndex(incoming,
+      Dedup.containmentScreenIndexIn(corpus, "doc_id", "text", 3, eager = false, narrow),
+      "doc_id", "text", 3, 0.6)
+    val shuffled = screen(narrow = false)
+    assert(shuffles(shuffled.queryExecution.toRdd) > 0,
+      "the lineage walker found no shuffle in the shuffle regime's probe")
+    val out = screen(narrow = true)
+    // the leaves: the batch's checkpoint and the counting pass over it
+    val leaves = out.queryExecution.analyzed.collect { case r: LogicalRDD => r.rdd }
+    assert(leaves.size >= 2)
+    for (r <- leaves :+ out.queryExecution.toRdd)
+      assert(shuffles(r) == 0, s"the narrow probe has a ShuffleDependency:\n${r.toDebugString}")
   }
 
   test("bottomKContainmentScreen: k/cap unbounded degenerates to exact containment >= screenFrac") {
