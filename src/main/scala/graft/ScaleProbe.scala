@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.operators.{Dedup, NnDescent, Similarity}
-import org.apache.spark.sql.graft.CheckpointStats
+import org.apache.spark.sql.graft.{CheckpointStats, Narrow}
 
 /** Builder-local measurement harness behind SCALE.md's at-scale rows —
   * the numbers the bench suite cannot produce: same-JVM paired A/Bs
@@ -12,10 +12,11 @@ import org.apache.spark.sql.graft.CheckpointStats
   * round-13 second wave) and quality audits that need a brute-force
   * truth pass too expensive for the per-round oracle gate. Subcommands:
   *
-  *   nnd-ab <table-dir>       knnGraph build, shipped bounds (narrow
-  *                            regime when both hold) vs the forced-shuffle
-  *                            regime (vector bound override = 0),
-  *                            interleaved B S B S in one pinned-heap JVM
+  *   nnd-ab <table-dir>       knnGraph build, shipped budget (narrow
+  *                            regime when vectors and graph fit it) vs
+  *                            the forced-shuffle regime (budget pinned
+  *                            to 0), interleaved B S B S in one
+  *                            pinned-heap JVM
   *   nnd-rounds <table-dir> [rounds=8] [k=NndK] [cap=NndCap]
   *                            one NN-Descent build at (k, cap) with
   *                            recall@3 vs sampled exact truth, wall time,
@@ -34,18 +35,22 @@ import org.apache.spark.sql.graft.CheckpointStats
   *                            full rebuild and vs sampled exact truth,
   *                            both wall times, and a 2-4 round sweep
   *   groups-ab [pairs...]     resolveGroups on synthetic long chains at
-  *                            each pair count (default ~1/4 of
-  *                            Dedup.NarrowMaxPairRows and just under
-  *                            it): the shipped entry point (narrow
-  *                            regime) vs the forced shuffle loop,
-  *                            interleaved N S N S in one JVM
+  *                            each pair count (default 1M and 3.99M,
+  *                            just under the old 4M row bound): the
+  *                            shipped entry point (narrow regime) vs the
+  *                            forced shuffle loop, interleaved N S N S
+  *                            in one JVM
   *   screen-ab [docs...]      the exact containment screen on synthetic
-  *                            corpora of each doc count (default ~1/4 of
-  *                            Dedup.NarrowMaxPostingRows postings and
-  *                            just under it): build and per-batch probe
-  *                            times of the shipped entry point (narrow
-  *                            regime) vs the forced shuffle regime,
-  *                            interleaved N S N S in one JVM
+  *                            corpora of each doc count (default 1,000
+  *                            and 3,600 docs, ~0.55M and ~2.0M postings,
+  *                            just under the old 2M bound): build and
+  *                            per-batch probe times of the shipped entry
+  *                            point (narrow regime) vs the forced shuffle
+  *                            regime, interleaved N S N S in one JVM
+  *
+  * The three A/Bs force the shuffle arm with Narrow.withBudget(0), and
+  * each narrow arm prints the driver's used heap around its build (see
+  * heapAround): the measurement behind the Narrow regimes' peak factors.
   *
   * Prints one JSON line per subcommand (the Bench convention). Extends
   * RegistryBase so the probes run the SAME constants and helpers the
@@ -79,7 +84,7 @@ object ScaleProbe extends RegistryBase {
       case "upsert-quality" => upsertQuality(spark, args(1))
       case "groups-ab"      => groupsAb(spark,
         if (args.length > 1) args.drop(1).map(_.toLong).toSeq
-        else Seq(Dedup.NarrowMaxPairRows / 4, Dedup.NarrowMaxPairRows - 10000))
+        else Seq(1000000L, 3990000L))
       case "screen-ab"      => screenAb(spark,
         if (args.length > 1) args.drop(1).map(_.toLong).toSeq else Seq(1000L, 3600L))
       case other            => sys.error(s"unknown subcommand: $other")
@@ -157,6 +162,39 @@ object ScaleProbe extends RegistryBase {
     val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
   }
 
+  /** An A/B arm: `f` with the budget pinned to 0 for the "shuffle" arm;
+    * any other arm runs the shipped budget under heapAround.
+    */
+  private def arm[T](regime: String)(f: => T): T =
+    if (regime == "shuffle") Narrow.withBudget(0)(f) else heapAround(f)
+
+  /** The last heapAround reading, as a JSON field. */
+  private var heap = ""
+
+  /** `f`, recording in `heap` the driver's used heap around it, in MB:
+    * after a GC before it (base), the most a 1 ms sampler read while it
+    * ran (peak), and after a GC once it ends (after). The sampled peak
+    * includes garbage not yet collected, so the probes that measure it
+    * pin a small young generation (SCALE.md); (peak - base) over a
+    * regime's declared bytes is its peak factor.
+    */
+  private def heapAround[T](f: => T): T = {
+    val rt = Runtime.getRuntime
+    def used = rt.totalMemory - rt.freeMemory
+    System.gc()
+    val base = used
+    val peak = new java.util.concurrent.atomic.AtomicLong(base)
+    val sampler = new Thread(() =>
+      try while (true) { peak.accumulateAndGet(used, math.max); Thread.sleep(1) }
+      catch { case _: InterruptedException => () })
+    sampler.start()
+    val out = try f finally { sampler.interrupt(); sampler.join() }
+    System.gc()
+    heap = s""""heap_mb":{"budget":${Narrow.budget >> 20},"base":${base >> 20},""" +
+      s""""peak":${peak.get >> 20},"after":${used >> 20}}"""
+    out
+  }
+
   private def reset(s: SparkSession): Unit = {
     s.catalog.clearCache()
     s.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
@@ -164,10 +202,10 @@ object ScaleProbe extends RegistryBase {
   }
 
   /** Same-JVM interleaved A/B of the two knnGraph regimes: the
-    * "broadcast" arm pins the shipped vector bound (narrow rounds when
-    * the corpus and its graph are under both bounds, else the shuffle
-    * regime) and the "shuffle" arm forces the bound to 0 (the documented
-    * 100 TB fallback: stats-reset sort-merge joins everywhere).
+    * "broadcast" arm runs the shipped budget (narrow rounds when the
+    * vectors and their graph fit it, else the shuffle regime) and the
+    * "shuffle" arm pins the budget to 0 (the documented 100 TB
+    * fallback: stats-reset sort-merge joins everywhere).
     * Interleaving B S B S samples both regimes early and late in the
     * JVM's life, so codegen/heap warm-up cannot masquerade as a regime
     * difference.
@@ -177,24 +215,20 @@ object ScaleProbe extends RegistryBase {
     val n = e.count()
     val itersUsed = NnDescent.autoIters(n) // the shipped derived counts
     val kUsed = NnDescent.autoK(n)
-    def build(): Double = { reset(s); timed {
+    def build(regime: String): Double = { reset(s); timed { arm(regime) {
       NnDescent.knnGraph(e, "vec_id", "embedding", k = 0, iters = 0, cap = 0)
         .write.format("noop").mode("overwrite").save()
-    } }
-    val key = "graft.nnd.broadcastMaxVecRows"
+    } } }
     // spill + shuffle-write bytes per arm: round 15's shuffle arms DIED
     // on disk with no number attached — the A/B's job now includes
     // recording what each regime writes (the r15 verdict's done-bar)
     val metrics = new org.apache.spark.sql.graft.TaskMetricsAgg(s.sparkContext)
     var rows = Vector.empty[(String, Double, Long, Long)]
     for (regime <- Seq("broadcast", "shuffle", "broadcast", "shuffle")) {
-      try {
-        sys.props(key) = if (regime == "shuffle") "0" else "500000"
-        metrics.snapshotAndReset()
-        val w = build()
-        val (spill, shuf) = metrics.snapshotAndReset()
-        rows :+= ((regime, w, spill, shuf))
-      } finally sys.props.remove(key)
+      metrics.snapshotAndReset()
+      val w = build(regime)
+      val (spill, shuf) = metrics.snapshotAndReset()
+      rows :+= ((regime, w, spill, shuf))
     }
     def arr(r: String) =
       rows.filter(_._1 == r).map(v => "%.1f".format(v._2)).mkString("[", ",", "]")
@@ -203,7 +237,8 @@ object ScaleProbe extends RegistryBase {
     println(s"""{"probe":"nnd_ab","n_vecs":$n,"k":$kUsed,"iters":$itersUsed,"cap":${NnDescent.autoCap(kUsed)},""" +
       s""""broadcast_s":${arr("broadcast")},"shuffle_s":${arr("shuffle")},""" +
       s""""broadcast_spill_mb":${mb("broadcast", _._3)},"shuffle_spill_mb":${mb("shuffle", _._3)},""" +
-      s""""broadcast_shufwrite_mb":${mb("broadcast", _._4)},"shuffle_shufwrite_mb":${mb("shuffle", _._4)}}""")
+      s""""broadcast_shufwrite_mb":${mb("broadcast", _._4)},"shuffle_shufwrite_mb":${mb("shuffle", _._4)},""" +
+      s"""$heap}""")
   }
 
   /** Same-JVM interleaved A/B of resolveGroups' two regimes (SCALE.md,
@@ -218,18 +253,19 @@ object ScaleProbe extends RegistryBase {
       val perChain = ChainIds - 1
       val pairs = s.range(m)
         .select((col("id") + col("id").divide(perChain).cast("long")).as("id_a"))
-        .withColumn("id_b", col("id_a") + 1).cache()
+        .withColumn("id_b", col("id_a") + 1)
       val chains = (m + perChain - 1) / perChain
       val nIds = m + chains
-      val docs = s.range(nIds).select(col("id").as("doc_id")).cache()
-      pairs.count(); docs.count()
+      val docs = s.range(nIds).select(col("id").as("doc_id"))
       var rows = Vector.empty[(String, Double)]
       for (regime <- Seq("narrow", "shuffle", "narrow", "shuffle")) {
-        System.gc()
+        // each arm starts from the cached inputs alone: an earlier arm's
+        // checkpoint blocks would sit under the next one's heap reading
+        reset(s)
+        pairs.cache().count(); docs.cache().count()
         var groups = 0L
         val w = timed {
-          val out = if (regime == "narrow") Dedup.resolveGroups(docs, "doc_id", pairs)
-            else Dedup.resolveGroupsIn(docs, "doc_id", pairs, narrow = false, maxIter = 64)
+          val out = arm(regime)(Dedup.resolveGroups(docs, "doc_id", pairs))
           groups = out.select("keep_id").distinct().count()
         }
         require(groups == chains, s"$regime: $groups groups for $chains chains")
@@ -238,7 +274,7 @@ object ScaleProbe extends RegistryBase {
       def arr(r: String) =
         rows.filter(_._1 == r).map(v => "%.1f".format(v._2)).mkString("[", ",", "]")
       println(s"""{"probe":"groups_ab","pairs":$m,"ids":$nIds,"chains":$chains,""" +
-        s""""narrow_s":${arr("narrow")},"shuffle_s":${arr("shuffle")}}""")
+        s""""narrow_s":${arr("narrow")},"shuffle_s":${arr("shuffle")},$heap}""")
       reset(s)
     }
   }
@@ -275,8 +311,7 @@ object ScaleProbe extends RegistryBase {
         System.gc()
         var index: Dedup.ContainmentScreenIndex = null
         val build = timed {
-          index = if (regime == "narrow") Dedup.containmentScreenIndex(corpus, "doc_id", "text", 5, eager = true)
-            else Dedup.containmentScreenIndexIn(corpus, "doc_id", "text", 5, eager = true, narrow = false)
+          index = arm(regime)(Dedup.containmentScreenIndex(corpus, "doc_id", "text", 5, eager = true))
         }
         require((regime == "narrow") == index.narrow.isDefined, s"$regime arm built the other regime")
         val probes = (0 until 3).map(_ => timed {
@@ -294,7 +329,7 @@ object ScaleProbe extends RegistryBase {
         rows.filter(_._1 == r).flatMap(f).map("%.2f".format(_)).mkString("[", ",", "]")
       println(s"""{"probe":"screen_ab","docs":$n,"postings":$postings,"containers":${found.head},""" +
         s""""narrow_build_s":${arr("narrow", v => Seq(v._2))},"shuffle_build_s":${arr("shuffle", v => Seq(v._2))},""" +
-        s""""narrow_probe_s":${arr("narrow", _._3)},"shuffle_probe_s":${arr("shuffle", _._3)}}""")
+        s""""narrow_probe_s":${arr("narrow", _._3)},"shuffle_probe_s":${arr("shuffle", _._3)},$heap}""")
       reset(s)
     }
   }
@@ -333,7 +368,8 @@ object ScaleProbe extends RegistryBase {
     // their own round driver: the probe must exercise the plan the
     // engine ships, and the shipped default is the sliced plan that
     // survives, not the unsliced one that died at 600k
-    val p = NnDescent.buildParams(vecs, n, k, cap)
+    val (_, dim) = NnDescent.vecStats(vecs)
+    val p = NnDescent.buildParams(n, dim, k, cap)
     System.err.println(s"[nnd-rounds] n=$n k=${p.k} cap=${p.cap} slices=${p.slices} " +
       s"(override=${NnDescent.ExpansionSlicesOverride}, budget=${NnDescent.DiskBudgetBytes / (1L << 30)}GB)")
     val metrics = new org.apache.spark.sql.graft.TaskMetricsAgg(s.sparkContext)

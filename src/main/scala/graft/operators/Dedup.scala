@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
-import org.apache.spark.sql.graft.{CheckpointStats, ContainmentCorpus, DupComponents, Md5Long60}
+import org.apache.spark.sql.graft.{CheckpointStats, ContainmentCorpus, DupComponents, Md5Long60, Narrow}
 
 /** Deduplication operators for large-scale text corpora (builder-brief
   * pillar; the reference's only dedup is the set()-based ETL helper,
@@ -465,13 +465,32 @@ object Dedup {
     )
   }
 
-  /** The exact prefix filters take |A| - ceil(t·|A|) + 1 shingles, a
-    * length in [1, |A|] only for t in (0, 1]; any other t is rejected
-    * here, before a job runs, rather than failing inside `slice`.
+  /** The exact prefix filters take |A| - minOverlap(t, |A|) + 1
+    * shingles, a length in [1, |A|] only for t in (0, 1]; any other t is
+    * rejected here, before a job runs, rather than failing inside `slice`.
     */
   private def requirePrefixThreshold(threshold: Double): Unit =
     require(threshold > 0 && threshold <= 1,
       s"prefix filtering requires a threshold in (0, 1], got $threshold")
+
+  /** The least overlap k with k / n >= t in double arithmetic: the exact
+    * prefix filters' verify test, so their prefix length, length filter
+    * and position bound drop no pair the verify accepts. ceil(t·n) is not
+    * it: 0.55·100 is 55.00000000000001 in doubles, so its ceil 56 misses
+    * a pair at exactly 55/100. An overlap I that passes a Jaccard verify
+    * I / |A ∪ B| >= t passes I / |A| >= t too, as |A| <= |A ∪ B|. For
+    * t in (0, 1] and n >= 1 the answer is within one of ceil(t·n).
+    */
+  def minOverlap(t: Double, n: Int): Int = {
+    val c = math.ceil(t * n).toInt
+    if ((c - 1).toDouble / n >= t) c - 1 else if (c.toDouble / n >= t) c else c + 1
+  }
+
+  /** minOverlap over an integer column, with the same double division. */
+  def minOverlap(t: Double, n: Column): Column = {
+    val c = ceil(lit(t) * n)
+    when((c - 1) / n >= t, c - 1).when(c / n >= t, c).otherwise(c + 1)
+  }
 
   /** N-gram Jaccard similarity pairs, EXACT (same result set as an
     * all-pairs compare for threshold > 0) but sub-quadratic: the classic
@@ -480,13 +499,14 @@ object Dedup {
     * Each doc's distinct shingles are sorted under ONE global order —
     * ascending document frequency, ties by shingle value — so the prefix
     * holds the doc's RAREST shingles. A pair with Jaccard >= t must share
-    * >= ceil(t*|A|) shingles, so its intersection necessarily hits the
-    * first |A| - ceil(t*|A|) + 1 shingles of BOTH sides — an equi-join on
+    * >= minOverlap(t, |A|) shingles, so its intersection necessarily hits
+    * the first |A| - minOverlap(t, |A|) + 1 shingles of BOTH sides — an equi-join on
     * prefix shingles finds every qualifying pair without a cross join,
     * and rare-first ordering keeps each join bucket small (a
     * lexicographic prefix puts stopword-like common shingles in most
     * prefixes and re-creates the quadratic blowup on shared-vocabulary
-    * corpora). A length filter (t*|A| <= |B| <= |A|/t) prunes impossible
+    * corpora). A length filter (|B| >= minOverlap(t, |A|) and the same
+    * with A and B swapped) prunes impossible
     * pairs at the join, duplicates collapse map-side in the pair groupBy,
     * and exact Jaccard verifies inline.
     */
@@ -515,16 +535,7 @@ object Dedup {
     // the per-shingle hashing, the dominant CPU cost. Lazy (not
     // eager) so building the plan stays action-free; the first action
     // materializes it once into the block manager.
-    val hashed = docs
-      .select(
-        col(idCol),
-        array_sort(
-          array_distinct(
-            transform(shingleSet(col(textCol), shingleN), g => xxhash64(g))
-          )
-        ).as("hs")
-      )
-      .withColumn("nsh", size(col("hs")))
+    val hashed = containmentHashed(docs, idCol, textCol, shingleN)
       .filter(col("nsh") > 0)
       .localCheckpoint(false)
     val ex = hashed.select(col(idCol), col("nsh"), explode(col("hs")).as("h"))
@@ -539,7 +550,7 @@ object Dedup {
       .repartition(col(idCol))
       .groupBy(col(idCol), col("nsh"))
       .agg(sort_array(collect_list(struct(col("df"), col("h")))).as("sg"))
-    val prefixLen = (col("nsh") - ceil(lit(threshold) * col("nsh")) + 1).cast("int")
+    val prefixLen = (col("nsh") - minOverlap(threshold, col("nsh")) + 1).cast("int")
     // checkpointed for the same reason: the candidate stage self-joins
     // `prefixes`, which would otherwise recompute the df-join + reorder
     // on both sides
@@ -568,8 +579,8 @@ object Dedup {
       .join(
         prefixes.alias("b"),
         col("a.h") === col("b.h") && col(s"a.$idCol") < col(s"b.$idCol")
-          && col("a.nsh") * lit(threshold) <= col("b.nsh")
-          && col("b.nsh") * lit(threshold) <= col("a.nsh")
+          && col("b.nsh") >= minOverlap(threshold, col("a.nsh"))
+          && col("a.nsh") >= minOverlap(threshold, col("b.nsh"))
       )
       .select(
         col(s"a.$idCol").as("id_a"), col("a.nsh").as("nsh_a"), col("a.pos").as("pos_a"),
@@ -597,14 +608,14 @@ object Dedup {
     * prunes them BY DESIGN there). Containment is the dedup relation for
     * partial-copy detection (Broder's "roughly contained", SEQUENCES'97).
     *
-    * Sub-quadratic by the one-sided prefix filter: |A ∩ B| >= ceil(t·|A|)
-    * forces the intersection to hit A's first |A| - ceil(t·|A|) + 1
-    * shingles under any total order shared by both sides (else the
-    * intersection fits inside A's last ceil(t·|A|) - 1 positions — too
+    * Sub-quadratic by the one-sided prefix filter: with k = minOverlap(t,
+    * |A|), |A ∩ B| >= k forces the intersection to hit A's first
+    * |A| - k + 1 shingles under any total order shared by both sides
+    * (else the intersection fits inside A's last k - 1 positions — too
     * small). So only A's rare-first prefix joins, against B's FULL
     * rare-first list (B is unbounded above — that is the point), with
-    * the size filter |B| >= t·|A| (intersection can't exceed |B|) and
-    * the PPJoin positional bound 1 + min(|A|-pa-1, |B|-pb-1) >= t·|A|
+    * the size filter |B| >= k (intersection can't exceed |B|) and
+    * the PPJoin positional bound 1 + min(|A|-pa-1, |B|-pb-1) >= k
     * (both lists share the global (df, h) order, so the first shared
     * shingle's positions cap the achievable overlap). Exact intersect
     * verifies inline; like ngramJaccardPairs the result is
@@ -618,16 +629,7 @@ object Dedup {
       threshold: Double
   ): DataFrame = {
     requirePrefixThreshold(threshold)
-    val hashed = docs
-      .select(
-        col(idCol),
-        array_sort(
-          array_distinct(
-            transform(shingleSet(col(textCol), shingleN), g => xxhash64(g))
-          )
-        ).as("hs")
-      )
-      .withColumn("nsh", size(col("hs")))
+    val hashed = containmentHashed(docs, idCol, textCol, shingleN)
       .filter(col("nsh") > 0)
       .localCheckpoint(false)
     val ex = hashed.select(col(idCol), col("nsh"), explode(col("hs")).as("h"))
@@ -646,7 +648,7 @@ object Dedup {
       .groupBy(col(idCol), col("nsh"))
       .agg(transform(sort_array(collect_list(struct(col("df"), col("h")))), x => x("h")).as("sg"))
       .localCheckpoint(false)
-    val prefixLen = (col("nsh") - ceil(lit(threshold) * col("nsh")) + 1).cast("int")
+    val prefixLen = (col("nsh") - minOverlap(threshold, col("nsh")) + 1).cast("int")
     val prefixes = ordered.select(
       col(idCol), col("nsh"),
       posexplode(slice(col("sg"), lit(1), prefixLen)).as(Seq("pos", "h")))
@@ -655,13 +657,13 @@ object Dedup {
       posexplode(col("sg")).as(Seq("pos", "h")))
     // candidates stay NARROW (ids/sizes/positions); arrays re-join after
     // the pair aggregation so prefix multiplicity never shuffles an array
-    val needed = ceil(lit(threshold) * col("nsh_a"))
+    val needed = minOverlap(threshold, col("nsh_a"))
     val ubound = lit(1) + least(col("nsh_a") - col("pa") - 1, col("nsh_b") - col("pb") - 1)
     val cands = prefixes.alias("a")
       .join(
         full.alias("b"),
         col("a.h") === col("b.h") && col(s"a.$idCol") =!= col(s"b.$idCol")
-          && col("b.nsh") >= lit(threshold) * col("a.nsh")
+          && col("b.nsh") >= minOverlap(threshold, col("a.nsh"))
       )
       .select(
         col(s"a.$idCol").as("id_a"), col("a.nsh").as("nsh_a"), col("a.pos").as("pos_a"),
@@ -669,7 +671,7 @@ object Dedup {
       )
       .groupBy("id_a", "id_b", "nsh_a", "nsh_b")
       .agg(min(col("pos_a")).as("pa"), min(col("pos_b")).as("pb"))
-      .filter(ubound.cast("double") + 1e-9 >= needed)
+      .filter(ubound >= needed)
       .select("id_a", "id_b")
     val inter = org.apache.spark.sql.graft.LongArrayIntersectSize
       .column(col("hs_a"), col("hs_b")).cast("double")
@@ -794,17 +796,8 @@ object Dedup {
       hashed: DataFrame, freq: DataFrame, postings: DataFrame,
       narrow: Option[Broadcast[ContainmentCorpus]] = None)
 
-  /** Posting rows (the sum of the corpus docs' shingle counts) up to
-    * which containmentScreenIndex builds the narrow regime: 2M postings
-    * broadcast as at most 64 MB of arrays (16 bytes per posting plus 16
-    * per distinct shingle; ContainmentCorpus), the byte budget of
-    * NarrowMaxPairRows. ScaleProbe screen-ab times both regimes up to it
-    * (SCALE.md).
-    */
-  val NarrowMaxPostingRows: Long = 2000000L
-
   /** (id, sorted distinct xxhash64 shingle hashes, shingle count) of a
-    * document frame — the shared hashing step of the exact screens.
+    * document frame — the shared hashing step of the exact prefix filters.
     */
   private def containmentHashed(df: DataFrame, idCol: String,
       textCol: String, shingleN: Int): DataFrame = df
@@ -831,12 +824,14 @@ object Dedup {
   /** Build the corpus-side screen index. The hashed corpus is
     * checkpointed and its postings counted in the one job that
     * materializes it; the count picks the regime:
-    *   - narrow, at most NarrowMaxPostingRows postings: the hashed corpus
-    *     is collected once and broadcast as the shingle dictionary with
-    *     each shingle's df, the rare-first postings (doc, c_pos) as CSR
-    *     arrays, and each doc's c_nsh and sorted hashes
-    *     (ContainmentCorpus). Each probe then reads no corpus frame.
-    *   - shuffle, past the bound: the dictionary and postings are
+    *   - narrow, while the postings fit the Narrow.Postings budget (a
+    *     share of the driver heap; SCALE.md gives the bounds): the
+    *     hashed corpus is collected once and broadcast as the shingle
+    *     dictionary with each shingle's df, the rare-first postings
+    *     (doc, c_pos) as CSR arrays, and each doc's c_nsh and sorted
+    *     hashes (ContainmentCorpus). Each probe then reads no corpus
+    *     frame. The broadcast lives as long as the index.
+    *   - shuffle, past the budget: the dictionary and postings are
     *     derived in-plan from the checkpoint, and every probe joins
     *     them. `eager` applies to this regime only: `eager = false` (the
     *     batch q175 shape) leaves them lazy; `eager = true` (a streaming
@@ -852,37 +847,13 @@ object Dedup {
       shingleN: Int,
       eager: Boolean = false
   ): ContainmentScreenIndex = {
-    val hc = hashedCorpus(corpus, idCol, textCol, shingleN)
-    screenIndexOn(hc, idCol, eager,
-      narrow = ContainmentCorpus.postingRows(hc) <= NarrowMaxPostingRows)
-  }
-
-  /** containmentScreenIndex in the regime the caller names: `narrow`
-    * collects the corpus whatever its size, so only a caller that bounds
-    * it (or a test comparing the regimes) may pass true.
-    */
-  private[graft] def containmentScreenIndexIn(
-      corpus: DataFrame,
-      idCol: String,
-      textCol: String,
-      shingleN: Int,
-      eager: Boolean,
-      narrow: Boolean
-  ): ContainmentScreenIndex =
-    screenIndexOn(hashedCorpus(corpus, idCol, textCol, shingleN), idCol, eager, narrow)
-
-  /** The corpus docs with at least one shingle and their per-doc key
-    * `c_rk` (taken before the checkpoint), checkpointed lazily.
-    */
-  private def hashedCorpus(corpus: DataFrame, idCol: String, textCol: String,
-      shingleN: Int): DataFrame =
-    containmentHashed(corpus, idCol, textCol, shingleN)
+    // the docs with at least one shingle and their per-doc key `c_rk`
+    // (taken before the checkpoint)
+    val hc = containmentHashed(corpus, idCol, textCol, shingleN)
       .filter(col("nsh") > 0)
       .withColumn("c_rk", monotonically_increasing_id())
       .localCheckpoint(false)
-
-  private def screenIndexOn(hc: DataFrame, idCol: String, eager: Boolean,
-      narrow: Boolean): ContainmentScreenIndex = {
+    val narrow = Narrow.fits(Narrow.Postings -> ContainmentCorpus.postingRows(hc))
     val exC = hc.select(col("c_rk"), col("nsh"), explode(col("hs")).as("h"))
     val freq0 = exC.groupBy("h").agg(count(lit(1)).as("df"))
     val pinned = eager && !narrow
@@ -891,10 +862,10 @@ object Dedup {
       .select(col("c_rk"), col("nsh").as("c_nsh"),
         posexplode(col("sg")).as(Seq("c_pos", "h")))
     val fullB = if (pinned) fullB0.localCheckpoint(true) else fullB0
-    val corpus =
-      if (narrow) Some(hc.sparkSession.sparkContext.broadcast(ContainmentCorpus.collect(hc, idCol)))
+    val shared =
+      if (narrow) Some(Narrow.share(hc.sparkSession, ContainmentCorpus.collect(hc, idCol)))
       else None
-    ContainmentScreenIndex(hc, freq, fullB, corpus)
+    ContainmentScreenIndex(hc, freq, fullB, shared)
   }
 
   /** Incremental CONTAINMENT screen — the ingest-time question
@@ -966,20 +937,20 @@ object Dedup {
     */
   private def shuffleContainers(probe: DataFrame, index: ContainmentScreenIndex,
       idCol: String, threshold: Double): DataFrame = {
-    val prefixLen = (col("nsh") - ceil(lit(threshold) * col("nsh")) + 1).cast("int")
+    val prefixLen = (col("nsh") - minOverlap(threshold, col("nsh")) + 1).cast("int")
     val prefA = rareFirstOrder(
         probe.select(col("rk"), col("nsh"), explode(col("hs")).as("h")),
         index.freq, "rk", "left")
       .select(col("rk"), col("nsh"),
         posexplode(slice(col("sg"), lit(1), prefixLen)).as(Seq("pos", "h")))
-    val needed = ceil(lit(threshold) * col("nsh"))
+    val needed = minOverlap(threshold, col("nsh"))
     val ubound = lit(1) + least(col("nsh") - col("pa") - 1, col("c_nsh") - col("pb") - 1)
     val cands = prefA
       .join(index.postings, Seq("h"))
-      .filter(col("c_nsh") >= lit(threshold) * col("nsh"))
+      .filter(col("c_nsh") >= needed)
       .groupBy(col("rk"), col("c_rk"), col("nsh"), col("c_nsh"))
       .agg(min(col("pos")).as("pa"), min(col("c_pos")).as("pb"))
-      .filter(ubound.cast("double") + 1e-9 >= needed)
+      .filter(ubound >= needed)
       .select(col("rk"), col("c_rk"))
     val inter = org.apache.spark.sql.graft.LongArrayIntersectSize
       .column(col("hs"), col("c_hs")).cast("double")
@@ -1135,13 +1106,6 @@ object Dedup {
       .withColumn("kept", col("n_containers") === 0)
   }
 
-  /** Pair rows up to which resolveGroups and keepBest resolve groups on
-    * the driver (the narrow regime). 4M pairs collect as 64 MB of longs,
-    * the row bound of NnDescent.BroadcastMaxGraphRows; ScaleProbe
-    * groups-ab times both regimes just under it (SCALE.md).
-    */
-  val NarrowMaxPairRows: Long = 4000000L
-
   private val DefaultMaxIter = 64
 
   /** Collapse near-dup PAIRS into duplicate groups: every doc gets
@@ -1156,12 +1120,13 @@ object Dedup {
     * The pair list is checkpointed once and counted (the count is the
     * job that materializes it, so the regime check costs no job of its
     * own). The count picks one of two regimes:
-    *   - narrow, at most NarrowMaxPairRows pairs: the list is collected
-    *     in one job, a min-root union-find labels it on the driver
-    *     (DupComponents), and the labels of the edge-touched ids join
-    *     back to `docs` as a driver-built broadcast frame. `maxIter`
-    *     does not apply.
-    *   - shuffle, past the bound: the distributed loop below, where no
+    *   - narrow, while the list fits the Narrow.Pairs budget (a share
+    *     of the driver heap; SCALE.md gives the bounds): the list is
+    *     collected in one job, a min-root union-find labels it on the
+    *     driver (DupComponents), and the labels of the edge-touched ids
+    *     join back to `docs` as a driver-built broadcast frame.
+    *     `maxIter` does not apply.
+    *   - shuffle, past the budget: the distributed loop below, where no
     *     vertex data reaches the driver.
     *
     * The shuffle regime is iterative min-label propagation WITH pointer
@@ -1189,7 +1154,13 @@ object Dedup {
   ): DataFrame = {
     requireIntegralIds(docs, idCol, pairs)
     val (list, narrow) = pairList(pairs)
-    resolveGroupsIn(docs, idCol, list, narrow, maxIter)
+    val labels =
+      if (narrow) broadcast(DupComponents.collect(list).labels(docs.sparkSession))
+      else shuffleLabels(list, maxIter)
+    docs
+      .select(col(idCol).cast("long").as("id"))
+      .join(labels, Seq("id"), "left")
+      .select(col("id").as(idCol), coalesce(col("keep_id"), col("id")).as("keep_id"))
   }
 
   /** The (id_a, id_b) pair list, checkpointed lazily and materialized by
@@ -1197,7 +1168,7 @@ object Dedup {
     */
   private def pairList(pairs: DataFrame): (DataFrame, Boolean) = {
     val list = CheckpointStats.freshCheckpoint(pairs.select("id_a", "id_b"), eager = false)
-    (list, CheckpointStats.rowCount(list) <= NarrowMaxPairRows)
+    (list, Narrow.fits(Narrow.Pairs -> CheckpointStats.rowCount(list)))
   }
 
   /** A non-integral id would silently cast to null and propagate garbage
@@ -1213,26 +1184,6 @@ object Dedup {
             org.apache.spark.sql.types.LongType).contains(t),
         s"resolveGroups requires integral ids; '$c' is $t")
     }
-
-  /** resolveGroups in the regime the caller names: `narrow` collects the
-    * pairs whatever their number, so only a caller that bounds them (or
-    * a test comparing the regimes) may pass true.
-    */
-  private[graft] def resolveGroupsIn(
-      docs: DataFrame,
-      idCol: String,
-      pairs: DataFrame,
-      narrow: Boolean,
-      maxIter: Int
-  ): DataFrame = {
-    val labels =
-      if (narrow) broadcast(DupComponents.collect(pairs).labels(docs.sparkSession))
-      else shuffleLabels(pairs, maxIter)
-    docs
-      .select(col(idCol).cast("long").as("id"))
-      .join(labels, Seq("id"), "left")
-      .select(col("id").as(idCol), coalesce(col("keep_id"), col("id")).as("keep_id"))
-  }
 
   /** The shuffle regime's labels: (id, keep_id) for every edge-touched id. */
   private def shuffleLabels(pairs: DataFrame, maxIter: Int): DataFrame = {
@@ -1357,8 +1308,9 @@ object Dedup {
     * Output: one row per doc with a non-null id — (id, group_id,
     * best_id, kept); an untouched doc is (id, id, id, true). The regime
     * is resolveGroups': narrow takes the argmax over the touched docs
-    * only (a per-component candidate per task, merged on the driver) and
-    * attaches it with one broadcast left join over `docs`; shuffle takes
+    * only (a per-component candidate per task against the broadcast
+    * components, merged on the driver, after which the broadcast is
+    * released) and attaches it with one broadcast left join over `docs`; shuffle takes
     * it with a per-group WindowGroupLimit (rank-1 rows truncate inside
     * each partition) over the labeled docs, joined back by group id.
     */
@@ -1370,28 +1322,17 @@ object Dedup {
   ): DataFrame = {
     requireIntegralIds(docs, idCol, pairs)
     val (list, narrow) = pairList(pairs)
-    keepBestIn(docs, idCol, list, qualityCol, narrow)
-  }
-
-  /** keepBest in the regime the caller names (see resolveGroupsIn). */
-  private[graft] def keepBestIn(
-      docs: DataFrame,
-      idCol: String,
-      pairs: DataFrame,
-      qualityCol: String,
-      narrow: Boolean
-  ): DataFrame = {
     val keyed = docs.select(col(idCol).cast("long").as(idCol), col(qualityCol))
       .filter(col(idCol).isNotNull)
     val groups =
       if (narrow) {
-        val best = DupComponents.collect(pairs).best(docs, idCol, qualityCol)
+        val best = DupComponents.collect(list).best(docs, idCol, qualityCol)
           .withColumnRenamed("id", idCol)
         keyed.join(broadcast(best), Seq(idCol), "left")
           .select(col(idCol), coalesce(col("group_id"), col(idCol)).as("group_id"),
             coalesce(col("best_id"), col(idCol)).as("best_id"))
       } else {
-        val labels = shuffleLabels(pairs, DefaultMaxIter).withColumnRenamed("id", idCol)
+        val labels = shuffleLabels(list, DefaultMaxIter).withColumnRenamed("id", idCol)
         val labeled = keyed.join(labels, Seq(idCol), "left")
           .select(col(idCol), coalesce(col("keep_id"), col(idCol)).as("group_id"),
             col(qualityCol))

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.{CheckpointStats, Md5Long60, NarrowRounds}
+import org.apache.spark.sql.graft.{CheckpointStats, Md5Long60, Narrow, NarrowRounds}
 
 /** kNN-graph construction by NN-Descent (Dong, Moses & Li, "Efficient
   * k-nearest neighbor graph construction for generic similarity
@@ -29,14 +29,20 @@ import org.apache.spark.sql.graft.{CheckpointStats, Md5Long60, NarrowRounds}
   * <= N * cap^2 rows BY CONSTRUCTION (each node contributes its <= cap
   * undirected neighbors' <= cap neighbor lists), so total work is
   * LINEAR in N per round at fixed k; rounds needed grow ~log N.
-  *   - NARROW regime, iff the vector table and the graph are both under
-  *     their broadcast bounds (BroadcastMaxVecRows, BroadcastMaxGraphRows
-  *     — every registered corpus qualifies): the vectors are broadcast
-  *     once per build, the graph and its ρ-capped adjacency once per
-  *     round, and each round is ONE narrow pass over the src ids that
-  *     expands, scores and keeps the top k per src (NarrowRounds) — no
-  *     shuffle, window or sort ever touches the cap² bag.
-  *   - SHUFFLE regime (the 100 TB shape; either bound exceeded): every
+  *   - NARROW regime, iff the vectors (N rows of their measured width)
+  *     and the k·N graph rows fit the driver-heap budget together
+  *     (Narrow.Vectors + Narrow.Graph against Narrow.budget — every
+  *     registered corpus qualifies; SCALE.md gives the bounds): the
+  *     vectors are broadcast once per build, the graph and its ρ-capped
+  *     adjacency once per round, and each round is ONE narrow pass over
+  *     the src ids that expands, scores and keeps the top k per src
+  *     (NarrowRounds) — no shuffle, window or sort ever touches the cap²
+  *     bag. A round's graph broadcast is destroyed once the round's
+  *     checkpoint is cut from its lineage, the vectors' with the last
+  *     one's. The broadcast is no scale path: at billions of vectors the
+  *     co-location lever is partitioning the graph so neighbourhoods and
+  *     their vectors land together.
+  *   - SHUFFLE regime (the 100 TB shape; past the budget): every
   *     step is an equi-join or a bounded window — never a cross join,
   *     never a driver loop over data. Vector payloads never ride a
   *     cap²-sized frame: scoring happens INSIDE the pivot self-join
@@ -96,23 +102,6 @@ object NnDescent {
       .select("src", "dst")
       .distinct()
 
-  /** Vector rows above which a build leaves the narrow regime (see the
-    * header: narrow iff this AND BroadcastMaxGraphRows hold) for the
-    * shuffle regime. The narrow regime collects and broadcasts the whole
-    * vector table once per build: 500k rows of 64-dim doubles is
-    * ~260 MB — comfortable on the 128 GiB-executor target, far under it
-    * on a real cluster's 8-32 GiB executors only if dims stay modest;
-    * beyond the bound the rounds shuffle, which is the honest 100 TB
-    * regime (at billions of vectors the real co-location lever is
-    * partitioning the graph so neighborhoods and their vectors land
-    * together — out of scope for this builder, documented here so nobody
-    * mistakes the broadcast for the scale path). Override with the
-    * graft.nnd.broadcastMaxVecRows system property (0 forces the shuffle
-    * regime — NnDescentSpec and ScaleProbe nnd-ab use it).
-    */
-  def BroadcastMaxVecRows: Long =
-    sys.props.get("graft.nnd.broadcastMaxVecRows").map(_.toLong).getOrElse(500000L)
-
   /** Number of pivot slices the SHUFFLE-regime expansion executes in
     * (default 1 = single pass). Slicing bounds PEAK DISK, which round
     * 16 measured to be the shuffle regime's true capacity limit even
@@ -140,18 +129,16 @@ object NnDescent {
     * knnGraph/upsertGraph — round 16 proved slicing is load-bearing for
     * any big shuffle-regime build (the unsliced 600k pass needed ~95 GB
     * of disk and died; S = 3 completed at 44 GB peak), so the engine
-    * must not default to the plan that dies. The env/prop here is an
-    * explicit OVERRIDE for A/Bs and probes, read only by deriveSlices;
+    * must not default to the plan that dies. The property here is an
+    * explicit OVERRIDE for A/Bs and probes, read only by buildParams;
     * unset means "derive".
     */
   def ExpansionSlicesOverride: Option[Int] =
-    sys.props.get("graft.nnd.expansionSlices")
-      .orElse(sys.env.get("SPARK_GRAFT_NND_SLICES"))
-      .map(_.toInt)
+    sys.props.get("graft.nnd.expansionSlices").map(_.toInt)
 
   /** Local-disk budget one shuffle-regime expansion pass may occupy,
-    * in bytes. Override via graft.nnd.diskBudgetBytes /
-    * SPARK_GRAFT_NND_DISK_BUDGET; the default measures the usable space
+    * in bytes. Override via graft.nnd.diskBudgetBytes; the default
+    * measures the usable space
     * on the device Spark actually spills to (spark.local.dir, default
     * java.io.tmpdir) and takes HALF — the safety factor covers what the
     * footprint model leaves out (checkpoint blocks from earlier rounds
@@ -162,7 +149,6 @@ object NnDescent {
     */
   def DiskBudgetBytes: Long =
     sys.props.get("graft.nnd.diskBudgetBytes")
-      .orElse(sys.env.get("SPARK_GRAFT_NND_DISK_BUDGET"))
       .map(_.toLong)
       .getOrElse {
         val dir = new java.io.File(
@@ -215,22 +201,6 @@ object NnDescent {
     math.max(1, math.ceil(
       2.0 * roundFootprintBytes(n, cap, dim) / math.max(1L, budget)).toInt)
 
-  /** Graph-row bound of the narrow regime: each narrow round collects
-    * the current graph (k·N narrow rows — up to 10M at NndK = 20 under
-    * the 500k-vector bound) and broadcasts it with its capped adjacency,
-    * and per-row overhead, not the 16-byte payload, dominates those
-    * arrays. Guarding them on the VECTOR row count alone (round-13
-    * advice) would let a graph several times the vector table's bytes
-    * ride the same broadcast near the boundary. 8x the vector bound ≈
-    * equal bytes: a vector row is ~520 B of payload vs ~65 B/row for a
-    * narrow pair. Scales with any override of the vector bound, so a
-    * forced-shuffle A/B (bound = 0) leaves the narrow regime. With the
-    * derived width autoK(N) the graph bound binds first: builds in the
-    * band (4M / autoK(N), 500k] vectors (about 93k to 500k) run the
-    * shuffle regime (SCALE.md).
-    */
-  def BroadcastMaxGraphRows: Long = 8L * BroadcastMaxVecRows
-
   private def vecSide(vecs: DataFrame, idAs: String, dvAs: String, nrmAs: String,
       bcast: Boolean): DataFrame = {
     val side = vecs.select(col("vec_id").as(idAs), col("dv").as(dvAs), col("nrm").as(nrmAs))
@@ -278,6 +248,25 @@ object NnDescent {
         .cast("long"))
       .filter(col("rank") <= k)
       .distinct()
+
+  /** The union of the slices' scored bags `bag(slice)`, each cut to its
+    * per-src top k and checkpointed (see ExpansionSlicesOverride).
+    */
+  private def slicedCuts(slices: Int, k: Int)(bag: Int => DataFrame): DataFrame =
+    (0 until slices).map(sl =>
+      CheckpointStats.freshCheckpoint(topKCut(bag(sl), k).select("src", "dst", "cos_sim"))
+    ).reduce(_.unionByName(_))
+
+  /** The ρ-sample of an undirected adjacency (src, dst, ...): each src
+    * keeps its first `capN` neighbours by (md5_60("nndr_round_src_dst"),
+    * dst), the row_number window NarrowRounds reproduces on the driver.
+    */
+  private def capSample(und: DataFrame, round: Int, capN: Int): DataFrame =
+    und.withColumn("rk", row_number().over(Window.partitionBy("src").orderBy(
+        Md5Long60.column(concat_ws("_", lit("nndr"), lit(round), col("src"), col("dst"))).asc,
+        col("dst").asc)))
+      .filter(col("rk") <= capN)
+      .drop("rk")
 
   /** Score the two-hop expansion of a capped undirected adjacency WITHOUT
     * ever materializing an N·cap²-row frame that carries a vector
@@ -340,7 +329,7 @@ object NnDescent {
     * pass over the k·N current edges.
     *
     * `slices` is the shuffle-regime slice count (descend passes
-    * BuildParams.slices, i.e. deriveSlices' pick); 1 is a single pass.
+    * BuildParams.slices, i.e. buildParams' pick); 1 is a single pass.
     */
   def iterate(g: DataFrame, vecs: DataFrame, k: Int, cap: Int = -1, round: Int = 0,
       slices: Int = 1): (DataFrame, DataFrame) = {
@@ -367,15 +356,9 @@ object NnDescent {
     // ships. Callers pass the oracle's unroll index t; the default 0
     // keeps single-round uses (and the round-0 build) on the t = 0 draw.
     val capN = if (cap > 0) cap else 2 * k
-    val und = g.select(col("src"), col("dst"))
+    val und = capSample(g.select(col("src"), col("dst"))
       .union(g.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      .withColumn("rk", row_number().over(Window.partitionBy("src").orderBy(
-        Md5Long60.column(concat_ws("_",
-          lit("nndr"), lit(round), col("src"), col("dst"))).asc,
-        col("dst").asc)))
-      .filter(col("rk") <= capN)
-      .select("src", "dst")
+      .distinct(), round, capN)
     // the candidate SET: two-hop pairs plus the current edges —
     // returned for the audit's volume count (the oracle's c$t is
     // DISTINCT); the build itself never materializes it: deduping the
@@ -400,15 +383,13 @@ object NnDescent {
         // slice expands its pivots, scores, cuts to per-src top-k, and
         // CHECKPOINTS the narrow cut so its shuffle files free before
         // the next slice; the union re-ranks below — exact.
-        (0 until slices).map { sl =>
-          CheckpointStats.freshCheckpoint(topKCut(
-            scoreTwoHopLocal(und, vecs, slice = sl, slices = slices)
-              .union(scoreFlat(
-                g.select(col("src"), col("dst"))
-                  .filter(pmod(col("dst"), lit(slices.toLong)) === sl),
-                vecs, bcastVecs = false)), k)
-            .select("src", "dst", "cos_sim"))
-        }.reduce(_.unionByName(_))
+        slicedCuts(slices, k) { sl =>
+          scoreTwoHopLocal(und, vecs, slice = sl, slices = slices)
+            .union(scoreFlat(
+              g.select(col("src"), col("dst"))
+                .filter(pmod(col("dst"), lit(slices.toLong)) === sl),
+              vecs, bcastVecs = false))
+        }
       }
     // final per-src top-k (see topKCut for the bag ≡ set argument); the
     // cut output is ≤ N·k rows + duplicate surplus, ~40x smaller than
@@ -459,15 +440,9 @@ object NnDescent {
     // md5-rank sample — see iterate's scaladoc: a fresh draw per round is
     // what lets every neighbor eventually join the local join) — plus
     // the edge flag, OR-merged when both directions exist
-    val und = g.select(col("src"), col("dst"), col("is_new"))
+    val und = capSample(g.select(col("src"), col("dst"), col("is_new"))
       .union(g.select(col("dst").as("src"), col("src").as("dst"), col("is_new")))
-      .groupBy("src", "dst").agg(max(col("is_new")).as("is_new"))
-      .withColumn("rk", row_number().over(Window.partitionBy("src").orderBy(
-        Md5Long60.column(concat_ws("_",
-          lit("nndr"), lit(round), col("src"), col("dst"))).asc,
-        col("dst").asc)))
-      .filter(col("rk") <= capN)
-      .select("src", "dst", "is_new")
+      .groupBy("src", "dst").agg(max(col("is_new")).as("is_new")), round, capN)
     // new-leg candidates; pairs already in the graph carry their score
     // in `g` and are never rescored (the anti-join also keeps the next
     // union free of (src,dst) collisions, which the dense_rank dedup
@@ -497,25 +472,17 @@ object NnDescent {
         // the per-slice cut is a superset of each pair's final rank
         // eligibility, and the anti-join applies per slice so the union
         // stays (src, dst)-collision-free against g
-        (0 until slices).map { sl =>
-          CheckpointStats.freshCheckpoint(topKCut(
-            scoreTwoHopLocal(und.select("src", "dst", "is_new"), vecs,
-              extraCond = col("a.is_new") || col("b.is_new"),
-              slice = sl, slices = slices)
-              .join(gPairs, Seq("src", "dst"), "left_anti"), k)
-            .select("src", "dst", "cos_sim"))
-        }.reduce(_.unionByName(_))
+        slicedCuts(slices, k) { sl =>
+          scoreTwoHopLocal(und.select("src", "dst", "is_new"), vecs,
+            extraCond = col("a.is_new") || col("b.is_new"), slice = sl, slices = slices)
+            .join(gPairs, Seq("src", "dst"), "left_anti")
+        }
     // dense_rank over the bag ≡ row_number over the set (see iterate);
     // g's rows are distinct and anti-joined away from scored, so the
     // only (src,dst) collisions are scored-side duplicates, which agree
     // on every column including is_new
-    val ranked = g.select("src", "dst", "cos_sim").withColumn("is_new", lit(false))
-      .unionByName(scored.withColumn("is_new", lit(true)))
-      .withColumn("rank", dense_rank().over(
-        Window.partitionBy("src").orderBy(col("cos_sim").desc, col("dst").asc))
-        .cast("long"))
-      .filter(col("rank") <= k)
-      .distinct()
+    val ranked = topKCut(g.select("src", "dst", "cos_sim").withColumn("is_new", lit(false))
+      .unionByName(scored.withColumn("is_new", lit(true))), k)
     (newCand, ranked)
   }
 
@@ -557,18 +524,18 @@ object NnDescent {
       cap: Int = -1
   ): DataFrame = {
     val vecs = CheckpointStats.freshCheckpoint(vecFrame(vectors, idCol, vecCol))
-    // same two-bound guard policy as knnGraph (vector payloads vs narrow
-    // graph relations), decided from the merged materialized count;
+    // same regime policy as knnGraph (vector payloads plus narrow graph
+    // rows against the budget), decided from the merged materialized count;
     // rounds <= 0 derives the count from merged N (autoIters — the h10
     // probe showed the 4-round upsert's new nodes beating the 3-round
     // rebuild's at a quarter of the wall)
-    val nAll = CheckpointStats.rowCount(vecs)
+    val (nAll, dim) = vecStats(vecs)
     val nRounds = if (rounds >= 1) rounds else autoIters(nAll)
     // k == 0 / cap == 0 derive from MERGED N (knnGraph's convention) —
     // the derived width may exceed the base graph's build width by a
     // little near an autoK breakpoint, which is safe: old lists simply
     // hold <= base-k edges until new candidates fill the wider cut.
-    val params = buildParams(vecs, nAll, k, cap)
+    val params = buildParams(nAll, dim, k, cap)
     // rounds from t = 1: the oracle's upsert unroll indexes upg rounds
     // from t = 1 (t = 0 is the base build's iterate round)
     descend(upsertStart(baseGraph, vecs, newVectors.select(col(idCol).cast("long").as("src")),
@@ -611,21 +578,31 @@ object NnDescent {
     * four in-plan self-references compute it once, so a per-round eager
     * job is pure fixed cost. q196 (broadcast futures race a lazy cut)
     * and ScaleProbe (per-round timing) pass eager = true.
+    *
+    * In the narrow regime a round's candidates read its graph broadcast,
+    * which is destroyed once the round's checkpoint is materialized (the
+    * vectors' broadcast with the last round's), so the observer consumes
+    * them before it returns. The q196 audit folds every round's
+    * candidates into one later aggregate and passes `keepCandidates`,
+    * which leaves the broadcasts to the context cleaner.
     */
   private[graft] def descend(start: DataFrame, vecs: DataFrame, p: BuildParams,
-      rounds: Range, eager: Boolean = false,
+      rounds: Range, eager: Boolean = false, keepCandidates: Boolean = false,
       observe: (Int, DataFrame, DataFrame) => Unit = (_, _, _) => ()): DataFrame = {
-    val round: (DataFrame, Int) => (DataFrame, DataFrame) =
-      if (p.narrow) new NarrowRounds(vecs, p.k, p.cap).apply
-      else (g, t) =>
+    val narrow = if (p.narrow) Some(new NarrowRounds(vecs, p.k, p.cap)) else None
+    val round: (DataFrame, Int) => (DataFrame, DataFrame) = narrow match {
+      case Some(n) => n.apply
+      case None => (g, t) =>
         if (t == 0) {
           val (c, r) = iterate(g, vecs, p.k, p.cap, slices = p.slices)
           (c, markNew(r, g))
         } else iterateInc(g, vecs, p.k, p.cap, round = t, slices = p.slices)
+    }
     rounds.foldLeft(start) { (g, t) =>
       val (cand, ranked) = round(g, t)
       val next = CheckpointStats.freshCheckpoint(ranked, eager = eager || t == 0)
       observe(t, cand, next)
+      if (!keepCandidates) narrow.foreach(_.release(next, last = t == rounds.last))
       next
     }
   }
@@ -703,12 +680,12 @@ object NnDescent {
       cap: Int = -1
   ): DataFrame = {
     val vecs = CheckpointStats.freshCheckpoint(vecFrame(vectors, idCol, vecCol))
-    // the regime is decided here from the materialized count (the frame
-    // is already checkpointed; the count reads cached blocks): the
-    // checkpoint resets stats, so Catalyst alone cannot size anything
-    val nVecs = CheckpointStats.rowCount(vecs)
+    // the regime is decided here from the materialized count and width
+    // (the frame is already checkpointed; the job reads cached blocks):
+    // the checkpoint resets stats, so Catalyst alone cannot size anything
+    val (nVecs, dim) = vecStats(vecs)
     val nIters = if (iters >= 1) iters else autoIters(nVecs)
-    val params = buildParams(vecs, nVecs, k, cap)
+    val params = buildParams(nVecs, dim, k, cap)
     // initGraph's draw over the checkpointed ids, with the count held as
     // a literal: vecFrame is a pure projection, so nVecs is count(vectors)
     // row for row (null and duplicate ids included)
@@ -730,34 +707,28 @@ object NnDescent {
     * direct/spec callers with an explicit k — when k derives, any
     * cap <= 0 derives too (round-15 advice: the asymmetric sentinel
     * could silently build a derived-width/ρ=1 config no oracle models).
-    * The regime is decided from the same count: narrow iff the vectors
-    * fit BroadcastMaxVecRows AND the k·N graph rows fit
-    * BroadcastMaxGraphRows.
+    * The regime is decided from the same count and the widest vector
+    * `dim`: narrow iff N vectors of that width (Narrow.Vectors) and the
+    * k·N graph rows (Narrow.Graph) fit the driver-heap budget together.
     */
-  private[graft] def buildParams(vecs: DataFrame, n: Long, k: Int,
-      cap: Int): BuildParams = {
+  private[graft] def buildParams(n: Long, dim: Int, k: Int, cap: Int): BuildParams = {
     val kUse = if (k >= 1) k else autoK(n)
     val capUse = if (cap > 0) cap else if (cap == 0 || k < 1) autoCap(kUse) else cap
-    val narrow = n <= BroadcastMaxVecRows && kUse.toLong * n <= BroadcastMaxGraphRows
-    BuildParams(kUse, capUse, narrow, deriveSlices(vecs, n, capUse, narrow))
+    val narrow = Narrow.fits(Narrow.Vectors(dim) -> n, Narrow.Graph -> kUse.toLong * n)
+    val slices = if (narrow) 1 else ExpansionSlicesOverride.getOrElse(autoSlices(n, capUse, dim))
+    BuildParams(kUse, capUse, narrow, slices)
   }
 
-  /** Slice count for the composed builders: the explicit override if
-    * set (A/Bs, probes), else autoSlices from (N, cap, measured vector
-    * width, disk budget). Narrow-regime builds never slice — the
-    * expansion is never materialized to disk there — so the dimension
-    * lookup (one row off the already-checkpointed vecs frame) is paid
-    * only past the broadcast boundary, where a build costs minutes and
-    * the lookup costs milliseconds. The derived default must be the
-    * plan that survives: round 16's unsliced 600k pass died at ~95 GB
-    * while the S the formula picks (3) completed at 44 GB peak.
+  /** (rows, widest vector) of a vecFrame checkpoint in one job over its
+    * internal rows — the job `rowCount` would run. Narrow-regime builds
+    * never slice (the expansion never reaches disk there); past the
+    * budget the width also sizes autoSlices' footprint, so a build costs
+    * no separate width lookup.
     */
-  private def deriveSlices(vecs: DataFrame, n: Long, cap: Int,
-      narrow: Boolean): Int =
-    if (narrow) 1
-    else ExpansionSlicesOverride.getOrElse {
-      val dim = vecs.select(size(col("dv")))
-        .limit(1).collect().headOption.map(_.getInt(0)).getOrElse(0)
-      autoSlices(n, cap, dim)
-    }
+  private[graft] def vecStats(vecs: DataFrame): (Long, Int) = {
+    def add(a: (Long, Int), b: (Long, Int)) = (a._1 + b._1, math.max(a._2, b._2))
+    Narrow.collect(vecs.select(size(col("dv"))))(
+      _.map(r => (1L, if (r.isNullAt(0)) 0 else r.getInt(0))).foldLeft((0L, 0))(add)
+    ).foldLeft((0L, 0))(add)
+  }
 }

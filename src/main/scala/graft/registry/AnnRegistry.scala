@@ -640,7 +640,7 @@ trait AnnRegistry extends RegistryBase {
           NndK, "nnd0", col("n_nodes"), col("mm")))
       val nndRounds = scala.collection.mutable.ArrayBuffer.empty[(Int, DataFrame, DataFrame)]
       NnDescent.descend(g0, vecs, NnDescent.BuildParams(NndK, NndCap, narrow = true, slices = 1),
-        0 until NndIters, eager = true,
+        0 until NndIters, eager = true, keepCandidates = true,
         observe = (t, candT, gT) => nndRounds += ((t + 1, candT, gT)))
       val volRows = nndRounds.map { case (t, candT, _) =>
           candT.select(lit(s"nnd_iter_$t").as("config"))

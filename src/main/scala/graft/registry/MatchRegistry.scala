@@ -23,14 +23,15 @@ trait MatchRegistry extends RegistryBase {
         .select(col("doc_id"), octet_length(col("text")).cast("long").as("byte_len"))
         .orderBy("doc_id")),
 
-    // §2 op 3: bigram extraction (counts; list payloads stay engine-side)
+    // §2 op 3: bigram extraction (counts; list payloads stay engine-side).
+    // The byte bigrams as codegen'd int codes, one per bigram, so the
+    // count is the array size and distinct codes are distinct bigrams; a
+    // null text counts as the empty string
     "q03_bigram_stats" -> ((s, dir) =>
       spread(s, rd(s, dir, "documents"))
-        .select(
-          col("doc_id"),
-          size(TextFunctions.byteBigrams(col("text"))).cast("long").as("n_bigrams"),
-          size(array_distinct(TextFunctions.byteBigrams(col("text")))).cast("long").as("n_distinct")
-        )
+        .select(col("doc_id"), TextFunctions.byteBigramCodes(coalesce(col("text"), lit(""))).as("c"))
+        .select(col("doc_id"), size(col("c")).cast("long").as("n_bigrams"),
+          size(array_distinct(col("c"))).cast("long").as("n_distinct"))
         .orderBy("doc_id")),
 
     // §2 ops 4-6: cross join + per-pair coverage + length difference

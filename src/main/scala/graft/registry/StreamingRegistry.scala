@@ -618,8 +618,9 @@ trait StreamingRegistry extends RegistryBase {
         // batch 0's addBatch), so the old intermediate eager checkpoint
         // of the corpus TEXT is gone — one fewer corpus-sized
         // materialization. Same expressions, same oracle as q175. While
-        // the corpus postings fit Dedup.NarrowMaxPostingRows (sf0.01 and
-        // sf0.1 do), the index is a broadcast and each micro-batch is
+        // the corpus postings fit the Narrow.Postings budget (sf0.01 and
+        // sf0.1 do, at any driver heap from 2 GB), the index is a
+        // broadcast and each micro-batch is
         // one narrow pass that reads no corpus frame; `eager` then has
         // nothing to pin.
         val index = Dedup.containmentScreenIndex(corpus, "doc_id", "text",

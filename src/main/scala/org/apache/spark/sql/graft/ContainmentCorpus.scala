@@ -5,15 +5,17 @@ import scala.collection.mutable.ArrayBuilder
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.classic.{Dataset, SparkSession}
+import org.apache.spark.sql.classic.Dataset
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
+import graft.operators.Dedup
+
 /** The corpus side of Dedup's exact containment screen in its narrow
   * regime (Dedup.containmentScreenIndex takes it while the corpus
-  * postings are under Dedup.NarrowMaxPostingRows): the hashed corpus,
-  * collected once and broadcast as flat arrays.
+  * postings fit the Narrow.Postings budget): the hashed corpus,
+  * collected once through Narrow and broadcast as flat arrays for as
+  * long as the index lives.
   *
   *   - the shingle dictionary: `dict` (distinct hashes, ascending) with
   *     each shingle's document frequency `df`;
@@ -26,7 +28,8 @@ import org.apache.spark.sql.types._
   *     null-id doc counts toward df and holds postings, but is never a
   *     container, as in the shuffle regime's verify join on the id.
   *
-  * 16 bytes per posting plus 16 per distinct shingle.
+  * 16 bytes per posting plus 16 per distinct shingle (Narrow.Postings
+  * declares 32 per posting, as a shingle has at least one).
   */
 final class ContainmentCorpus private (
     val dict: Array[Long], val df: Array[Int],
@@ -44,28 +47,26 @@ object ContainmentCorpus {
     * it).
     */
   def postingRows(hashed: DataFrame): Long =
-    hashed.select(col("nsh")).asInstanceOf[Dataset[_]].queryExecution.toRdd
-      .map(_.getInt(0).toLong).fold(0L)(_ + _)
+    Narrow.collect(hashed.select(col("nsh")))(_.map(_.getInt(0).toLong).sum).sum
 
   /** Collect a hashed corpus (id, hs sorted ascending and distinct, nsh
     * > 0) in one job and build the arrays. The caller bounds its size.
     */
   def collect(hashed: DataFrame, idCol: String): ContainmentCorpus = {
-    val parts = hashed.select(col(idCol).isNotNull, col("hs"))
-      .asInstanceOf[Dataset[_]].queryExecution.toRdd.mapPartitions { it =>
-        val (live, len, hs) =
-          (ArrayBuilder.make[Boolean], ArrayBuilder.make[Int], ArrayBuilder.make[Long])
-        it.foreach { r =>
-          val a = r.getArray(1)
-          live += r.getBoolean(0); len += a.numElements()
-          var i = 0
-          while (i < a.numElements()) { hs += a.getLong(i); i += 1 }
-        }
-        Iterator((live.result(), len.result(), hs.result()))
-      }.collect()
-    val docLive = parts.flatMap(_._1)
-    val lens = parts.flatMap(_._2)
-    val docH = parts.flatMap(_._3)
+    val parts = Narrow.collect(hashed.select(col(idCol).isNotNull, col("hs"))) { it =>
+      val (live, len, hs) =
+        (ArrayBuilder.make[Boolean], ArrayBuilder.make[Int], ArrayBuilder.make[Long])
+      it.foreach { r =>
+        val a = r.getArray(1)
+        live += r.getBoolean(0); len += a.numElements()
+        var i = 0
+        while (i < a.numElements()) { hs += a.getLong(i); i += 1 }
+      }
+      (live.result(), len.result(), hs.result())
+    }
+    val docLive = Narrow.flat(parts.map(_._1))
+    val lens = Narrow.flat(parts.map(_._2))
+    val docH = Narrow.flat(parts.map(_._3))
     val nDocs = lens.length
     val docStart = new Array[Int](nDocs + 1)
     for (d <- 0 until nDocs) docStart(d + 1) = docStart(d) + lens(d)
@@ -116,11 +117,10 @@ object ContainmentCorpus {
         val p = new ContainmentProbe(corpus.value, threshold)
         it.flatMap { r =>
           val n = p.containers(r.getArray(1).toLongArray())
-          if (n > 0) Iterator(new GenericInternalRow(Array[Any](r.getLong(0), n)): InternalRow)
-          else Iterator.empty
+          if (n > 0) Iterator.single(InternalRow(r.getLong(0), n)) else Iterator.empty
         }
       }
-    probe.sparkSession.asInstanceOf[SparkSession].internalCreateDataFrame(rows, CountSchema)
+    Narrow.frame(probe.sparkSession, rows, CountSchema)
   }
 }
 
@@ -130,12 +130,13 @@ object ContainmentCorpus {
   *
   *   - The row's shingles are ordered by (corpus df, h); a shingle the
   *     corpus lacks takes df 0, so it sorts first and matches nothing.
-  *   - Its first nsh - ceil(t·nsh) + 1 shingles probe the postings of
-  *     docs with c_nsh >= t·nsh; pa and pb are the least positions of a
-  *     shared prefix shingle in the row and in the doc.
+  *   - With `needed` = Dedup.minOverlap(t, nsh), the least overlap the
+  *     verify accepts, its first nsh - needed + 1 shingles probe the
+  *     postings of docs with c_nsh >= needed; pa and pb are the least
+  *     positions of a shared prefix shingle in the row and in the doc.
   *   - A doc passes the position bound when
-  *     1 + min(nsh - pa - 1, c_nsh - pb - 1) + 1e-9 >= ceil(t·nsh), and
-  *     is a container when its exact intersection / nsh >= t.
+  *     1 + min(nsh - pa - 1, c_nsh - pb - 1) >= needed, and is a
+  *     container when its exact intersection / nsh >= t.
   *
   * Scratch arrays over the corpus docs are reused across the task's rows;
   * `stamp` = the row's ordinal marks them.
@@ -151,8 +152,8 @@ private final class ContainmentProbe(c: ContainmentCorpus, t: Double) {
   def containers(hs: Array[Long]): Long = {
     val nsh = hs.length
     row += 1
-    val needed = math.ceil(t * nsh).toLong
-    val prefix = (nsh - needed + 1).toInt
+    val needed = Dedup.minOverlap(t, nsh)
+    val prefix = nsh - needed + 1
     // the shingles the corpus holds, as (df, dictionary index) keys; the
     // absent ones occupy the first `absent` positions
     val keys = new Array[Long](nsh)
@@ -173,7 +174,7 @@ private final class ContainmentProbe(c: ContainmentCorpus, t: Double) {
       var e = c.postStart(s)
       while (e < c.postStart(s + 1)) {
         val d = c.postDoc(e)
-        if ((c.docStart(d + 1) - c.docStart(d)).toDouble >= t * nsh) {
+        if (c.docStart(d + 1) - c.docStart(d) >= needed) {
           if (stamp(d) != row) {
             stamp(d) = row; pa(d) = pos; pb(d) = c.postPos(e)
             if (nTouched == touched.length) touched = java.util.Arrays.copyOf(touched, 2 * nTouched)
@@ -190,7 +191,7 @@ private final class ContainmentProbe(c: ContainmentCorpus, t: Double) {
       val d = touched(k)
       val cnsh = c.docStart(d + 1) - c.docStart(d)
       val ub = 1 + math.min(nsh - pa(d) - 1, cnsh - pb(d) - 1)
-      if (c.docLive(d) && ub.toDouble + 1e-9 >= needed.toDouble &&
+      if (c.docLive(d) && ub >= needed &&
           intersect(hs, d).toDouble / nsh >= t) n += 1
       k += 1
     }

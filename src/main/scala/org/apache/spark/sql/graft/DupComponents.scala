@@ -6,16 +6,15 @@ import scala.collection.mutable.ArrayBuilder
 import org.apache.spark.sql.{DataFrame, SparkSession => ApiSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Descending,
-  GenericInternalRow, InterpretedOrdering, SortOrder}
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-import org.apache.spark.sql.catalyst.types.DataTypeUtils
-import org.apache.spark.sql.classic.{Dataset, SparkSession}
+  InterpretedOrdering, SortOrder}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
 /** The connected components of a near-dup pair list, resolved on the
   * driver: Dedup.resolveGroups' and Dedup.keepBest's narrow regime,
-  * taken while the pair list is under Dedup.NarrowMaxPairRows.
+  * taken while the pair list fits the Narrow.Pairs budget. The collect,
+  * the broadcast `best` reads (released once its collect ends) and the
+  * driver-built frames go through Narrow.
   *
   * `ids` holds every id that an edge with two non-null endpoints touches,
   * sorted ascending, so index i is the dense handle of ids(i); `root(i)`
@@ -35,20 +34,12 @@ final class DupComponents private (val ids: Array[Long], val root: Array[Int])
     if (i >= 0) i else -1
   }
 
-  /** Member counts per index, nonzero only at roots. */
-  private def sizes: Array[Int] = {
-    val s = new Array[Int](ids.length)
-    root.foreach(r => s(r) += 1)
-    s
-  }
-
   /** (id, keep_id) for every touched id that is not its component's
     * minimum; every other id keeps itself.
     */
   def labels(spark: ApiSession): DataFrame =
-    DupComponents.local(spark, DupComponents.LabelSchema,
-      ids.indices.iterator.filter(i => root(i) != i)
-        .map(i => Array[Any](ids(i), ids(root(i)))))
+    Narrow.local(spark, DupComponents.LabelSchema,
+      ids.indices.iterator.filter(i => root(i) != i).map(i => InternalRow(ids(i), ids(root(i)))))
 
   /** (id, group_id, best_id) for every member of a component of two or
     * more ids with a member in `docs`: the best member is the argmax by
@@ -61,30 +52,27 @@ final class DupComponents private (val ids: Array[Long], val root: Array[Int])
   def best(docs: DataFrame, idCol: String, qualityCol: String): DataFrame = {
     val spark = docs.sparkSession
     val qType = docs.schema(qualityCol).dataType
-    val size = sizes
-    val comps = spark.sparkContext.broadcast(this)
-    val parts = docs.select(col(idCol).cast(LongType), col(qualityCol))
-      .asInstanceOf[Dataset[_]].queryExecution.toRdd.mapPartitions { rows =>
-        val c = comps.value
-        val better = DupComponents.better(qType)
-        val top = mutable.HashMap.empty[Int, InternalRow]
-        rows.foreach { r =>
-          val i = if (r.isNullAt(0)) -1 else c.index(r.getLong(0))
-          if (i >= 0) {
-            val g = c.root(i)
-            if (top.get(g).forall(better(r, _))) top(g) = r.copy()
-          }
+    val size = new Array[Int](ids.length) // members per index, nonzero only at roots
+    root.foreach(r => size(r) += 1)
+    val comps = Narrow.share(spark, this)
+    val parts = try Narrow.collect(docs.select(col(idCol).cast(LongType), col(qualityCol))) { rows =>
+      val c = comps.value
+      val better = DupComponents.better(qType)
+      val top = mutable.HashMap.empty[Int, InternalRow]
+      rows.foreach { r =>
+        val i = if (r.isNullAt(0)) -1 else c.index(r.getLong(0))
+        if (i >= 0) {
+          val g = c.root(i)
+          if (top.get(g).forall(better(r, _))) top(g) = r.copy()
         }
-        Iterator(top.toArray)
-      }.collect()
+      }
+      top.toArray
+    } finally Narrow.release(comps)
     val better = DupComponents.better(qType)
-    val top = mutable.HashMap.empty[Int, InternalRow]
-    parts.iterator.flatten.foreach { case (g, r) =>
-      if (top.get(g).forall(better(r, _))) top(g) = r
-    }
-    DupComponents.local(spark, DupComponents.BestSchema,
+    val top = parts.flatten.groupMapReduce(_._1)(_._2)((r, s) => if (better(s, r)) s else r)
+    Narrow.local(spark, DupComponents.BestSchema,
       ids.indices.iterator.filter(i => size(root(i)) > 1 && top.contains(root(i)))
-        .map(i => Array[Any](ids(i), ids(root(i)), top(root(i)).getLong(0))))
+        .map(i => InternalRow(ids(i), ids(root(i)), top(root(i)).getLong(0))))
   }
 }
 
@@ -101,15 +89,15 @@ object DupComponents {
     * run the union-find. The caller bounds its size.
     */
   def collect(pairs: DataFrame): DupComponents = {
-    val parts = pairs.select(col("id_a").cast(LongType), col("id_b").cast(LongType))
-      .asInstanceOf[Dataset[_]].queryExecution.toRdd.mapPartitions { it =>
+    val parts = Narrow.collect(pairs.select(col("id_a").cast(LongType), col("id_b").cast(LongType))) {
+      it =>
         val (a, b) = (ArrayBuilder.make[Long], ArrayBuilder.make[Long])
         it.foreach { r =>
           if (!r.isNullAt(0) && !r.isNullAt(1)) { a += r.getLong(0); b += r.getLong(1) }
         }
-        Iterator((a.result(), b.result()))
-      }.collect()
-    val (a, b) = (parts.flatMap(_._1), parts.flatMap(_._2))
+        (a.result(), b.result())
+    }
+    val (a, b) = (Narrow.flat(parts.map(_._1)), Narrow.flat(parts.map(_._2)))
     val all = a ++ b
     java.util.Arrays.sort(all)
     var n = 0
@@ -139,15 +127,5 @@ object DupComponents {
       val c = ord.compare(r, s)
       c < 0 || (c == 0 && r.getLong(0) < s.getLong(0))
     }
-  }
-
-  /** A driver-built frame over `rows`, planned as a LocalRelation so a
-    * broadcast join takes it without a collect job.
-    */
-  private def local(spark: ApiSession, schema: StructType,
-      rows: Iterator[Array[Any]]): DataFrame = {
-    val data = rows.map(v => new GenericInternalRow(v): InternalRow).toVector
-    Dataset.ofRows(spark.asInstanceOf[SparkSession],
-      LocalRelation(DataTypeUtils.toAttributes(schema), data))
   }
 }

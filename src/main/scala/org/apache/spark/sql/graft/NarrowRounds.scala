@@ -3,20 +3,22 @@ package org.apache.spark.sql.graft
 import scala.collection.mutable.ArrayBuilder
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** NN-Descent's narrow regime (graft.operators.NnDescent.descend runs it
-  * when the vector table and the graph are both under their broadcast
-  * bounds): each round is ONE narrow pass over the src ids — no shuffle,
-  * no window and no sort over the N·cap² candidate bag.
+  * when the vectors and the graph fit the Narrow budget together): each
+  * round is ONE narrow pass over the src ids — no shuffle, no window and
+  * no sort over the N·cap² candidate bag.
   *
   * The vectors are collected and broadcast once per build. Each round
   * collects the current graph, derives its ρ-capped undirected adjacency
   * once on the driver, and broadcasts both as CSR arrays over dense
-  * vector indices. A task then walks its src ids: it expands x → p → y
+  * vector indices (all through Narrow). A task then walks its src ids: it
+  * expands x → p → y
   * (Dong et al.'s local join), scores each distinct candidate with the
   * DoubleArrayDot accumulation and NnDescent.cosSim's null rules, and keeps
   * the k best by (cos_sim DESC NULLS LAST under Spark's double ordering,
@@ -33,7 +35,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * `apply(g, t)` returns (candidates, ranked) like the shuffle-regime
   * round functions: the ranked cut and, lazily, the round's distinct
   * scored candidate set from a second pass over the same broadcasts
-  * (only the q196 audit's observer counts it).
+  * (only the q196 audit's observer counts it). `release(cp, last)` hands
+  * the round's graph broadcast, and after the last round the vectors',
+  * to Narrow.releaseWith the round's checkpoint `cp`.
   */
 final class NarrowRounds(vecs: DataFrame, k: Int, cap: Int) {
   require(k >= 1, "narrow rounds need k >= 1")
@@ -42,22 +46,25 @@ final class NarrowRounds(vecs: DataFrame, k: Int, cap: Int) {
   private val capN = if (cap > 0) cap else 2 * k
 
   private lazy val vectors: NarrowVectors = {
-    val rows = vecs.select("vec_id", "dv", "nrm").queryExecution.toRdd
-      .filter(!_.isNullAt(0))
-      .map(r => (r.getLong(0),
+    val rows = Narrow.collect(vecs.select("vec_id", "dv", "nrm")) { it =>
+      it.filter(!_.isNullAt(0)).map(r => (r.getLong(0),
         if (r.isNullAt(1)) null else r.getArray(1).toDoubleArray(),
-        if (r.isNullAt(2)) Double.NaN else r.getDouble(2)))
-      .collect().sortBy(_._1)
+        if (r.isNullAt(2)) Double.NaN else r.getDouble(2))).toArray
+    }.flatten.sortBy(_._1)
     val ids = rows.map(_._1)
     require(ids.indices.drop(1).forall(i => ids(i) > ids(i - 1)), "vector ids must be distinct")
     new NarrowVectors(ids, rows.map(_._2), rows.map(_._3))
   }
-  private lazy val vectorsB: Broadcast[NarrowVectors] = sc.broadcast(vectors)
+  private lazy val vectorsB: Broadcast[NarrowVectors] = Narrow.share(spark, vectors)
+  private var graphB: Broadcast[NarrowGraph] = _
 
   def apply(g: DataFrame, t: Int): (DataFrame, DataFrame) = {
-    val graphB = sc.broadcast(graph(g, t))
+    graphB = Narrow.share(spark, graph(g, t))
     (pass(graphB, candidates = true), pass(graphB, candidates = false))
   }
+
+  def release(cp: DataFrame, last: Boolean): Unit =
+    Narrow.releaseWith(cp, (if (last) Seq(graphB, vectorsB) else Seq(graphB)): _*)
 
   private def index(id: Long): Int = {
     val i = java.util.Arrays.binarySearch(vectors.ids, id)
@@ -74,7 +81,7 @@ final class NarrowRounds(vecs: DataFrame, k: Int, cap: Int) {
   private def graph(g: DataFrame, t: Int): NarrowGraph = {
     val scored = t > 0
     val cols = if (scored) Seq("src", "dst", "cos_sim", "is_new") else Seq("src", "dst")
-    val parts = g.select(cols.map(g.col): _*).queryExecution.toRdd.mapPartitions { it =>
+    val parts = Narrow.collect(g.select(cols.map(g.col): _*)) { it =>
       val (src, dst) = (ArrayBuilder.make[Long], ArrayBuilder.make[Long])
       val (cos, nul, nw) =
         (ArrayBuilder.make[Double], ArrayBuilder.make[Boolean], ArrayBuilder.make[Boolean])
@@ -85,12 +92,12 @@ final class NarrowRounds(vecs: DataFrame, k: Int, cap: Int) {
           nw += r.getBoolean(3)
         }
       }
-      Iterator((src.result(), dst.result(), cos.result(), nul.result(), nw.result()))
-    }.collect()
-    val src = parts.flatMap(_._1).map(index)
-    val dst = parts.flatMap(_._2).map(index)
-    val (cos, nul) = (parts.flatMap(_._3), parts.flatMap(_._4))
-    val isNew = if (scored) parts.flatMap(_._5) else Array.fill(src.length)(true)
+      (src.result(), dst.result(), cos.result(), nul.result(), nw.result())
+    }
+    val src = Narrow.flat(parts.map(_._1)).map(index)
+    val dst = Narrow.flat(parts.map(_._2)).map(index)
+    val (cos, nul) = (Narrow.flat(parts.map(_._3)), Narrow.flat(parts.map(_._4)))
+    val isNew = if (scored) Narrow.flat(parts.map(_._5)) else Array.fill(src.length)(true)
     val n = vectors.ids.length
 
     // out-edges, CSR by src
@@ -157,8 +164,8 @@ final class NarrowRounds(vecs: DataFrame, k: Int, cap: Int) {
         val x = new LocalJoin(vb.value, graphB.value, kk)
         srcs.flatMap(s => if (candidates) x.candidateRows(s) else x.rankedRows(s))
       }
-    spark.createDataFrame(rows, if (candidates) NarrowRounds.CandidateSchema
-      else NarrowRounds.RankedSchema)
+    Narrow.frame(spark, rows,
+      if (candidates) NarrowRounds.CandidateSchema else NarrowRounds.RankedSchema)
   }
 }
 
@@ -277,13 +284,13 @@ private final class LocalJoin(v: NarrowVectors, g: NarrowGraph, k: Int) {
       if (m < k) m += 1
     }
 
-  def candidateRows(s: Int): Iterator[Row] = {
+  def candidateRows(s: Int): Iterator[InternalRow] = {
     expand(s)
     val src = v.ids(s)
-    Iterator.tabulate(nCand)(i => Row(src, v.ids(cand(i))))
+    Iterator.tabulate(nCand)(i => InternalRow(src, v.ids(cand(i))))
   }
 
-  def rankedRows(s: Int): Iterator[Row] = {
+  def rankedRows(s: Int): Iterator[InternalRow] = {
     expand(s)
     m = 0
     if (g.t > 0) {
@@ -303,7 +310,7 @@ private final class LocalJoin(v: NarrowVectors, g: NarrowGraph, k: Int) {
     }
     val src = v.ids(s)
     // the shuffle regime's final distinct normalises -0.0 and NaN
-    Iterator.tabulate(m)(r => Row(src, v.ids(topDst(r)),
+    Iterator.tabulate(m)(r => InternalRow(src, v.ids(topDst(r)),
       if (topNull(r)) null
       else if (topCos(r).isNaN) Double.NaN
       else if (topCos(r) == 0.0) 0.0

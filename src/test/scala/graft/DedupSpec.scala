@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.operators.Dedup
+import org.apache.spark.sql.graft.Narrow
 
 /** Dedup operator semantics: exact groups, LSH candidate generation
   * guarantees, near-dup verification, simhash properties.
@@ -18,6 +19,29 @@ class DedupSpec extends SparkSpec {
     (3L, "completely different content about spark query engines here"),
     (4L, "xy") // shorter than the shingle width
   ).toDF("doc_id", "text")
+
+  /** ShuffleDependencies in an RDD's lineage. */
+  private def shuffles(r: org.apache.spark.rdd.RDD[_]): Int = r.dependencies.map {
+    case d: org.apache.spark.ShuffleDependency[_, _, _] => 1 + shuffles(d.rdd)
+    case d => shuffles(d.rdd)
+  }.sum
+
+  /** `f` in the narrow regime (the shipped budget; every input here fits
+    * it) or, with `narrow = false`, with the budget pinned to 0.
+    */
+  private def inRegime[T](narrow: Boolean)(f: => T): T =
+    if (narrow) f else Narrow.withBudget(0)(f)
+
+  /** Hangul syllables from..from+n-1: n distinct chars, so n - 2 distinct
+    * 3-char shingles.
+    */
+  private def hangul(from: Int, n: Int) = (from until from + n).map(i => (0xAC00 + i).toChar).mkString
+
+  /** The float edge of the exact prefix filters: `edge` holds 55 shingles
+    * and `wide` holds the same 55 plus 45 fresh ones, so 55/100 sits
+    * exactly at t = 0.55, where 0.55·100 = 55.00000000000001 in doubles.
+    */
+  private val (edge, wide) = (hangul(0, 57), hangul(0, 57) + hangul(100, 45))
 
   /** The bottom-k screen's grouped corpus index (3-char shingles). */
   private def bottomKIndex(corpus: org.apache.spark.sql.DataFrame) =
@@ -124,23 +148,27 @@ class DedupSpec extends SparkSpec {
     // deterministic pseudo-random corpus with overlapping vocabulary so
     // thresholds land both sides of 0.4
     val words = Vector("alpha", "beta", "gamma", "delta", "epsilon", "zeta", "eta", "theta")
-    val corpus = (0 until 40).map { i =>
+    // plus the float-edge pair (90, 91) at Jaccard 55/100 exactly
+    val corpus = ((0 until 40).map { i =>
       val txt = (0 until 6).map(j => words((i * 7 + j * 3) % words.length)).mkString(" ")
       (i.toLong, txt)
-    }.toDF("doc_id", "text")
-    val fast = Dedup.ngramJaccardPairs(corpus, "doc_id", "text", 3, 0.4)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    // brute force over the same shingle sets
-    val withSh = corpus.select(col("doc_id"), Dedup.shingleSet(col("text"), 3).as("sh"))
-    val brute = withSh.select(col("doc_id").as("id_a"), col("sh").as("sh_a"))
-      .crossJoin(withSh.select(col("doc_id").as("id_b"), col("sh").as("sh_b")))
-      .where(col("id_a") < col("id_b"))
-      .withColumn("jacc", graft.functions.TextFunctions.jaccard(col("sh_a"), col("sh_b")))
-      .filter(col("jacc") >= 0.4)
-      .select("id_a", "id_b", "jacc")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(brute.nonEmpty, "fixture should produce at least one qualifying pair")
-    assert(fast == brute)
+    } ++ Seq(90L -> wide, 91L -> edge)).toDF("doc_id", "text")
+    for (t <- Seq(0.4, 0.55)) {
+      val fast = Dedup.ngramJaccardPairs(corpus, "doc_id", "text", 3, t)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      // brute force over the same shingle sets
+      val withSh = corpus.select(col("doc_id"), Dedup.shingleSet(col("text"), 3).as("sh"))
+      val brute = withSh.select(col("doc_id").as("id_a"), col("sh").as("sh_a"))
+        .crossJoin(withSh.select(col("doc_id").as("id_b"), col("sh").as("sh_b")))
+        .where(col("id_a") < col("id_b"))
+        .withColumn("jacc", graft.functions.TextFunctions.jaccard(col("sh_a"), col("sh_b")))
+        .filter(col("jacc") >= t)
+        .select("id_a", "id_b", "jacc")
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      assert(brute.nonEmpty, "fixture should produce at least one qualifying pair")
+      assert(brute.contains((90L, 91L, 0.55)), s"t $t: the 55/100 pair must qualify")
+      assert(fast == brute, s"t $t")
+    }
   }
 
   test("containmentPairs: excerpt is found in the direction Jaccard misses") {
@@ -164,28 +192,32 @@ class DedupSpec extends SparkSpec {
   test("containmentPairs: prefix-filtered result == brute-force all-pairs result") {
     import spark.implicits._
     val words = Vector("alpha", "beta", "gamma", "delta", "epsilon", "zeta", "eta", "theta")
-    val corpus = (0 until 40).map { i =>
+    // plus the float-edge pair: 90 is contained in 91 at 55/100 exactly
+    val corpus = ((0 until 40).map { i =>
       val n = 4 + (i % 5) // varied lengths so the asymmetric size filter matters
       val txt = (0 until n).map(j => words((i * 7 + j * 3) % words.length)).mkString(" ")
       (i.toLong, txt)
-    }.toDF("doc_id", "text")
-    val fast = Dedup.containmentPairs(corpus, "doc_id", "text", 3, 0.5)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val withSh = corpus.select(col("doc_id"), Dedup.shingleSet(col("text"), 3).as("sh"))
-      .filter(size(col("sh")) > 0)
-    val brute = withSh.select(col("doc_id").as("id_a"), col("sh").as("sh_a"))
-      .crossJoin(withSh.select(col("doc_id").as("id_b"), col("sh").as("sh_b")))
-      .where(col("id_a") =!= col("id_b"))
-      .withColumn("containment",
-        size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") / size(col("sh_a")))
-      .filter(col("containment") >= 0.5)
-      .select("id_a", "id_b", "containment")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(brute.nonEmpty, "fixture should produce at least one qualifying pair")
-    // directed: at least one pair must qualify in exactly one direction
-    assert(brute.exists(p => !brute.exists(q => q._1 == p._2 && q._2 == p._1)),
-      "fixture should exercise the asymmetric case")
-    assert(fast == brute)
+    } ++ Seq(90L -> wide, 91L -> edge)).toDF("doc_id", "text")
+    for (t <- Seq(0.5, 0.55)) {
+      val fast = Dedup.containmentPairs(corpus, "doc_id", "text", 3, t)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      val withSh = corpus.select(col("doc_id"), Dedup.shingleSet(col("text"), 3).as("sh"))
+        .filter(size(col("sh")) > 0)
+      val brute = withSh.select(col("doc_id").as("id_a"), col("sh").as("sh_a"))
+        .crossJoin(withSh.select(col("doc_id").as("id_b"), col("sh").as("sh_b")))
+        .where(col("id_a") =!= col("id_b"))
+        .withColumn("containment",
+          size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") / size(col("sh_a")))
+        .filter(col("containment") >= t)
+        .select("id_a", "id_b", "containment")
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      assert(brute.nonEmpty, "fixture should produce at least one qualifying pair")
+      // directed: at least one pair must qualify in exactly one direction
+      assert(brute.exists(p => !brute.exists(q => q._1 == p._2 && q._2 == p._1)),
+        "fixture should exercise the asymmetric case")
+      assert(brute.contains((90L, 91L, 0.55)), s"t $t: the 55/100 pair must qualify")
+      assert(fast == brute, s"t $t")
+    }
   }
 
   test("containmentScreenAudit: k >= |A| degenerates to exact containment >= screenFrac") {
@@ -260,13 +292,15 @@ class DedupSpec extends SparkSpec {
   test("incrementalContainmentScreen: prefix-filtered screen == brute-force incoming x corpus") {
     import spark.implicits._
     val words = Vector("alpha", "beta", "gamma", "delta", "epsilon", "zeta", "eta", "theta")
-    val corpus = (0 until 25).map { i =>
+    // corpus doc 25 is the float edge's 55-shingle doc
+    val corpus = ((0 until 25).map { i =>
       (i.toLong, (0 until 8).map(j => words((i * 5 + j * 3) % words.length)).mkString(" "))
-    }.toDF("doc_id", "text")
+    } :+ (25L -> edge)).toDF("doc_id", "text")
     // incoming: an excerpt of corpus doc 0, a fresh doc, and a too-short
     // doc; then two rows under id 100 (an excerpt and a copy of doc 0) and
     // two under id 103 (an excerpt and a fresh text): rows that share an
-    // id are screened independently
+    // id are screened independently. Row 104 holds doc 25's 55 shingles
+    // of its 100: at t = 0.55 it is contained exactly at the threshold.
     val c0 = (0 until 8).map(j => words((j * 3) % words.length)).mkString(" ")
     val excerpt = c0.split(" ").slice(2, 6).mkString(" ")
     val rows = Seq(
@@ -275,10 +309,11 @@ class DedupSpec extends SparkSpec {
       (102L, "ab"),
       (100L, c0),
       (103L, excerpt),
-      (103L, "un autre texte sans rien de commun"))
+      (103L, "un autre texte sans rien de commun"),
+      (104L, wide))
     val incoming = rows.toDF("doc_id", "text")
-    def screen(index: Dedup.ContainmentScreenIndex): Seq[(Long, Long, Boolean)] =
-      Dedup.incrementalContainmentScreenOnIndex(incoming, index, "doc_id", "text", 3, 0.6)
+    def screen(index: Dedup.ContainmentScreenIndex, t: Double = 0.6): Seq[(Long, Long, Boolean)] =
+      Dedup.incrementalContainmentScreenOnIndex(incoming, index, "doc_id", "text", 3, t)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSeq.sorted
     // the batch (q175) shape: lazy index built inline, probed once
     val fast = screen(Dedup.containmentScreenIndex(corpus, "doc_id", "text", 3))
@@ -288,15 +323,16 @@ class DedupSpec extends SparkSpec {
       .select(col("row"), col("doc_id"), Dedup.shingleSet(col("text"), 3).as("sh"))
     val shC = corpus.select(col("doc_id").as("c_id"), Dedup.shingleSet(col("text"), 3).as("c_sh"))
       .filter(size(col("c_sh")) > 0)
-    val brute = shI.crossJoin(shC)
+    def bruteAt(t: Double) = shI.crossJoin(shC)
       .withColumn("cont",
         when(size(col("sh")) === 0, lit(0.0))
           .otherwise(size(array_intersect(col("sh"), col("c_sh"))).cast("double") / size(col("sh"))))
       .groupBy("row", "doc_id")
-      .agg(sum(when(col("cont") >= 0.6, 1L).otherwise(0L)).as("n_containers"))
+      .agg(sum(when(col("cont") >= t, 1L).otherwise(0L)).as("n_containers"))
       .select(col("doc_id"), col("n_containers"),
         (col("n_containers") === 0).as("kept"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSeq.sorted
+    val brute = bruteAt(0.6)
     assert(brute.exists(p => p._1 == 100L && p._2 >= 1L), "excerpt must find a container")
     assert(brute.exists(p => p._1 == 101L && p._3), "fresh doc must be kept")
     // each id-100 row reads what the excerpt reads alone, and the fresh
@@ -311,6 +347,12 @@ class DedupSpec extends SparkSpec {
     // round 18) must give bit-identical answers to the lazy one
     val viaIndex = screen(Dedup.containmentScreenIndex(corpus, "doc_id", "text", 3, eager = true))
     assert(viaIndex == brute)
+    // the float edge, in both regimes
+    val edgeBrute = bruteAt(0.55)
+    assert(edgeBrute.contains((104L, 1L, false)), "containment exactly at 55/100 must count")
+    for (narrow <- Seq(true, false))
+      assert(screen(inRegime(narrow)(Dedup.containmentScreenIndex(corpus, "doc_id", "text", 3)),
+        0.55) == edgeBrute, s"narrow = $narrow")
   }
 
   test("prefix filters reject a threshold outside (0, 1] before any job runs") {
@@ -379,12 +421,17 @@ class DedupSpec extends SparkSpec {
   test("differential: containment screen narrow == shuffle regime on generated inputs") {
     for ((seed, idType) <- Seq(1 -> LongType, 2 -> IntegerType, 3 -> LongType)) {
       val (corpus, incoming) = screenCase(seed, idType)
-      val narrowIdx = Dedup.containmentScreenIndexIn(corpus, "doc_id", "text", 3,
-        eager = false, narrow = true)
-      val shuffleIdx = Dedup.containmentScreenIndexIn(corpus, "doc_id", "text", 3,
-        eager = true, narrow = false)
+      val narrowIdx = Dedup.containmentScreenIndex(corpus, "doc_id", "text", 3, eager = true)
+      val shuffleIdx = Narrow.withBudget(0)(
+        Dedup.containmentScreenIndex(corpus, "doc_id", "text", 3, eager = true))
       val shipped = Dedup.containmentScreenIndex(corpus, "doc_id", "text", 3)
-      assert(narrowIdx.narrow.isDefined && shuffleIdx.narrow.isEmpty && shipped.narrow.isDefined)
+      // a budget one byte under the corpus postings' footprint: the
+      // shuffle regime, lazy
+      val need = math.ceil(Narrow.Postings.bytes(shipped.postings.count())).toLong
+      val underIdx = Narrow.withBudget(need - 1)(
+        Dedup.containmentScreenIndex(corpus, "doc_id", "text", 3))
+      assert(narrowIdx.narrow.isDefined && shuffleIdx.narrow.isEmpty && shipped.narrow.isDefined &&
+        underIdx.narrow.isEmpty)
       for (t <- Seq(0.5, 0.55, 0.6, 0.7, 0.8, 1.0)) {
         def screen(ix: Dedup.ContainmentScreenIndex) =
           Dedup.incrementalContainmentScreenOnIndex(incoming, ix, "doc_id", "text", 3, t)
@@ -397,10 +444,15 @@ class DedupSpec extends SparkSpec {
         assert(expected.filter(_.startsWith("null|")).forall(_ == "null|0|true"))
         if (t == 0.5) assert(expected.contains("900|1|false"),
           "containment exactly at t must count")
+        if (t == 0.55) assert(expected.contains("910|1|false"),
+          "containment exactly at 55/100 must count")
         for (narrow <- Seq(screen(narrowIdx), screen(shipped))) {
           assert(narrow.schema == shuffle.schema, s"seed $seed t $t")
           assert(sortedRows(narrow) == expected, s"seed $seed t $t")
         }
+        val under = screen(underIdx)
+        assert(shuffles(under.queryExecution.toRdd) > 0, s"seed $seed t $t: no shuffle over budget")
+        assert(sortedRows(under) == expected, s"seed $seed t $t")
       }
     }
   }
@@ -411,16 +463,10 @@ class DedupSpec extends SparkSpec {
     // and the counts join back to the batch through a broadcast. The
     // walker is checked against the shuffle regime's probe, which must
     // shuffle.
-    import org.apache.spark.ShuffleDependency
-    import org.apache.spark.rdd.RDD
     import org.apache.spark.sql.execution.LogicalRDD
-    def shuffles(r: RDD[_]): Int = r.dependencies.map {
-      case d: ShuffleDependency[_, _, _] => 1 + shuffles(d.rdd)
-      case d => shuffles(d.rdd)
-    }.sum
     val (corpus, incoming) = screenCase(1, LongType)
     def screen(narrow: Boolean) = Dedup.incrementalContainmentScreenOnIndex(incoming,
-      Dedup.containmentScreenIndexIn(corpus, "doc_id", "text", 3, eager = false, narrow),
+      inRegime(narrow)(Dedup.containmentScreenIndex(corpus, "doc_id", "text", 3)),
       "doc_id", "text", 3, 0.6)
     val shuffled = screen(narrow = false)
     assert(shuffles(shuffled.queryExecution.toRdd) > 0,
@@ -577,7 +623,7 @@ class DedupSpec extends SparkSpec {
 
   /** Both regimes of resolveGroups/keepBest: narrow (driver union-find)
     * and shuffle (the pointer-jumping loop the public entry points take
-    * past Dedup.NarrowMaxPairRows).
+    * past the Narrow.Pairs budget; see inRegime).
     */
   private val regimes = Seq("narrow" -> true, "shuffle" -> false)
 
@@ -587,7 +633,7 @@ class DedupSpec extends SparkSpec {
     // two components: {0,1,2,3} via a chain (0-1, 1-2, 2-3), {5,6}; 4 isolated
     val pairs = Seq((0L, 1L), (1L, 2L), (2L, 3L), (5L, 6L)).toDF("id_a", "id_b")
     for ((regime, narrow) <- regimes) {
-      val groups = Dedup.resolveGroupsIn(verts, "doc_id", pairs, narrow, maxIter = 64)
+      val groups = inRegime(narrow)(Dedup.resolveGroups(verts, "doc_id", pairs, maxIter = 64))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(groups == Map(0L -> 0L, 1L -> 0L, 2L -> 0L, 3L -> 0L, 4L -> 4L, 5L -> 5L, 6L -> 5L),
         regime)
@@ -600,7 +646,7 @@ class DedupSpec extends SparkSpec {
     // edges given with the LARGER id first; component {0,1,2,3} as a cycle
     val pairs = Seq((3L, 2L), (2L, 1L), (1L, 0L), (0L, 3L)).toDF("id_a", "id_b")
     for ((regime, narrow) <- regimes) {
-      val groups = Dedup.resolveGroupsIn(verts, "doc_id", pairs, narrow, maxIter = 64)
+      val groups = inRegime(narrow)(Dedup.resolveGroups(verts, "doc_id", pairs, maxIter = 64))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(groups.values.toSet == Set(0L), regime)
     }
@@ -615,7 +661,7 @@ class DedupSpec extends SparkSpec {
     val verts = (0L until n).map(Tuple1(_)).toDF("doc_id")
     val pairs = (0L until n - 1).map(i => (i, i + 1)).toDF("id_a", "id_b")
     for ((regime, narrow) <- regimes) {
-      val groups = Dedup.resolveGroupsIn(verts, "doc_id", pairs, narrow, maxIter = 10)
+      val groups = inRegime(narrow)(Dedup.resolveGroups(verts, "doc_id", pairs, maxIter = 10))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(groups.size == n.toInt && groups.values.forall(_ == 0L), regime)
     }
@@ -628,7 +674,7 @@ class DedupSpec extends SparkSpec {
     val docs = Seq((1L, 10L), (2L, 50L), (3L, 10L), (4L, 7L)).toDF("doc_id", "quality")
     val pairs = Seq((1L, 2L), (2L, 3L)).toDF("id_a", "id_b")
     for ((regime, narrow) <- regimes) {
-      val out = Dedup.keepBestIn(docs, "doc_id", pairs, "quality", narrow)
+      val out = inRegime(narrow)(Dedup.keepBest(docs, "doc_id", pairs, "quality"))
         .orderBy("doc_id")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3)))
       assert(out.toSeq == Seq(
@@ -716,15 +762,21 @@ class DedupSpec extends SparkSpec {
   test("differential: resolveGroups narrow == shuffle regime on generated pair graphs") {
     for ((seed, idType) <- Seq(1 -> LongType, 2 -> IntegerType, 3 -> LongType)) {
       val (docs, pairs) = dupCase(seed, idType, DoubleType, doubleQuality)
-      val shuffle = Dedup.resolveGroupsIn(docs, "doc_id", pairs, narrow = false, maxIter = 64)
+      val shuffle = Narrow.withBudget(0)(Dedup.resolveGroups(docs, "doc_id", pairs))
       val expected = sortedRows(shuffle)
       // the planted chain 100-101-102 resolves to 100; ids 50..59 are no docs
       assert(expected.contains("102|100") && !expected.exists(_.startsWith("55|")))
-      for (narrow <- Seq(Dedup.resolveGroupsIn(docs, "doc_id", pairs, narrow = true, 64),
+      // the pair list's footprint: a budget of exactly it is narrow, one
+      // byte under it the shuffle regime
+      val need = math.ceil(Narrow.Pairs.bytes(pairs.count())).toLong
+      for (narrow <- Seq(Narrow.withBudget(need)(Dedup.resolveGroups(docs, "doc_id", pairs)),
           Dedup.resolveGroups(docs, "doc_id", pairs))) {
         assert(narrow.schema == shuffle.schema, s"seed $seed")
         assert(sortedRows(narrow) == expected, s"seed $seed")
       }
+      val under = Narrow.withBudget(need - 1)(Dedup.resolveGroups(docs, "doc_id", pairs))
+      assert(shuffles(under.queryExecution.toRdd) > 0, s"seed $seed: no shuffle over budget")
+      assert(sortedRows(under) == expected, s"seed $seed")
     }
   }
 
@@ -734,16 +786,24 @@ class DedupSpec extends SparkSpec {
         (2, IntegerType, DoubleType, doubleQuality _),
         (3, LongType, IntegerType, intQuality _))) {
       val (docs, pairs) = dupCase(seed, idType, qType, quality)
-      val shuffle = Dedup.keepBestIn(docs, "doc_id", pairs, "quality", narrow = false)
+      val shuffle = Narrow.withBudget(0)(Dedup.keepBest(docs, "doc_id", pairs, "quality"))
       val expected = sortedRows(shuffle)
       // planted argmax edge cases: tie -> 100, null last, all-null -> 130
       assert(Seq("100|100|100|true", "102|100|100|false", "131|130|130|false")
         .forall(expected.contains), s"seed $seed")
-      for (narrow <- Seq(Dedup.keepBestIn(docs, "doc_id", pairs, "quality", narrow = true),
+      val need = math.ceil(Narrow.Pairs.bytes(pairs.count())).toLong
+      val held = org.apache.spark.sql.graft.BroadcastBlocks.narrow(spark.sparkContext)
+      for (narrow <- Seq(Narrow.withBudget(need)(Dedup.keepBest(docs, "doc_id", pairs, "quality")),
           Dedup.keepBest(docs, "doc_id", pairs, "quality"))) {
+        // a finished narrow keepBest holds no broadcast of its components
+        assert(org.apache.spark.sql.graft.BroadcastBlocks.narrow(spark.sparkContext).subsetOf(held),
+          s"seed $seed: keepBest left a narrow broadcast behind")
         assert(narrow.schema == shuffle.schema, s"seed $seed")
         assert(sortedRows(narrow) == expected, s"seed $seed")
       }
+      val under = Narrow.withBudget(need - 1)(Dedup.keepBest(docs, "doc_id", pairs, "quality"))
+      assert(shuffles(under.queryExecution.toRdd) > 0, s"seed $seed: no shuffle over budget")
+      assert(sortedRows(under) == expected, s"seed $seed")
     }
   }
 

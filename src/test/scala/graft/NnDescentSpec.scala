@@ -137,19 +137,19 @@ class NnDescentSpec extends SparkSpec {
       "incremental new-leg rounds diverged from the full recurrence at an unbinding cap")
   }
 
+  /** ShuffleDependencies in an RDD's lineage. */
+  private def shuffles(r: org.apache.spark.rdd.RDD[_]): Int = r.dependencies.map {
+    case d: org.apache.spark.ShuffleDependency[_, _, _] => 1 + shuffles(d.rdd)
+    case d => shuffles(d.rdd)
+  }.sum
+
   test("narrow round: one narrow pass per round, no ShuffleDependency") {
     // The narrow regime's contract: each round is ONE narrow pass over
     // the src ids — the cap² bag is expanded, scored and cut inside the
     // tasks, so no shuffle, window or sort ever sees it. An RDD lineage
     // without a ShuffleDependency is one stage per job. The walker is
     // checked against the shuffle regime's round, which must shuffle.
-    import org.apache.spark.ShuffleDependency
-    import org.apache.spark.rdd.RDD
     import org.apache.spark.sql.graft.{CheckpointStats, NarrowRounds}
-    def shuffles(r: RDD[_]): Int = r.dependencies.map {
-      case d: ShuffleDependency[_, _, _] => 1 + shuffles(d.rdd)
-      case d => shuffles(d.rdd)
-    }.sum
     val vecs = CheckpointStats.freshCheckpoint(
       NnDescent.vecFrame(clusteredVecs, "vec_id", "embedding"))
     val g0 = CheckpointStats.freshCheckpoint(NnDescent.initGraph(clusteredVecs, "vec_id", 4))
@@ -177,18 +177,29 @@ class NnDescentSpec extends SparkSpec {
     // guard boundary is a correctness cliff); (2) the scoring round's
     // physical plan under the stats-reset checkpoint really is
     // sort-merge — no auto-broadcast sneaks back in via stale stats.
-    val key = "graft.nnd.broadcastMaxVecRows"
+    import org.apache.spark.sql.graft.{BroadcastBlocks, Narrow}
     def edges(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSet
-    val broadcastBuild = edges(
-      NnDescent.knnGraph(clusteredVecs, "vec_id", "embedding", k = 4, iters = 3))
-    val shuffleBuild =
-      try {
-        sys.props(key) = "0"
-        edges(NnDescent.knnGraph(clusteredVecs, "vec_id", "embedding", k = 4, iters = 3))
-      } finally sys.props.remove(key)
+    def build() = NnDescent.knnGraph(clusteredVecs, "vec_id", "embedding", k = 4, iters = 3)
+    val held = BroadcastBlocks.narrow(spark.sparkContext)
+    val narrowGraph = build()
+    val broadcastBuild = edges(narrowGraph)
+    // the finished narrow build released its vector and round broadcasts
+    // once its last lazy checkpoint was read, and still reads back
+    assert(BroadcastBlocks.narrow(spark.sparkContext).subsetOf(held),
+      "a finished knnGraph build left a narrow broadcast behind")
+    assert(edges(narrowGraph) == broadcastBuild, "the released build no longer reads back")
+    val shuffleBuild = edges(Narrow.withBudget(0)(build()))
     assert(shuffleBuild == broadcastBuild,
       "shuffle-regime build diverged from the broadcast build")
+    // a budget one byte under the build's footprint sends it to the
+    // shuffle regime, with the same graph
+    val (n, dim) = NnDescent.vecStats(org.apache.spark.sql.graft.CheckpointStats.freshCheckpoint(
+      NnDescent.vecFrame(clusteredVecs, "vec_id", "embedding")))
+    val need = math.ceil(Narrow.Vectors(dim).bytes(n) + Narrow.Graph.bytes(4 * n)).toLong
+    val under = Narrow.withBudget(need - 1)(build())
+    assert(shuffles(under.queryExecution.toRdd) > 0, "a build over budget stayed narrow")
+    assert(edges(under) == broadcastBuild, "the over-budget build diverged")
     // the round shape knnGraph runs in the shuffle regime: stats-reset
     // vector table, no broadcast hints
     val vecs = org.apache.spark.sql.graft.CheckpointStats.freshCheckpoint(
@@ -262,21 +273,23 @@ class NnDescentSpec extends SparkSpec {
     // single-pass shuffle build AND the broadcast build bit-for-bit —
     // the union of per-slice top-k cuts is a superset of the global
     // top-k, and the final re-rank reproduces ranks exactly.
-    val bKey = "graft.nnd.broadcastMaxVecRows"
+    import org.apache.spark.sql.graft.Narrow
     val sKey = "graft.nnd.expansionSlices"
     def edges(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSet
-    def build() = edges(
-      NnDescent.knnGraph(clusteredVecs, "vec_id", "embedding", k = 4, iters = 3, cap = 5))
+    def graph() = NnDescent.knnGraph(clusteredVecs, "vec_id", "embedding", k = 4, iters = 3, cap = 5)
+    def build() = edges(graph())
     val broadcastBuild = build()
-    val (shuffle1, shuffle3) =
+    val (shuffle1, shuffle3) = Narrow.withBudget(0) {
+      val s1 = build()
       try {
-        sys.props(bKey) = "0"
-        val s1 = build()
         sys.props(sKey) = "3"
-        val s3 = build()
-        (s1, s3)
-      } finally { sys.props.remove(bKey); sys.props.remove(sKey) }
+        // the sliced build runs the shuffle regime, slices and all
+        val sliced = graph()
+        assert(shuffles(sliced.queryExecution.toRdd) > 0, "the sliced build stayed narrow")
+        (s1, edges(sliced))
+      } finally sys.props.remove(sKey)
+    }
     assert(shuffle1 == broadcastBuild, "single-pass shuffle build diverged")
     assert(shuffle3 == shuffle1, "sliced expansion diverged from the single pass")
   }

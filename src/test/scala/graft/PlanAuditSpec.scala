@@ -165,7 +165,7 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("q91 keep-best: narrow argmax is one broadcast join (no window)") {
-    // q91's pair list is under Dedup.NarrowMaxPairRows: the argmax ran on
+    // q91's pair list fits the Narrow.Pairs budget: the argmax ran on
     // the driver and reaches the plan as one broadcast local relation
     val p = plan("q91_dedup_keep_best")
     assert(p.contains("BroadcastHashJoin") && p.contains("LocalTableScan"), p)
@@ -173,12 +173,13 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("q91 keep-best: per-group argmax uses WindowGroupLimit pushdown") {
-    // past Dedup.NarrowMaxPairRows the argmax is per group on the
+    // past the Narrow.Pairs budget the argmax is per group on the
     // executors; pinned on q91's inputs with the shuffle regime forced
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     val pairs = graft.operators.Dedup.nearDuplicates(docs, "doc_id", "text",
       shingleN = 4, numHashes = 8, rowsPerBand = 4, threshold = 0.4)
-    val shuffle = graft.operators.Dedup.keepBestIn(docs, "doc_id", pairs, "n_chars", narrow = false)
+    val shuffle = org.apache.spark.sql.graft.Narrow.withBudget(0)(
+        graft.operators.Dedup.keepBest(docs, "doc_id", pairs, "n_chars"))
       .queryExecution.executedPlan.toString
     assert(shuffle.contains("WindowGroupLimit"), shuffle)
   }
