@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.operators.{Dedup, NnDescent, Similarity}
+import graft.operators.{Dedup, HeurFuzz, NnDescent, Similarity}
 import org.apache.spark.sql.graft.{CheckpointStats, Narrow}
 
 /** Builder-local measurement harness behind SCALE.md's at-scale rows —
@@ -48,7 +48,20 @@ import org.apache.spark.sql.graft.{CheckpointStats, Narrow}
   *                            point (narrow regime) vs the forced shuffle
   *                            regime, interleaved N S N S in one JVM
   *
-  * The three A/Bs force the shuffle arm with Narrow.withBudget(0), and
+  *   match-ab <table-dir> [QxW...]
+  *                            HeurFuzz.matchTable (K 10, cutoff 70, as
+  *                            q50) at each grid cell: Q queries (the
+  *                            lowercased names of the parts with
+  *                            p_partkey <= Q, q10's scan, one partition
+  *                            on a one-file table)
+  *                            against W 40-byte windows of every
+  *                            document (default 10x1, 10x32, 200x1,
+  *                            2000x1: 5k or 160k refs at sf0.1);
+  *                            the shipped entry point (narrow regime) vs
+  *                            the forced cross join, interleaved N S N S
+  *                            in one JVM
+  *
+  * The four A/Bs force the shuffle arm with Narrow.withBudget(0), and
   * each narrow arm prints the driver's used heap around its build (see
   * heapAround): the measurement behind the Narrow regimes' peak factors.
   *
@@ -87,6 +100,8 @@ object ScaleProbe extends RegistryBase {
         else Seq(1000000L, 3990000L))
       case "screen-ab"      => screenAb(spark,
         if (args.length > 1) args.drop(1).map(_.toLong).toSeq else Seq(1000L, 3600L))
+      case "match-ab"       => matchAb(spark, args(1),
+        if (args.length > 2) args.drop(2).toSeq else Seq("10x1", "10x32", "200x1", "2000x1"))
       case other            => sys.error(s"unknown subcommand: $other")
     }
     spark.stop()
@@ -331,6 +346,43 @@ object ScaleProbe extends RegistryBase {
         s""""narrow_build_s":${arr("narrow", v => Seq(v._2))},"shuffle_build_s":${arr("shuffle", v => Seq(v._2))},""" +
         s""""narrow_probe_s":${arr("narrow", _._3)},"shuffle_probe_s":${arr("shuffle", _._3)},$heap}""")
       reset(s)
+    }
+  }
+
+  /** Same-JVM interleaved A/B of matchTable's two regimes (SCALE.md, the
+    * fuzzy match's narrow regime). The refs are cached once per cell, so
+    * the arms differ only in the match; the query side stays an uncached
+    * scan, so the narrow pass runs on the partitions the scan gives it.
+    * (Part names repeat: sf0.1 has 64 distinct ones, so q50's distinct
+    * names cannot make a 2,000-query cell.) Both arms must return the
+    * same table.
+    */
+  private def matchAb(s: SparkSession, dir: String, cells: Seq[String]): Unit = {
+    val docs = rd(s, dir, "documents")
+    for (cell <- cells) {
+      val Array(nq, nw) = cell.split("x").map(_.toInt)
+      val queries = rd(s, dir, "part").filter(col("p_partkey") <= nq)
+        .select(col("p_partkey").as("id"), lower(col("p_name")).as("term"))
+      val refs = docs.select(col("doc_id"), col("text"), explode(sequence(lit(0), lit(nw - 1))).as("w"))
+        .select((col("doc_id") * nw + col("w")).as("id"), substring(col("text"), lit(1) + col("w") * 7, lit(40)).as("term"))
+        .cache()
+      val nRefs = refs.count()
+      var rows = Vector.empty[(String, Double)]
+      var tables = Set.empty[Seq[String]]
+      var tasks = 0
+      for (regime <- Seq("narrow", "shuffle", "narrow", "shuffle")) {
+        System.gc()
+        rows :+= ((regime, timed { arm(regime) {
+          val out = HeurFuzz.matchTable(queries, refs, HeurFuzz.Params(topK = 10, scoreCutoff = 70))
+          if (regime == "narrow") tasks = out.queryExecution.toRdd.getNumPartitions
+          tables += out.collect().map(_.mkString("\t")).sorted.toSeq
+        } }))
+      }
+      require(tables.size == 1, s"the regimes disagree at $cell")
+      def arr(r: String) = rows.filter(_._1 == r).map(v => "%.3f".format(v._2)).mkString("[", ",", "]")
+      println(s"""{"probe":"match_ab","queries":${queries.count()},"refs":$nRefs,"narrow_tasks":$tasks,""" +
+        s""""narrow_s":${arr("narrow")},"shuffle_s":${arr("shuffle")},$heap}""")
+      refs.unpersist(blocking = true)
     }
   }
 

@@ -727,7 +727,7 @@ object NnDescent {
     */
   private[graft] def vecStats(vecs: DataFrame): (Long, Int) = {
     def add(a: (Long, Int), b: (Long, Int)) = (a._1 + b._1, math.max(a._2, b._2))
-    Narrow.collect(vecs.select(size(col("dv"))))(
+    Narrow.collect(vecs.select(size(col("dv"))), "nnd/vectors/stats")(
       _.map(r => (1L, if (r.isNullAt(0)) 0 else r.getInt(0))).foldLeft((0L, 0))(add)
     ).foldLeft((0L, 0))(add)
   }

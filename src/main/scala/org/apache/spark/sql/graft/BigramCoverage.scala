@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, DoubleType, IntegerType, StringType}
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Overlapping UTF-8 byte bigrams of a string as a SORTED array<int> of
@@ -90,19 +91,41 @@ case class SortedCoverage(left: Expression, right: Expression)
 object SortedCoverage {
   /** Static bridge shared by interpreted eval and generated code. */
   def compute(q: ArrayData, r: ArrayData): Double = {
-    val n = q.numElements()
-    val m = r.numElements()
+    val uq = unsafe(q)
+    val ur = unsafe(r)
+    val n = uq.numElements()
+    if (n == 0) 0.0
+    else hits(uq.getBaseObject, elements(uq), n, ur.getBaseObject, elements(ur), ur.numElements())
+      .toDouble / n
+  }
+
+  /** The merge scan: how many of the query's `n` codes at (qBase, qOff)
+    * occur among the ref's `m` codes at (rBase, rOff). Both are read with
+    * `Platform.getInt`, so one body serves an UnsafeArrayData's elements
+    * and a slice of a flat `int[]` (HeurFuzz's narrow regime) alike.
+    */
+  def hits(qBase: AnyRef, qOff: Long, n: Int, rBase: AnyRef, rOff: Long, m: Int): Int = {
     var i = 0
     var j = 0
-    var hits = 0
+    var h = 0
     while (i < n && j < m) {
-      val qv = q.getInt(i)
-      val rv = r.getInt(j)
-      if (qv == rv) { hits += 1; i += 1 }
+      val qv = Platform.getInt(qBase, qOff + 4L * i)
+      val rv = Platform.getInt(rBase, rOff + 4L * j)
+      if (qv == rv) { h += 1; i += 1 }
       else if (qv < rv) i += 1
       else j += 1
     }
-    if (n == 0) 0.0 else hits.toDouble / n
+    h
+  }
+
+  /** The offset of an UnsafeArrayData's first element. */
+  def elements(a: UnsafeArrayData): Long =
+    a.getBaseOffset + UnsafeArrayData.calculateHeaderPortionInBytes(a.numElements())
+
+  // interpreted eval over a literal may hand over a GenericArrayData
+  private def unsafe(a: ArrayData): UnsafeArrayData = a match {
+    case u: UnsafeArrayData => u
+    case g => UnsafeArrayData.fromPrimitiveArray(g.toIntArray)
   }
 
   def column(q: Column, r: Column): Column =

@@ -47,13 +47,13 @@ object ContainmentCorpus {
     * it).
     */
   def postingRows(hashed: DataFrame): Long =
-    Narrow.collect(hashed.select(col("nsh")))(_.map(_.getInt(0).toLong).sum).sum
+    Narrow.collect(hashed.select(col("nsh")), "containment/corpus/size")(_.map(_.getInt(0).toLong).sum).sum
 
   /** Collect a hashed corpus (id, hs sorted ascending and distinct, nsh
     * > 0) in one job and build the arrays. The caller bounds its size.
     */
   def collect(hashed: DataFrame, idCol: String): ContainmentCorpus = {
-    val parts = Narrow.collect(hashed.select(col(idCol).isNotNull, col("hs"))) { it =>
+    val parts = Narrow.collect(hashed.select(col(idCol).isNotNull, col("hs")), "containment/corpus/collect") { it =>
       val (live, len, hs) =
         (ArrayBuilder.make[Boolean], ArrayBuilder.make[Int], ArrayBuilder.make[Long])
       it.foreach { r =>

@@ -55,7 +55,8 @@ final class DupComponents private (val ids: Array[Long], val root: Array[Int])
     val size = new Array[Int](ids.length) // members per index, nonzero only at roots
     root.foreach(r => size(r) += 1)
     val comps = Narrow.share(spark, this)
-    val parts = try Narrow.collect(docs.select(col(idCol).cast(LongType), col(qualityCol))) { rows =>
+    val parts = try Narrow.collect(docs.select(col(idCol).cast(LongType), col(qualityCol)),
+        "dedup/docs/best") { rows =>
       val c = comps.value
       val better = DupComponents.better(qType)
       val top = mutable.HashMap.empty[Int, InternalRow]
@@ -89,7 +90,8 @@ object DupComponents {
     * run the union-find. The caller bounds its size.
     */
   def collect(pairs: DataFrame): DupComponents = {
-    val parts = Narrow.collect(pairs.select(col("id_a").cast(LongType), col("id_b").cast(LongType))) {
+    val parts = Narrow.collect(pairs.select(col("id_a").cast(LongType), col("id_b").cast(LongType)),
+        "dedup/pairs/collect") {
       it =>
         val (a, b) = (ArrayBuilder.make[Long], ArrayBuilder.make[Long])
         it.foreach { r =>

@@ -20,15 +20,17 @@ import org.apache.spark.sql.types.StructType
 /** The scaffolding every narrow regime shares. A narrow regime collects
   * its input once, broadcasts it as flat arrays and answers in one narrow
   * pass over them; past its budget the operator runs its shuffle twin.
-  * Three regimes use it: NN-Descent's rounds (NarrowRounds), group
-  * resolution (DupComponents) and the exact containment screen's corpus
-  * (ContainmentCorpus). This object owns what they have in common:
+  * Four regimes use it: NN-Descent's rounds (NarrowRounds), group
+  * resolution (DupComponents), the exact containment screen's corpus
+  * (ContainmentCorpus) and the fuzzy match's refs (graft.operators.
+  * MatchRefs). This object owns what they have in common:
   *
   *   - the budget: one byte budget derived from the driver heap, against
   *     which each regime's declared footprint (bytes per row times the
   *     measured peak factor of its collect, SCALE.md) is checked;
   *   - the collect: per-partition array builders, gathered in one job
-  *     through `queryExecution.toRdd`, joined with one allocation;
+  *     through `queryExecution.toRdd` under an `operator/phase` job
+  *     description, joined with one allocation;
   *   - the broadcast and its release, now or once the checkpoint that
   *     reads it is cut from its lineage;
   *   - the frames back: a narrow pass's RDD of internal rows, or a
@@ -66,6 +68,14 @@ object Narrow {
     * (NarrowVectors).
     */
   def Vectors(dim: Int): Regime = Regime(40L + 8L * dim, 22.5)
+  /** Fuzzy-match refs (graft.operators.MatchRefs), sized in two parts
+    * because terms vary in length: per ref, its byte length, CSR offset
+    * and String object (`Refs`); per term byte, one bigram code and one
+    * byte of the String's storage (`TermBytes`). They share the factor
+    * of one measured match: 640,000 refs of 40 bytes against 10 queries.
+    */
+  val Refs: Regime = Regime(56, 5.8)
+  val TermBytes: Regime = Regime(5, 5.8)
 
   private val pinned = new DynamicVariable[Option[Long]](None)
 
@@ -90,11 +100,19 @@ object Narrow {
 
   /** Collect `df` in one job, one value per partition in partition order:
     * `part` folds a partition's internal rows into array builders. The
-    * scan reuses its rows, so `part` copies what it keeps.
+    * scan reuses its rows, so `part` copies what it keeps. The job runs
+    * under the description `label` (`operator/phase`, e.g.
+    * `heurfuzz/refs/collect`); the thread's previous description is
+    * restored after it.
     */
-  def collect[P: ClassTag](df: DataFrame)(part: Iterator[InternalRow] => P): Array[P] =
-    df.asInstanceOf[Dataset[_]].queryExecution.toRdd
+  def collect[P: ClassTag](df: DataFrame, label: String)(part: Iterator[InternalRow] => P): Array[P] = {
+    val sc = df.sparkSession.sparkContext
+    val previous = sc.getLocalProperty(SparkContext.SPARK_JOB_DESCRIPTION)
+    sc.setJobDescription(label)
+    try df.asInstanceOf[Dataset[_]].queryExecution.toRdd
       .mapPartitions(rows => Iterator.single(part(rows))).collect()
+    finally sc.setJobDescription(previous)
+  }
 
   /** Per-partition arrays joined into one, allocated once. */
   def flat[T: ClassTag](parts: Array[Array[T]]): Array[T] = Array.concat(parts.toIndexedSeq: _*)

@@ -46,7 +46,7 @@ final class NarrowRounds(vecs: DataFrame, k: Int, cap: Int) {
   private val capN = if (cap > 0) cap else 2 * k
 
   private lazy val vectors: NarrowVectors = {
-    val rows = Narrow.collect(vecs.select("vec_id", "dv", "nrm")) { it =>
+    val rows = Narrow.collect(vecs.select("vec_id", "dv", "nrm"), "nnd/vectors/collect") { it =>
       it.filter(!_.isNullAt(0)).map(r => (r.getLong(0),
         if (r.isNullAt(1)) null else r.getArray(1).toDoubleArray(),
         if (r.isNullAt(2)) Double.NaN else r.getDouble(2))).toArray
@@ -81,7 +81,7 @@ final class NarrowRounds(vecs: DataFrame, k: Int, cap: Int) {
   private def graph(g: DataFrame, t: Int): NarrowGraph = {
     val scored = t > 0
     val cols = if (scored) Seq("src", "dst", "cos_sim", "is_new") else Seq("src", "dst")
-    val parts = Narrow.collect(g.select(cols.map(g.col): _*)) { it =>
+    val parts = Narrow.collect(g.select(cols.map(g.col): _*), "nnd/graph/collect") { it =>
       val (src, dst) = (ArrayBuilder.make[Long], ArrayBuilder.make[Long])
       val (cos, nul, nw) =
         (ArrayBuilder.make[Double], ArrayBuilder.make[Boolean], ArrayBuilder.make[Boolean])

@@ -1,6 +1,9 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.{JobCount, Narrow}
 import graft.operators.HeurFuzz
 import graft.sources.Readers
 
@@ -34,7 +37,10 @@ class HeurFuzzSpec extends SparkSpec {
       .toSeq
 
   test("golden e2e: reproduces example/output.txt (crossJoin path)") {
+    // the shipped budget takes the narrow regime on the example; the
+    // cross join is its fallback past the budget
     assert(matchRows(HeurFuzz.Params(topK = 5, scoreCutoff = 90)) == goldenRows)
+    assert(Narrow.withBudget(0)(matchRows(HeurFuzz.Params(topK = 5, scoreCutoff = 90))) == goldenRows)
   }
 
   test("top-K candidate order: desc(coverage, len_diff, ref_id) — SURVEY §2.1") {
@@ -119,5 +125,43 @@ class HeurFuzzSpec extends SparkSpec {
   test("cutoff gate: peanutbutter maps once the cutoff is dropped") {
     val rows = matchRows(HeurFuzz.Params(topK = 5, scoreCutoff = 0))
     assert(rows(3)._2 != "NA")
+  }
+
+  private def shuffles(r: org.apache.spark.rdd.RDD[_]): Int = r.dependencies.map {
+    case d: org.apache.spark.ShuffleDependency[_, _, _] => 1 + shuffles(d.rdd)
+    case d => shuffles(d.rdd)
+  }.sum
+
+  test("narrow match: one narrow pass, no ShuffleDependency") {
+    // The narrow regime's contract: the refs are sized and collected once,
+    // each in one labelled job, and every query row is scanned, cut to K
+    // and verified inside the tasks of one pass, so no window, join or
+    // exchange sees a pair. The walker is checked against the shuffle
+    // regime, which must shuffle.
+    val (q, r) = (Readers.lines(spark, exQ), Readers.lines(spark, exR))
+    val params = HeurFuzz.Params(topK = 5, scoreCutoff = 90)
+    val shuffled = Narrow.withBudget(0)(HeurFuzz.matchTable(q, r, params))
+    assert(shuffles(shuffled.queryExecution.toRdd) > 0,
+      "the lineage walker found no shuffle in the shuffle regime")
+    val sc = spark.sparkContext
+    val labels = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description"))).foreach(labels.add)
+    }
+    sc.setJobDescription("outer")
+    sc.addSparkListener(listener)
+    var out: DataFrame = null
+    val jobs = try JobCount.during(sc) {
+      out = HeurFuzz.matchTable(q, r, params)
+      assert(out.collect().sortBy(_.getLong(0)).map(x => (x.getString(1), x.getString(2))).toSeq == goldenRows)
+    } finally sc.removeSparkListener(listener)
+    assert(jobs <= 3, s"matchTable + collect ran $jobs jobs")
+    assert(shuffles(out.queryExecution.toRdd) == 0,
+      s"the narrow match has a ShuffleDependency:\n${out.queryExecution.toRdd.toDebugString}")
+    import scala.jdk.CollectionConverters._
+    assert(labels.asScala.toSeq.distinct.sorted == Seq("heurfuzz/refs/collect", "heurfuzz/refs/size", "outer"))
+    assert(sc.getLocalProperty("spark.job.description") == "outer", "the collect did not restore the description")
+    sc.setJobDescription(null)
   }
 }
