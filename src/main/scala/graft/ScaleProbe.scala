@@ -423,7 +423,7 @@ object ScaleProbe extends RegistryBase {
     val (_, dim) = NnDescent.vecStats(vecs)
     val p = NnDescent.buildParams(n, dim, k, cap)
     System.err.println(s"[nnd-rounds] n=$n k=${p.k} cap=${p.cap} slices=${p.slices} " +
-      s"(override=${NnDescent.ExpansionSlicesOverride}, budget=${NnDescent.DiskBudgetBytes / (1L << 30)}GB)")
+      s"(budget=${NnDescent.DiskBudgetBytes / (1L << 30)}GB)")
     val metrics = new org.apache.spark.sql.graft.TaskMetricsAgg(s.sparkContext)
     val g0 = CheckpointStats.freshCheckpoint(NnDescent.initGraph(e, "vec_id", p.k))
     // eager rounds: each round's wall time is its own checkpoint job

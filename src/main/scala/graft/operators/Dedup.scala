@@ -545,8 +545,8 @@ object Dedup {
     val ordered = ex
       .join(freq, Seq("h"))
       // pinned keyed repartition before the CPU-heavy per-doc reorder —
-      // AQE's byte-based coalescing otherwise folds it into one task
-      // (see containmentPairs; the groupBy reuses this partitioning)
+      // AQE's byte-based coalescing otherwise folds it into one task (the
+      // groupBy reuses this partitioning)
       .repartition(col(idCol))
       .groupBy(col(idCol), col("nsh"))
       .agg(sort_array(collect_list(struct(col("df"), col("h")))).as("sg"))
@@ -608,18 +608,22 @@ object Dedup {
     * prunes them BY DESIGN there). Containment is the dedup relation for
     * partial-copy detection (Broder's "roughly contained", SEQUENCES'97).
     *
-    * Sub-quadratic by the one-sided prefix filter: with k = minOverlap(t,
-    * |A|), |A ∩ B| >= k forces the intersection to hit A's first
-    * |A| - k + 1 shingles under any total order shared by both sides
-    * (else the intersection fits inside A's last k - 1 positions — too
-    * small). So only A's rare-first prefix joins, against B's FULL
-    * rare-first list (B is unbounded above — that is the point), with
-    * the size filter |B| >= k (intersection can't exceed |B|) and
-    * the PPJoin positional bound 1 + min(|A|-pa-1, |B|-pb-1) >= k
-    * (both lists share the global (df, h) order, so the first shared
-    * shingle's positions cap the achievable overlap). Exact intersect
-    * verifies inline; like ngramJaccardPairs the result is
-    * hash-independent, so shingles ride the codegen'd xxhash64.
+    * The exact containment screen's self-probe: the corpus is built into
+    * a `containmentScreenIndex` and then probed with its own hashed docs,
+    * so the one-sided prefix filter (only A's rare-first prefix probes
+    * B's full posting list; see incrementalContainmentScreenOnIndex), its
+    * position bound and its exact verify live in one place. Each doc's
+    * per-doc key `c_rk` is its probe key too. The regime is the index's:
+    * one narrow pass over the docs against the broadcast corpus
+    * (ContainmentCorpus) while its postings fit the Narrow.Postings
+    * budget, else the shuffle regime's joins. The corpus broadcast lives
+    * as long as the returned frame, as the screen's does with its index.
+    *
+    * One row per ordered pair of distinct documents whose ids are
+    * non-null and differ: docs that share an id are never paired with
+    * each other, and each of them pairs with other docs on its own. Like
+    * ngramJaccardPairs the result is hash-independent, so shingles ride
+    * the codegen'd xxhash64.
     */
   def containmentPairs(
       docs: DataFrame,
@@ -629,63 +633,28 @@ object Dedup {
       threshold: Double
   ): DataFrame = {
     requirePrefixThreshold(threshold)
-    val hashed = containmentHashed(docs, idCol, textCol, shingleN)
-      .filter(col("nsh") > 0)
-      .localCheckpoint(false)
-    val ex = hashed.select(col(idCol), col("nsh"), explode(col("hs")).as("h"))
-    val freq = ex.groupBy("h").agg(count(lit(1)).as("df"))
-    // rare-first reorder under the shared (df, h) total order, kept as a
-    // plain array; checkpointed because BOTH join sides slice from it.
-    // (round 17: a pinned repartition(id) before this reorder and a
-    // SHUFFLE_HASH hint on the candidate join were both tried and
-    // MEASURED SLOWER here — paired 4-run bench 9.23 -> 9.81 s and
-    // 9.23 -> 16.77 s respectively: the stats-driven broadcast of the
-    // full posting side is what makes this exact-truth baseline fast at
-    // audit scale, and the reorder is not on its warm critical path.
-    // ngramJaccardPairs keeps both changes, where they measured faster.)
-    val ordered = ex
-      .join(freq, Seq("h"))
-      .groupBy(col(idCol), col("nsh"))
-      .agg(transform(sort_array(collect_list(struct(col("df"), col("h")))), x => x("h")).as("sg"))
-      .localCheckpoint(false)
-    val prefixLen = (col("nsh") - minOverlap(threshold, col("nsh")) + 1).cast("int")
-    val prefixes = ordered.select(
-      col(idCol), col("nsh"),
-      posexplode(slice(col("sg"), lit(1), prefixLen)).as(Seq("pos", "h")))
-    val full = ordered.select(
-      col(idCol), col("nsh"),
-      posexplode(col("sg")).as(Seq("pos", "h")))
-    // candidates stay NARROW (ids/sizes/positions); arrays re-join after
-    // the pair aggregation so prefix multiplicity never shuffles an array
-    val needed = minOverlap(threshold, col("nsh_a"))
-    val ubound = lit(1) + least(col("nsh_a") - col("pa") - 1, col("nsh_b") - col("pb") - 1)
-    val cands = prefixes.alias("a")
-      .join(
-        full.alias("b"),
-        col("a.h") === col("b.h") && col(s"a.$idCol") =!= col(s"b.$idCol")
-          && col("b.nsh") >= minOverlap(threshold, col("a.nsh"))
-      )
-      .select(
-        col(s"a.$idCol").as("id_a"), col("a.nsh").as("nsh_a"), col("a.pos").as("pos_a"),
-        col(s"b.$idCol").as("id_b"), col("b.nsh").as("nsh_b"), col("b.pos").as("pos_b")
-      )
-      .groupBy("id_a", "id_b", "nsh_a", "nsh_b")
-      .agg(min(col("pos_a")).as("pa"), min(col("pos_b")).as("pb"))
-      .filter(ubound >= needed)
-      .select("id_a", "id_b")
-    val inter = org.apache.spark.sql.graft.LongArrayIntersectSize
-      .column(col("hs_a"), col("hs_b")).cast("double")
-    cands
-      .join(hashed.select(col(idCol).as("id_a"), col("hs").as("hs_a"), col("nsh").as("nsh_a")), Seq("id_a"))
-      .join(hashed.select(col(idCol).as("id_b"), col("hs").as("hs_b")), Seq("id_b"))
-      .withColumn("containment", inter / col("nsh_a"))
-      .filter(col("containment") >= threshold)
+    val index = containmentScreenIndex(docs, idCol, textCol, shingleN)
+    val live = index.hashed.filter(col(idCol).isNotNull)
+    val probe = live.select(col("c_rk").as("rk"), col("hs"), col("nsh"))
+    // lazily checkpointed: a downstream sort's sampling job would
+    // otherwise run the whole narrow pass a second time
+    val found = (index.narrow match {
+      case Some(corpus) => ContainmentCorpus.pairs(probe, corpus, threshold)
+      case None => shuffleContainers(probe, index, idCol, threshold)
+    }).localCheckpoint(false)
+    // a narrow corpus's per-doc ids fit the driver as well
+    val ids0 = live.select(col("c_rk"), col(idCol))
+    val ids = if (index.narrow.isDefined) broadcast(ids0) else ids0
+    found
+      .join(ids.select(col("c_rk").as("rk"), col(idCol).as("id_a")), Seq("rk"))
+      .join(ids.select(col("c_rk"), col(idCol).as("id_b")), Seq("c_rk"))
+      .filter(col("id_a") =!= col("id_b"))
       .select("id_a", "id_b", "containment")
   }
 
   /** Bottom-k sketch SCREEN for the containment join, with its audit —
     * the q147/q154/q170 shape applied to q173. containmentPairs' exact
-    * one-sided prefix still explodes (1-t)·|A|+1 shingles per doc; the
+    * one-sided prefix still probes (1-t)·|A|+1 shingles per doc; the
     * bottom-k screen joins a CONSTANT k hashes per doc instead: under a
     * uniform hash, A's k smallest shingle hashes are a uniform random
     * k-subset of A, so the fraction of them found anywhere in B is an
@@ -724,11 +693,11 @@ object Dedup {
     require(screenFrac > 0 && screenFrac <= threshold,
       "screen must not be stricter than the audited threshold")
     require(sampleTarget >= 1, "audit sample target must be positive")
-    // checkpoint the SAMPLE itself, not just frames derived from it:
-    // containmentPairs fans its input into several self-join legs, and
-    // without the barrier each leg re-executes the corpus scan +
-    // sampling subtree (measured: the h10 audit spent ~6x its bounded
-    // cost re-scanning the corpus it had already sampled away)
+    // checkpoint the SAMPLE itself, not just frames derived from it: it
+    // feeds both the sketch side's hashing and containmentPairs' own
+    // index build, and without the barrier each re-executes the corpus
+    // scan + sampling subtree (measured: the h10 audit spent ~6x its
+    // bounded cost re-scanning the corpus it had already sampled away)
     val sampledDocs = Sampling.oneInM(docs, idCol, sampleTarget,
         spreadTo = docs.sparkSession.sparkContext.defaultParallelism)
       .drop("m").localCheckpoint(false)
@@ -776,8 +745,9 @@ object Dedup {
           nullif(coalesce(col("n_candidates"), lit(0L)), lit(0L))).as("precision"))
   }
 
-  /** The corpus side of the exact containment screen, in one of two
-    * regimes (see containmentScreenIndex). Both carry the three
+  /** The corpus side of the exact containment screen (and of
+    * containmentPairs, which probes it with the corpus itself), in one of
+    * two regimes (see containmentScreenIndex). Both carry the three
     * corpus-side frames of the shuffle regime's probe: the hashed corpus
     * (id, hs, nsh, c_rk) for verification, the shingle dictionary
     * (h, df) for the rare-first order, and the rare-first posting frame
@@ -878,8 +848,14 @@ object Dedup {
     * decontamination-on-arrival runs: corpus-side self-pairs are NEVER
     * generated (the quadratic bulk of a batch containmentPairs run).
     *
-    * Same one-sided prefix filter: only the incoming doc's rare-first
-    * prefix probes the corpus's FULL posting list. Both sides order by
+    * The one-sided prefix filter: with k = minOverlap(t, |A|),
+    * |A ∩ B| >= k forces the intersection to hit A's first |A| - k + 1
+    * shingles under any total order shared by both sides (else it fits
+    * inside A's last k - 1 positions — too small). So only the incoming
+    * doc's rare-first prefix probes the corpus's FULL posting list (B is
+    * unbounded above — that is the point), with the size filter
+    * |B| >= k and the PPJoin positional bound
+    * 1 + min(|A|-pa-1, |B|-pb-1) >= k. Both sides order by
     * (corpus df, h) — a total order shared by construction;
     * incoming-only shingles take df 0 (rarest, so they front-load the
     * prefix — exactly right: a shingle absent from the corpus can only
@@ -925,6 +901,7 @@ object Dedup {
     val counts = index.narrow match {
       case Some(corpus) => broadcast(ContainmentCorpus.containers(probe, corpus, threshold))
       case None => shuffleContainers(probe, index, idCol, threshold)
+        .groupBy("rk").agg(count(lit(1)).as("n_containers"))
     }
     hi.select(col("rk"), col(idCol))
       .join(counts, Seq("rk"), "left")
@@ -932,8 +909,8 @@ object Dedup {
       .withColumn("kept", col("n_containers") === 0)
   }
 
-  /** The shuffle regime's (rk, n_containers) for the probe rows
-    * (rk, hs, nsh) with at least one verified container.
+  /** The shuffle regime's (rk, c_rk, containment) for the probe rows
+    * (rk, hs, nsh) and each of their verified containers.
     */
   private def shuffleContainers(probe: DataFrame, index: ContainmentScreenIndex,
       idCol: String, threshold: Double): DataFrame = {
@@ -958,8 +935,8 @@ object Dedup {
       .join(probe, Seq("rk"))
       .join(index.hashed.filter(col(idCol).isNotNull)
         .select(col("c_rk"), col("hs").as("c_hs")), Seq("c_rk"))
-      .filter(inter / col("nsh") >= threshold)
-      .groupBy("rk").agg(count(lit(1)).as("n_containers"))
+      .select(col("rk"), col("c_rk"), (inter / col("nsh")).as("containment"))
+      .filter(col("containment") >= threshold)
   }
 
   /** The corpus-side POSTING LIST of the containment screens — one

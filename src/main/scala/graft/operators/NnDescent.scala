@@ -102,40 +102,6 @@ object NnDescent {
       .select("src", "dst")
       .distinct()
 
-  /** Number of pivot slices the SHUFFLE-regime expansion executes in
-    * (default 1 = single pass). Slicing bounds PEAK DISK, which round
-    * 16 measured to be the shuffle regime's true capacity limit even
-    * after the narrow-triple fix: one h120 (600k · cap 70) round keeps
-    * ~46 GB of wide attach shuffle + ~22 GB of partial-window output +
-    * ~17 GB of flat-pass sort resident in a single job — more than
-    * this box's 78 GB budget, and at 1B nodes more than a per-executor
-    * disk budget too. With S slices the round runs as S independent
-    * jobs, each expanding only the pivots with pivot_id % S == s,
-    * cutting that slice's bag to per-src top-k, and CHECKPOINTING the
-    * narrow cut so the slice's shuffle files are GC-able before the
-    * next slice starts — peak disk drops ~1/S at the cost of S scans
-    * of the (tiny) vector table and adjacency.
-    *
-    * EXACT, not approximate: every bag occurrence of a candidate pair
-    * lands in exactly the slice of its generating pivot, and a pair in
-    * the final per-src top-k ranks <= k within any subset of the bag
-    * it appears in — so the union of slice top-k cuts is a superset of
-    * the global top-k, and the final (cheap, narrow) re-rank
-    * reproduces ranks bit-for-bit (the NnDescentSpec slicing test pins
-    * slices = 3 ≡ slices = 1 on the fixture). Ids are dense 0..N-1, so
-    * pmod(pivot, S) is a balanced split with zero hashing cost.
-    *
-    * Round 17: the slice count is DERIVED by default (autoSlices) in
-    * knnGraph/upsertGraph — round 16 proved slicing is load-bearing for
-    * any big shuffle-regime build (the unsliced 600k pass needed ~95 GB
-    * of disk and died; S = 3 completed at 44 GB peak), so the engine
-    * must not default to the plan that dies. The property here is an
-    * explicit OVERRIDE for A/Bs and probes, read only by buildParams;
-    * unset means "derive".
-    */
-  def ExpansionSlicesOverride: Option[Int] =
-    sys.props.get("graft.nnd.expansionSlices").map(_.toInt)
-
   /** Local-disk budget one shuffle-regime expansion pass may occupy,
     * in bytes. Override via graft.nnd.diskBudgetBytes; the default
     * measures the usable space
@@ -250,7 +216,34 @@ object NnDescent {
       .distinct()
 
   /** The union of the slices' scored bags `bag(slice)`, each cut to its
-    * per-src top k and checkpointed (see ExpansionSlicesOverride).
+    * per-src top k and checkpointed: the SHUFFLE-regime expansion in S
+    * pivot slices (S = 1 is a single pass). Slicing bounds PEAK DISK,
+    * which round 16 measured to be the shuffle regime's true capacity
+    * limit even after the narrow-triple fix: one h120 (600k · cap 70)
+    * round keeps ~46 GB of wide attach shuffle + ~22 GB of partial-window
+    * output + ~17 GB of flat-pass sort resident in a single job — more
+    * than this box's 78 GB budget, and at 1B nodes more than a
+    * per-executor disk budget too. With S slices the round runs as S
+    * independent jobs, each expanding only the pivots with
+    * pivot_id % S == s, cutting that slice's bag to per-src top-k, and
+    * CHECKPOINTING the narrow cut so the slice's shuffle files are
+    * GC-able before the next slice starts — peak disk drops ~1/S at the
+    * cost of S scans of the (tiny) vector table and adjacency.
+    *
+    * EXACT, not approximate: every bag occurrence of a candidate pair
+    * lands in exactly the slice of its generating pivot, and a pair in
+    * the final per-src top-k ranks <= k within any subset of the bag
+    * it appears in — so the union of slice top-k cuts is a superset of
+    * the global top-k, and the final (cheap, narrow) re-rank
+    * reproduces ranks bit-for-bit (the NnDescentSpec slicing test pins
+    * slices = 3 ≡ slices = 1 on the fixture). Ids are dense 0..N-1, so
+    * pmod(pivot, S) is a balanced split with zero hashing cost.
+    *
+    * The slice count is DERIVED (autoSlices, from the disk budget) by
+    * buildParams for knnGraph/upsertGraph — round 16 proved slicing is
+    * load-bearing for any big shuffle-regime build (the unsliced 600k
+    * pass needed ~95 GB of disk and died; S = 3 completed at 44 GB
+    * peak), so the engine must not default to the plan that dies.
     */
   private def slicedCuts(slices: Int, k: Int)(bag: Int => DataFrame): DataFrame =
     (0 until slices).map(sl =>
@@ -298,7 +291,7 @@ object NnDescent {
     // slices > 1 restricts the expansion to the pivots with
     // pivot % slices == slice (the pivot is a.dst == b.src); ids are
     // dense 0..N-1 so pmod is a balanced, zero-cost split. See
-    // ExpansionSlicesOverride for why and for the exactness argument.
+    // slicedCuts for why and for the exactness argument.
     val undA = if (slices <= 1) und
       else und.filter(pmod(col("dst"), lit(slices.toLong)) === slice)
     val undB = if (slices <= 1) und
@@ -379,7 +372,7 @@ object NnDescent {
         scoreTwoHopLocal(und, vecs)
           .union(scoreFlat(g.select(col("src"), col("dst")), vecs, bcastVecs = false))
       else {
-        // bounded-peak-disk execution (see ExpansionSlicesOverride): each
+        // bounded-peak-disk execution (see slicedCuts): each
         // slice expands its pivots, scores, cuts to per-src top-k, and
         // CHECKPOINTS the narrow cut so its shuffle files free before
         // the next slice; the union re-ranks below — exact.
@@ -468,7 +461,7 @@ object NnDescent {
           extraCond = col("a.is_new") || col("b.is_new"))
           .join(gPairs, Seq("src", "dst"), "left_anti")
       else
-        // bounded-peak-disk slices (see ExpansionSlicesOverride / iterate);
+        // bounded-peak-disk slices (see slicedCuts / iterate);
         // the per-slice cut is a superset of each pair's final rank
         // eligibility, and the anti-join applies per slice so the union
         // stays (src, dst)-collision-free against g
@@ -715,7 +708,7 @@ object NnDescent {
     val kUse = if (k >= 1) k else autoK(n)
     val capUse = if (cap > 0) cap else if (cap == 0 || k < 1) autoCap(kUse) else cap
     val narrow = Narrow.fits(Narrow.Vectors(dim) -> n, Narrow.Graph -> kUse.toLong * n)
-    val slices = if (narrow) 1 else ExpansionSlicesOverride.getOrElse(autoSlices(n, capUse, dim))
+    val slices = if (narrow) 1 else autoSlices(n, capUse, dim)
     BuildParams(kUse, capUse, narrow, slices)
   }
 

@@ -49,8 +49,10 @@ trait DedupRegistry extends RegistryBase {
     // pillar dedup: ASYMMETRIC containment join — directed pairs where
     // >= 70% of A's 6-gram shingles appear in B (partial-copy / excerpt
     // detection; Jaccard's size filter prunes exactly these pairs by
-    // design). One-sided prefix filter + PPJoin positional bound, exact
-    // intersect verify — no cross join at any scale.
+    // design). The exact containment screen probing its own corpus:
+    // one-sided prefix filter + PPJoin positional bound, exact intersect
+    // verify — one narrow pass over a broadcast corpus while it fits the
+    // driver budget, joins past it; no cross join at any scale.
     "q173_containment_pairs" -> ((s, dir) =>
       Dedup.containmentPairs(
           spread(s, rd(s, dir, "documents")), "doc_id", "text",

@@ -21,9 +21,10 @@ import org.apache.spark.sql.types.StructType
   * its input once, broadcasts it as flat arrays and answers in one narrow
   * pass over them; past its budget the operator runs its shuffle twin.
   * Four regimes use it: NN-Descent's rounds (NarrowRounds), group
-  * resolution (DupComponents), the exact containment screen's corpus
-  * (ContainmentCorpus) and the fuzzy match's refs (graft.operators.
-  * MatchRefs). This object owns what they have in common:
+  * resolution (DupComponents), the exact containment corpus
+  * (ContainmentCorpus, which the containment screen and containmentPairs
+  * both probe) and the fuzzy match's refs (graft.operators.MatchRefs).
+  * This object owns what they have in common:
   *
   *   - the budget: one byte budget derived from the driver heap, against
   *     which each regime's declared footprint (bytes per row times the
@@ -53,11 +54,15 @@ object Narrow {
 
   /** Near-dup pairs: two longs (DupComponents); measured at 3.99M pairs. */
   val Pairs: Regime = Regime(16, 19.2)
-  /** Corpus postings: postDoc, postPos and docH, plus a dictionary entry
-    * and df per distinct shingle, at most one per posting
-    * (ContainmentCorpus); measured at 2.0M postings.
+  /** Corpus postings: postDoc, postPos and docH (16 bytes), plus a
+    * dictionary entry, df and CSR offset per distinct shingle (16) and a
+    * doc's CSR offset, key and live flag per doc (13); distinct shingles
+    * and docs are each at most one per posting (ContainmentCorpus).
+    * Measured at 2.0M postings as 4.7 times 32 declared bytes, i.e. 3.34
+    * times these 45 (the per-doc arrays are 3,600 × 13 bytes there); 2.6
+    * when re-measured with the per-doc key array.
     */
-  val Postings: Regime = Regime(32, 4.7)
+  val Postings: Regime = Regime(45, 3.34)
   /** NN-Descent graph rows: one out-edge (dst, score, null flag) and up
     * to two capped adjacency entries (NarrowGraph). Graph and Vectors
     * share the factor of one measured build: 90k 64-d vectors, k = 43,

@@ -198,8 +198,8 @@ class DedupSpec extends SparkSpec {
       val txt = (0 until n).map(j => words((i * 7 + j * 3) % words.length)).mkString(" ")
       (i.toLong, txt)
     } ++ Seq(90L -> wide, 91L -> edge)).toDF("doc_id", "text")
-    for (t <- Seq(0.5, 0.55)) {
-      val fast = Dedup.containmentPairs(corpus, "doc_id", "text", 3, t)
+    for (t <- Seq(0.5, 0.55); narrow <- Seq(true, false)) {
+      val fast = inRegime(narrow)(Dedup.containmentPairs(corpus, "doc_id", "text", 3, t))
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
       val withSh = corpus.select(col("doc_id"), Dedup.shingleSet(col("text"), 3).as("sh"))
         .filter(size(col("sh")) > 0)
@@ -216,7 +216,7 @@ class DedupSpec extends SparkSpec {
       assert(brute.exists(p => !brute.exists(q => q._1 == p._2 && q._2 == p._1)),
         "fixture should exercise the asymmetric case")
       assert(brute.contains((90L, 91L, 0.55)), s"t $t: the 55/100 pair must qualify")
-      assert(fast == brute, s"t $t")
+      assert(fast == brute, s"t $t narrow $narrow")
     }
   }
 
@@ -453,6 +453,43 @@ class DedupSpec extends SparkSpec {
         val under = screen(underIdx)
         assert(shuffles(under.queryExecution.toRdd) > 0, s"seed $seed t $t: no shuffle over budget")
         assert(sortedRows(under) == expected, s"seed $seed t $t")
+      }
+    }
+  }
+
+  test("differential: containmentPairs narrow == shuffle == per-row brute force") {
+    // One row per ordered pair of distinct docs whose ids are non-null and
+    // differ: screenCase's corpus repeats ids (30/31 share a text, and
+    // both docs 35 are contained in doc 7, so (35, 7, 1.0) appears twice),
+    // has a null id, empty and short texts, and the 55/100 doc.
+    for ((seed, idType) <- Seq(1 -> LongType, 2 -> IntegerType, 3 -> LongType)) {
+      val (corpus, _) = screenCase(seed, idType)
+      val docsSh = corpus.select(col("doc_id"), Dedup.shingleSet(col("text"), 3).as("sh"))
+        .collect().map(r => (Option(r.get(0)), if (r.isNullAt(1)) Set.empty[String] else r.getSeq[String](1).toSet))
+      def brute(t: Double): Seq[String] = (for {
+        (a, i) <- docsSh.zipWithIndex.toSeq; (b, j) <- docsSh.zipWithIndex.toSeq
+        if i != j && a._1.isDefined && b._1.isDefined && a._1 != b._1 && a._2.nonEmpty
+        c = (a._2 & b._2).size.toDouble / a._2.size
+        if c >= t
+      } yield s"${a._1.get}|${b._1.get}|$c").sorted
+      val shipped = Dedup.containmentScreenIndex(corpus, "doc_id", "text", 3)
+      val need = math.ceil(Narrow.Postings.bytes(shipped.postings.count())).toLong
+      for (t <- Seq(0.5, 0.55, 0.7, 1.0)) {
+        val expected = brute(t)
+        assert(expected.nonEmpty, s"seed $seed t $t: no pair qualifies")
+        if (t == 1.0) assert(expected.count(_.startsWith("35|7|")) == 2,
+          s"seed $seed: each doc 35 pairs with doc 7 on its own")
+        def pairs = Dedup.containmentPairs(corpus, "doc_id", "text", 3, t)
+        val narrow = pairs
+        val shuffle = Narrow.withBudget(0)(pairs)
+        val under = Narrow.withBudget(need - 1)(pairs)
+        assert(shuffles(under.queryExecution.toRdd) > 0, s"seed $seed t $t: no shuffle over budget")
+        assert(narrow.schema == StructType(Seq(StructField("id_a", idType), StructField("id_b", idType),
+          StructField("containment", DoubleType))), s"seed $seed t $t")
+        for ((regime, out) <- Seq("narrow" -> narrow, "shuffle" -> shuffle, "under" -> under)) {
+          assert(out.schema == narrow.schema, s"seed $seed t $t $regime")
+          assert(sortedRows(out) == expected, s"seed $seed t $t $regime")
+        }
       }
     }
   }

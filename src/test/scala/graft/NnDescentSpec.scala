@@ -267,28 +267,32 @@ class NnDescentSpec extends SparkSpec {
   }
 
   test("sliced expansion (bounded peak disk) is bit-identical to the single pass") {
-    // ExpansionSlices > 1 runs the shuffle-regime expansion as S
-    // checkpointed pivot-slice jobs (peak disk ~1/S). Exactness pin:
+    // S > 1 slices run the shuffle-regime expansion as S checkpointed
+    // pivot-slice jobs (peak disk ~1/S). Exactness pin:
     // a full shuffle-regime build at slices = 3 must equal the
     // single-pass shuffle build AND the broadcast build bit-for-bit —
     // the union of per-slice top-k cuts is a superset of the global
-    // top-k, and the final re-rank reproduces ranks exactly.
+    // top-k, and the final re-rank reproduces ranks exactly. S = 3 is
+    // derived, as deployed: a disk budget in [2·fp/3, fp) of the
+    // fixture's round footprint fp makes autoSlices' ceil(2·fp/budget) 3.
     import org.apache.spark.sql.graft.Narrow
-    val sKey = "graft.nnd.expansionSlices"
+    val bKey = "graft.nnd.diskBudgetBytes"
     def edges(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSet
     def graph() = NnDescent.knnGraph(clusteredVecs, "vec_id", "embedding", k = 4, iters = 3, cap = 5)
     def build() = edges(graph())
     val broadcastBuild = build()
+    val fp = NnDescent.roundFootprintBytes(40, 5, 64)
     val (shuffle1, shuffle3) = Narrow.withBudget(0) {
       val s1 = build()
       try {
-        sys.props(sKey) = "3"
+        sys.props(bKey) = (fp * 5 / 6).toString
+        assert(NnDescent.buildParams(40, 64, 4, 5).slices === 3)
         // the sliced build runs the shuffle regime, slices and all
         val sliced = graph()
         assert(shuffles(sliced.queryExecution.toRdd) > 0, "the sliced build stayed narrow")
         (s1, edges(sliced))
-      } finally sys.props.remove(sKey)
+      } finally sys.props.remove(bKey)
     }
     assert(shuffle1 == broadcastBuild, "single-pass shuffle build diverged")
     assert(shuffle3 == shuffle1, "sliced expansion diverged from the single pass")
@@ -331,13 +335,6 @@ class NnDescentSpec extends SparkSpec {
     // degenerate inputs stay sane
     assert(NnDescent.autoSlices(0, 70, 64, budget) === 1)
     assert(NnDescent.autoSlices(600000, 70, 64, 1L) > 1)
-    // the env/prop override wins over derivation in the builders
-    val sKey = "graft.nnd.expansionSlices"
-    try {
-      sys.props(sKey) = "7"
-      assert(NnDescent.ExpansionSlicesOverride === Some(7))
-    } finally sys.props.remove(sKey)
-    assert(NnDescent.ExpansionSlicesOverride === None)
   }
 
   test("descend: the q196 audit's eager walk is the shipped knnGraph, round by round") {
