@@ -21,7 +21,7 @@ object Verify {
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        if (sys.env.contains("SPARK_GRAFT_VERIFY_TRACE")) e.printStackTrace()
+        e.printStackTrace()
       }
       // free the query's localCheckpoint blocks — 100+ checkpointing
       // queries in one JVM otherwise pin gigabytes in the block manager

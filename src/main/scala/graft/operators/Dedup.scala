@@ -493,22 +493,27 @@ object Dedup {
   }
 
   /** N-gram Jaccard similarity pairs, EXACT (same result set as an
-    * all-pairs compare for threshold > 0) but sub-quadratic: the classic
-    * AllPairs prefix filter (Bayardo et al., WWW'07).
+    * all-pairs compare for threshold > 0) but sub-quadratic: the AllPairs
+    * prefix filter (Bayardo et al., WWW'07) with PPJoin's positional
+    * bound (Xiao et al., WWW'08), answered as the symmetric self-probe of
+    * a `containmentScreenIndex` (see selfPairs).
     *
-    * Each doc's distinct shingles are sorted under ONE global order —
-    * ascending document frequency, ties by shingle value — so the prefix
-    * holds the doc's RAREST shingles. A pair with Jaccard >= t must share
-    * >= minOverlap(t, |A|) shingles, so its intersection necessarily hits
-    * the first |A| - minOverlap(t, |A|) + 1 shingles of BOTH sides — an equi-join on
-    * prefix shingles finds every qualifying pair without a cross join,
-    * and rare-first ordering keeps each join bucket small (a
-    * lexicographic prefix puts stopword-like common shingles in most
-    * prefixes and re-creates the quadratic blowup on shared-vocabulary
-    * corpora). A length filter (|B| >= minOverlap(t, |A|) and the same
-    * with A and B swapped) prunes impossible
-    * pairs at the join, duplicates collapse map-side in the pair groupBy,
-    * and exact Jaccard verifies inline.
+    * Every doc's distinct shingles sort under one global order, ascending
+    * document frequency then hash, so a prefix holds the doc's rarest
+    * shingles. A pair with Jaccard >= t shares >= minOverlap(t, |A|)
+    * shingles, so it meets inside the first |A| - minOverlap(t, |A|) + 1
+    * shingles of both docs: each doc's prefix probes only the prefixes of
+    * docs with a larger per-doc key, under the size filter
+    * t·|A| <= |B| <= |A|/t (as minOverlap), the bound
+    * 1 + min(|A|-pa-1, |B|-pb-1) + 1e-9 >= t/(1+t)·(|A|+|B|) for the
+    * least shared positions (pa, pb), and the exact verify
+    * I / (|A| + |B| - I) >= t.
+    *
+    * One row per unordered pair of distinct documents whose ids are
+    * non-null and differ, as (smaller id, larger id, jacc): docs that
+    * share an id are never paired with each other, and each pairs with
+    * other docs on its own. The result depends on set sizes only, so
+    * shingles ride the codegen'd xxhash64 rather than the LSH path's md5.
     */
   def ngramJaccardPairs(
       docs: DataFrame,
@@ -516,89 +521,9 @@ object Dedup {
       textCol: String,
       shingleN: Int,
       threshold: Double
-  ): DataFrame = {
-    requirePrefixThreshold(threshold)
-    // xxhash64 shingle hashes: every downstream shuffle/intersect runs
-    // on longs instead of strings. Unlike the LSH path (whose CANDIDATE
-    // set depends on the hash values, so the oracle must reproduce them
-    // via md5), the prefix filter is exact — it finds every pair with
-    // jacc >= t regardless of hash function — and the output columns
-    // (id_a, id_b, jacc) only depend on set sizes, which any
-    // collision-free hash preserves. That frees this operator to use the
-    // cheapest codegen'd hash Spark has instead of md5+hex+conv (~4x
-    // less per-shingle CPU, the dominant cost here).
-    // value-sorted for the merge-scan intersect at verify time (the
-    // rare-first ordering the prefix stage needs is built separately)
-    // lazily checkpointed: `hashed` is referenced FOUR times in the DAG
-    // (document-frequency count, rare-first reorder, and both verify-side
-    // array re-joins) — without the checkpoint every branch would redo
-    // the per-shingle hashing, the dominant CPU cost. Lazy (not
-    // eager) so building the plan stays action-free; the first action
-    // materializes it once into the block manager.
-    val hashed = containmentHashed(docs, idCol, textCol, shingleN)
-      .filter(col("nsh") > 0)
-      .localCheckpoint(false)
-    val ex = hashed.select(col(idCol), col("nsh"), explode(col("hs")).as("h"))
-    val freq = ex.groupBy("h").agg(count(lit(1)).as("df"))
-    // each doc's shingles re-assembled rare-first; (df, h) is a total
-    // order shared by every doc, which is all the prefix theorem needs
-    val ordered = ex
-      .join(freq, Seq("h"))
-      // pinned keyed repartition before the CPU-heavy per-doc reorder —
-      // AQE's byte-based coalescing otherwise folds it into one task (the
-      // groupBy reuses this partitioning)
-      .repartition(col(idCol))
-      .groupBy(col(idCol), col("nsh"))
-      .agg(sort_array(collect_list(struct(col("df"), col("h")))).as("sg"))
-    val prefixLen = (col("nsh") - minOverlap(threshold, col("nsh")) + 1).cast("int")
-    // checkpointed for the same reason: the candidate stage self-joins
-    // `prefixes`, which would otherwise recompute the df-join + reorder
-    // on both sides
-    val prefixes = ordered.select(
-      col(idCol), col("nsh"),
-      posexplode(slice(transform(col("sg"), x => x("h")), lit(1), prefixLen)).as(Seq("pos", "h"))
-    ).localCheckpoint(false)
-    // candidate generation stays NARROW (ids + sizes + positions only) —
-    // the shingle arrays re-join after the pair aggregation, so
-    // prefix-match multiplicity never replicates an array through a
-    // shuffle. PPJoin positional filter (Xiao et al., WWW'08): a pair
-    // with jacc >= t needs |A∩B| >= t/(1+t)·(|A|+|B|); its globally
-    // smallest shared shingle sits at 0-based positions (pa, pb) in BOTH
-    // rare-first lists (same global order), so the achievable overlap is
-    // at most 1 + min(|A|-pa-1, |B|-pb-1) — pairs whose bound falls short
-    // never reach the array verify. The 1e-9 slack keeps the double-math
-    // comparison conservative.
-    val alpha = lit(threshold / (1.0 + threshold)) * (col("nsh_a") + col("nsh_b"))
-    val ubound = lit(1) + least(col("nsh_a") - col("pa") - 1, col("nsh_b") - col("pb") - 1)
-    // SHUFFLE_HASH (round 17, guide §3.1): stale checkpoint stats under
-    // the posexplode made the planner sort both multi-million-row sides
-    // by h for a sort-merge join; a per-partition hash build skips the
-    // sorts, and the self-join's identical child subplans still share
-    // one exchange
-    val cands = prefixes.alias("a").hint("shuffle_hash")
-      .join(
-        prefixes.alias("b"),
-        col("a.h") === col("b.h") && col(s"a.$idCol") < col(s"b.$idCol")
-          && col("b.nsh") >= minOverlap(threshold, col("a.nsh"))
-          && col("a.nsh") >= minOverlap(threshold, col("b.nsh"))
-      )
-      .select(
-        col(s"a.$idCol").as("id_a"), col("a.nsh").as("nsh_a"), col("a.pos").as("pos_a"),
-        col(s"b.$idCol").as("id_b"), col("b.nsh").as("nsh_b"), col("b.pos").as("pos_b")
-      )
-      .groupBy("id_a", "id_b", "nsh_a", "nsh_b")
-      .agg(min(col("pos_a")).as("pa"), min(col("pos_b")).as("pb"))
-      .filter(ubound.cast("double") + 1e-9 >= alpha)
-      .select("id_a", "id_b")
-    val inter = org.apache.spark.sql.graft.LongArrayIntersectSize
-      .column(col("hs_a"), col("hs_b")).cast("double")
-    cands
-      .join(hashed.select(col(idCol).as("id_a"), col("hs").as("hs_a"), col("nsh").as("nsh_a")), Seq("id_a"))
-      .join(hashed.select(col(idCol).as("id_b"), col("hs").as("hs_b"), col("nsh").as("nsh_b")), Seq("id_b"))
-      .withColumn("jacc", inter / (col("nsh_a") + col("nsh_b") - inter))
-      .filter(col("jacc") >= threshold)
-      .select("id_a", "id_b", "jacc")
-  }
+  ): DataFrame = selfPairs(docs, idCol, textCol, shingleN, threshold, jaccard = true)
+    .select(least(col("id_a"), col("id_b")).as("id_a"), greatest(col("id_a"), col("id_b")).as("id_b"),
+      col("score").as("jacc"))
 
   /** ASYMMETRIC shingle-containment join: directed pairs (a, b) with
     * |A ∩ B| / |A| >= t — "most of A's shingles appear in B". Jaccard
@@ -616,8 +541,7 @@ object Dedup {
     * per-doc key `c_rk` is its probe key too. The regime is the index's:
     * one narrow pass over the docs against the broadcast corpus
     * (ContainmentCorpus) while its postings fit the Narrow.Postings
-    * budget, else the shuffle regime's joins. The corpus broadcast lives
-    * as long as the returned frame, as the screen's does with its index.
+    * budget, else the shuffle regime's joins (see selfPairs).
     *
     * One row per ordered pair of distinct documents whose ids are
     * non-null and differ: docs that share an id are never paired with
@@ -631,7 +555,18 @@ object Dedup {
       textCol: String,
       shingleN: Int,
       threshold: Double
-  ): DataFrame = {
+  ): DataFrame = selfPairs(docs, idCol, textCol, shingleN, threshold, jaccard = false)
+    .select(col("id_a"), col("id_b"), col("score").as("containment"))
+
+  /** The exact pair joins as self-probes of a `containmentScreenIndex`
+    * built over `docs`: its own docs with non-null ids, keyed by c_rk,
+    * probe it in one of its regimes (containment, or the symmetric
+    * Jaccard form), and both keys join back to their ids. Returns
+    * (id_a, id_b, score) for the pairs whose ids differ. The corpus
+    * broadcast lives as long as the returned frame.
+    */
+  private def selfPairs(docs: DataFrame, idCol: String, textCol: String, shingleN: Int,
+      threshold: Double, jaccard: Boolean): DataFrame = {
     requirePrefixThreshold(threshold)
     val index = containmentScreenIndex(docs, idCol, textCol, shingleN)
     val live = index.hashed.filter(col(idCol).isNotNull)
@@ -639,8 +574,8 @@ object Dedup {
     // lazily checkpointed: a downstream sort's sampling job would
     // otherwise run the whole narrow pass a second time
     val found = (index.narrow match {
-      case Some(corpus) => ContainmentCorpus.pairs(probe, corpus, threshold)
-      case None => shuffleContainers(probe, index, idCol, threshold)
+      case Some(corpus) => ContainmentCorpus.pairs(probe, corpus, threshold, jaccard)
+      case None => shuffleContainers(probe, index, idCol, threshold, jaccard)
     }).localCheckpoint(false)
     // a narrow corpus's per-doc ids fit the driver as well
     val ids0 = live.select(col("c_rk"), col(idCol))
@@ -649,7 +584,6 @@ object Dedup {
       .join(ids.select(col("c_rk").as("rk"), col(idCol).as("id_a")), Seq("rk"))
       .join(ids.select(col("c_rk"), col(idCol).as("id_b")), Seq("c_rk"))
       .filter(col("id_a") =!= col("id_b"))
-      .select("id_a", "id_b", "containment")
   }
 
   /** Bottom-k sketch SCREEN for the containment join, with its audit —
@@ -746,7 +680,8 @@ object Dedup {
   }
 
   /** The corpus side of the exact containment screen (and of
-    * containmentPairs, which probes it with the corpus itself), in one of
+    * containmentPairs and ngramJaccardPairs, which probe it with the
+    * corpus itself), in one of
     * two regimes (see containmentScreenIndex). Both carry the three
     * corpus-side frames of the shuffle regime's probe: the hashed corpus
     * (id, hs, nsh, c_rk) for verification, the shingle dictionary
@@ -900,7 +835,7 @@ object Dedup {
       .select(col("rk"), col("hs"), col("nsh"))
     val counts = index.narrow match {
       case Some(corpus) => broadcast(ContainmentCorpus.containers(probe, corpus, threshold))
-      case None => shuffleContainers(probe, index, idCol, threshold)
+      case None => shuffleContainers(probe, index, idCol, threshold, jaccard = false)
         .groupBy("rk").agg(count(lit(1)).as("n_containers"))
     }
     hi.select(col("rk"), col(idCol))
@@ -909,11 +844,14 @@ object Dedup {
       .withColumn("kept", col("n_containers") === 0)
   }
 
-  /** The shuffle regime's (rk, c_rk, containment) for the probe rows
-    * (rk, hs, nsh) and each of their verified containers.
+  /** The shuffle regime's (rk, c_rk, score) for the probe rows (rk, hs,
+    * nsh) and each of their verified matches, under the filters of
+    * ContainmentProbe's two forms: the containers, or with `jaccard` the
+    * docs with c_rk > rk whose own prefix meets the row's, at Jaccard
+    * >= t.
     */
   private def shuffleContainers(probe: DataFrame, index: ContainmentScreenIndex,
-      idCol: String, threshold: Double): DataFrame = {
+      idCol: String, threshold: Double, jaccard: Boolean): DataFrame = {
     val prefixLen = (col("nsh") - minOverlap(threshold, col("nsh")) + 1).cast("int")
     val prefA = rareFirstOrder(
         probe.select(col("rk"), col("nsh"), explode(col("hs")).as("h")),
@@ -921,22 +859,27 @@ object Dedup {
       .select(col("rk"), col("nsh"),
         posexplode(slice(col("sg"), lit(1), prefixLen)).as(Seq("pos", "h")))
     val needed = minOverlap(threshold, col("nsh"))
+    val cNeeded = minOverlap(threshold, col("c_nsh"))
     val ubound = lit(1) + least(col("nsh") - col("pa") - 1, col("c_nsh") - col("pb") - 1)
-    val cands = prefA
-      .join(index.postings, Seq("h"))
+    val alpha = lit(threshold / (1.0 + threshold)) * (col("nsh") + col("c_nsh"))
+    val joined = prefA
+      .join(if (jaccard) index.postings.filter(col("c_pos") < col("c_nsh") - cNeeded + 1)
+        else index.postings, Seq("h"))
       .filter(col("c_nsh") >= needed)
+    val cands = (if (jaccard) joined.filter(col("nsh") >= cNeeded && col("c_rk") > col("rk")) else joined)
       .groupBy(col("rk"), col("c_rk"), col("nsh"), col("c_nsh"))
       .agg(min(col("pos")).as("pa"), min(col("c_pos")).as("pb"))
-      .filter(ubound >= needed)
+      .filter(if (jaccard) ubound.cast("double") + 1e-9 >= alpha else ubound >= needed)
       .select(col("rk"), col("c_rk"))
     val inter = org.apache.spark.sql.graft.LongArrayIntersectSize
       .column(col("hs"), col("c_hs")).cast("double")
     cands
       .join(probe, Seq("rk"))
       .join(index.hashed.filter(col(idCol).isNotNull)
-        .select(col("c_rk"), col("hs").as("c_hs")), Seq("c_rk"))
-      .select(col("rk"), col("c_rk"), (inter / col("nsh")).as("containment"))
-      .filter(col("containment") >= threshold)
+        .select(col("c_rk"), col("hs").as("c_hs"), col("nsh").as("c_nsh")), Seq("c_rk"))
+      .select(col("rk"), col("c_rk"),
+        (if (jaccard) inter / (col("nsh") + col("c_nsh") - inter) else inter / col("nsh")).as("score"))
+      .filter(col("score") >= threshold)
   }
 
   /** The corpus-side POSTING LIST of the containment screens — one

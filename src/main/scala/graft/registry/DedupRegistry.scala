@@ -33,9 +33,10 @@ trait DedupRegistry extends RegistryBase {
         .orderBy("doc_id")),
 
     // pillar dedup: n-gram Jaccard pair similarity over the FULL corpus —
-    // prefix-filtered inverted-index join (AllPairs, rare-shingle-first),
-    // same result set as the oracle's all-pairs compare but with no
-    // cartesian in the plan. n=8 shingles + threshold 0.8 are the
+    // the exact containment index's symmetric self-probe (both rare-first
+    // prefixes, size filter, PPJoin bound, exact verify): one narrow pass
+    // over a broadcast corpus while it fits the driver budget, joins past
+    // it; same result set as the oracle's all-pairs compare, no cartesian. n=8 shingles + threshold 0.8 are the
     // realistic near-dup settings: this corpus has only 377 DISTINCT
     // 3-gram shingles total (median df 1062), so small-n shingles are
     // non-discriminative for any exact filter, and sub-0.5 thresholds

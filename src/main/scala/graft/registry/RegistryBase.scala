@@ -235,10 +235,6 @@ trait RegistryBase {
         throw new IllegalStateException(s"$name stream did not finish within 300s")
     } finally {
       graft.streaming.StreamMetrics.record(name, q)
-      // raw per-batch progress for gate debugging (batch boundaries,
-      // state metrics, duration breakdown) — opt-in, stderr
-      if (sys.env.contains("SPARK_GRAFT_STREAM_DEBUG"))
-        q.recentProgress.foreach(p => System.err.println(s"[gate $name] ${p.json}"))
       if (q.isActive) q.stop()
     }
   }

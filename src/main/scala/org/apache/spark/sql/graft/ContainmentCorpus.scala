@@ -14,9 +14,10 @@ import graft.operators.Dedup
 /** The corpus side of Dedup's exact containment filter in its narrow
   * regime (Dedup.containmentScreenIndex takes it while the corpus
   * postings fit the Narrow.Postings budget): the hashed corpus,
-  * collected once through Narrow and broadcast as flat arrays. Two
+  * collected once through Narrow and broadcast as flat arrays. Three
   * operators read it: the screen probes it with each incoming batch, and
-  * containmentPairs probes it with the corpus itself.
+  * containmentPairs and ngramJaccardPairs probe it with the corpus
+  * itself.
   *
   *   - the shingle dictionary: `dict` (distinct hashes, ascending) with
   *     each shingle's document frequency `df`;
@@ -46,7 +47,7 @@ object ContainmentCorpus {
     StructField("rk", LongType, nullable = false),
     StructField("n_containers", LongType, nullable = false)))
   val PairSchema: StructType = StructType(Seq(StructField("rk", LongType, nullable = false),
-    StructField("c_rk", LongType, nullable = false), StructField("containment", DoubleType)))
+    StructField("c_rk", LongType, nullable = false), StructField("score", DoubleType)))
 
   /** The postings a hashed corpus (id, hs, nsh > 0) would hold: the sum
     * of nsh, in one job (on a lazy checkpoint, the job that materializes
@@ -121,123 +122,176 @@ object ContainmentCorpus {
     */
   def containers(probe: DataFrame, corpus: Broadcast[ContainmentCorpus],
       threshold: Double): DataFrame =
-    pass(probe, corpus, threshold, CountSchema) { (rk, _, n) =>
+    pass(probe, corpus, threshold, CountSchema, jaccard = false) { (rk, _, n) =>
       Iterator.single(InternalRow(rk, n.toLong))
     }
 
-  /** (rk, c_rk, containment) for each row of `probe` (rk, hs, nsh > 0)
-    * and each of its verified containers, in the same narrow pass.
+  /** (rk, c_rk, score) for each row of `probe` (rk, hs, nsh > 0) and each
+    * of its verified matches, in the same narrow pass: its containers
+    * (score = containment), or with `jaccard` the docs with c_rk > rk at
+    * Jaccard >= t, when the probe is the corpus's own docs keyed by c_rk.
     */
   def pairs(probe: DataFrame, corpus: Broadcast[ContainmentCorpus],
-      threshold: Double): DataFrame =
-    pass(probe, corpus, threshold, PairSchema) { (rk, p, n) =>
-      Iterator.tabulate(n)(i => InternalRow(rk, p.containerRk(i), p.containment(i)))
+      threshold: Double, jaccard: Boolean): DataFrame =
+    pass(probe, corpus, threshold, PairSchema, jaccard) { (rk, p, n) =>
+      Iterator.tabulate(n)(i => InternalRow(rk, p.matchRk(i), p.score(i)))
     }
 
   /** One narrow pass over the probe rows, emitting `rows(rk, probe, n)`
-    * for each row with n > 0 verified containers.
+    * for each row with n > 0 verified matches.
     */
   private def pass(probe: DataFrame, corpus: Broadcast[ContainmentCorpus], threshold: Double,
-      schema: StructType)(rows: (Long, ContainmentProbe, Int) => Iterator[InternalRow]): DataFrame = {
+      schema: StructType, jaccard: Boolean)(rows: (Long, ContainmentProbe, Int) => Iterator[InternalRow]): DataFrame = {
     val out = probe.select(col("rk"), col("hs")).asInstanceOf[Dataset[_]]
       .queryExecution.toRdd.mapPartitions { it =>
         val p = new ContainmentProbe(corpus.value, threshold)
         it.flatMap { r =>
-          val n = p.containers(r.getArray(1).toLongArray())
-          if (n > 0) rows(r.getLong(0), p, n) else Iterator.empty
+          val (rk, hs) = (r.getLong(0), r.getArray(1).toLongArray())
+          val n = if (jaccard) p.similar(rk, hs) else p.containers(hs)
+          if (n > 0) rows(rk, p, n) else Iterator.empty
         }
       }
     Narrow.frame(probe.sparkSession, out, schema)
   }
 }
 
-/** One task's probe of the broadcast corpus: the shuffle regime's
-  * one-sided prefix filter, evaluated per incoming row with the same
-  * arithmetic.
+/** One task's probe of the broadcast corpus: the shuffle regime's prefix
+  * filters, evaluated per incoming row with the same arithmetic.
   *
   *   - The row's shingles are ordered by (corpus df, h); a shingle the
   *     corpus lacks takes df 0, so it sorts first and matches nothing.
   *   - With `needed` = Dedup.minOverlap(t, nsh), the least overlap the
   *     verify accepts, its first nsh - needed + 1 shingles probe the
   *     postings of docs with c_nsh >= needed; pa and pb are the least
-  *     positions of a shared prefix shingle in the row and in the doc.
-  *   - A doc passes the position bound when
+  *     positions of a shared probed shingle in the row and in the doc.
+  *   - Containment (`containers`, one-sided): every posting is probed. A
+  *     doc passes the position bound when
   *     1 + min(nsh - pa - 1, c_nsh - pb - 1) >= needed, and is a
   *     container when its exact intersection / nsh >= t.
+  *   - Jaccard (`similar`, symmetric): only postings inside the doc's own
+  *     prefix (c_pos < c_nsh - minOverlap(t, c_nsh) + 1) of docs with
+  *     c_rk > rk and nsh >= minOverlap(t, c_nsh) are probed, so each
+  *     unordered pair is met once. A doc passes PPJoin's bound when that
+  *     bound + 1e-9 >= t / (1 + t) · (nsh + c_nsh), and matches when
+  *     I / (nsh + c_nsh - I) >= t for its exact intersection I.
   *
   * Scratch arrays over the corpus docs are reused across the task's rows;
-  * `stamp` = the row's ordinal marks them. The last row's containers and
-  * their containment stay readable until the next row is probed.
+  * `stamp` = the row's ordinal marks them. The last row's matches and
+  * their scores stay readable until the next row is probed.
   */
 private final class ContainmentProbe(c: ContainmentCorpus, t: Double) {
   private val nDocs = c.docLive.length
   private val stamp = new Array[Int](nDocs)
   private val pa = new Array[Int](nDocs)
   private val pb = new Array[Int](nDocs)
-  private val share = new Array[Double](nDocs)
+  private val scores = new Array[Double](nDocs)
   private var touched = new Array[Int](64)
+  private var nTouched = 0
+  private var keys = new Array[Long](64)
   private var row = 0
+  /** Each doc's prefix length, c_nsh - minOverlap(t, c_nsh) + 1: the
+    * Jaccard form's corpus side only.
+    */
+  private lazy val docPrefix = Array.tabulate(nDocs)(d => docLen(d) - Dedup.minOverlap(t, docLen(d)) + 1)
 
-  /** Doc `c_rk` of the last row's i-th container. */
-  def containerRk(i: Int): Long = c.docRk(touched(i))
+  /** Doc `c_rk` of the last row's i-th match. */
+  def matchRk(i: Int): Long = c.docRk(touched(i))
 
-  /** |A ∩ B| / |A| of the last row A and its i-th container B. */
-  def containment(i: Int): Double = share(touched(i))
+  /** The last row's score with its i-th match. */
+  def score(i: Int): Double = scores(touched(i))
 
-  /** Probe one row's sorted distinct hashes; returns how many containers
-    * it has.
+  /** Probe one row's sorted distinct hashes for containers; returns how
+    * many it has.
     */
   def containers(hs: Array[Long]): Int = {
-    val nsh = hs.length
-    row += 1
-    val needed = Dedup.minOverlap(t, nsh)
-    val prefix = nsh - needed + 1
-    // the shingles the corpus holds, as (df, dictionary index) keys; the
-    // absent ones occupy the first `absent` positions
-    val keys = new Array[Long](nsh)
-    var present = 0
-    var i = 0
-    while (i < nsh) {
-      val s = java.util.Arrays.binarySearch(c.dict, hs(i))
-      if (s >= 0) { keys(present) = (c.df(s).toLong << 32) | s; present += 1 }
-      i += 1
-    }
-    java.util.Arrays.sort(keys, 0, present)
-    val absent = nsh - present
-    var nTouched = 0
-    var r = 0
-    while (r < present && absent + r < prefix) {
-      val pos = absent + r
-      val s = (keys(r) & 0xffffffffL).toInt
+    val needed = Dedup.minOverlap(t, hs.length)
+    val absent = order(hs)
+    var pos = absent
+    while (pos < hs.length - needed + 1) {
+      val s = (keys(pos - absent) & 0xffffffffL).toInt
       var e = c.postStart(s)
       while (e < c.postStart(s + 1)) {
         val d = c.postDoc(e)
-        if (c.docStart(d + 1) - c.docStart(d) >= needed) {
-          if (stamp(d) != row) {
-            stamp(d) = row; pa(d) = pos; pb(d) = c.postPos(e)
-            if (nTouched == touched.length) touched = java.util.Arrays.copyOf(touched, 2 * nTouched)
-            touched(nTouched) = d; nTouched += 1
-          } else if (c.postPos(e) < pb(d)) pb(d) = c.postPos(e)
-        }
+        if (docLen(d) >= needed) touch(d, pos, c.postPos(e))
         e += 1
       }
-      r += 1
+      pos += 1
     }
+    verify(hs, needed, jaccard = false)
+  }
+
+  /** Probe corpus doc `rk`'s sorted distinct hashes for the docs with
+    * c_rk > rk at Jaccard >= t; returns how many there are.
+    */
+  def similar(rk: Long, hs: Array[Long]): Int = {
+    val (nsh, prefix) = (hs.length, docPrefix)
+    val needed = Dedup.minOverlap(t, nsh)
+    val absent = order(hs)
+    var pos = absent
+    while (pos < nsh - needed + 1) {
+      val s = (keys(pos - absent) & 0xffffffffL).toInt
+      var e = c.postStart(s)
+      while (e < c.postStart(s + 1)) {
+        val d = c.postDoc(e)
+        val len = docLen(d)
+        if (c.postPos(e) < prefix(d) && c.docRk(d) > rk && len >= needed && nsh >= len - prefix(d) + 1)
+          touch(d, pos, c.postPos(e))
+        e += 1
+      }
+      pos += 1
+    }
+    verify(hs, needed, jaccard = true)
+  }
+
+  /** Bound and verify the row's touched docs; the matches are compacted
+    * to the front of `touched`, and their count is returned.
+    */
+  private def verify(hs: Array[Long], needed: Int, jaccard: Boolean): Int = {
+    val nsh = hs.length
     var n = 0
     var k = 0
     while (k < nTouched) {
       val d = touched(k)
-      val cnsh = c.docStart(d + 1) - c.docStart(d)
-      val ub = 1 + math.min(nsh - pa(d) - 1, cnsh - pb(d) - 1)
-      if (c.docLive(d) && ub >= needed) {
-        share(d) = intersect(hs, d).toDouble / nsh
-        // the containers are compacted to the front of `touched`
-        if (share(d) >= t) { touched(n) = d; n += 1 }
+      val len = docLen(d)
+      val ub = 1 + math.min(nsh - pa(d) - 1, len - pb(d) - 1)
+      if (c.docLive(d) && (if (jaccard) ub.toDouble + 1e-9 >= t / (1.0 + t) * (nsh + len) else ub >= needed)) {
+        val i = intersect(hs, d)
+        scores(d) = if (jaccard) i.toDouble / (nsh + len - i) else i.toDouble / nsh
+        if (scores(d) >= t) { touched(n) = d; n += 1 }
       }
       k += 1
     }
     n
   }
+
+  /** Start a row: clear the touched docs and sort the shingles the corpus
+    * holds into `keys` as (df, dictionary index); the absent ones occupy
+    * the row's first positions, and their count is returned.
+    */
+  private def order(hs: Array[Long]): Int = {
+    row += 1
+    nTouched = 0
+    if (keys.length < hs.length) keys = new Array[Long](hs.length)
+    var present = 0
+    var i = 0
+    while (i < hs.length) {
+      val s = java.util.Arrays.binarySearch(c.dict, hs(i))
+      if (s >= 0) { keys(present) = (c.df(s).toLong << 32) | s; present += 1 }
+      i += 1
+    }
+    java.util.Arrays.sort(keys, 0, present)
+    hs.length - present
+  }
+
+  /** Record that the row's shingle at `pos` is doc d's at `cPos`. */
+  private def touch(d: Int, pos: Int, cPos: Int): Unit =
+    if (stamp(d) != row) {
+      stamp(d) = row; pa(d) = pos; pb(d) = cPos
+      if (nTouched == touched.length) touched = java.util.Arrays.copyOf(touched, 2 * nTouched)
+      touched(nTouched) = d; nTouched += 1
+    } else if (cPos < pb(d)) pb(d) = cPos
+
+  private def docLen(d: Int): Int = c.docStart(d + 1) - c.docStart(d)
 
   /** |hs ∩ doc d's hashes| by a merge scan of the two ascending arrays. */
   private def intersect(hs: Array[Long], d: Int): Int = {

@@ -9,7 +9,9 @@ import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, Intege
 
 /** |A ∩ B| for two SORTED-ascending, duplicate-free long arrays via a
   * merge scan — the verify-stage kernel of the hashed-shingle dedup
-  * operators (Dedup.nearDuplicates / ngramJaccardPairs).
+  * operators: Dedup.nearDuplicates, and the shuffle regime of the exact
+  * containment index's three readers (the containment screen,
+  * containmentPairs and ngramJaccardPairs).
   *
   * Versus `size(array_intersect(a, b))`: ArrayIntersect builds a per-row
   * hash set of boxed values and materializes the intersection array; this

@@ -22,8 +22,9 @@ import org.apache.spark.sql.types.StructType
   * pass over them; past its budget the operator runs its shuffle twin.
   * Four regimes use it: NN-Descent's rounds (NarrowRounds), group
   * resolution (DupComponents), the exact containment corpus
-  * (ContainmentCorpus, which the containment screen and containmentPairs
-  * both probe) and the fuzzy match's refs (graft.operators.MatchRefs).
+  * (ContainmentCorpus, which three operators probe: the containment
+  * screen, containmentPairs and ngramJaccardPairs) and the fuzzy match's
+  * refs (graft.operators.MatchRefs).
   * This object owns what they have in common:
   *
   *   - the budget: one byte budget derived from the driver heap, against
@@ -132,7 +133,8 @@ object Narrow {
   private val releasers = mutable.WeakHashMap.empty[SparkContext, Releaser]
 
   /** Destroy `shared` once the checkpoint `cp` (a localCheckpoint or
-    * freshCheckpoint, eager or lazy) is cut from its lineage: now if it
+    * freshCheckpoint, eager or lazy, or a frame over a locally
+    * checkpointed RDD) is cut from its lineage: now if it
     * is, else at the end of a later job. Spark cuts a lazy checkpoint
     * right after the first job whose result stage reads it through no
     * other checkpoint, and a broadcast must outlive every plan that can

@@ -60,6 +60,27 @@ class DedupEquivalenceSpec extends SparkSpec {
     }
   }
 
+  test("ngramJaccardPairs == per-doc brute force on repeated ids") {
+    // 40 random 30-char texts over ten letters under ids drawn from 0-14,
+    // so several docs share an id and a shingle count, plus a copy of each
+    // under ids 100-139: every doc pairs with its copy on its own.
+    val rng = new scala.util.Random(3)
+    val texts = Seq.fill(40)(Seq.fill(30)("abcdefghij"(rng.nextInt(10))).mkString)
+    val docs = (texts.map(t => (rng.nextInt(15).toLong, t)) ++
+      texts.indices.map(i => (100L + i, texts(i)))).toDF("doc_id", "text")
+    val sh = docs.select(col("doc_id"), Dedup.shingleSet(col("text"), 3).as("sh")).collect()
+      .map(r => (r.getLong(0), r.getSeq[String](1).toSet)).toSeq
+    val brute = (for {
+      i <- sh.indices; j <- sh.indices if i < j && sh(i)._1 != sh(j)._1
+      n = (sh(i)._2 & sh(j)._2).size
+      jacc = n.toDouble / (sh(i)._2.size + sh(j)._2.size - n) if jacc >= 0.8
+    } yield s"${sh(i)._1 min sh(j)._1}|${sh(i)._1 max sh(j)._1}|$jacc").sorted
+    assert(brute.count(_.endsWith("|1.0")) >= 40, "each doc should pair with its copy")
+    val fast = Dedup.ngramJaccardPairs(docs, "doc_id", "text", 3, 0.8)
+      .collect().map(_.toSeq.mkString("|")).toSeq.sorted
+    assert(fast == brute)
+  }
+
   for (seed <- Seq(1, 42); maxH <- Seq(1, 2, 3)) {
     test(s"simhashCandidates == brute force (seed=$seed, maxHamming=$maxH)") {
       val docs = corpus(seed, 40).toDF("doc_id", "text")

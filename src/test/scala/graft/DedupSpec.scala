@@ -380,9 +380,12 @@ class DedupSpec extends SparkSpec {
     * doc 41 (57 distinct Hangul chars, 55 shingles) has row 910 holding
     * all 55 plus 45 fresh shingles: 55/100 = 0.55 exactly, while
     * 0.55·100 rounds up to 55.00000000000001 in doubles (ceil 56), the
-    * float edge of the prefix length. Incoming also has excerpts and
-    * copies of corpus docs, with and without fresh (corpus-absent)
-    * words, repeated ids, null ids and degenerate texts.
+    * float edge of the prefix length. Doc 42 (5 shingles) is the head of
+    * doc 43 (10): Jaccard 5/10 = 0.5 exactly, with the smaller doc keyed
+    * first, at the edge of the size filter |A| >= minOverlap(t, |B|).
+    * Incoming also has excerpts and copies of corpus docs, with and
+    * without fresh (corpus-absent) words, repeated ids, null ids and
+    * degenerate texts.
     */
   private def screenCase(seed: Int, idType: DataType): (DataFrame, DataFrame) = {
     val rnd = new scala.util.Random(seed)
@@ -394,7 +397,8 @@ class DedupSpec extends SparkSpec {
     val corpusRows: Seq[(Any, String)] = base.indices.map(i => (i, base(i).mkString(" "))) ++
       Seq(30 -> base(3).mkString(" "), 31 -> base(3).mkString(" "), 32 -> "", 33 -> null,
         34 -> "ab", (null, base(5).mkString(" ")), 35 -> base(7).mkString(" "),
-        35 -> base(7).take(2).mkString(" "), 40 -> "abcdefghijkl", 41 -> hangul(0, 57))
+        35 -> base(7).take(2).mkString(" "), 40 -> "abcdefghijkl", 41 -> hangul(0, 57),
+        42 -> hangul(200, 7), 43 -> hangul(200, 12))
     val partial = (0 until 40).map { i =>
       val ws = base(rnd.nextInt(base.size))
       val from = rnd.nextInt(ws.size)
@@ -458,37 +462,49 @@ class DedupSpec extends SparkSpec {
   }
 
   test("differential: containmentPairs narrow == shuffle == per-row brute force") {
-    // One row per ordered pair of distinct docs whose ids are non-null and
-    // differ: screenCase's corpus repeats ids (30/31 share a text, and
-    // both docs 35 are contained in doc 7, so (35, 7, 1.0) appears twice),
-    // has a null id, empty and short texts, and the 55/100 doc.
+    // Both self-probes of the index, per doc. containmentPairs: one row per
+    // ordered pair of distinct docs whose ids are non-null and differ.
+    // screenCase's corpus repeats ids (30/31 share a text, and both docs
+    // 35 are contained in doc 7, so (35, 7, 1.0) appears twice), has a
+    // null id, empty and short texts, and the 55/100 doc.
+    // ngramJaccardPairs: one row per unordered such pair, as (smaller id,
+    // larger id, jacc); doc 7 and the full doc 35 are copies, and so are
+    // docs 3, 30 and 31.
     for ((seed, idType) <- Seq(1 -> LongType, 2 -> IntegerType, 3 -> LongType)) {
       val (corpus, _) = screenCase(seed, idType)
       val docsSh = corpus.select(col("doc_id"), Dedup.shingleSet(col("text"), 3).as("sh"))
         .collect().map(r => (Option(r.get(0)), if (r.isNullAt(1)) Set.empty[String] else r.getSeq[String](1).toSet))
-      def brute(t: Double): Seq[String] = (for {
+      def brute(t: Double, jaccard: Boolean): Seq[String] = (for {
         (a, i) <- docsSh.zipWithIndex.toSeq; (b, j) <- docsSh.zipWithIndex.toSeq
-        if i != j && a._1.isDefined && b._1.isDefined && a._1 != b._1 && a._2.nonEmpty
-        c = (a._2 & b._2).size.toDouble / a._2.size
+        if (if (jaccard) i < j else i != j) && a._1.isDefined && b._1.isDefined && a._1 != b._1 &&
+          a._2.nonEmpty && b._2.nonEmpty
+        n = (a._2 & b._2).size
+        c = if (jaccard) n.toDouble / (a._2.size + b._2.size - n) else n.toDouble / a._2.size
         if c >= t
-      } yield s"${a._1.get}|${b._1.get}|$c").sorted
+        ids = Seq(a._1.get, b._1.get)
+        (x, y) = if (jaccard) (ids.minBy(_.toString.toLong), ids.maxBy(_.toString.toLong)) else (ids(0), ids(1))
+      } yield s"$x|$y|$c").sorted
       val shipped = Dedup.containmentScreenIndex(corpus, "doc_id", "text", 3)
       val need = math.ceil(Narrow.Postings.bytes(shipped.postings.count())).toLong
-      for (t <- Seq(0.5, 0.55, 0.7, 1.0)) {
-        val expected = brute(t)
-        assert(expected.nonEmpty, s"seed $seed t $t: no pair qualifies")
-        if (t == 1.0) assert(expected.count(_.startsWith("35|7|")) == 2,
-          s"seed $seed: each doc 35 pairs with doc 7 on its own")
-        def pairs = Dedup.containmentPairs(corpus, "doc_id", "text", 3, t)
+      for ((jaccard, ts) <- Seq(false -> Seq(0.5, 0.55, 0.7, 1.0), true -> Seq(0.5, 0.55, 0.8, 1.0)); t <- ts) {
+        val clue = s"seed $seed t $t${if (jaccard) " jaccard" else ""}"
+        val expected = brute(t, jaccard)
+        assert(expected.nonEmpty, s"$clue: no pair qualifies")
+        if (t == 1.0 && !jaccard) assert(expected.count(_.startsWith("35|7|")) == 2,
+          s"$clue: each doc 35 pairs with doc 7 on its own")
+        if (t == 1.0 && jaccard) assert(Seq("3|30|1.0", "3|31|1.0", "30|31|1.0", "7|35|1.0")
+          .forall(expected.contains), s"$clue: the copies pair")
+        def pairs = if (jaccard) Dedup.ngramJaccardPairs(corpus, "doc_id", "text", 3, t)
+          else Dedup.containmentPairs(corpus, "doc_id", "text", 3, t)
         val narrow = pairs
         val shuffle = Narrow.withBudget(0)(pairs)
         val under = Narrow.withBudget(need - 1)(pairs)
-        assert(shuffles(under.queryExecution.toRdd) > 0, s"seed $seed t $t: no shuffle over budget")
+        assert(shuffles(under.queryExecution.toRdd) > 0, s"$clue: no shuffle over budget")
         assert(narrow.schema == StructType(Seq(StructField("id_a", idType), StructField("id_b", idType),
-          StructField("containment", DoubleType))), s"seed $seed t $t")
+          StructField(if (jaccard) "jacc" else "containment", DoubleType))), clue)
         for ((regime, out) <- Seq("narrow" -> narrow, "shuffle" -> shuffle, "under" -> under)) {
-          assert(out.schema == narrow.schema, s"seed $seed t $t $regime")
-          assert(sortedRows(out) == expected, s"seed $seed t $t $regime")
+          assert(out.schema == narrow.schema, s"$clue $regime")
+          assert(sortedRows(out) == expected, s"$clue $regime")
         }
       }
     }
