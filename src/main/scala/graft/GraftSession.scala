@@ -32,6 +32,10 @@ object GraftSession {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // unpersisting a locally checkpointed RDD is intended (the narrow
+    // regimes' checkpoints, the bench iterations), so its WARN is noise
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.rdd.MapPartitionsRDD", org.apache.logging.log4j.Level.ERROR)
     spark
   }
 }

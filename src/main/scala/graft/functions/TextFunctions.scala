@@ -6,12 +6,23 @@ import org.apache.spark.sql.functions._
 /** Column-level text primitives for the engine: Catalyst built-ins and
   * higher-order functions, no UDFs. A higher-order function's lambda runs
   * interpreted (`CodegenFallback`) inside the surrounding generated code,
-  * so a per-pair hot loop gets a codegen'd kernel from
-  * `org.apache.spark.sql.graft` instead: the HeurFuzz pair stage scores
-  * `byteBigramCodes` with `sortedCoverage`. The `byteBigrams` /
-  * `bigramCoverage` HOF pair stays for small pair sets over char shingles
-  * (the registry's `partPairs`, ~6k pairs) and for the byte-bigram
-  * statistics of q03.
+  * once per element, so every hot per-row or per-pair loop gets a
+  * codegen'd kernel from `org.apache.spark.sql.graft` instead:
+  *   - the HeurFuzz pair stage scores `byteBigramCodes` with
+  *     `sortedCoverage`;
+  *   - every shingle-hash set (the exact and MinHash dedup operators, the
+  *     decontamination spans) comes from `ShingleHashes`, one pass per
+  *     row, through `Dedup.hashedShingles` and its xxhash64 and mod-p
+  *     siblings in `Dedup`.
+  * The HOFs left here serve small or string-valued work:
+  *   - `byteBigrams` / `bigramCoverage` for small pair sets over char
+  *     shingles (the registry's `partPairs`, ~6k pairs) and the
+  *     byte-bigram statistics of q03;
+  *   - `charShingles`, the string form (TextAnalysis, the span posexplode
+  *     of DedupRegistry, q142) and the reference semantics the kernel's
+  *     tests compare against, with `minhash` over it;
+  *   - `minhashSignatureFromBases`, whose slot walks run over long
+  *     arrays already hashed once.
   *
   * Semantics mirror the reference kernels:
   *   - byte bigrams with multiplicity (/root/reference/src/heurFuzz.py:23-32)

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
-import org.apache.spark.sql.graft.{CheckpointStats, ContainmentCorpus, DupComponents, Md5Long60, Narrow}
+import org.apache.spark.sql.graft.{CheckpointStats, ContainmentCorpus, DupComponents, Md5Long60, Narrow, ShingleHashes}
 
 /** Deduplication operators for large-scale text corpora (builder-brief
   * pillar; the reference's only dedup is the set()-based ETL helper,
@@ -26,20 +26,22 @@ import org.apache.spark.sql.graft.{CheckpointStats, ContainmentCorpus, DupCompon
   */
 object Dedup {
 
-  /** Distinct lowercase char n-gram shingles of a text column. */
+  /** Distinct lowercase char n-gram shingles of a text column: the
+    * string form, and the reference semantics of every shingle-hash set
+    * (ShingleHashesSpec compares the kernel with chains over it).
+    */
   def shingleSet(text: Column, n: Int): Column =
     array_distinct(TextFunctions.charShingles(lower(text), n))
 
-  /** The containment family's shingle-hash derivation — sorted distinct
-    * md5-long hashes of the char n-gram shingles. ONE definition on
+  /** Sorted distinct md5-long hashes of the lowercase char n-gram
+    * shingles, from the one ShingleHashes kernel. ONE definition on
     * purpose: the bottom-k screen's probe side, its corpus-side posting
-    * list, and the audit's truth pass must stay bit-identical (sort
-    * order IS the bottom-k sample), so they all call this instead of
-    * inlining the expression.
+    * list, the audit's truth pass and the decontamination span sites
+    * must stay bit-identical (sort order IS the bottom-k sample), so
+    * they all call this instead of building the kernel themselves.
     */
   def hashedShingles(text: Column, n: Int): Column =
-    array_sort(array_distinct(transform(
-      shingleSet(text, n), g => Md5Long60.column(g))))
+    ShingleHashes.column(text, n, ShingleHashes.Md5)
 
   /** Exact duplicate groups: md5 content hash -> group size + kept id
     * (keep-one = min id; deterministic).
@@ -72,7 +74,7 @@ object Dedup {
     */
   def dupSpanStats(docs: DataFrame, idCol: String, textCol: String, n: Int): DataFrame = {
     val spans = docs.select(col(idCol).as("doc_id"),
-        transform(shingleSet(col(textCol), n), g => xxhash64(g)).as("shs"))
+        ShingleHashes.column(col(textCol), n, ShingleHashes.Xxhash64).as("shs"))
       .localCheckpoint(false)
     val ex = spans.select(col("doc_id"), explode(col("shs")).as("sh"))
     // distinct-per-doc spans, so count(*) per span == #docs containing it
@@ -113,15 +115,17 @@ object Dedup {
   /** Per-doc (id, sorted distinct shingle hashes, minhash signature),
     * checkpointed — the shared first stage of every MinHash operator.
     *
-    * Shingle hashes are sorted ascending so verifies can use the
-    * merge-scan intersect expression (no per-row hash sets); minhash is
-    * order-blind. Lazily checkpointed: band projections reference `sig`
-    * once per signature slot and `hs` rides into join sides — without a
-    * materialization barrier CollapseProject inlines the md5-per-shingle
-    * hashing (HOFs never codegen, so no subexpression elimination) into
-    * every reference. One small (id, hs, sig) row per doc materializes
-    * instead. Rows with an empty shingle set drop out (null signature) —
-    * they cannot be near-dups of anything.
+    * The hashes are the MinHash bases (md5-long mod p, reduced before
+    * the distinct), built by the one-pass ShingleHashes kernel and sorted
+    * ascending so verifies can use the merge-scan intersect expression
+    * (no per-row hash sets); minhash is order-blind. Lazily
+    * checkpointed: band projections reference `sig` once per signature
+    * slot and `hs` rides into join sides, and the signature's slots are
+    * interpreted `transform`s over `hs` (minhashSignatureFromBases). One
+    * small (id, hs, sig) row per doc materializes instead of the hashing
+    * and the slot walks re-running per reference. Rows with an empty
+    * shingle set drop out (null signature) — they cannot be near-dups of
+    * anything.
     */
   private def hashedSignatures(
       docs: DataFrame,
@@ -129,22 +133,13 @@ object Dedup {
       textCol: String,
       shingleN: Int,
       numHashes: Int
-  ): DataFrame = {
-    val hs = array_sort(
-      array_distinct(
-        transform(
-          TextFunctions.charShingles(lower(col(textCol)), shingleN),
-          g => TextFunctions.shingleBaseHash(g)
-        )
-      )
-    )
+  ): DataFrame =
     docs
-      .select(col(idCol), hs.as("hs"))
+      .select(col(idCol), ShingleHashes.column(col(textCol), shingleN, ShingleHashes.Md5ModP).as("hs"))
       .select(col(idCol), col("hs"),
         TextFunctions.minhashSignatureFromBases(col("hs"), numHashes).as("sig"))
       .filter(col("sig").isNotNull)
       .localCheckpoint(false)
-  }
 
   /** Explode a signature frame into one (id, carried cols, band, key) row
     * per band; the (band, key) pair is the LSH equi-join key.
@@ -513,7 +508,7 @@ object Dedup {
     * non-null and differ, as (smaller id, larger id, jacc): docs that
     * share an id are never paired with each other, and each pairs with
     * other docs on its own. The result depends on set sizes only, so
-    * shingles ride the codegen'd xxhash64 rather than the LSH path's md5.
+    * shingles hash with xxhash64 rather than the LSH path's md5.
     */
   def ngramJaccardPairs(
       docs: DataFrame,
@@ -546,8 +541,8 @@ object Dedup {
     * One row per ordered pair of distinct documents whose ids are
     * non-null and differ: docs that share an id are never paired with
     * each other, and each of them pairs with other docs on its own. Like
-    * ngramJaccardPairs the result is hash-independent, so shingles ride
-    * the codegen'd xxhash64.
+    * ngramJaccardPairs the result is hash-independent, so shingles hash
+    * with xxhash64.
     */
   def containmentPairs(
       docs: DataFrame,
@@ -702,18 +697,12 @@ object Dedup {
       narrow: Option[Broadcast[ContainmentCorpus]] = None)
 
   /** (id, sorted distinct xxhash64 shingle hashes, shingle count) of a
-    * document frame — the shared hashing step of the exact prefix filters.
+    * document frame — the shared hashing step of the exact prefix
+    * filters, one ShingleHashes pass per doc.
     */
   private def containmentHashed(df: DataFrame, idCol: String,
       textCol: String, shingleN: Int): DataFrame = df
-    .select(
-      col(idCol),
-      array_sort(
-        array_distinct(
-          transform(shingleSet(col(textCol), shingleN), g => xxhash64(g))
-        )
-      ).as("hs")
-    )
+    .select(col(idCol), ShingleHashes.column(col(textCol), shingleN, ShingleHashes.Xxhash64).as("hs"))
     .withColumn("nsh", size(col("hs")))
 
   /** Shingle rows re-assembled per doc in (corpus df, h) rare-first
@@ -901,7 +890,7 @@ object Dedup {
       col(idCol).as("c_id"),
       hashedShingles(col(textCol), shingleN).as("hs"))
     // no size(hs) > 0 filter: explode already emits nothing for empty or
-    // null arrays, and an explicit filter on a HOF-derived column gets
+    // null arrays, and an explicit filter on the hashed column gets
     // substituted + pushed below any upstream exchange — re-running the
     // whole shingling single-core on an under-partitioned scan (measured
     // 7.2 s vs 1.3 s on the sf0.1 corpus side)

@@ -352,9 +352,7 @@ trait StreamingRegistry extends RegistryBase {
           java.nio.file.Paths.get(s"$dir/documents.parquet").toAbsolutePath.normalize())
         val outDir = stage.resolve("out").toString
         def spansOf(df: DataFrame) = df.select(col("doc_id"),
-          explode(array_distinct(transform(
-            TextFunctions.charShingles(lower(col("text")), DecontamSpanN),
-            g => org.apache.spark.sql.graft.Md5Long60.column(g)))).as("h"))
+          explode(Dedup.hashedShingles(col("text"), DecontamSpanN)).as("h"))
         val bench = spansOf(spread(s, rd(s, dir, "documents"))
             .filter(col("doc_id") % ContamBenchMod === 0))
           .select(col("h").as("bh")).distinct()

@@ -383,10 +383,7 @@ trait TextRegistry extends RegistryBase {
       val docs = spread(s, rd(s, dir, "documents"))
       val shingles = docs.select(
         col("doc_id"),
-        explode(array_distinct(
-          transform(
-            TextFunctions.charShingles(lower(col("text")), 8),
-            g => org.apache.spark.sql.graft.Md5Long60.column(g)))).as("h"))
+        explode(Dedup.hashedShingles(col("text"), 8)).as("h"))
       val bench = shingles.filter(col("doc_id") % 50 === 0)
         .select(col("h").as("bh")).distinct()
       val contaminated = shingles
@@ -535,9 +532,7 @@ trait TextRegistry extends RegistryBase {
       // low-vocabulary corpus to zero; 20-char spans are the realistic
       // long-verbatim-leak criterion and keep the pipeline non-trivial)
       val shingles = docs.select(col("doc_id"),
-        explode(array_distinct(transform(
-          TextFunctions.charShingles(lower(col("text")), DecontamSpanN),
-          g => org.apache.spark.sql.graft.Md5Long60.column(g)))).as("h"))
+        explode(Dedup.hashedShingles(col("text"), DecontamSpanN)).as("h"))
         .localCheckpoint(false) // span hashing feeds the bench AND contamination-probe branches
       val bench = shingles.filter(col("doc_id") % 50 === 0)
         .select(col("h").as("bh")).distinct()
@@ -653,9 +648,7 @@ trait TextRegistry extends RegistryBase {
           sum(when(col("bucket") === "middle", 1L).otherwise(0L)).as("n_middle"),
           sum(when(col("bucket") === "tail", 1L).otherwise(0L)).as("n_tail"))
       val spans = docs.select(col("doc_id"), col("source"),
-          explode(array_distinct(transform(
-            TextFunctions.charShingles(lower(col("text")), DecontamSpanN),
-            g => org.apache.spark.sql.graft.Md5Long60.column(g)))).as("h"))
+          explode(Dedup.hashedShingles(col("text"), DecontamSpanN)).as("h"))
         .localCheckpoint(false) // the span hashing feeds the bench AND probe branches
       val bench = spans.filter(col("doc_id") % ContamBenchMod === 0)
         .select(col("h").as("bh")).distinct()
@@ -683,9 +676,7 @@ trait TextRegistry extends RegistryBase {
     "q119_contamination_overlap" -> ((s, dir) => {
       val docs = spread(s, rd(s, dir, "documents"))
       val spans = docs.select(col("doc_id"),
-        explode(array_distinct(transform(
-          TextFunctions.charShingles(lower(col("text")), DecontamSpanN),
-          g => org.apache.spark.sql.graft.Md5Long60.column(g)))).as("h"))
+        explode(Dedup.hashedShingles(col("text"), DecontamSpanN)).as("h"))
         .localCheckpoint(false) // the md5 span hashing feeds the bench AND probe branches
       val bench = spans.filter(col("doc_id") % ContamBenchMod === 0)
         .select(col("h").as("bh")).distinct()
@@ -855,9 +846,7 @@ trait TextRegistry extends RegistryBase {
     "q136_bloom_decontaminate" -> ((s, dir) => {
       val docs = spread(s, rd(s, dir, "documents"))
       val spans = docs.select(col("doc_id"),
-        explode(array_distinct(transform(
-          TextFunctions.charShingles(lower(col("text")), DecontamSpanN),
-          g => org.apache.spark.sql.graft.Md5Long60.column(g)))).as("h"))
+        explode(Dedup.hashedShingles(col("text"), DecontamSpanN)).as("h"))
         .localCheckpoint(false) // md5 hashing feeds the bench AND probe branches
       val bench = spans.filter(col("doc_id") % ContamBenchMod === 0)
         .select("h").distinct()

@@ -24,9 +24,11 @@ import graft.operators.Dedup
   *   - the rare-first postings as CSR over dictionary indices: the docs
   *     holding dict(i) are postDoc(postStart(i) until postStart(i + 1)),
   *     and postPos is the shingle's 0-based position in that doc's
-  *     (df, h) order, the shuffle regime's `c_pos`;
+  *     (df, h) order, the shuffle regime's `c_pos`. Each list holds its
+  *     docs in ascending doc order;
   *   - each doc's sorted hashes as CSR (docStart/docH), whose length is
-  *     the doc's `c_nsh`, its per-doc key `c_rk` (`docRk`), and whether
+  *     the doc's `c_nsh`, its per-doc key `c_rk` (`docRk`, strictly
+  *     rising with the doc, so with a list's postings), and whether
   *     its id is non-null (`docLive`): a null-id doc counts toward df and
   *     holds postings, but is never a container, as in the shuffle
   *     regime's verify join.
@@ -57,8 +59,9 @@ object ContainmentCorpus {
     Narrow.collect(hashed.select(col("nsh")), "containment/corpus/size")(_.map(_.getInt(0).toLong).sum).sum
 
   /** Collect a hashed corpus (id, hs sorted ascending and distinct, nsh
-    * > 0, c_rk) in one job and build the arrays. The caller bounds its
-    * size.
+    * > 0, c_rk rising in partition and row order, as
+    * monotonically_increasing_id gives it) in one job and build the
+    * arrays. The caller bounds its size.
     */
   def collect(hashed: DataFrame, idCol: String): ContainmentCorpus = {
     val parts = Narrow.collect(hashed.select(col(idCol).isNotNull, col("hs"), col("c_rk")),
@@ -78,6 +81,7 @@ object ContainmentCorpus {
     val docH = Narrow.flat(parts.map(_._3))
     val docRk = Narrow.flat(parts.map(_._4))
     val nDocs = lens.length
+    require((1 until nDocs).forall(d => docRk(d) > docRk(d - 1)), "c_rk must rise with the doc")
     val docStart = new Array[Int](nDocs + 1)
     for (d <- 0 until nDocs) docStart(d + 1) = docStart(d) + lens(d)
 
@@ -171,7 +175,9 @@ object ContainmentCorpus {
   *   - Jaccard (`similar`, symmetric): only postings inside the doc's own
   *     prefix (c_pos < c_nsh - minOverlap(t, c_nsh) + 1) of docs with
   *     c_rk > rk and nsh >= minOverlap(t, c_nsh) are probed, so each
-  *     unordered pair is met once. A doc passes PPJoin's bound when that
+  *     unordered pair is met once. A list's docs rise in c_rk, so its
+  *     walk starts at its first doc past rk, found by binary search. A
+  *     doc passes PPJoin's bound when that
   *     bound + 1e-9 >= t / (1 + t) · (nsh + c_nsh), and matches when
   *     I / (nsh + c_nsh - I) >= t for its exact intersection I.
   *
@@ -230,17 +236,28 @@ private final class ContainmentProbe(c: ContainmentCorpus, t: Double) {
     var pos = absent
     while (pos < nsh - needed + 1) {
       val s = (keys(pos - absent) & 0xffffffffL).toInt
-      var e = c.postStart(s)
+      var e = firstAfter(s, rk)
       while (e < c.postStart(s + 1)) {
         val d = c.postDoc(e)
         val len = docLen(d)
-        if (c.postPos(e) < prefix(d) && c.docRk(d) > rk && len >= needed && nsh >= len - prefix(d) + 1)
+        if (c.postPos(e) < prefix(d) && len >= needed && nsh >= len - prefix(d) + 1)
           touch(d, pos, c.postPos(e))
         e += 1
       }
       pos += 1
     }
     verify(hs, needed, jaccard = true)
+  }
+
+  /** The first posting of dictionary index s whose doc has c_rk > rk. */
+  private def firstAfter(s: Int, rk: Long): Int = {
+    var lo = c.postStart(s)
+    var hi = c.postStart(s + 1)
+    while (lo < hi) {
+      val mid = (lo + hi) >>> 1
+      if (c.docRk(c.postDoc(mid)) > rk) hi = mid else lo = mid + 1
+    }
+    lo
   }
 
   /** Bound and verify the row's touched docs; the matches are compacted

@@ -46,9 +46,18 @@ object Md5Long60 {
     () => MessageDigest.getInstance("MD5"))
 
   def hash(s: UTF8String): Long = {
+    val b = s.getBytes
+    hash(b, 0, b.length)
+  }
+
+  /** The hash of `len` bytes of `b` from `off`: the one md5 body, shared
+    * with ShingleHashes' windows.
+    */
+  def hash(b: Array[Byte], off: Int, len: Int): Long = {
     val md = digests.get()
     md.reset()
-    val h = md.digest(s.getBytes)
+    md.update(b, off, len)
+    val h = md.digest()
     // first 15 hex chars = top 60 bits of the 128-bit digest
     (((h(0) & 0xffL) << 56) |
       ((h(1) & 0xffL) << 48) |
