@@ -117,9 +117,11 @@ object Bench {
     // an outlier by a third sample must not keep reading as "this query
     // is ±40 s noisy".
     var spreads = Vector.empty[(String, Double)]
-    // queries that triggered adaptive resampling, with every sample —
-    // visible in the JSON so a high-spread query is auditable
-    var resampled = Vector.empty[(String, Seq[Double])]
+    // every query's samples, in run order — with `builds`, the SCALE.md
+    // build/serve split reads an artifact-backed query's first-touch build
+    // and its warm serves straight off the record, and a high-spread
+    // query is auditable
+    var sampleLists = Vector.empty[(String, Seq[Double])]
     // the discarded first-touch samples: artifact build + first serve
     var builds = Vector.empty[(String, Double)]
     var errors = Vector.empty[(String, String)]
@@ -177,13 +179,7 @@ object Bench {
           val ws = samples.map(_._1)
           bestTwoGap(ws) > math.max(1.0, 0.25 * ws.min)
         }) { samples :+= sampleOnce(); extra += 1 }
-        // SPARK_GRAFT_BENCH_EMIT_SAMPLES=1: emit EVERY query's sample
-        // list, not just the adaptively-resampled ones — with `builds`,
-        // the SCALE.md build/serve split reads artifact-backed queries'
-        // first-touch build + serve and their warm serves straight off
-        // the record
-        if (extra > 0 || sys.env.get("SPARK_GRAFT_BENCH_EMIT_SAMPLES").contains("1"))
-          resampled :+= (name -> samples.map(_._1))
+        sampleLists :+= (name -> samples.map(_._1))
         val best = samples.minBy(_._1)
         times :+= (name -> best._1)
         spreads :+= (name -> bestTwoGap(samples.map(_._1)))
@@ -215,7 +211,7 @@ object Bench {
     // spread_total over the queries that ran: a run-level noise floor —
     // round-over-round total deltas smaller than this are host noise
     val spreadTotal = spreads.collect { case (k, v) if times.exists(t => t._1 == k && t._2 >= 0) => v }.sum
-    val rs = resampled.map { case (k, v) =>
+    val rs = sampleLists.map { case (k, v) =>
       s"${jstr(k)}:${v.map("%.3f".format(_)).mkString("[", ",", "]")}"
     }.mkString("{", ",", "}")
     // end-of-run calibration too: the start sample alone misses weather
@@ -228,7 +224,7 @@ object Bench {
     val config =
       s"""{"runs":$runs,"cpus":${jstr(cpus.toString)},"heap_mb":$heapMb,"statistic":"min","spread_stat":"runnerup_minus_min","adaptive_extra_max":2,"calib_start_s":${"%.3f".format(calibStart)},"calib_end_s":${"%.3f".format(calibEnd)},"calib_mem_start_s":${"%.3f".format(calibMemStart)},"calib_mem_end_s":${"%.3f".format(calibMemEnd)},"calib_disk_start_s":${"%.3f".format(calibDiskStart)},"calib_disk_end_s":${"%.3f".format(calibDiskEnd)}}"""
     // FULL record: everything, including the per-query spread, the
-    // resample lists and the streaming-gate metrics blocks.
+    // sample lists and the streaming-gate metrics blocks.
     val line =
       s"""{"metric":"total","value":${"%.3f".format(total)},"unit":"sec","queries":$qs,"spread":$sp,"spread_total":${"%.3f".format(spreadTotal)},"samples":$rs,"builds":$bs,"config":$config,"errors":$es,"stream":$ss,"sf":${jstr(sfDir)}}"""
     // STDOUT gets a COMPACT line (round 18, verdict-r17 item 2): the

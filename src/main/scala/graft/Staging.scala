@@ -11,7 +11,7 @@ import java.nio.file.{Files, Path}
   * immediately with [[discard]].
   */
 object Staging {
-  private lazy val root: Path = {
+  private[graft] lazy val root: Path = {
     val r = Files.createTempDirectory("graft-staging-")
     Runtime.getRuntime.addShutdownHook(new Thread(() => deleteRecursively(r)))
     r
@@ -20,7 +20,7 @@ object Staging {
   /** A fresh directory under the per-JVM staging root. */
   def dir(prefix: String): Path = Files.createTempDirectory(root, prefix)
 
-  private lazy val fastRoot: Path = {
+  private[graft] lazy val fastRoot: Path = {
     val shm = java.nio.file.Paths.get("/dev/shm")
     val r =
       if (Files.isDirectory(shm) && Files.isWritable(shm))

@@ -1,42 +1,35 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.AsofJoinNative
 
 /** Backward as-of join — an operator Spark lacks natively (the classic
   * time-series "most recent right row at or before the left row's time").
   *
-  * Implementation is the union + running-last trick, NOT a range join:
-  * both sides union into one stream, a window partitioned by the key and
-  * ordered by (time, side) carries the latest right-side values forward,
-  * and left rows read them. Cost at scale: ONE hash shuffle on the key +
-  * a per-partition sort — no candidate-interval explosion, no skew beyond
-  * the key distribution itself, and AQE's skew handling applies to the
-  * single exchange. This is the plan shape a native ASOF implementation
-  * (e.g. DuckDB's) lowers to.
+  * Runs as a native physical operator (custom LogicalPlan + SparkStrategy
+  * + BinaryExecNode, org.apache.spark.sql.graft.AsofJoinNative): one hash
+  * exchange and one sort per side, declared as distribution/ordering
+  * requirements, then a single merge pass per partition holding ONE
+  * candidate right row — no union row inflation, no window state, no
+  * candidate-interval explosion. This is the plan shape a native ASOF
+  * implementation (e.g. DuckDB's) lowers to.
   *
   * Right-side rows at exactly the left row's timestamp ARE visible
-  * (backward-inclusive, matching `ON l.ts >= r.ts` ASOF semantics): right
-  * rows sort before left rows at equal timestamps.
+  * (backward-inclusive, matching `ON l.ts >= r.ts` ASOF semantics). A NULL
+  * key or NULL timestamp never matches, on either side.
   */
 object AsofJoin {
 
-  /** For every left row: left.* plus each `valueCols` column holding the
-    * most recent right value at or before `tsCol`, plus `asof_<tsCol>` =
-    * the matched right timestamp. Unmatched left rows keep nulls (left
-    * semantics); filter on the asof column for inner semantics.
+  /** For every left row: left.* plus `asof_<tsCol>` = the matched right
+    * timestamp, plus each `valueCols` column of that same right row.
+    * Unmatched left rows keep nulls (left semantics); filter on the asof
+    * column for inner semantics.
     *
-    * `right` must contain (keyCol, tsCol, valueCols*); value column names
-    * must not clash with left's columns. If the right side can hold
-    * several rows per (key, ts), pre-aggregate it — otherwise "the" value
-    * at a timestamp is ambiguous in ANY asof implementation.
-    *
-    * The right row's timestamp and ALL its values travel as ONE struct
-    * through a single last(ignoreNulls) — so the output never mixes
-    * values from different right rows, even when some right values are
-    * legitimately null (a per-column last() would skip a null value but
-    * not the row's other columns).
+    * `right` must contain (keyCol, tsCol, valueCols*); the value columns
+    * and `asof_<tsCol>` must not clash with left's columns. If the right
+    * side can hold several rows per (key, ts), pre-aggregate it —
+    * otherwise "the" value at a timestamp is ambiguous in ANY asof
+    * implementation.
     */
   def asofBackward(
       left: DataFrame,
@@ -44,63 +37,6 @@ object AsofJoin {
       keyCol: String,
       tsCol: String,
       valueCols: Seq[String]
-  ): DataFrame = {
-    // same clash rule as the native path (AsofJoinNative.join): the value
-    // columns AND the generated asof_<tsCol> column must not collide with
-    // left's columns — withColumn would otherwise silently replace them
-    val clash = (valueCols.toSet + s"asof_$tsCol").intersect(left.columns.toSet)
-    require(clash.isEmpty, s"right value columns clash with left columns: $clash")
-
-    val l = left.withColumn("__side", lit(1))
-    // ASOF semantics (DuckDB, and the native operator): a NULL key or NULL
-    // timestamp never matches. Drop null right rows up front — otherwise
-    // the window's partitionBy would group NULL keys together and join
-    // them to each other (SQL window partitioning, unlike join equality,
-    // treats NULLs as equal).
-    val r = right
-      .filter(col(keyCol).isNotNull && col(tsCol).isNotNull)
-      .select(
-        col(keyCol), col(tsCol), lit(0).as("__side"),
-        struct((tsCol +: valueCols).map(col): _*).as("__rv")
-      )
-    // left rows get a null __rv via allowMissingColumns; right rows carry
-    // their (ts, values*) as one non-null struct
-    val unioned = l.unionByName(r, allowMissingColumns = true)
-
-    val w = Window
-      .partitionBy(keyCol)
-      .orderBy(col(tsCol).asc, col("__side").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-
-    // mask left rows with a NULL key or ts explicitly rather than relying
-    // on NULLS FIRST sort order to keep them ahead of every right row
-    val filled = unioned.withColumn(
-      "__last",
-      when(col(keyCol).isNotNull && col(tsCol).isNotNull,
-        last(col("__rv"), ignoreNulls = true).over(w)))
-    valueCols
-      .foldLeft(
-        filled
-          .filter(col("__side") === 1)
-          .withColumn(s"asof_$tsCol", col(s"__last.$tsCol"))
-      ) { (df, vc) => df.withColumn(vc, col(s"__last.$vc")) }
-      .drop("__side", "__rv", "__last")
-  }
-
-  /** Same semantics via the NATIVE physical operator (custom LogicalPlan
-    * + SparkStrategy + BinaryExecNode, org.apache.spark.sql.graft
-    * .AsofJoinNative): one hash exchange + sort per side declared as
-    * distribution/ordering requirements, then a single merge pass per
-    * partition holding ONE candidate right row — no union row inflation,
-    * no window state. Column order differs from `asofBackward` (the
-    * asof_<tsCol> column precedes the values); select explicitly.
-    */
-  def asofBackwardNative(
-      left: DataFrame,
-      right: DataFrame,
-      keyCol: String,
-      tsCol: String,
-      valueCols: Seq[String]
   ): DataFrame =
-    org.apache.spark.sql.graft.AsofJoinNative.join(left, right, keyCol, tsCol, valueCols)
+    AsofJoinNative.join(left, right, keyCol, tsCol, valueCols)
 }

@@ -1273,12 +1273,6 @@ object Dedup {
     simhashBandPairs(docs, idCol, shCol, bits, numBands = maxHamming + 1)
       .filter(col("hamming") <= maxHamming)
 
-  /** Distinct band-collision pairs (id_a < id_b, exact hamming attached)
-    * for ONE contiguous-band layout of a simhash column — the shared
-    * candidate stage of `simhashCandidates` (filtered) and
-    * `simhashTuningAudit` (counted raw: the candidate volume IS the
-    * shuffle cost a banding decision is buying).
-    */
   /** Contiguous-band explode of a hamming-space signature column:
     * (idCol, shCol, band, key) — the shared candidate-key stage of the
     * simhash self-join pairs, the tuning audit, and the incremental
@@ -1304,6 +1298,12 @@ object Dedup {
       ).as(Seq("band", "key"))
     )
 
+  /** Distinct band-collision pairs (id_a < id_b, exact hamming attached)
+    * for ONE contiguous-band layout of a simhash column — the shared
+    * candidate stage of `simhashCandidates` (filtered) and
+    * `simhashTuningAudit` (counted raw: the candidate volume IS the
+    * shuffle cost a banding decision is buying).
+    */
   private def simhashBandPairs(
       docs: DataFrame,
       idCol: String,

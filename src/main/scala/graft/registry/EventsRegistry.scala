@@ -62,7 +62,9 @@ trait EventsRegistry extends RegistryBase {
     }),
 
     // events: backward as-of join — each click matched to the user's most
-    // recent view at or before it (oracle = DuckDB's native ASOF JOIN)
+    // recent view at or before it, through the custom whole-operator
+    // surface (LogicalPlan + SparkStrategy + BinaryExecNode; oracle =
+    // DuckDB's native ASOF JOIN)
     "q48_events_asof_join" -> ((s, dir) => {
       // micros, not raw nanos: DuckDB truncates TIMESTAMP(NANOS) parquet to
       // microsecond precision on read, so both engines must compare on the
@@ -177,23 +179,6 @@ trait EventsRegistry extends RegistryBase {
         .orderBy("event_id")
     }),
 
-    // custom WHOLE-OPERATOR surface (LogicalPlan + SparkStrategy +
-    // BinaryExecNode): the native as-of join — same workload and SAME
-    // oracle as q48's composed union+running-last operator, so the two
-    // implementations gate each other through DuckDB's native ASOF JOIN
-    "q101_asof_native" -> ((s, dir) => {
-      val ev = rd(s, dir, "events")
-        .select(col("event_id"), col("user_id"), expr("ts div 1000").as("tsn"), col("event_type"))
-      val clicks = ev.filter(col("event_type") === "click").drop("event_type")
-      val views = ev.filter(col("event_type") === "view")
-        .groupBy("user_id", "tsn")
-        .agg(max(col("event_id")).as("v_event_id"))
-      graft.operators.AsofJoin.asofBackwardNative(clicks, views, "user_id", "tsn", Seq("v_event_id"))
-        .filter(col("v_event_id").isNotNull) // inner asof semantics
-        .select(col("event_id"), col("user_id"), col("v_event_id"), col("asof_tsn").as("v_tsn"))
-        .orderBy("event_id")
-    }),
-
     // pillar events: FUNNEL ANALYSIS — ordered-stage conversion
     // (signup -> first view AFTER signup -> first purchase AFTER that
     // view), the product-analytics staple. Each stage is one filtered
@@ -305,18 +290,6 @@ trait EventsRegistry extends RegistryBase {
         |GROUP BY c.event_id, c.user_id ORDER BY c.event_id""".stripMargin,
 
     "q48_events_asof_join" ->
-      """WITH clicks AS (
-        |  SELECT event_id, user_id, epoch_us(ts) AS tsn FROM events WHERE event_type = 'click'),
-        |views AS (
-        |  SELECT user_id, epoch_us(ts) AS tsn, max(event_id) AS v_event_id
-        |  FROM events WHERE event_type = 'view' GROUP BY user_id, epoch_us(ts))
-        |SELECT c.event_id, c.user_id, v.v_event_id, v.tsn AS v_tsn
-        |FROM clicks c ASOF JOIN views v ON c.user_id = v.user_id AND c.tsn >= v.tsn
-        |ORDER BY c.event_id""".stripMargin,
-
-    // identical to q48: the native physical operator must produce exactly
-    // what the composed operator (and DuckDB's built-in ASOF) produce
-    "q101_asof_native" ->
       """WITH clicks AS (
         |  SELECT event_id, user_id, epoch_us(ts) AS tsn FROM events WHERE event_type = 'click'),
         |views AS (

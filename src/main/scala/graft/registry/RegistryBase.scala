@@ -1,7 +1,9 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryException, Trigger}
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
 import graft.operators.{Dedup, HeurFuzz, Multimodal, NnDescent, Quota, Similarity, Sketches, TextAnalysis}
@@ -166,16 +168,24 @@ trait RegistryBase {
     "CAST(list_sum(list_transform(range(1, 9), " +
       "i -> (s.sv[i::INT] - c.cv[i::INT]) * (s.sv[i::INT] - c.cv[i::INT]))) AS BIGINT)"
 
-  /** Fuzzy-match workload at testdata scale: queries = the distinct part
-    * names (small side, broadcast), refs = 40-char document prefixes (the
-    * large side, streamed). Exercises the full reference pipeline on the
-    * biggest text table the harness ships.
+  /** Links `<dir>/<table>.parquet` into `<stage>/in`, `copies` times, and
+    * returns that directory: a file-stream source monitors a directory,
+    * and each link is one file (one micro-batch under maxFilesPerTrigger 1).
     */
+  protected def linkInput(stage: Path, dir: String, table: String, copies: Int = 1): String = {
+    val in = Files.createDirectories(stage.resolve("in"))
+    val src = Paths.get(s"$dir/$table.parquet").toAbsolutePath.normalize()
+    for (i <- 1 to copies) Files.createSymbolicLink(in.resolve(s"$table-$i.parquet"), src)
+    in.toString
+  }
+
   /** Shared streaming-gate harness: stage the events parquet into a
-    * fresh directory (file-stream sources monitor directories), run the
-    * caller's stream into a memory sink, fail LOUDLY on timeout (a
-    * partial sink would be a nondeterministic wrong answer, not an
-    * error), discard the staging once drained, return the sink table.
+    * fresh directory, run the caller's stream into a memory sink, fail
+    * LOUDLY on timeout (a partial sink would be a nondeterministic wrong
+    * answer, not an error), return the sink table. The stage and the
+    * checkpoint are discarded on EVERY exit path (timeout, stream failure,
+    * analysis error): a failed gate must not leak scratch dirs or a
+    * half-filled sink until JVM shutdown.
     */
   protected def runStreamGate(
       s: SparkSession,
@@ -183,11 +193,11 @@ trait RegistryBase {
       sinkTable: String,
       outputMode: String
   )(mkStream: String => DataFrame): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val stage = Staging.dir(sinkTable.takeWhile(_ != '_') + "-")
-    // staging is discarded on EVERY exit path (timeout, stream failure,
-    // analysis error) — a failed gate must not leak scratch dirs or a
-    // half-filled sink until JVM shutdown
+    // state-store deltas/snapshots + offset log on the fast scratch root
+    // (see Staging.fastDir): state COMMIT latency to disk-backed /tmp,
+    // not compute, dominated the stateful gates' wall-clock
+    val ckpt = Staging.fastDir("ckpt-")
     val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
     try {
       // State partitions are baked into the checkpoint at query start and
@@ -201,26 +211,79 @@ trait RegistryBase {
       // decision, not the batch default.
       s.conf.set("spark.sql.shuffle.partitions",
         math.min(8, prevShuffle.toInt).toString)
-      java.nio.file.Files.createSymbolicLink(
-        stage.resolve("events.parquet"),
-        java.nio.file.Paths.get(s"$dir/events.parquet").toAbsolutePath.normalize())
       if (s.catalog.tableExists(sinkTable)) s.catalog.dropTempView(sinkTable)
-      val q = mkStream(stage.toString)
+      val q = mkStream(linkInput(stage, dir, "events"))
         .writeStream
         .format("memory")
         .queryName(sinkTable)
         .outputMode(outputMode)
         .trigger(Trigger.AvailableNow())
-        // state-store deltas/snapshots + offset log on the fast scratch
-        // root — see Staging.fastDir: state COMMIT latency to disk-backed
-        // /tmp, not compute, dominated the stateful gates' wall-clock
-        .option("checkpointLocation", Staging.fastDir("ckpt-").toString)
+        .option("checkpointLocation", ckpt.toString)
         .start()
       awaitGate(sinkTable, q)
       s.table(sinkTable)
     } finally {
       s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
       Staging.discard(stage)
+      Staging.discard(ckpt)
+    }
+  }
+
+  /** A foreachBatch gate once its setup has run: the stream, the frame
+    * each micro-batch writes (given the batch and its id), and the answer
+    * over the rows every batch wrote.
+    */
+  protected case class BatchGate(
+      stream: DataFrame,
+      batch: (DataFrame, Long) => DataFrame,
+      finish: DataFrame => DataFrame)
+
+  /** The sink [[foreachBatchGate]] writes under a gate's stage: batch
+    * `id` lands in `<sink>/batch=<id>`.
+    */
+  protected def gateSink(stage: Path): String = stage.resolve("out").toString
+
+  /** The foreachBatch bridge: runs a BATCH operator over every
+    * micro-batch of a stream, so no operator needs a streaming rewrite.
+    *
+    * `setup` gets a fresh stage directory. It stages the gate's input
+    * there and builds the gate's static side before returning; that side
+    * must be built eagerly (`localCheckpoint(true)`), or its build lands
+    * inside batch 0's addBatch (StreamBatch0Spec audits this).
+    *
+    * Batch `id` is written to `<sink>/batch=<id>` with mode overwrite.
+    * foreachBatch is at-least-once: a batch that fails after its write
+    * but before its offset commit is replayed on restart with the same id
+    * and the same input, so it replaces its own output instead of
+    * appending a duplicate. [[GateReplay]] exercises this.
+    *
+    * After the drain the sink is read back without its `batch` partition
+    * column (an idempotency key, not part of the answer), handed to
+    * `finish`, and the answer is checkpointed eagerly: it must be
+    * materialised off the sink files before the stage and the checkpoint
+    * are deleted, which happens on every exit path.
+    */
+  protected def foreachBatchGate(s: SparkSession, name: String)(
+      setup: Path => BatchGate): DataFrame = {
+    val stage = Staging.dir(s"$name-")
+    val ckpt = Staging.fastDir("ckpt-")
+    try {
+      val gate = setup(stage)
+      val sink = gateSink(stage)
+      def run(): Unit = awaitGate(name, gate.stream.writeStream
+        .trigger(Trigger.AvailableNow())
+        .option("checkpointLocation", ckpt.toString)
+        .foreachBatch { (batch: DataFrame, id: Long) =>
+          gate.batch(batch, id).write.mode("overwrite").parquet(s"$sink/batch=$id")
+          GateReplay.afterSink(name, id)
+        }
+        .start())
+      try run()
+      catch { case _: StreamingQueryException if GateReplay.restart() => run() }
+      gate.finish(s.read.parquet(sink).drop("batch")).localCheckpoint(true)
+    } finally {
+      Staging.discard(stage)
+      Staging.discard(ckpt)
     }
   }
 
@@ -228,8 +291,7 @@ trait RegistryBase {
     * record its StreamingQueryProgress rollup for the bench JSON, and
     * stop it on every exit path.
     */
-  protected def awaitGate(
-      name: String, q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
+  protected def awaitGate(name: String, q: StreamingQuery): Unit = {
     try {
       if (!q.awaitTermination(300000))
         throw new IllegalStateException(s"$name stream did not finish within 300s")
@@ -330,6 +392,11 @@ trait RegistryBase {
     (withB, pairs)
   }
 
+  /** Fuzzy-match workload at testdata scale: queries = the distinct part
+    * names (small side, broadcast), refs = 40-char document prefixes (the
+    * large side, streamed). Exercises the full reference pipeline on the
+    * biggest text table the harness ships.
+    */
   protected def matchDocs(s: SparkSession, dir: String): DataFrame = {
     // query ids: natural key (min partkey per distinct lowered name) — no
     // single-partition global window; see `entry`
@@ -1427,4 +1494,44 @@ trait RegistryBase {
        |mt AS (SELECT mq.id AS q_id, mq.term AS query, coalesce(b.match, 'NA') AS match
        |       FROM mq LEFT JOIN best b ON b.q_id = mq.id)""".stripMargin
 
+}
+
+/** Test hook for the foreachBatch gates' replay contract, package-private
+  * like `Narrow.withBudget`: inside [[withFailure]], one batch of one gate
+  * fails once, after its sink write and before its offset commit, and
+  * `RegistryBase.foreachBatchGate` restarts the stream from the same
+  * checkpoint, as a restarted driver would.
+  */
+private[graft] object GateReplay {
+  private var armed: Option[(String, Long)] = None
+  private var injected = 0
+  private var restarts = 0
+
+  /** Runs `body` with batch `batchId` of gate `gate` failing once; fails
+    * if that batch never ran, since the replay would then go unexercised.
+    */
+  def withFailure[T](gate: String, batchId: Long)(body: => T): T = {
+    synchronized { armed = Some((gate, batchId)); injected = 0; restarts = 0 }
+    try {
+      val out = body
+      require(synchronized(restarts == 1),
+        s"$gate batch $batchId never ran: no failure was injected")
+      out
+    } finally synchronized { armed = None }
+  }
+
+  private[graft] def afterSink(gate: String, id: Long): Unit = synchronized {
+    if (armed.contains((gate, id))) {
+      armed = None
+      injected += 1
+      throw new IllegalStateException(s"injected failure: $gate batch $id after its sink write")
+    }
+  }
+
+  /** True once per injected failure: the harness restarts the stream. */
+  private[graft] def restart(): Boolean = synchronized {
+    val due = restarts < injected
+    if (due) restarts += 1
+    due
+  }
 }

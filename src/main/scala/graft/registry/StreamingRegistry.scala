@@ -1,11 +1,11 @@
 package graft
 
-import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
 import graft.operators.{Dedup, HeurFuzz, Multimodal, Quota, Similarity, Sketches, TextAnalysis}
+import graft.streaming.EventStream
 
 /** Registry pillar: Structured Streaming gates, each checked against a batch oracle. Split from SparkEntry.scala
   * (round 8); query semantics and oracle SQL unchanged.
@@ -19,7 +19,7 @@ trait StreamingRegistry extends RegistryBase {
     // batch re-derivation) pass the correctness gate.
     "q53_events_hourly_stream" -> ((s, dir) =>
       runStreamGate(s, dir, "q53_events_hourly_stream_sink", "complete") { stage =>
-        graft.streaming.EventStream.hourlyStream(s, stage)
+        EventStream.hourlyStream(s, stage)
       }.orderBy("hour_epoch", "event_type")),
 
     // streaming: exact dedup through the real streaming engine —
@@ -34,9 +34,9 @@ trait StreamingRegistry extends RegistryBase {
       // horizon (the production setting) is only batching-independent
       // when no key recurs beyond it.
       runStreamGate(s, dir, "q71_stream_dedup_sink", "append") { stage =>
-        graft.streaming.EventStream
+        EventStream
           .dedupStream(
-            graft.streaming.EventStream.readEventStream(s, stage),
+            EventStream.readEventStream(s, stage),
             Seq("user_id", "event_type"), "3650 days")
           .select("user_id", "event_type")
       }.orderBy("user_id", "event_type")),
@@ -47,8 +47,8 @@ trait StreamingRegistry extends RegistryBase {
     // q54; window.start = first event, window.end = last event + gap
     "q84_stream_sessions" -> ((s, dir) =>
       runStreamGate(s, dir, "q84_stream_sessions_sink", "complete") { stage =>
-        graft.streaming.EventStream.sessionAggregate(
-          graft.streaming.EventStream.readEventStream(s, stage),
+        EventStream.sessionAggregate(
+          EventStream.readEventStream(s, stage),
           gap = "4 hours", watermark = Some("8 hours"))
       }.orderBy("user_id", "session_start")),
 
@@ -59,7 +59,7 @@ trait StreamingRegistry extends RegistryBase {
     "q90_stream_static_join" -> ((s, dir) => {
       val dim = rd(s, dir, "customer")
       runStreamGate(s, dir, "q90_stream_static_join_sink", "complete") { stage =>
-        graft.streaming.EventStream
+        EventStream
           .enrichedHourlyStream(s, stage, dim, "c_custkey", "c_mktsegment")
       }.orderBy("hour_epoch", "c_mktsegment")
     }),
@@ -71,8 +71,8 @@ trait StreamingRegistry extends RegistryBase {
     // of how the source split into batches.
     "q94_stream_user_totals" -> ((s, dir) =>
       runStreamGate(s, dir, "q94_stream_user_totals_sink", "update") { stage =>
-        graft.streaming.EventStream
-          .runningUserCounts(s, graft.streaming.EventStream.readEventStream(s, stage))
+        EventStream
+          .runningUserCounts(s, EventStream.readEventStream(s, stage))
           .toDF()
       }
         .groupBy("user_id")
@@ -86,7 +86,7 @@ trait StreamingRegistry extends RegistryBase {
     // range-join oracle
     "q95_stream_stream_join" -> ((s, dir) =>
       runStreamGate(s, dir, "q95_stream_stream_join_sink", "append") { stage =>
-        graft.streaming.EventStream.clickPriorViewsStream(s, stage)
+        EventStream.clickPriorViewsStream(s, stage)
       }
         .groupBy(col("event_id"), col("c_user").as("user_id"))
         .agg(count(lit(1)).as("n_prior_views"))
@@ -94,44 +94,29 @@ trait StreamingRegistry extends RegistryBase {
 
     // streaming bridge gate: foreachBatch runs the BATCH keep-latest
     // operator over every micro-batch (two batches forced via a doubled
-    // staged file + maxFilesPerTrigger=1), appending each batch's winners
-    // to a parquet staging sink; a final batch keep-latest over the
-    // appended union yields the same snapshot for ANY micro-batch split
+    // staged file + maxFilesPerTrigger=1) and writes each batch's winners
+    // to its batchId-keyed sink; a final batch keep-latest over all
+    // batches yields the same snapshot for ANY micro-batch split
     // (keep-latest is an idempotent per-key reduction, and the duplicate
     // rows from the doubled file collapse to identical winners) —
     // hash-matched against the q81-shape batch oracle. This is the
     // surface that lets every batch operator in the engine run over a
     // stream without a streaming rewrite.
     "q104_stream_foreach_dedup" -> ((s, dir) => {
-      val stage = Staging.dir("q104-")
-      try {
-        val inDir = stage.resolve("in")
-        java.nio.file.Files.createDirectories(inDir)
-        java.nio.file.Files.createSymbolicLink(
-          inDir.resolve("events.parquet"),
-          java.nio.file.Paths.get(s"$dir/events.parquet").toAbsolutePath.normalize())
-        java.nio.file.Files.createSymbolicLink(
-          inDir.resolve("events2.parquet"),
-          java.nio.file.Paths.get(s"$dir/events.parquet").toAbsolutePath.normalize())
-        val outDir = stage.resolve("out").toString
-
-        def keepLatest(df: DataFrame): DataFrame = {
-          val w = Window.partitionBy("user_id", "event_type")
-            .orderBy(col("tsn").desc, col("event_id").desc)
-          df.withColumn("rn", row_number().over(w)).filter(col("rn") === 1).drop("rn")
-        }
-        val q = graft.streaming.EventStream.foreachBatchSink(
-          graft.streaming.EventStream.readEventStream(s, inDir.toString, maxFilesPerTrigger = Some(1)),
-          batch => keepLatest(batch.select(
+      def keepLatest(df: DataFrame): DataFrame = {
+        val w = Window.partitionBy("user_id", "event_type")
+          .orderBy(col("tsn").desc, col("event_id").desc)
+        df.withColumn("rn", row_number().over(w)).filter(col("rn") === 1).drop("rn")
+      }
+      foreachBatchGate(s, "q104") { stage =>
+        BatchGate(
+          EventStream.readEventStream(s, linkInput(stage, dir, "events", copies = 2),
+            maxFilesPerTrigger = Some(1)),
+          (batch, _) => keepLatest(batch.select(
             col("event_id"), col("user_id"), col("event_type"),
-            expr("ts div 1000").as("tsn"), col("value")))
-        ) { (winners, _) => winners.write.mode("append").parquet(outDir) }
-          .start()
-        awaitGate("q104", q)
-        // materialize off the staging files before they are discarded
-        keepLatest(s.read.parquet(outDir)).localCheckpoint(true)
-          .orderBy("user_id", "event_type")
-      } finally Staging.discard(stage)
+            expr("ts div 1000").as("tsn"), col("value"))),
+          winners => keepLatest(winners).orderBy("user_id", "event_type"))
+      }
     }),
 
     // pillar events + streaming (11th gate): HLL SKETCH MAINTENANCE ON A
@@ -142,155 +127,111 @@ trait StreamingRegistry extends RegistryBase {
     // change a register — same oracle as the batch q133. This is the
     // production sketch shape: per-partition/day/batch register tables
     // stored small, merged on demand, raw data never re-read.
-    "q148_stream_hll_distinct" -> ((s, dir) => {
-      val stage = Staging.dir("q148-")
-      try {
-        val inDir = stage.resolve("in")
-        java.nio.file.Files.createDirectories(inDir)
-        java.nio.file.Files.createSymbolicLink(
-          inDir.resolve("events.parquet"),
-          java.nio.file.Paths.get(s"$dir/events.parquet").toAbsolutePath.normalize())
-        val outDir = stage.resolve("out").toString
+    "q148_stream_hll_distinct" -> ((s, dir) =>
+      foreachBatchGate(s, "q148") { stage =>
         def userDay(df: DataFrame) = df.select(col("event_type"),
           concat(col("user_id").cast("string"), lit(":"),
             expr("ts div 86400000000000").cast("string")).as("user_day"))
-        // readEventStream owns the events read schema + the micros->nanos
-        // rescale (rd's output schema no longer matches the raw file)
-        val stream = graft.streaming.EventStream.readEventStream(s, inDir.toString)
-        val q = graft.streaming.EventStream.foreachBatchSink(stream, identity) {
-          (batch, batchId) =>
-            Sketches.hllRegisters(userDay(spreadBatch(s, batch)), "event_type", "user_day")
-              .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        }.start()
-        awaitGate("q148", q)
-        val merged = s.read.parquet(outDir).drop("batch")
-          .groupBy("event_type", "j").agg(max(col("mj")).as("mj"))
-        val exact = userDay(spread(s, rd(s, dir, "events")))
-          .groupBy("event_type").agg(countDistinct(col("user_day")).as("n_exact"))
-        Sketches.hllEstimate(merged, "event_type")
-          .join(exact, Seq("event_type"))
-          .select(col("event_type"), col("n_zero_regs"), col("hll_est"),
-            col("n_exact"),
-            ((col("hll_est") - col("n_exact")) / col("n_exact")).as("rel_err"))
-          .orderBy("event_type").localCheckpoint(true)
-      } finally Staging.discard(stage)
-    }),
+        BatchGate(
+          // readEventStream owns the events read schema + the micros->nanos
+          // rescale (rd's output schema no longer matches the raw file)
+          EventStream.readEventStream(s, linkInput(stage, dir, "events")),
+          (batch, _) =>
+            Sketches.hllRegisters(userDay(spreadBatch(s, batch)), "event_type", "user_day"),
+          registers => {
+            val merged = registers.groupBy("event_type", "j").agg(max(col("mj")).as("mj"))
+            val exact = userDay(spread(s, rd(s, dir, "events")))
+              .groupBy("event_type").agg(countDistinct(col("user_day")).as("n_exact"))
+            Sketches.hllEstimate(merged, "event_type")
+              .join(exact, Seq("event_type"))
+              .select(col("event_type"), col("n_zero_regs"), col("hll_est"),
+                col("n_exact"),
+                ((col("hll_est") - col("n_exact")) / col("n_exact")).as("rel_err"))
+              .orderBy("event_type")
+          })
+      }),
 
     // pillar sketches + streaming (18th gate): BIN-QUANTILE SKETCH
     // MAINTENANCE ON A STREAM — each micro-batch emits its own
-    // (event_type, bin, cnt) table (overwrite per batchId: replay-
-    // idempotent); the tables SUM-merge after the stream drains and the
-    // q181 estimator reads off the merged sketch. Because micro-batches
-    // partition the input rows and bin counts are additive, the merged
-    // sketch is provably IDENTICAL to the batch sketch — same oracle as
-    // q181, exact audit included. This is the production percentile
-    // pipeline: per-batch/day sketches stored tiny, merged on demand,
-    // raw data never re-read.
-    "q182_stream_quantile_sketch" -> ((s, dir) => {
-      val stage = Staging.dir("q182-")
-      try {
-        val inDir = stage.resolve("in").toString
-        // genuine 4-file split → 4 micro-batches (the q155 convention)
-        s.read.schema(graft.streaming.EventStream.eventsSchemaDdl)
-          .parquet(s"$dir/events.parquet")
-          .repartition(4).write.mode("overwrite").parquet(inDir)
-        val outDir = stage.resolve("out").toString
-        val q = graft.streaming.EventStream.foreachBatchSink(
-          graft.streaming.EventStream.readEventStream(s, inDir, maxFilesPerTrigger = Some(1)),
-          identity) { (batch, batchId) =>
-            val cents = spreadBatch(s, batch)
-              .select(col("event_type"), round(col("value") * 100).cast("long").as("cents"))
-            Sketches.binCounts(cents, "event_type", "cents", QSketchWidthCents)
-              .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        }.start()
-        awaitGate("q182", q)
-        val merged = s.read.parquet(outDir).drop("batch")
-          .groupBy("event_type", "bin").agg(sum(col("cnt")).as("cnt"))
-        val est = Sketches.quantileFromBins(merged, "event_type", QSketchWidthCents, QSketchPcts)
-        // exact audit side from the static table (identical to q181's)
-        val exact = Sketches.quantileFromBins(
-            Sketches.binCounts(
-              rd(s, dir, "events")
-                .select(col("event_type"), round(col("value") * 100).cast("long").as("cents")),
-              "event_type", "cents", 1L),
-            "event_type", 1L, QSketchPcts)
-          .select(col("event_type"), col("pct"), col("est_lo").as("exact_cents"))
-        est.join(exact, Seq("event_type", "pct"))
-          .select(col("event_type"), col("pct"), col("target"),
-            col("est_lo").as("est_lo_cents"), col("est_hi").as("est_hi_cents"),
-            col("exact_cents"),
-            (col("exact_cents") - col("est_lo")).as("err_cents"))
-          .orderBy("event_type", "pct").localCheckpoint(true)
-      } finally Staging.discard(stage)
-    }),
+    // (event_type, bin, cnt) table; the tables SUM-merge after the stream
+    // drains and the q181 estimator reads off the merged sketch. Because
+    // micro-batches partition the input rows and bin counts are additive,
+    // the merged sketch is provably IDENTICAL to the batch sketch — same
+    // oracle as q181, exact audit included. This is the production
+    // percentile pipeline: per-batch/day sketches stored tiny, merged on
+    // demand, raw data never re-read.
+    "q182_stream_quantile_sketch" -> ((s, dir) =>
+      foreachBatchGate(s, "q182") { stage =>
+        BatchGate(
+          eventsSplitStream(s, dir, stage),
+          (batch, _) => Sketches.binCounts(
+            spreadBatch(s, batch)
+              .select(col("event_type"), round(col("value") * 100).cast("long").as("cents")),
+            "event_type", "cents", QSketchWidthCents),
+          bins => {
+            val merged = bins.groupBy("event_type", "bin").agg(sum(col("cnt")).as("cnt"))
+            val est = Sketches.quantileFromBins(merged, "event_type", QSketchWidthCents, QSketchPcts)
+            // exact audit side from the static table (identical to q181's)
+            val exact = Sketches.quantileFromBins(
+                Sketches.binCounts(
+                  rd(s, dir, "events")
+                    .select(col("event_type"), round(col("value") * 100).cast("long").as("cents")),
+                  "event_type", "cents", 1L),
+                "event_type", 1L, QSketchPcts)
+              .select(col("event_type"), col("pct"), col("est_lo").as("exact_cents"))
+            est.join(exact, Seq("event_type", "pct"))
+              .select(col("event_type"), col("pct"), col("target"),
+                col("est_lo").as("est_lo_cents"), col("est_hi").as("est_hi_cents"),
+                col("exact_cents"),
+                (col("exact_cents") - col("est_lo")).as("err_cents"))
+              .orderBy("event_type", "pct")
+          })
+      }),
 
     // pillar sketches + streaming (19th gate): COUNT-MIN SKETCH
     // MAINTENANCE ON A STREAM — each micro-batch counts its own terms and
-    // emits its own d x w CMS table (overwrite per batchId: replay-
-    // idempotent); the tables SUM-merge after the stream drains and the
-    // q129 heavy-hitter probe reads off the merged sketch. Bucket sums
-    // are LINEAR in term counts and micro-batches partition the corpus
-    // rows, so the merged sketch is provably IDENTICAL to the batch
-    // sketch — same oracle as q129. The production frequency pipeline:
-    // per-batch sketches stored tiny (d*w rows), merged on demand, raw
-    // text never re-read.
-    "q188_stream_cms_topk" -> ((s, dir) => {
-      val stage = Staging.dir("q188-")
-      try {
-        val inDir = stage.resolve("in").toString
+    // emits its own d x w CMS table; the tables SUM-merge after the
+    // stream drains and the q129 heavy-hitter probe reads off the merged
+    // sketch. Bucket sums are LINEAR in term counts and micro-batches
+    // partition the corpus rows, so the merged sketch is provably
+    // IDENTICAL to the batch sketch — same oracle as q129. The production
+    // frequency pipeline: per-batch sketches stored tiny (d*w rows),
+    // merged on demand, raw text never re-read.
+    "q188_stream_cms_topk" -> ((s, dir) =>
+      foreachBatchGate(s, "q188") { stage =>
+        val in = stage.resolve("in").toString
         // genuine 4-file split → 4 micro-batches (the q155 convention)
-        rd(s, dir, "documents").repartition(4).write.mode("overwrite").parquet(inDir)
-        val outDir = stage.resolve("out").toString
-        val schema = rd(s, dir, "documents").schema
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1).parquet(inDir)
-        val q = graft.streaming.EventStream.foreachBatchSink(stream, identity) {
-          (batch, batchId) =>
-            val terms = spreadBatch(s, batch)
-              .select(explode(TextFunctions.whitespaceTokens(lower(col("text")))).as("term"))
-              .groupBy("term").agg(count(lit(1)).as("cnt"))
-            Sketches.cmsRows(terms, "term", "cnt")
-              .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        }.start()
-        awaitGate("q188", q)
-        val merged = s.read.parquet(outDir).drop("batch")
-          .groupBy("j", "bkt").agg(sum(col("c")).as("c"))
-        // probe side from the static table (exactly q129's term counts)
-        val terms = spread(s, rd(s, dir, "documents"))
+        rd(s, dir, "documents").repartition(4).write.mode("overwrite").parquet(in)
+        def termCounts(df: DataFrame) = df
           .select(explode(TextFunctions.whitespaceTokens(lower(col("text")))).as("term"))
           .groupBy("term").agg(count(lit(1)).as("cnt"))
-        Sketches.cmsEstimate(terms, merged, "term", "cnt")
-          .withColumn("over", col("est") - col("cnt"))
-          .orderBy(col("est").desc, col("term").asc)
-          .limit(20)
-          .select("term", "cnt", "est", "over")
-          .localCheckpoint(true)
-      } finally Staging.discard(stage)
-    }),
+        BatchGate(
+          s.readStream.schema(rd(s, dir, "documents").schema)
+            .option("maxFilesPerTrigger", 1).parquet(in),
+          (batch, _) => Sketches.cmsRows(termCounts(spreadBatch(s, batch)), "term", "cnt"),
+          sketches => {
+            val merged = sketches.groupBy("j", "bkt").agg(sum(col("c")).as("c"))
+            // probe side from the static table (exactly q129's term counts)
+            Sketches.cmsEstimate(termCounts(spread(s, rd(s, dir, "documents"))),
+                merged, "term", "cnt")
+              .withColumn("over", col("est") - col("cnt"))
+              .orderBy(col("est").desc, col("term").asc)
+              .limit(20)
+              .select("term", "cnt", "est", "over")
+          })
+      }),
 
     // pillar dedup + streaming: incremental dedup ON ARRIVAL — the q118
     // operator driven from the foreachBatch bridge: the incoming batch
     // arrives as a file stream, each micro-batch runs
     // incrementalNearDupFilterOnBands against the static (persisted)
-    // corpus and appends its verdicts. THE production ingest-dedup
+    // corpus and writes its verdicts. THE production ingest-dedup
     // shape: batch operators reused verbatim on streams, corpus state
     // external to the stream (same oracle as q118 — the bridge must not
     // change answers).
-    "q121_stream_incremental_dedup" -> ((s, dir) => {
-      val stage = Staging.dir("q121-")
-      try {
-        val inDir = stage.resolve("in").toString
-        // stage the INCOMING slice as a small multi-file input (round 18):
-        // the old symlink of the whole documents.parquet made every
-        // micro-batch read the FULL corpus file through ONE task and
-        // filter 90% of it away inside the stream — a serialized
-        // corpus-sized scan per batch (guide §2.5 input skew). Staging
-        // writes the 10% incoming slice once, outside the stream, with
-        // AQE on; the source then reads only incoming rows, in parallel.
-        rd(s, dir, "documents")
-          .filter(col("doc_id") % IncrementalMod === IncrementalMod - 1)
-          .repartition(4).write.mode("overwrite").parquet(inDir)
-        val outDir = stage.resolve("out").toString
+    "q121_stream_incremental_dedup" -> ((s, dir) =>
+      foreachBatchGate(s, "q121") { stage =>
+        val in = stageIncomingDocs(s, dir, stage)
         // spread both sides: the staged snapshot is ONE parquet file, so
         // without it the per-doc md5 signature hashing (the dominant
         // cost) runs single-core on both the corpus and each micro-batch
@@ -310,28 +251,15 @@ trait StreamingRegistry extends RegistryBase {
         val corpBands = Dedup.signatureBands(corpus, "doc_id", "text",
             shingleN = 4, numHashes = 8, rowsPerBand = 4)
           .localCheckpoint(true)
-        val schema = rd(s, dir, "documents").schema
-        // no maxFilesPerTrigger: the staged slice arrives as ONE batch
-        // (the q104/q121 bridge gate semantics are per-doc, so batching
-        // is free to differ; one batch keeps commit overhead minimal)
-        val incomingStream = s.readStream.schema(schema).parquet(inDir)
-        val q = graft.streaming.EventStream.foreachBatchSink(incomingStream, identity) {
-          (batch, batchId) =>
-            // foreachBatch is at-least-once: keying the output path by
-            // batchId + overwrite makes a retried micro-batch replace its
-            // own partial output instead of appending duplicates
-            Dedup.incrementalNearDupFilterOnBands(spreadBatch(s, batch), corpBands,
-                "doc_id", "text",
-                shingleN = 4, numHashes = 8, rowsPerBand = 4, threshold = 0.4)
-              .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        }.start()
-        awaitGate("q121", q)
-        // materialize off the staging files before they are discarded
-        // (drop the batch=<id> partition-discovery column — it is a sink
-        // idempotency key, not part of the operator's answer)
-        s.read.parquet(outDir).drop("batch").orderBy("doc_id").localCheckpoint(true)
-      } finally Staging.discard(stage)
-    }),
+        BatchGate(
+          // no maxFilesPerTrigger: the staged slice arrives as ONE batch
+          // (the q104/q121 bridge gate semantics are per-doc, so batching
+          // is free to differ; one batch keeps commit overhead minimal)
+          s.readStream.schema(rd(s, dir, "documents").schema).parquet(in),
+          (batch, _) => Dedup.incrementalNearDupFilterOnBands(spreadBatch(s, batch), corpBands,
+            "doc_id", "text", shingleN = 4, numHashes = 8, rowsPerBand = 4, threshold = 0.4),
+          _.orderBy("doc_id"))
+      }),
 
     // pillar pipeline + streaming (10th gate): CONTAMINATION SCORING ON
     // ARRIVAL — q119's graded-overlap operator driven from the
@@ -342,39 +270,27 @@ trait StreamingRegistry extends RegistryBase {
     // Per-doc scores only depend on the doc itself + the static set, so
     // batch boundaries provably don't change answers: same oracle as
     // q119.
-    "q140_stream_contamination" -> ((s, dir) => {
-      val stage = Staging.dir("q140-")
-      try {
-        val inDir = stage.resolve("in")
-        java.nio.file.Files.createDirectories(inDir)
-        java.nio.file.Files.createSymbolicLink(
-          inDir.resolve("documents.parquet"),
-          java.nio.file.Paths.get(s"$dir/documents.parquet").toAbsolutePath.normalize())
-        val outDir = stage.resolve("out").toString
+    "q140_stream_contamination" -> ((s, dir) =>
+      foreachBatchGate(s, "q140") { stage =>
         def spansOf(df: DataFrame) = df.select(col("doc_id"),
           explode(Dedup.hashedShingles(col("text"), DecontamSpanN)).as("h"))
         val bench = spansOf(spread(s, rd(s, dir, "documents"))
             .filter(col("doc_id") % ContamBenchMod === 0))
           .select(col("h").as("bh")).distinct()
           .localCheckpoint(true) // static benchmark set, reused by every micro-batch
-        val schema = rd(s, dir, "documents").schema
-        val stream = s.readStream.schema(schema).parquet(inDir.toString)
-          .filter(col("doc_id") % ContamBenchMod =!= 0)
-        val q = graft.streaming.EventStream.foreachBatchSink(stream, identity) {
-          (batch, batchId) =>
-            spansOf(spreadBatch(s, batch))
-              .join(broadcast(bench), col("h") === col("bh"), "left")
-              .groupBy("doc_id")
-              .agg(
-                count(lit(1)).as("n_spans"),
-                sum(when(col("bh").isNotNull, 1L).otherwise(0L)).as("n_hit"))
-              .withColumn("overlap_ratio", col("n_hit").cast("double") / col("n_spans"))
-              .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        }.start()
-        awaitGate("q140", q)
-        s.read.parquet(outDir).drop("batch").orderBy("doc_id").localCheckpoint(true)
-      } finally Staging.discard(stage)
-    }),
+        BatchGate(
+          s.readStream.schema(rd(s, dir, "documents").schema)
+            .parquet(linkInput(stage, dir, "documents"))
+            .filter(col("doc_id") % ContamBenchMod =!= 0),
+          (batch, _) => spansOf(spreadBatch(s, batch))
+            .join(broadcast(bench), col("h") === col("bh"), "left")
+            .groupBy("doc_id")
+            .agg(
+              count(lit(1)).as("n_spans"),
+              sum(when(col("bh").isNotNull, 1L).otherwise(0L)).as("n_hit"))
+            .withColumn("overlap_ratio", col("n_hit").cast("double") / col("n_spans")),
+          _.orderBy("doc_id"))
+      }),
 
     // pillar similarity + streaming: STREAMING QUANTIZER UPDATE — one
     // Lloyd step per arriving micro-batch through the foreachBatch
@@ -383,30 +299,17 @@ trait StreamingRegistry extends RegistryBase {
     // arrives as ONE file -> ONE batch, so the result provably equals
     // the batch operator at iters = 1 (the q104/q121 bridge gate: same
     // oracle, the streaming plumbing must not change answers).
-    "q130_stream_kmeans_update" -> ((s, dir) => {
-      val stage = Staging.dir("q130-")
-      try {
-        val inDir = stage.resolve("in")
-        java.nio.file.Files.createDirectories(inDir)
-        java.nio.file.Files.createSymbolicLink(
-          inDir.resolve("embeddings.parquet"),
-          java.nio.file.Paths.get(s"$dir/embeddings.parquet").toAbsolutePath.normalize())
-        val outDir = stage.resolve("out").toString
-        val schema = rd(s, dir, "embeddings").schema
-        val incoming = s.readStream.schema(schema).parquet(inDir.toString)
-        val q = graft.streaming.EventStream.foreachBatchSink(incoming, identity) {
-          (batch, batchId) =>
-            Similarity.trainCentroids(spreadBatch(s, batch), "vec_id", "embedding",
-                batch.filter(col("vec_id") < 8).select("vec_id"), iters = 1)
-              .select(col("centroid_id"), posexplode(col("cv")).as(Seq("dim", "cval")))
-              .select(col("centroid_id"), col("dim").cast("long").as("dim"), col("cval"))
-              .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        }.start()
-        awaitGate("q130", q)
-        s.read.parquet(outDir).drop("batch")
-          .orderBy("centroid_id", "dim").localCheckpoint(true)
-      } finally Staging.discard(stage)
-    }),
+    "q130_stream_kmeans_update" -> ((s, dir) =>
+      foreachBatchGate(s, "q130") { stage =>
+        BatchGate(
+          s.readStream.schema(rd(s, dir, "embeddings").schema)
+            .parquet(linkInput(stage, dir, "embeddings")),
+          (batch, _) => Similarity.trainCentroids(spreadBatch(s, batch), "vec_id", "embedding",
+              batch.filter(col("vec_id") < 8).select("vec_id"), iters = 1)
+            .select(col("centroid_id"), posexplode(col("cv")).as(Seq("dim", "cval")))
+            .select(col("centroid_id"), col("dim").cast("long").as("dim"), col("cval")),
+          _.orderBy("centroid_id", "dim"))
+      }),
 
     // pillar events + streaming (12th gate): ORDERED FUNNEL ON A STREAM —
     // q149's signup -> view -> purchase conversion maintained across
@@ -419,62 +322,31 @@ trait StreamingRegistry extends RegistryBase {
     // doubled-symlink trick, the staged snapshot is genuinely SPLIT into
     // 4 files (maxFilesPerTrigger=1 -> 4 partial batches whose per-user
     // event sets interleave), so the merge proof is what the gate tests.
-    "q155_stream_funnel" -> ((s, dir) => {
-      val stage = Staging.dir("q155-")
-      try {
-        val inDir = stage.resolve("in").toString
-        // written in the RAW driver format (physical micros int64, no
-        // rescale) so readEventStream's boundary rescale applies once
-        s.read.schema(graft.streaming.EventStream.eventsSchemaDdl)
-          .parquet(s"$dir/events.parquet")
-          .repartition(4).write.mode("overwrite").parquet(inDir)
-        val outDir = stage.resolve("out").toString
-        val q = graft.streaming.EventStream.foreachBatchSink(
-          graft.streaming.EventStream.readEventStream(s, inDir, maxFilesPerTrigger = Some(1)),
-          batch => graft.streaming.EventStream.funnelBatchSummary(batch)
-        ) { (digest, batchId) =>
-          // foreachBatch is at-least-once: batchId-keyed overwrite makes
-          // a retried micro-batch replace its own partial digest
-          digest.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        }.start()
-        awaitGate("q155", q)
-        graft.streaming.EventStream.funnelStageCounts(
-          graft.streaming.EventStream.funnelUserStages(
-              s.read.parquet(outDir).drop("batch"))
-            .localCheckpoint(false)) // three stage counts read one frame
-          .localCheckpoint(true)
-          .orderBy("stage")
-      } finally Staging.discard(stage)
-    }),
+    "q155_stream_funnel" -> ((s, dir) =>
+      foreachBatchGate(s, "q155") { stage =>
+        BatchGate(
+          eventsSplitStream(s, dir, stage),
+          (batch, _) => EventStream.funnelBatchSummary(batch),
+          digests => EventStream.funnelStageCounts(
+              EventStream.funnelUserStages(digests)
+                .localCheckpoint(false)) // three stage counts read one frame
+            .orderBy("stage"))
+      }),
 
     // pillar events + streaming (13th gate): COHORT RETENTION ON A
     // STREAM — q150's retention matrix maintained across micro-batches.
     // The digest is each user's distinct week-index SET (bounded by
     // weeks-in-horizon, not event volume); set union is associative,
     // commutative and IDEMPOTENT, so digests merge exactly for any batch
-    // split and survive at-least-once replays. Staged as a genuine
-    // 4-file split (the q155 convention); same oracle as q150.
-    "q156_stream_cohort" -> ((s, dir) => {
-      val stage = Staging.dir("q156-")
-      try {
-        val inDir = stage.resolve("in").toString
-        s.read.schema(graft.streaming.EventStream.eventsSchemaDdl)
-          .parquet(s"$dir/events.parquet")
-          .repartition(4).write.mode("overwrite").parquet(inDir)
-        val outDir = stage.resolve("out").toString
-        val q = graft.streaming.EventStream.foreachBatchSink(
-          graft.streaming.EventStream.readEventStream(s, inDir, maxFilesPerTrigger = Some(1)),
-          batch => graft.streaming.EventStream.cohortBatchSummary(batch)
-        ) { (digest, batchId) =>
-          digest.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        }.start()
-        awaitGate("q156", q)
-        graft.streaming.EventStream.cohortRetention(
-            s.read.parquet(outDir).drop("batch"))
-          .localCheckpoint(true)
-          .orderBy("cohort_week", "week_offset")
-      } finally Staging.discard(stage)
-    }),
+    // split. Staged as a genuine 4-file split (the q155 convention); same
+    // oracle as q150.
+    "q156_stream_cohort" -> ((s, dir) =>
+      foreachBatchGate(s, "q156") { stage =>
+        BatchGate(
+          eventsSplitStream(s, dir, stage),
+          (batch, _) => EventStream.cohortBatchSummary(batch),
+          digests => EventStream.cohortRetention(digests).orderBy("cohort_week", "week_offset"))
+      }),
 
     // pillar events + streaming (14th gate): WINDOWED FUNNEL ON A STREAM
     // — q157's 1-day-conversion-window funnel over the q155 digests:
@@ -482,31 +354,17 @@ trait StreamingRegistry extends RegistryBase {
     // (EventStream.funnelWindowed), so the SAME per-batch digests and
     // the same pruning proof serve both gates; only the final merge
     // differs. Staged as the genuine 4-file split; q157's oracle.
-    "q158_stream_funnel_window" -> ((s, dir) => {
-      val stage = Staging.dir("q158-")
-      try {
-        val inDir = stage.resolve("in").toString
-        s.read.schema(graft.streaming.EventStream.eventsSchemaDdl)
-          .parquet(s"$dir/events.parquet")
-          .repartition(4).write.mode("overwrite").parquet(inDir)
-        val outDir = stage.resolve("out").toString
-        val q = graft.streaming.EventStream.foreachBatchSink(
-          graft.streaming.EventStream.readEventStream(s, inDir, maxFilesPerTrigger = Some(1)),
-          batch => graft.streaming.EventStream.funnelBatchSummary(batch)
-        ) { (digest, batchId) =>
-          digest.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        }.start()
-        awaitGate("q158", q)
-        graft.streaming.EventStream.funnelStageCounts(
-          graft.streaming.EventStream.funnelWindowed(
-            graft.streaming.EventStream.funnelUserStages(
-                s.read.parquet(outDir).drop("batch"))
-              .localCheckpoint(false),
-            FunnelWindowNanos))
-          .localCheckpoint(true)
-          .orderBy("stage")
-      } finally Staging.discard(stage)
-    }),
+    "q158_stream_funnel_window" -> ((s, dir) =>
+      foreachBatchGate(s, "q158") { stage =>
+        BatchGate(
+          eventsSplitStream(s, dir, stage),
+          (batch, _) => EventStream.funnelBatchSummary(batch),
+          digests => EventStream.funnelStageCounts(
+              EventStream.funnelWindowed(
+                EventStream.funnelUserStages(digests).localCheckpoint(false),
+                FunnelWindowNanos))
+            .orderBy("stage"))
+      }),
 
     // pillar events + streaming (15th gate): WATERMARK-BOUNDED FUNNEL —
     // q155's pruned-candidate digest is exact under arbitrary lateness
@@ -520,89 +378,62 @@ trait StreamingRegistry extends RegistryBase {
     // strictly increasing mtimes, so the stream replays history in
     // order (cross-batch lateness 0 <= W) and merge+prune provably
     // equals the exact batch funnel — same oracle as q149/q155. State
-    // after every batch is horizon-bounded (EventStreamSpec).
-    "q163_stream_funnel_watermarked" -> ((s, dir) => {
-      val stage = Staging.dir("q163-")
-      try {
-        val inDir = stage.resolve("in")
-        s.read.schema(graft.streaming.EventStream.eventsSchemaDdl)
+    // after every batch is horizon-bounded (EventStreamSpec). Each batch
+    // writes the RUNNING state, so the last batch's output is the answer.
+    "q163_stream_funnel_watermarked" -> ((s, dir) =>
+      foreachBatchGate(s, "q163") { stage =>
+        val in = stage.resolve("in")
+        s.read.schema(EventStream.eventsSchemaDdl)
           .parquet(s"$dir/events.parquet")
           .repartitionByRange(4, col("ts"))
-          .write.mode("overwrite").parquet(inDir.toString)
+          .write.mode("overwrite").parquet(in.toString)
         // range partition i lands in part-0000i; pin mtimes 1 s apart in
         // that order so the file source's oldest-first scheduling replays
         // time order deterministically (mtime ties would leave it to
         // listing luck)
-        val parts = java.nio.file.Files.list(inDir).iterator().asScala
-          .filter(_.getFileName.toString.startsWith("part-")).toSeq
-          .sortBy(_.getFileName.toString)
-        val t0 = java.nio.file.Files.getLastModifiedTime(parts.head).toMillis
-        parts.zipWithIndex.foreach { case (p, i) =>
-          java.nio.file.Files.setLastModifiedTime(p,
-            java.nio.file.attribute.FileTime.fromMillis(t0 + i * 1000L))
-        }
-        val stateDir = stage.resolve("state").toString
-        val q = graft.streaming.EventStream.foreachBatchSink(
-          graft.streaming.EventStream.readEventStream(s, inDir.toString, maxFilesPerTrigger = Some(1)),
-          identity
-        ) { (batch, batchId) =>
-          val digest = graft.streaming.EventStream.funnelBatchSummary(batch)
-          // prev state: stable under an at-least-once retry of THIS batch
-          val prev =
-            if (batchId == 0) digest.filter(lit(false))
-            else s.read.parquet(s"$stateDir/data/batch=${batchId - 1}")
-          val prevMax =
-            if (batchId == 0) batch.select(col("ts")).filter(lit(false))
-            else s.read.parquet(s"$stateDir/meta/batch=${batchId - 1}")
-          // running horizon = max ts seen over ALL batches so far - W,
-          // as a broadcast 1-row frame (no driver-side collect)
-          val seenMax = batch.select(col("ts")).unionByName(prevMax)
-            .agg(max(col("ts")).as("ts"))
-          seenMax.write.mode("overwrite").parquet(s"$stateDir/meta/batch=$batchId")
-          val horizon1 = s.read.parquet(s"$stateDir/meta/batch=$batchId")
-            .select((col("ts") - FunnelLatenessNanos).as("horizon"))
-          graft.streaming.EventStream.funnelStatePruned(prev, digest, horizon1)
-            .write.mode("overwrite").parquet(s"$stateDir/data/batch=$batchId")
-        }.start()
-        awaitGate("q163", q)
-        val last = java.nio.file.Files.list(java.nio.file.Paths.get(s"$stateDir/data"))
-          .iterator().asScala.map(_.getFileName.toString)
-          .filter(_.startsWith("batch=")).map(_.stripPrefix("batch=").toLong).max
-        graft.streaming.EventStream.funnelStageCounts(
-          graft.streaming.EventStream.funnelUserStages(
-              s.read.parquet(s"$stateDir/data/batch=$last"))
-            .localCheckpoint(false))
-          .localCheckpoint(true)
-          .orderBy("stage")
-      } finally Staging.discard(stage)
-    }),
+        val parts = in.toFile.listFiles().filter(_.getName.startsWith("part-")).sortBy(_.getName)
+        val t0 = parts.head.lastModified()
+        parts.zipWithIndex.foreach { case (p, i) => p.setLastModified(t0 + i * 1000L) }
+        val sink = gateSink(stage)
+        val meta = stage.resolve("meta").toString
+        BatchGate(
+          EventStream.readEventStream(s, in.toString, maxFilesPerTrigger = Some(1)),
+          (batch, batchId) => {
+            val digest = EventStream.funnelBatchSummary(batch)
+            // prev state: stable under an at-least-once retry of THIS batch
+            val prev =
+              if (batchId == 0) digest.filter(lit(false))
+              else s.read.parquet(s"$sink/batch=${batchId - 1}")
+            val prevMax =
+              if (batchId == 0) batch.select(col("ts")).filter(lit(false))
+              else s.read.parquet(s"$meta/batch=${batchId - 1}")
+            // running horizon = max ts seen over ALL batches so far - W,
+            // as a broadcast 1-row frame (no driver-side collect)
+            val seenMax = batch.select(col("ts")).unionByName(prevMax)
+              .agg(max(col("ts")).as("ts"))
+            seenMax.write.mode("overwrite").parquet(s"$meta/batch=$batchId")
+            val horizon1 = s.read.parquet(s"$meta/batch=$batchId")
+              .select((col("ts") - FunnelLatenessNanos).as("horizon"))
+            EventStream.funnelStatePruned(prev, digest, horizon1)
+          },
+          _ => {
+            val last = new java.io.File(sink).list()
+              .filter(_.startsWith("batch=")).map(_.stripPrefix("batch=").toLong).max
+            EventStream.funnelStageCounts(
+                EventStream.funnelUserStages(s.read.parquet(s"$sink/batch=$last"))
+                  .localCheckpoint(false))
+              .orderBy("stage")
+          })
+      }),
 
-    // pillar multimodal + streaming (16th gate): IMAGE NEAR-DUP SCREEN
-    // ON ARRIVAL — q169's hamming band screen driven from the
-    // foreachBatch bridge (the q121 shape): each incoming micro-batch's
-    // perceptual hashes are screened against the STATIC corpus hash set
-    // — the crawl-ingest "is this image already in the training set"
-    // check as content lands. Per-doc answers depend only on the doc +
-    // the static corpus, so batchId-keyed overwrite makes replays
-    // idempotent and the gate shares q169's oracle verbatim.
     // 17th streaming gate: CONTAINMENT screen on arrival — each incoming
     // micro-batch asks q175's question (am I an excerpt of a corpus doc)
     // via the stateless foreachBatch bridge over the same static corpus
     // posting list. Per-doc answers depend only on the doc + the static
-    // corpus, so batchId-keyed overwrite keeps replays idempotent and the
-    // gate shares q175's oracle verbatim.
-    "q176_stream_containment_screen" -> ((s, dir) => {
-      val stage = Staging.dir("q176-")
-      try {
-        val inDir = stage.resolve("in").toString
-        // stage the INCOMING slice as a small multi-file input (round 18,
-        // the q121 fix): the symlinked whole-corpus file made every
-        // micro-batch read the FULL documents.parquet through ONE task
-        // and filter 90% of it away in-stream (guide §2.5 input skew)
-        rd(s, dir, "documents")
-          .filter(col("doc_id") % IncrementalMod === IncrementalMod - 1)
-          .repartition(4).write.mode("overwrite").parquet(inDir)
-        val outDir = stage.resolve("out").toString
+    // corpus, so the gate shares q175's oracle verbatim.
+    "q176_stream_containment_screen" -> ((s, dir) =>
+      foreachBatchGate(s, "q176") { stage =>
+        val in = stageIncomingDocs(s, dir, stage)
         val corpus = spread(s, rd(s, dir, "documents"))
           .filter(col("doc_id") % IncrementalMod =!= IncrementalMod - 1)
         // the corpus-side screen INDEX (hashed corpus, shingle dictionary,
@@ -623,18 +454,12 @@ trait StreamingRegistry extends RegistryBase {
         // nothing to pin.
         val index = Dedup.containmentScreenIndex(corpus, "doc_id", "text",
           shingleN = 6, eager = true)
-        val schema = rd(s, dir, "documents").schema
-        val incomingStream = s.readStream.schema(schema).parquet(inDir)
-        val q = graft.streaming.EventStream.foreachBatchSink(incomingStream, identity) {
-          (batch, batchId) =>
-            Dedup.incrementalContainmentScreenOnIndex(spreadBatch(s, batch), index,
-                "doc_id", "text", shingleN = 6, threshold = 0.7)
-              .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        }.start()
-        awaitGate("q176", q)
-        s.read.parquet(outDir).drop("batch").orderBy("doc_id").localCheckpoint(true)
-      } finally Staging.discard(stage)
-    }),
+        BatchGate(
+          s.readStream.schema(rd(s, dir, "documents").schema).parquet(in),
+          (batch, _) => Dedup.incrementalContainmentScreenOnIndex(spreadBatch(s, batch), index,
+            "doc_id", "text", shingleN = 6, threshold = 0.7),
+          _.orderBy("doc_id"))
+      }),
 
     // pillar dedup + streaming (20th gate): the q190 BOTTOM-K df-capped
     // screen ON ARRIVAL — q176's bridge with the serving-path screen:
@@ -644,17 +469,12 @@ trait StreamingRegistry extends RegistryBase {
     // prefix-length x head-df. Per-doc answers depend only on the doc
     // and the static corpus, so the bridge provably cannot change them —
     // same oracle as q190.
-    "q191_stream_bottomk_screen" -> ((s, dir) => {
-      val stage = Staging.dir("q191-")
-      try {
-        val inDir = stage.resolve("in").toString
+    "q191_stream_bottomk_screen" -> ((s, dir) =>
+      foreachBatchGate(s, "q191") { stage =>
         // genuine 4-file split → 4 micro-batches (the q155 convention);
         // per-doc screen answers are independent of batching, so the
         // split only makes the gate stricter
-        rd(s, dir, "documents")
-          .filter(col("doc_id") % IncrementalMod === IncrementalMod - 1)
-          .repartition(4).write.mode("overwrite").parquet(inDir)
-        val outDir = stage.resolve("out").toString
+        val in = stageIncomingDocs(s, dir, stage)
         // the corpus text barriers BEFORE the postings build: without it,
         // creating the postings checkpoint pays seconds of driver-side
         // AQE/codegen work on the exchange-bearing plan (measured 4-7 s
@@ -678,20 +498,14 @@ trait StreamingRegistry extends RegistryBase {
         val index = Dedup.containmentIndex(
             Dedup.containmentPostings(corpus, "doc_id", "text", shingleN = 6))
           .localCheckpoint(true)
-        val schema = rd(s, dir, "documents").schema
-        val incomingStream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1).parquet(inDir)
-        val q = graft.streaming.EventStream.foreachBatchSink(incomingStream, identity) {
-          (batch, batchId) =>
-            Dedup.bottomKContainmentScreenOnIndex(spreadBatch(s, batch), index,
-                "doc_id", "text", shingleN = 6, k = ContainScreenK,
-                screenFrac = ContainScreenFrac, dfCap = ContainDfCap)
-              .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        }.start()
-        awaitGate("q191", q)
-        s.read.parquet(outDir).drop("batch").orderBy("doc_id").localCheckpoint(true)
-      } finally Staging.discard(stage)
-    }),
+        BatchGate(
+          s.readStream.schema(rd(s, dir, "documents").schema)
+            .option("maxFilesPerTrigger", 1).parquet(in),
+          (batch, _) => Dedup.bottomKContainmentScreenOnIndex(spreadBatch(s, batch), index,
+            "doc_id", "text", shingleN = 6, k = ContainScreenK,
+            screenFrac = ContainScreenFrac, dfCap = ContainDfCap),
+          _.orderBy("doc_id"))
+      }),
 
     // pillar similarity + streaming (21st gate): IVF ANN SERVING — the
     // online-retrieval shape every production vector store runs: the IVF
@@ -703,9 +517,8 @@ trait StreamingRegistry extends RegistryBase {
     // trained centroids, so the bridge provably cannot change them;
     // oracle is q43's chain with the arrival subset as the query
     // predicate.
-    "q194_stream_ann_topk" -> ((s, dir) => {
-      val stage = Staging.dir("q194-")
-      try {
+    "q194_stream_ann_topk" -> ((s, dir) =>
+      foreachBatchGate(s, "q194") { stage =>
         val e = rd(s, dir, "embeddings")
         // round 12: the corpus-scaled sqrt-N quantizer + the PERSISTED
         // self-contained index (vectors stored INSIDE the inverted
@@ -714,66 +527,56 @@ trait StreamingRegistry extends RegistryBase {
         // it, and a micro-batch touches only its probed buckets' rows,
         // never a corpus-side join)
         // eager: both frames only re-read the persisted trainedArtifact
-        // parquet, but the checkpoint must still land BEFORE .start() so
-        // batch 0 pays probes, not the artifact scan
+        // parquet, but the checkpoint must still land BEFORE the stream
+        // starts so batch 0 pays probes, not the artifact scan
         val cents = sqrtCentroids(s, dir)
           .localCheckpoint(true) // probed every micro-batch
         val index = ivfSqrtIndex(s, dir)
           .localCheckpoint(true) // the IVF index: built once, probed per batch
-        val inDir = stage.resolve("in").toString
+        val in = stage.resolve("in").toString
         // genuine 4-file split → 4 micro-batches (the q155 convention)
         e.filter(col("vec_id") % 25 === 5)
-          .repartition(4).write.mode("overwrite").parquet(inDir)
-        val outDir = stage.resolve("out").toString
-        val stream = s.readStream.schema(e.schema)
-          .option("maxFilesPerTrigger", 1).parquet(inDir)
-        val q = graft.streaming.EventStream.foreachBatchSink(stream, identity) {
-          (batch, batchId) =>
-            Similarity.ivfTopKOnIndex(spreadBatch(s, batch), index,
-                cents, "vec_id", "embedding", k = 3)
-              .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        }.start()
-        awaitGate("q194", q)
-        s.read.parquet(outDir).drop("batch").orderBy("q_id", "rank").localCheckpoint(true)
-      } finally Staging.discard(stage)
-    }),
+          .repartition(4).write.mode("overwrite").parquet(in)
+        BatchGate(
+          s.readStream.schema(e.schema).option("maxFilesPerTrigger", 1).parquet(in),
+          (batch, _) => Similarity.ivfTopKOnIndex(spreadBatch(s, batch), index,
+            cents, "vec_id", "embedding", k = 3),
+          _.orderBy("q_id", "rank"))
+      }),
 
-    "q171_stream_image_screen" -> ((s, dir) => {
-      val stage = Staging.dir("q171-")
-      try {
-        val inDir = stage.resolve("in")
-        java.nio.file.Files.createDirectories(inDir)
-        java.nio.file.Files.createSymbolicLink(
-          inDir.resolve("documents.parquet"),
-          java.nio.file.Paths.get(s"$dir/documents.parquet").toAbsolutePath.normalize())
-        val outDir = stage.resolve("out").toString
+    // pillar multimodal + streaming (16th gate): IMAGE NEAR-DUP SCREEN
+    // ON ARRIVAL — q169's hamming band screen driven from the
+    // foreachBatch bridge (the q121 shape): each incoming micro-batch's
+    // perceptual hashes are screened against the STATIC corpus hash set
+    // — the crawl-ingest "is this image already in the training set"
+    // check as content lands. Per-doc answers depend only on the doc +
+    // the static corpus, so the gate shares q169's oracle verbatim.
+    "q171_stream_image_screen" -> ((s, dir) =>
+      foreachBatchGate(s, "q171") { stage =>
         val corpus = Multimodal.withContent(
             spread(s, rd(s, dir, "documents"))
               .filter(col("doc_id") % IncrementalMod =!= IncrementalMod - 1), "text")
           .select(col("doc_id"), Multimodal.pseudoDHash(col("content")).as("dhash"))
-        // hashed and banded once BEFORE .start(), probed by every batch
+        // hashed and banded once BEFORE the stream starts, probed by every batch
         val corpusBands = Dedup.hammingBands(corpus, "doc_id", "dhash", bits = 24, numBands = 4)
           .localCheckpoint(true)
-        val schema = rd(s, dir, "documents").schema
-        val incomingStream = s.readStream.schema(schema).parquet(inDir.toString)
-          .filter(col("doc_id") % IncrementalMod === IncrementalMod - 1)
-        val q = graft.streaming.EventStream.foreachBatchSink(incomingStream, identity) {
-          (batch, batchId) =>
+        BatchGate(
+          s.readStream.schema(rd(s, dir, "documents").schema)
+            .parquet(linkInput(stage, dir, "documents"))
+            .filter(col("doc_id") % IncrementalMod === IncrementalMod - 1),
+          (batch, _) => {
             val inc = Multimodal.withContent(spreadBatch(s, batch), "text")
               .select(col("doc_id"), Multimodal.pseudoDHash(col("content")).as("dhash"))
             Dedup.incrementalHammingScreenOnBands(inc, corpusBands, "doc_id", "dhash",
-                bits = 24, maxHamming = 3)
-              .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        }.start()
-        awaitGate("q171", q)
-        s.read.parquet(outDir).drop("batch").orderBy("doc_id").localCheckpoint(true)
-      } finally Staging.discard(stage)
-    }),
+              bits = 24, maxHamming = 3)
+          },
+          _.orderBy("doc_id"))
+      }),
 
     // pillar similarity + streaming (22nd gate): INCREMENTAL kNN-GRAPH
     // MAINTENANCE ON ARRIVAL — q203's upsert driven from the foreachBatch
-    // bridge: the persisted base graph is materialized ONCE before
-    // .start(); an arriving vector batch is seeded and folded in with
+    // bridge: the persisted base graph is materialized ONCE before the
+    // stream starts; an arriving vector batch is seeded and folded in with
     // incremental local-join rounds. A graph upsert is a STATEFUL FOLD
     // over the graph (unlike the per-row screens q121/q171/q191, batch
     // boundaries would change which pairs mix), so the arrivals are
@@ -782,32 +585,55 @@ trait StreamingRegistry extends RegistryBase {
     // provable, and the gate shares q203's oracle VERBATIM. A multi-batch
     // ingest is just this gate fired per arrival wave, each wave's output
     // graph persisted as the next wave's base.
-    "q204_stream_knn_upsert" -> ((s, dir) => {
-      val stage = Staging.dir("q204-")
-      try {
-        val inDir = stage.resolve("in").toString
-        val outDir = stage.resolve("out").toString
+    "q204_stream_knn_upsert" -> ((s, dir) =>
+      foreachBatchGate(s, "q204") { stage =>
+        val in = stage.resolve("in").toString
         val e = rd(s, dir, "embeddings")
         e.crossJoin(broadcast(graphUpsertSplit(e)))
           .filter(col("vec_id") >= col("nbase"))
           .select("vec_id", "embedding")
-          .coalesce(1).write.mode("overwrite").parquet(inDir)
+          .coalesce(1).write.mode("overwrite").parquet(in)
         // the base graph artifact (an O(N·cap²)-per-round build) lands on
-        // disk HERE, before .start() — batch 0 pays only the upsert
-        // (O(batch·cap²)), never the base build (the StreamBatch0 rule)
+        // disk HERE, before the stream starts — batch 0 pays only the
+        // upsert (O(batch·cap²)), never the base build (the StreamBatch0
+        // rule)
         nndGraphBase(s, dir)
-        val schema = e.select("vec_id", "embedding").schema
-        val stream = s.readStream.schema(schema).parquet(inDir)
-        val q = graft.streaming.EventStream.foreachBatchSink(stream, identity) {
-          (batch, batchId) =>
-            upsertIntoBaseGraph(s, dir, spreadBatch(s, batch))
-              .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        }.start()
-        awaitGate("q204", q)
-        s.read.parquet(outDir).drop("batch").orderBy("src", "rank").localCheckpoint(true)
-      } finally Staging.discard(stage)
-    })
+        BatchGate(
+          s.readStream.schema(e.select("vec_id", "embedding").schema).parquet(in),
+          (batch, _) => upsertIntoBaseGraph(s, dir, spreadBatch(s, batch)),
+          _.orderBy("src", "rank"))
+      })
   )
+
+  /** Stages the raw events file as a genuine 4-file split under
+    * `<stage>/in` and streams it one file per micro-batch (4 partial
+    * batches whose per-user event sets interleave). Written in the RAW
+    * driver format (physical micros int64, no rescale) so
+    * readEventStream's boundary rescale applies once.
+    */
+  private def eventsSplitStream(s: SparkSession, dir: String, stage: java.nio.file.Path): DataFrame = {
+    val in = stage.resolve("in").toString
+    s.read.schema(EventStream.eventsSchemaDdl)
+      .parquet(s"$dir/events.parquet")
+      .repartition(4).write.mode("overwrite").parquet(in)
+    EventStream.readEventStream(s, in, maxFilesPerTrigger = Some(1))
+  }
+
+  /** Stages the INCOMING documents slice under `<stage>/in` as a small
+    * 4-file input and returns that directory (round 18): a symlink of the
+    * whole documents.parquet made every micro-batch read the FULL corpus
+    * file through ONE task and filter 90% of it away inside the stream —
+    * a serialized corpus-sized scan per batch (guide §2.5 input skew).
+    * Staging writes the 10% incoming slice once, outside the stream, with
+    * AQE on; the source then reads only incoming rows, in parallel.
+    */
+  private def stageIncomingDocs(s: SparkSession, dir: String, stage: java.nio.file.Path): String = {
+    val in = stage.resolve("in").toString
+    rd(s, dir, "documents")
+      .filter(col("doc_id") % IncrementalMod === IncrementalMod - 1)
+      .repartition(4).write.mode("overwrite").parquet(in)
+    in
+  }
 
   protected def streamingOracle: Map[String, String] = Map(
     // identical aggregate to q40 — the Spark side differs (streaming engine)

@@ -1,8 +1,8 @@
 // Custom whole-operator extension (SparkSessionExtensions ladder step c):
 // a NATIVE backward as-of join — logical node + planner strategy +
 // physical BinaryExecNode — for the operator Spark lacks (DuckDB has ASOF
-// JOIN built in; graft.operators.AsofJoin composes it from union +
-// running-last). The physical operator declares clustered distribution +
+// JOIN built in; graft.operators.AsofJoin is its entry point). The
+// physical operator declares clustered distribution +
 // (key, ts) ordering requirements, so Catalyst plans ONE hash exchange
 // and one sort per side, then a single streaming merge pass per
 // partition buffers exactly ONE candidate right row at a time — no union
@@ -29,8 +29,8 @@ import org.apache.spark.sql.types.LongType
   * match). Output: left.* ++ asof_<ts> (matched right ts, null when
   * unmatched) ++ right value columns (nullable).
   *
-  * Contract (same as the composed operator): the right side must be
-  * unique per (key, ts) — pre-aggregate otherwise.
+  * Contract: the right side must be unique per (key, ts) —
+  * pre-aggregate otherwise.
   */
 case class AsofJoinNode(
     left: LogicalPlan,
@@ -244,10 +244,9 @@ object AsofJoinStrategy extends SparkStrategy {
 
 object AsofJoinNative {
 
-  /** Backward as-of join via the native physical operator. Same surface
-    * and semantics as `graft.operators.AsofJoin.asofBackward`: output is
-    * left.* ++ asof_<tsCol> ++ valueCols (nulls when unmatched = left
-    * semantics).
+  /** Backward as-of join via the native physical operator, behind
+    * `graft.operators.AsofJoin.asofBackward`: output is left.* ++
+    * asof_<tsCol> ++ valueCols (nulls when unmatched = left semantics).
     */
   def join(
       left: DataFrame,

@@ -3,9 +3,12 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.operators.AsofJoin
 
-/** Native as-of physical operator (AsofJoinExec) vs the composed
-  * union+running-last operator: identical results, and the plan must be
-  * the custom exec fed by one exchange + sort per side.
+/** The as-of join's physical operator (AsofJoinExec): the plan is the
+  * custom exec fed by one exchange + sort per side, its output
+  * partitioning serves a downstream groupBy on the key, null keys or
+  * timestamps never match on either merge path, and the generated
+  * asof_<ts> column may not clash (AsofJoinSpec compares the rest against
+  * a brute-force as-of).
   */
 class AsofJoinNativeSpec extends SparkSpec {
   import spark.implicits._
@@ -14,48 +17,11 @@ class AsofJoinNativeSpec extends SparkSpec {
     graft.streaming.EventStream.readEvents(spark, "/root/testdata/sf0.001/events.parquet")
       .select(col("event_id"), col("user_id"), expr("ts div 1000").as("tsn"), col("event_type"))
 
-  test("native matches the composed operator on the events fixture (self-join shape)") {
-    val clicks = events.filter(col("event_type") === "click").drop("event_type")
-    val views = events.filter(col("event_type") === "view")
-      .groupBy("user_id", "tsn")
-      .agg(max(col("event_id")).as("v_event_id"))
-
-    val composed = AsofJoin.asofBackward(clicks, views, "user_id", "tsn", Seq("v_event_id"))
-      .select(col("event_id"), col("asof_tsn"), col("v_event_id"))
-      .orderBy("event_id").collect().toSeq
-    val native = AsofJoin.asofBackwardNative(clicks, views, "user_id", "tsn", Seq("v_event_id"))
-      .select(col("event_id"), col("asof_tsn"), col("v_event_id"))
-      .orderBy("event_id").collect().toSeq
-
-    assert(composed.nonEmpty)
-    assert(native == composed)
-    // both matched and unmatched left rows must exist for the test to
-    // actually cover the null path
-    assert(native.exists(_.isNullAt(1)) && native.exists(!_.isNullAt(1)))
-  }
-
-  test("native matches composed on random data (property, incl. equal-ts ties)") {
-    val rng = new scala.util.Random(7)
-    val leftRows = Seq.tabulate(400)(i => (i.toLong, rng.nextInt(12).toLong, rng.nextInt(50).toLong))
-    val rightRows = Seq.tabulate(150)(i =>
-      (rng.nextInt(12).toLong, rng.nextInt(50).toLong, 1000L + i))
-      // unique per (key, ts) — the documented contract of BOTH operators
-      .groupBy(r => (r._1, r._2)).map(_._2.head).toSeq
-    val left = leftRows.toDF("id", "k", "t")
-    val right = rightRows.toDF("k", "t", "v")
-
-    val composed = AsofJoin.asofBackward(left, right, "k", "t", Seq("v"))
-      .select("id", "asof_t", "v").orderBy("id").collect().toSeq
-    val native = AsofJoin.asofBackwardNative(left, right, "k", "t", Seq("v"))
-      .select("id", "asof_t", "v").orderBy("id").collect().toSeq
-    assert(native == composed)
-  }
-
   test("plan: AsofJoinExec with one exchange and one sort per side") {
     val clicks = events.filter(col("event_type") === "click").drop("event_type")
     val views = events.filter(col("event_type") === "view")
       .groupBy("user_id", "tsn").agg(max(col("event_id")).as("v_event_id"))
-    val plan = AsofJoin.asofBackwardNative(clicks, views, "user_id", "tsn", Seq("v_event_id"))
+    val plan = AsofJoin.asofBackward(clicks, views, "user_id", "tsn", Seq("v_event_id"))
       .queryExecution.executedPlan.toString
     // SparkPlan.nodeName strips the Exec suffix: the node prints "AsofJoin"
     assert(plan.contains("AsofJoin"), plan)
@@ -70,7 +36,7 @@ class AsofJoinNativeSpec extends SparkSpec {
     val clicks = events.filter(col("event_type") === "click").drop("event_type")
     val views = events.filter(col("event_type") === "view")
       .groupBy("user_id", "tsn").agg(max(col("event_id")).as("v_event_id"))
-    val plan = AsofJoin.asofBackwardNative(clicks, views, "user_id", "tsn", Seq("v_event_id"))
+    val plan = AsofJoin.asofBackward(clicks, views, "user_id", "tsn", Seq("v_event_id"))
       .groupBy("user_id").count()
       .queryExecution.executedPlan.toString
     // 2 join-input exchanges + 1 aggregate exchange on (user_id, tsn) from
@@ -85,11 +51,12 @@ class AsofJoinNativeSpec extends SparkSpec {
       .toDF("id", "k", "t")
     val right = Seq((Option(5L), Option(5L), 99L), (Option.empty[Long], Option(1L), 77L))
       .toDF("k", "t", "v")
-    val out = AsofJoin.asofBackwardNative(left, right, "k", "t", Seq("v"))
-      .select("id", "v").orderBy("id").collect()
+    val joined = AsofJoin.asofBackward(left, right, "k", "t", Seq("v"))
+    val out = joined.select("id", "v").orderBy("id").collect()
     assert(out(0).getLong(1) == 99L)   // normal match
     assert(out(1).isNullAt(1))         // null key -> no match
     assert(out(2).isNullAt(1))         // null ts -> no match
+    assert(AsofBrute.of(joined, "id", "t", "v") == AsofBrute(left, right, "id", "k", "t", "v"))
   }
 
   test("null keys and timestamps never match on the interpreted path (string key)") {
@@ -106,23 +73,20 @@ class AsofJoinNativeSpec extends SparkSpec {
       (Option("b"), Option(7L), 88L),
       (Option.empty[String], Option(1L), 77L))
       .toDF("k", "t", "v")
-    val out = AsofJoin.asofBackwardNative(left, right, "k", "t", Seq("v"))
-      .select("id", "v").orderBy("id").collect()
+    val joined = AsofJoin.asofBackward(left, right, "k", "t", Seq("v"))
+    val out = joined.select("id", "v").orderBy("id").collect()
     assert(out(0).getLong(1) == 99L)   // ('a', 10) matches ('a', 5)
     assert(out(1).isNullAt(1))         // null ts -> no match, even with a held 'a' candidate
     assert(out(2).isNullAt(1))         // null key -> no match
     assert(out(3).getLong(1) == 88L)   // ('b', 20) matches ('b', 7)
-    // composed operator agrees on the same input
-    val composed = AsofJoin.asofBackward(left, right, "k", "t", Seq("v"))
-      .select("id", "v").orderBy("id").collect()
-    assert(out.toSeq.map(_.toSeq) == composed.toSeq.map(_.toSeq))
+    assert(AsofBrute.of(joined, "id", "t", "v") == AsofBrute(left, right, "id", "k", "t", "v"))
   }
 
   test("join rejects a left column that clashes with the generated asof_<ts> name") {
     val left = Seq((1L, 2L, 3L)).toDF("k", "t", "asof_t")
     val right = Seq((1L, 1L, 9L)).toDF("k", "t", "v")
     val e = intercept[IllegalArgumentException] {
-      AsofJoin.asofBackwardNative(left, right, "k", "t", Seq("v"))
+      AsofJoin.asofBackward(left, right, "k", "t", Seq("v"))
     }
     assert(e.getMessage.contains("asof_t"))
   }

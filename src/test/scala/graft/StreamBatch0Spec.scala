@@ -12,12 +12,14 @@ import graft.streaming.StreamMetrics
   * Two guards, one structural and one behavioral:
   *
   *  1. SOURCE AUDIT (deterministic, scale-independent): inside every
-  *     streaming gate in StreamingRegistry.scala, any `localCheckpoint`
-  *     that executes BEFORE the gate's `.start()` must be eager
-  *     (`true`). Lazy checkpoints after `awaitGate` (post-stream result
-  *     diamonds) are fine. Timing pins at sf0.001 cannot see a small
-  *     corpus build inside the codegen-warm-up noise of batch 0, so the
-  *     invariant itself is pinned at the source level.
+  *     foreachBatch gate in StreamingRegistry.scala, any `localCheckpoint`
+  *     in the code that runs BEFORE the stream starts (the gate's input
+  *     staging and static side, up to the `BatchGate` its setup hands
+  *     `foreachBatchGate`) must be eager (`true`). Lazy checkpoints in a
+  *     gate's finish (post-stream result diamonds) are fine. Timing pins
+  *     at sf0.001 cannot see a small corpus build inside the
+  *     codegen-warm-up noise of batch 0, so the invariant itself is
+  *     pinned at the source level.
   *
   *  2. TIMING PIN (the round-12 verdict's ask): on the two multi-batch
   *     static-index gates, batch 0's addBatch must stay within a
@@ -41,27 +43,39 @@ class StreamBatch0Spec extends SparkSpec {
       .getOrElse(fail(s"cannot locate $rel above ${sys.props("user.dir")}"))
     val src = new String(java.nio.file.Files.readAllBytes(srcPath),
       java.nio.charset.StandardCharsets.UTF_8)
-    // gate blocks run from their name-literal to their awaitGate call;
-    // everything up to each `.start()` executes before that stream runs.
-    // Audit EVERY pre-start segment, not just the text before the FIRST
-    // .start() (round-13 advice): a gate with two streams, or a lazy
-    // checkpoint added between one .start() and the next, still executes
-    // pre-stream for the later start and must stay eager.
+    // gate blocks run from their name-literal to the next one. A gate's
+    // setup (everything up to the BatchGate it returns) runs before
+    // foreachBatchGate starts the stream; the batch frame and the finish
+    // come after it.
     val gateName = """"(q\d+[a-z0-9_]*)" ->""".r
     val gates = gateName.findAllMatchIn(src).map(m => (m.group(1), m.start)).toSeq
     assert(gates.nonEmpty, "no gate blocks found — audit is vacuous")
-    for (((name, begin), idx) <- gates.zipWithIndex) {
-      val end = if (idx + 1 < gates.length) gates(idx + 1)._2 else src.length
-      val block = src.substring(begin, end)
-      val lastStart = block.lastIndexOf(".start()")
-      if (lastStart >= 0) { // blocks without .start() are batch-side helpers
-        val preStart = block.substring(0, lastStart)
-        assert(!preStart.contains("localCheckpoint(false)"),
-          s"$name: lazy localCheckpoint(false) before a .start() — the static " +
-            "index build would land inside batch 0's addBatch (round-12 weak " +
-            "item); use localCheckpoint(true) for every pre-start frame")
-      }
+    val harness = "foreachBatchGate("
+    val audited = for {
+      ((name, begin), idx) <- gates.zipWithIndex
+      end = if (idx + 1 < gates.length) gates(idx + 1)._2 else src.length
+      block = src.substring(begin, end)
+      h = block.indexOf(harness)
+      if h >= 0 // gates on runStreamGate run no batch operator
+    } yield {
+      val spec = block.indexOf("BatchGate(", h + harness.length)
+      assert(spec > h, s"$name: no BatchGate( after its $harness call — audit would be vacuous")
+      assert(!block.substring(0, spec).contains("localCheckpoint(false)"),
+        s"$name: lazy localCheckpoint(false) before the stream starts — the static " +
+          "index build would land inside batch 0's addBatch (round-12 weak " +
+          "item); use localCheckpoint(true) for every pre-stream frame")
+      name
     }
+    // the gates this audit covered when each one started its own stream
+    assert(audited.toSet == Set(
+      "q104_stream_foreach_dedup", "q121_stream_incremental_dedup",
+      "q130_stream_kmeans_update", "q140_stream_contamination",
+      "q148_stream_hll_distinct", "q155_stream_funnel", "q156_stream_cohort",
+      "q158_stream_funnel_window", "q163_stream_funnel_watermarked",
+      "q171_stream_image_screen", "q176_stream_containment_screen",
+      "q182_stream_quantile_sketch", "q188_stream_cms_topk",
+      "q191_stream_bottomk_screen", "q194_stream_ann_topk",
+      "q204_stream_knn_upsert"), s"audited ${audited.sorted.mkString(", ")}")
   }
 
   test("static-index gates: batch 0 addBatch stays near the later-batch median") {
@@ -107,7 +121,7 @@ class StreamBatch0Spec extends SparkSpec {
     // by construction, not by omission (round-14 verdict item 7). This
     // asserts the single-batch shape explicitly (a drift to multi-batch
     // must move it under the median pin), and its pre-start eagerness is
-    // covered by the SOURCE audit, which walks EVERY gate block
+    // covered by the SOURCE audit, which walks EVERY foreachBatch gate
     // including q204's.
     StreamMetrics.drain()
     SparkEntry.queries("q204_stream_knn_upsert")(spark, "/root/testdata/sf0.001").collect()
